@@ -40,20 +40,9 @@ def tokens(text: Column) -> Column:
 
 
 def token_count(text: Column) -> Column:
-    return F.size(tokens(text))
-
-
-def bpe_ish_token_count(text: Column) -> Column:
-    """Approximate subword count: words + punctuation runs, each long word
-    counted as ceil(len/4) pieces (a BPE-ish regex heuristic, cheap and
-    deterministic — good enough for per-doc budget accounting)."""
-    words = tokens(text)
-    pieces = F.aggregate(
-        words,
-        F.lit(0).cast("bigint"),
-        lambda acc, w: acc + F.ceil(F.length(w) / F.lit(4.0)).cast("bigint"),
-    )
-    return pieces
+    """Whitespace token count; NULL for NULL text in either ANSI mode
+    (without ANSI, ``size(NULL)`` alone is -1)."""
+    return F.when(text.isNotNull(), F.size(tokens(text)))
 
 
 def _word_token_set(text: Column) -> Column:

@@ -81,29 +81,6 @@ def extract_links_udf(html: pd.Series, base_url: pd.Series) -> pd.Series:
     )
 
 
-@F.pandas_udf(ArrayType(StringType()))
-def extract_canonical_links_udf(html: pd.Series, base_url: pd.Series) -> pd.Series:
-    """``extract_links`` + per-link ``canonicalize_py`` in one Arrow pass.
-
-    NOT the frontier's default kernel: moving canonicalize into Python
-    measured ~10% slower at both scaling-bench parallelism levels than the
-    JVM ``urlkit.canonicalize`` expression (the codegen blowup the move was
-    meant to fix is instead fixed by the single-reference
-    ``urlkit.is_ignored_fused`` filter). Kept as the spill valve for
-    pipelines that need canonical links from Python anyway;
-    ``canonicalize_py`` is the same function the oracle simulator applies."""
-    from .urlkit import canonicalize_py
-
-    return pd.Series(
-        [
-            [canonicalize_py(link) for link in extract_links(h, b)]
-            for h, b in zip(html, base_url)
-        ],
-        index=html.index,
-        dtype=object,
-    )
-
-
 _REPETITION_SCHEMA = StructType(
     [
         StructField("wchars", LongType()),

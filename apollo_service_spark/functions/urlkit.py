@@ -268,11 +268,6 @@ def canonicalize(url: Column) -> Column:
     ).otherwise(no_frag)
 
 
-def url_hash(url: Column, salt: int = 0) -> Column:
-    """64-bit salted hash of the canonical url — seen-set partition key."""
-    return F.xxhash64(url, F.lit(salt))
-
-
 def host_salted_partition(
     host: Column,
     n_partitions: int,
@@ -411,11 +406,6 @@ def is_redirect_404(url: Column, final_url: Column) -> Column:
     return f.contains("/404") | (
         (f != url) & (f.contains("not-found") | f.contains("error"))
     )
-
-
-def in_domain(url: Column, base_host: str) -> Column:
-    """Domain restriction (apollo.py:235-237): netloc equality, exact."""
-    return url_host(url) == F.lit(base_host)
 
 
 def is_document_url(url: Column) -> Column:

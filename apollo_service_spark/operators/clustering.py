@@ -39,23 +39,6 @@ MERGED_SCHEMA = StructType(
 )
 
 
-def _path_similarity(path1: str, path2: str) -> float:
-    """Common leading components ÷ count of distinct parts of both
-    (url_clusterer.py:131-145)."""
-    parts1 = path1.split("/")
-    parts2 = path2.split("/")
-    common = 0
-    for a, b in zip(parts1, parts2):
-        if a == b:
-            common += 1
-        else:
-            break
-    total_unique = len(set(parts1 + parts2))
-    if total_unique == 0:
-        return 1.0
-    return common / total_unique
-
-
 def _common_prefix(path1: str, path2: str) -> str:
     parts1 = path1.split("/")
     parts2 = path2.split("/")

@@ -269,24 +269,25 @@ def pack_sequences(
     touching the packing math.
 
     Docs with zero tokens occupy no tape: their chunk bounds are NULL.
+    NULL text has a NULL ``n_tokens`` and likewise occupies no tape, as in
+    the oracle.
 
     ``tokens_col`` (opt-in) names an already-computed token-count column on
     ``docs`` — callers that fork one narrow persisted ``(id, count)`` frame
     to several consumers (``q_corpus_prepare``) pass it so the tape math
-    consumes the shared frame instead of re-tokenizing ``text_col``.
+    consumes the shared frame instead of re-tokenizing ``text_col``. A NULL
+    count is packed exactly as NULL text is.
 
     Output: ``(id, n_tokens, tok_start, chunk_first, chunk_last)``.
     """
-    if tokens_col is not None:
-        toks = docs.select(
-            F.col(id_col).alias("id"),
-            F.col(tokens_col).cast("bigint").alias("n_tokens"),
-        )
-    else:
-        toks = docs.select(
-            F.col(id_col).alias("id"),
-            textstats.token_count(F.col(text_col)).cast("bigint").alias("n_tokens"),
-        )
+    n_tokens = (
+        F.col(tokens_col)
+        if tokens_col is not None
+        else textstats.token_count(F.col(text_col))
+    )
+    toks = docs.select(
+        F.col(id_col).alias("id"), n_tokens.cast("bigint").alias("n_tokens")
+    )
     summed = global_running_sum(
         toks,
         order_cols=["id"],

@@ -201,13 +201,6 @@ def _capped_groups(
     )
 
 
-def _salted_hash(seed: int):
-    # one-arg lambda on purpose: a two-arg lambda (e.g. `lambda s, i=i: ...`)
-    # is interpreted by F.transform as (element, array_index) and the index
-    # column silently overrides the bound seed
-    return lambda s: F.xxhash64(s, F.lit(seed))
-
-
 def minhash_signature(text_col, n_hashes: int = 32, shingle_n: int = 3):
     """array<bigint> of n_hashes minhash values (min over per-permutation
     salted xxhash64 of each shingle), all JVM-side.

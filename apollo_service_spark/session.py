@@ -57,6 +57,13 @@ def build_session(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
+        # Static conf, read when the JVM's codegen first runs. The
+        # generated-class cache must hold the engine's working set or every
+        # plan recompiles on each run (Janino, then HotSpot JIT of the fresh
+        # class). At the default 100 entries a repeated 2-superstep crawl
+        # recompiled 105-141 classes and a curate cycle 104-114 (local[4]);
+        # at 1000 a repeat compiles none.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # AQEPropagateEmptyRelation can collapse a subtree holding a
         # CollectMetrics node (df.observe) before it runs, resolving the
         # engine's per-superstep Observations to an empty row (seen on the
@@ -71,3 +78,12 @@ def build_session(
     for key, val in (extra_conf or {}).items():
         builder = builder.config(key, val)
     return builder.getOrCreate()
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Classes Spark codegen has compiled in this JVM so far; cache hits do
+    not count. Read on the driver through py4j, with no Spark job. In local
+    mode the executors share the driver's JVM, so this counts every compile;
+    on a cluster it counts only the driver's."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())

@@ -36,11 +36,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-TABLE_NAMES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
 # Rebalance policy knobs (env-overridable; see module docstring).
 _REBALANCE_MODE = os.environ.get("SPARK_GRAFT_SCAN_REBALANCE", "auto")
 _REBALANCE_MAX_BYTES = int(
@@ -134,11 +129,3 @@ def load_table(
     df = spark.read.parquet(path)
     return maybe_rebalance_scan(spark, df, path) if rebalance else df
 
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict:
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    for name in TABLE_NAMES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

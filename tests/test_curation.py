@@ -217,6 +217,40 @@ def test_pack_sequences_tokens_col_matches_text_path(spark):
     assert via_text == via_col
 
 
+@pytest.mark.parametrize("ansi", ["true", "false"])
+def test_pack_sequences_null_text_and_null_count_agree(spark, ansi):
+    """NULL text and a NULL precomputed count pack identically: NULL
+    n_tokens, no tape, NULL chunk bounds, in either ANSI mode (without it
+    ``size(NULL)`` is -1, which would shift every later doc)."""
+    docs = spark.createDataFrame(
+        [(1, "a b c"), (2, None), (3, ""), (4, "d e")],
+        "doc_id long, text string",
+    )
+    counts = spark.createDataFrame(
+        [(1, 3), (2, None), (3, 0), (4, 2)], "doc_id long, nt long"
+    )
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", ansi)
+    try:
+        via_text = sorted(
+            tuple(r) for r in curation.pack_sequences(docs, seq_len=2).collect()
+        )
+        via_col = sorted(
+            tuple(r)
+            for r in curation.pack_sequences(
+                counts, seq_len=2, tokens_col="nt"
+            ).collect()
+        )
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    assert via_text == via_col == [
+        (1, 3, 0, 0, 1),
+        (2, None, 3, None, None),
+        (3, 0, 3, None, None),
+        (4, 2, 3, 1, 2),
+    ]
+
+
 # -------------------------------------------------------------- blocklist
 
 

@@ -3,6 +3,9 @@ deterministic BFS (oracle simulator) exactly — final seen set AND crawl
 ordering (iteration, within-iteration rank) — BASELINE.md correctness gate 2.
 """
 
+import glob
+
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -12,6 +15,7 @@ from apollo_service_spark.operators.frontier import (
     crawl_log_df,
 )
 from apollo_service_spark.oracle.simulator import SimConfig, simulate
+from apollo_service_spark.session import codegen_compiles
 from apollo_service_spark.sources.storage import SnapshotStore
 
 
@@ -191,3 +195,64 @@ def test_politeness_prune_crawl_identical(
         spark, small_corpus_spark, str(tmp_path / "pruned"), pruned_cfg
     )
     assert _log_tuples(spark, store_pruned) == _log_tuples(spark, store_base)
+
+
+@pytest.fixture(scope="module")
+def repeated_crawls(spark, small_corpus_spark, tmp_path_factory):
+    """Two identical 5-superstep crawls, back to back, with the codegen
+    compiles each whole run() caused."""
+    root = tmp_path_factory.mktemp("compile_once")
+    runs = []
+    for name in ("first", "second"):
+        before = codegen_compiles(spark)
+        _, store = _run_engine(
+            spark,
+            small_corpus_spark,
+            str(root / name),
+            CrawlConfig(default_budget=2, max_iterations=5, n_partitions=4),
+        )
+        runs.append((store, codegen_compiles(spark) - before))
+    return runs
+
+
+def test_superstep_compiles_are_recorded(repeated_crawls):
+    """Every superstep reports the compiles it caused; together they are
+    part of what the whole run() compiled."""
+    store, compiles = repeated_crawls[0]
+    per_step = [m["codegen_compiles"] for m in store.iteration_metrics()]
+    assert len(per_step) >= 4
+    assert all(isinstance(c, int) and c >= 0 for c in per_step)
+    assert sum(per_step) <= compiles
+
+
+def test_repeated_crawl_compiles_no_class(repeated_crawls):
+    """Spark's generated-class cache holds a whole crawl's plans, so in a
+    warm session a repeated crawl of at least 4 supersteps compiles no
+    class, in any superstep or around them."""
+    store, compiles = repeated_crawls[1]
+    per_step = [m["codegen_compiles"] for m in store.iteration_metrics()]
+    assert len(per_step) >= 4
+    assert per_step == [0] * len(per_step)
+    assert compiles == 0
+
+
+def test_commit_tables_schema_and_iteration(spark, repeated_crawls):
+    """The superstep number lands as a non-null int column holding the
+    superstep's own number, in the same place."""
+    store, _ = repeated_crawls[0]
+    n = len(store.iteration_metrics())
+    for it in range(n):
+        for table in ("crawl_log", "lineage"):
+            path = glob.glob(f"{store.root}/{table}/iter={it:05d}/*.parquet")[0]
+            assert not pq.read_schema(path).field("iteration").nullable
+        log = store.read(spark, "crawl_log", it)
+        lineage = store.read(spark, "lineage", it)
+        assert log.schema.simpleString() == (
+            "struct<url:string,host:string,depth:int,iteration:int,"
+            "status:string,is_document:boolean>"
+        )
+        assert lineage.schema.simpleString() == (
+            "struct<partition_id:int,rows:bigint,iteration:int>"
+        )
+        for df in (log, lineage):
+            assert {r["iteration"] for r in df.select("iteration").collect()} == {it}
