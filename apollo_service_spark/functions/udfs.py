@@ -9,9 +9,10 @@ Catalyst column expression):
 * ``extract_links_udf`` — a[href] link extraction + urljoin + fragment strip
   (`apollo.py:359-371`), returning array<string> that callers ``explode``.
 * ``repetition_stats_udf`` — the Gopher repetition scalars; SQL-expressible
-  (the Catalyst folds exist and are the oracle) but measured 4× slower than
-  this Counter kernel at corpus scale, so the Arrow form is the default
-  (plans/queries.py ``REPETITION_IMPL``; BENCH/ROUND5.md).
+  (the Catalyst folds exist and are the test reference) but measured 4×
+  slower than this Counter kernel at corpus scale, so the Arrow form is the
+  only production path (plans/queries.py ``_with_repetition_stats``;
+  BENCH/ROUND5.md).
 
 Batch sizing is controlled by ``spark.sql.execution.arrow.maxRecordsPerBatch``
 (set in ``session.build_session``); the per-row functions are pure so the

@@ -343,48 +343,27 @@ _IGNORE_EXT_SUFFIXES = [
 ]
 
 
-def is_ignored(url: Column, extra_patterns: list | None = None) -> Column:
-    """True when any ignore pattern matches (case-insensitive search).
-
-    The default patterns are substring/suffix-shaped, so they decompose into
-    ``contains``/``endswith`` on the lowercased url — plain byte scans, no
-    regex engine in the hot path (this is the reference's own prescreen idea,
-    apollo.py:228-229, taken all the way). User-supplied extra patterns are
-    arbitrary regexes and go through one fused rlike.
-    """
-    lower = F.lower(url)
-    cond = F.lit(False)
-    for sub in _IGNORE_SUBSTRINGS:
-        cond = cond | lower.contains(sub)
-    for suf in _IGNORE_EXT_SUFFIXES:
-        cond = cond | lower.endswith(suf)
-    if extra_patterns:
-        fused = "|".join(f"(?:{p})" for p in extra_patterns)
-        cond = cond | url.rlike(_CI + fused)
-    return cond
-
-
 def is_ignored_fused(url: Column, extra_patterns: list | None = None) -> Column:
-    """``is_ignored`` semantics as ONE ``rlike`` — for pipelines where the
-    url is itself a wide expression.
+    """True when any ignore pattern matches (case-insensitive search) — the
+    default substring/suffix patterns plus any user-supplied regexes, fused
+    into ONE ``rlike``.
 
-    The contains/endswith decomposition references the url once per term
-    (~30×); when the url column is an alias for e.g. ``canonicalize`` (a
-    ~50-node tree), predicate pushdown substitutes the tree into EVERY term
-    and the generated code blows past janino's compile limits, silently
-    dropping the superstep's biggest stage to interpreted execution (round-4
-    probe). One fused alternation references the url exactly once, so the
-    substituted plan stays one canonicalize + one compiled regex per row —
+    The url is referenced exactly once. A contains/endswith decomposition
+    references it once per term (~30×); when the url column is an alias for
+    e.g. ``canonicalize`` (a ~50-node tree), predicate pushdown substitutes
+    the tree into EVERY term and the generated code blows past janino's
+    compile limits, silently dropping the superstep's biggest stage to
+    interpreted execution (round-4 probe). The fused alternation keeps the
+    substituted plan to one canonicalize + one compiled regex per row —
     inside whole-stage codegen (tests/test_plans.py runs the pipeline with
     ``codegen.fallback=false``). Property-tested equivalent to
-    ``is_ignored`` (tests/test_urlkit.py)."""
+    ``is_ignored_py`` (tests/test_urlkit.py)."""
     import re as _re
 
     terms = [_re.escape(s) for s in _IGNORE_SUBSTRINGS]
-    # \z = absolute end of input: Java-regex `$` would also match just
-    # before a trailing line terminator, diverging from endswith() for a
-    # url ending in '\n' (unreachable post-canonicalize, but the two
-    # functions are asserted exactly equivalent)
+    # \z = absolute end of input, i.e. endswith(): Java-regex `$` (like
+    # Python's in is_ignored_py) would also match just before a trailing
+    # line terminator — a url ending in '\n', unreachable post-canonicalize
     terms += [_re.escape(s) + "\\z" for s in _IGNORE_EXT_SUFFIXES]
     if extra_patterns:
         terms += [f"(?:{p})" for p in extra_patterns]

@@ -462,99 +462,6 @@ def decontaminate(
     )
 
 
-def span_contamination_fused(
-    docs: DataFrame,
-    bench_filter: Column,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    gram_words: int = 4,
-    max_dup_frac: float = 0.2,
-    cleanup: list | None = None,
-) -> DataFrame:
-    """One-pass fusion of :func:`dup_span_stats` and :func:`decontaminate`
-    for pipelines that need both (``corpus_prepare``): the corpus is
-    exploded into gram hashes ONCE and pre-combined ONCE to (hash, doc,
-    occurrences); the duplicated-span counts and the benchmark gram set
-    both derive from that single frame, so the fused plan pays one gram
-    explode + one (h, id) exchange where the naive composition pays three
-    explodes (spans corpus, decontamination corpus, benchmark) and two.
-    The shared frame must be PERSISTED to actually fuse: Catalyst clones
-    a multiply-consumed lazy subtree into independent copies (verified in
-    the static plan — three Generates, and the benchmark branch's copy is
-    column-pruned differently, so even runtime exchange reuse cannot
-    dedupe it).  ``cleanup`` receives the persisted frame exactly as in
-    ``ranking.global_row_number``: the caller unpersists AFTER its
-    materializing action (gate queries use the deferred-to-next-call
-    pattern, see ``q_cluster_greedy``).
-
-    WHEN TO USE — measured, not assumed: on the benchmark corpus
-    (30–60-word docs) the UNFUSED composition is ~1.7× FASTER end-to-end
-    (6.5 s vs 10–12 s warm at sf0.1, full materialization) — the cache
-    materialization barrier plus AQE's restrictions on cached plans cost
-    more than re-exploding short docs saves, so ``q_corpus_prepare``
-    deliberately does NOT use this.  The fusion wins when per-doc
-    tokenize+explode dominates the scan — long documents (real web pages,
-    KBs of text) or expensive tokenizers — where three explode passes
-    mean three full tokenizations of the corpus.
-
-    Semantics are EXACTLY the composed operators' (the gate hash would
-    catch any drift): span stats count distinct-doc sharing over ALL
-    documents (benchmark included, as ``dup_span_stats`` on the full table
-    does); contamination compares each NON-benchmark doc's grams (with
-    multiplicity) against the benchmark's distinct gram set; rows are
-    returned for non-benchmark docs only, gram-less docs reattached with
-    ``keep_spans=true, contaminated=false``.
-
-    Output: ``(id, keep_spans, contaminated)``.
-    """
-    w = F.filter(F.split(F.col(text_col), " "), lambda x: x != "")
-    grams = textstats.window_join(w, gram_words, stride=1, keep_partial=False)
-    per = (
-        docs.select(
-            F.col(id_col).alias("id"),
-            bench_filter.alias("is_bench"),
-            F.explode(grams).alias("g"),
-        )
-        .select("id", "is_bench", F.xxhash64("g").alias("h"))
-        .groupBy("h", "id", "is_bench")
-        .agg(F.count(F.lit(1)).alias("occ"))
-    )
-    from pyspark.storagelevel import StorageLevel
-
-    per = per.persist(StorageLevel.MEMORY_AND_DISK)
-    if cleanup is not None:
-        cleanup.append(per)
-    ndocs = per.groupBy("h").agg(F.count(F.lit(1)).alias("nd"))
-    bench_grams = per.filter(F.col("is_bench")).select("h").distinct()
-    train = per.filter(~F.col("is_bench"))
-    spans = (
-        train.join(ndocs, "h")
-        .join(F.broadcast(bench_grams.withColumn("_hit", F.lit(1))), "h", "left")
-        .groupBy("id")
-        .agg(
-            F.sum("occ").alias("n_grams"),
-            F.sum(
-                F.when(F.col("nd") > 1, F.col("occ")).otherwise(F.lit(0))
-            ).alias("n_dup_grams"),
-            F.sum(
-                F.when(F.col("_hit").isNotNull(), F.col("occ")).otherwise(
-                    F.lit(0)
-                )
-            ).alias("n_hit_grams"),
-        )
-    )
-    base = docs.filter(~bench_filter).select(F.col(id_col).alias("id"))
-    joined = base.join(spans, "id", "left")
-    frac = F.coalesce(
-        F.col("n_dup_grams") / F.nullif(F.col("n_grams"), F.lit(0)), F.lit(0.0)
-    )
-    return joined.select(
-        "id",
-        (frac <= max_dup_frac).alias("keep_spans"),
-        (F.coalesce(F.col("n_hit_grams"), F.lit(0)) > 0).alias("contaminated"),
-    )
-
-
 def span_decon_flags(
     docs: DataFrame,
     bench_filter: Column,
@@ -567,11 +474,7 @@ def span_decon_flags(
     docs — the composition :func:`dup_span_stats` ∘ :func:`decontaminate`
     computes, from a SINGLE gram explode and with no persist barrier (r6).
 
-    :func:`span_contamination_fused` fuses the same pair through a persisted
-    pre-combined frame; that cache materialization barrier measured SLOWER
-    than the unfused composition on short-doc corpora twice (r5 and again
-    after the r6 scan rebalance: 15.4 s vs 13.3 s at sf1-shape).  This
-    variant needs no cache at all: both the distinct-doc count and the
+    No cache is needed: both the distinct-doc count and the
     benchmark-membership marker are WINDOW aggregates over the same gram
     hash — ``nd = COUNT(*) OVER (PARTITION BY h)`` and
     ``ndb = SUM(is_bench) OVER (PARTITION BY h)`` share one window — so the

@@ -35,9 +35,58 @@ this engine's 10^10-frontier framing.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.window import WindowSpec
 from pyspark.storagelevel import StorageLevel
+
+
+def _offset_by_range_partition(
+    df: DataFrame,
+    order_cols: list,
+    out_col: str,
+    total: Column,
+    local: Callable[[WindowSpec], Column],
+    n_partitions: int,
+    cleanup: list | None,
+) -> DataFrame:
+    """The three distributed steps (module doc) shared by both rankers.
+
+    ``total`` is the named per-partition aggregate the offsets accumulate;
+    ``local(win)`` returns the named within-partition window column over
+    ``win`` (partitioned by range-partition id, ordered by ``order_cols``).
+    ``out_col`` = offset of the row's partition + its local value, bigint.
+    """
+    cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
+    part = (
+        df.repartitionByRange(n_partitions, *cols)
+        .withColumn("_rpid", F.spark_partition_id())
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    if cleanup is not None:
+        cleanup.append(part)
+
+    totals = part.groupBy("_rpid").agg(total)
+    tot = totals.columns[-1]
+    # running sum over ≤ n_partitions rows: broadcast non-equi self-join
+    # instead of Window.orderBy (which would plan Exchange SinglePartition)
+    a = totals.select(F.col("_rpid").alias("_apid"))
+    b = totals.select(F.col("_rpid").alias("_bpid"), tot)
+    offsets = (
+        a.join(F.broadcast(b), F.col("_bpid") < F.col("_apid"), "left")
+        .groupBy(F.col("_apid").alias("_rpid"))
+        .agg(F.coalesce(F.sum(tot), F.lit(0)).alias("_off"))
+    )
+
+    ranked = part.select("*", local(Window.partitionBy("_rpid").orderBy(*cols)))
+    loc = ranked.columns[-1]
+    return (
+        ranked.join(F.broadcast(offsets), "_rpid")
+        .withColumn(out_col, (F.col("_off") + F.col(loc)).cast("bigint"))
+        .drop("_rpid", loc, "_off")
+    )
 
 
 def global_row_number(
@@ -59,32 +108,14 @@ def global_row_number(
     materializes the result (unpersisting earlier would reopen the
     pid-divergence hazard the persist exists to close — see module doc).
     """
-    cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
-    part = (
-        df.repartitionByRange(n_partitions, *cols)
-        .withColumn("_rpid", F.spark_partition_id())
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    if cleanup is not None:
-        cleanup.append(part)
-
-    counts = part.groupBy("_rpid").agg(F.count(F.lit(1)).alias("_cnt"))
-    # running sum over ≤ n_partitions rows: broadcast non-equi self-join
-    # instead of Window.orderBy (which would plan Exchange SinglePartition)
-    a = counts.select(F.col("_rpid").alias("_apid"))
-    b = counts.select(F.col("_rpid").alias("_bpid"), "_cnt")
-    offsets = (
-        a.join(F.broadcast(b), F.col("_bpid") < F.col("_apid"), "left")
-        .groupBy(F.col("_apid").alias("_rpid"))
-        .agg(F.coalesce(F.sum("_cnt"), F.lit(0)).alias("_off"))
-    )
-
-    win = Window.partitionBy("_rpid").orderBy(*cols)
-    return (
-        part.withColumn("_r", F.row_number().over(win))
-        .join(F.broadcast(offsets), "_rpid")
-        .withColumn(rank_col, (F.col("_off") + F.col("_r")).cast("bigint"))
-        .drop("_rpid", "_r", "_off")
+    return _offset_by_range_partition(
+        df,
+        order_cols,
+        rank_col,
+        total=F.count(F.lit(1)).alias("_cnt"),
+        local=lambda win: F.row_number().over(win).alias("_r"),
+        n_partitions=n_partitions,
+        cleanup=cleanup,
     )
 
 
@@ -116,38 +147,17 @@ def global_running_sum(
     sums are carried as ``bigint`` (exact — the intended inputs are token
     counts, not floats, so association order cannot change the result).
     """
-    cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
-    part = (
-        df.repartitionByRange(n_partitions, *cols)
-        .withColumn("_rpid", F.spark_partition_id())
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    if cleanup is not None:
-        cleanup.append(part)
-
-    totals = part.groupBy("_rpid").agg(
-        F.sum(F.col(value_col).cast("bigint")).alias("_tot")
-    )
-    a = totals.select(F.col("_rpid").alias("_apid"))
-    b = totals.select(F.col("_rpid").alias("_bpid"), "_tot")
-    offsets = (
-        a.join(F.broadcast(b), F.col("_bpid") < F.col("_apid"), "left")
-        .groupBy(F.col("_apid").alias("_rpid"))
-        .agg(F.coalesce(F.sum("_tot"), F.lit(0)).alias("_off"))
-    )
-
+    value = F.col(value_col).cast("bigint")
     upper = 0 if inclusive else -1
-    win = (
-        Window.partitionBy("_rpid")
-        .orderBy(*cols)
-        .rowsBetween(Window.unboundedPreceding, upper)
-    )
-    local = F.coalesce(
-        F.sum(F.col(value_col).cast("bigint")).over(win), F.lit(0)
-    )
-    return (
-        part.withColumn("_ls", local)
-        .join(F.broadcast(offsets), "_rpid")
-        .withColumn(sum_col, (F.col("_off") + F.col("_ls")).cast("bigint"))
-        .drop("_rpid", "_ls", "_off")
+    return _offset_by_range_partition(
+        df,
+        order_cols,
+        sum_col,
+        total=F.sum(value).alias("_tot"),
+        local=lambda win: F.coalesce(
+            F.sum(value).over(win.rowsBetween(Window.unboundedPreceding, upper)),
+            F.lit(0),
+        ).alias("_ls"),
+        n_partitions=n_partitions,
+        cleanup=cleanup,
     )

@@ -1334,10 +1334,10 @@ def q_repetition_stats(spark, sf_dir):
     query is one scan plus one ArrowEvalPython projection
     (``udfs.repetition_stats_udf``, the Counter kernel; semantics pinned
     to the Catalyst folds ``top_run``/``dup_run_chars`` by property test).
-    The Arrow kernel is the measured default — the interpreted
+    The Arrow kernel is the only production path — the interpreted
     higher-order-function folds were the cleaning stack's slowest stage
     (~4× slower end-to-end at 400k docs) and both pure-Catalyst rewrites
-    lost; see ``REPETITION_IMPL`` and BENCH/ROUND5.md.  Scales: no
+    lost; see ``_with_repetition_stats`` and BENCH/ROUND5.md.  Scales: no
     exchange at all (the earlier explode+double-groupBy shape shuffled
     ~2 string rows per word, twice); the worst skew is one pathological
     doc, which costs its own O(W) Counter pass in its own task."""
@@ -1346,9 +1346,10 @@ def q_repetition_stats(spark, sf_dir):
 
 
 def _repetition_raw_cols() -> list:
-    """The three per-doc scalars the repetition fracs derive from, as named
-    column expressions over a ``text`` column — addable to ANY projection
-    that already scans the documents (they shuffle nothing)."""
+    """The three per-doc scalars the repetition fracs derive from, as
+    Catalyst folds over a ``text`` column — the reference
+    ``udfs.repetition_stats_udf`` is property-tested against
+    (tests/test_textstats.py); production uses the kernel."""
     return [
         textstats.word_char_count(F.col("text")).alias("wchars"),
         textstats.top_run(
@@ -1360,38 +1361,32 @@ def _repetition_raw_cols() -> list:
     ]
 
 
-# Which engine computes the repetition raw scalars: "catalyst" (the
-# higher-order-function folds) or "arrow" (udfs.repetition_stats_udf, the
-# Counter kernel).  Hash-identical (property-tested).  Arrow is the
-# measured default: 400k 60-word docs on 32 cores, noop-materialized,
-# interleaved runs — catalyst [5.48..8.44] s vs arrow [1.38..1.82] s
-# (~4× end-to-end; the folds were the cleaning stack's slowest stage and
-# both pure-Catalyst rewrites lost, BENCH/ROUND5.md).  The catalyst form
-# is kept for pipelines that must stay Python-free.
-REPETITION_IMPL = "arrow"
-
-
-def _with_repetition_stats(docs: "DataFrame", impl: str | None = None) -> "DataFrame":
+def _with_repetition_stats(docs: "DataFrame") -> "DataFrame":
     """Append ``top_bigram_frac`` / ``dup_trigram_frac`` / ``keep`` to a
     frame carrying ``text`` — two stacked projections (raw scalars, then
-    fracs) so each raw scalar is evaluated once, zero shuffles either way
-    (the arrow path adds one ArrowEvalPython node, no exchange)."""
-    if (impl or REPETITION_IMPL) == "arrow":
-        from ..functions.udfs import repetition_stats_udf
+    fracs) so each raw scalar is evaluated once, zero shuffles (one
+    ArrowEvalPython node, no exchange).
 
-        staged = docs.select(
-            "*", repetition_stats_udf(F.col("text")).alias("_rep")
-        ).select(
-            "*",
-            F.col("_rep.wchars").alias("wchars"),
-            F.struct(
-                F.col("_rep.top_cnt").alias("cnt"),
-                F.col("_rep.top_g").alias("g"),
-            ).alias("top"),
-            F.col("_rep.dupchars").alias("dupchars"),
-        ).drop("_rep")
-    else:
-        staged = docs.select("*", *_repetition_raw_cols())
+    The raw scalars come from ``udfs.repetition_stats_udf``, the Counter
+    kernel: 400k 60-word docs on 32 cores, noop-materialized, interleaved
+    runs — Catalyst folds [5.48..8.44] s vs Arrow [1.38..1.82] s (~4×
+    end-to-end; the folds were the cleaning stack's slowest stage and both
+    pure-Catalyst rewrites lost, BENCH/ROUND5.md).  The folds stay as
+    ``_repetition_raw_cols``, the reference the kernel is property-tested
+    against (tests/test_textstats.py)."""
+    from ..functions.udfs import repetition_stats_udf
+
+    staged = docs.select(
+        "*", repetition_stats_udf(F.col("text")).alias("_rep")
+    ).select(
+        "*",
+        F.col("_rep.wchars").alias("wchars"),
+        F.struct(
+            F.col("_rep.top_cnt").alias("cnt"),
+            F.col("_rep.top_g").alias("g"),
+        ).alias("top"),
+        F.col("_rep.dupchars").alias("dupchars"),
+    ).drop("_rep")
     top_frac = F.round(
         F.coalesce(
             F.col("top.cnt")
@@ -1749,6 +1744,15 @@ WHERE list_cosine_similarity(a.embedding, b.embedding) >= 0.8"""
 _CLUSTER_GREEDY_DEFERRED: list = []
 
 
+def _drain(deferred: list) -> list:
+    """Unpersist a deferred registry's frames and return it, emptied, for
+    the current invocation to register its own."""
+    for frame in deferred:
+        frame.unpersist()
+    deferred.clear()
+    return deferred
+
+
 def q_cluster_greedy(spark, sf_dir):
     """A4/A5: greedy path-prefix clustering over the synthesized urls,
     projected to its SQL-checkable partition invariant.
@@ -1779,11 +1783,9 @@ def q_cluster_greedy(spark, sf_dir):
     # wrong #3), while the persisted frame stays cached until that action
     # runs; accumulation is bounded at one invocation's tiny per-domain
     # frame instead of growing for the session lifetime.
-    for frame in _CLUSTER_GREEDY_DEFERRED:
-        frame.unpersist()
-    _CLUSTER_GREEDY_DEFERRED.clear()
     clusters = cluster_urls(
-        urls, path_depth=2, min_cluster_size=1, cleanup=_CLUSTER_GREEDY_DEFERRED
+        urls, path_depth=2, min_cluster_size=1,
+        cleanup=_drain(_CLUSTER_GREEDY_DEFERRED),
     )
     return clusters.groupBy("domain").agg(
         F.sum("url_count").alias("urls_clustered"),
@@ -2563,13 +2565,6 @@ _TIERS_DEFERRED: list = []
 _PREPARE_DEFERRED: list = []
 
 
-def _drain(deferred: list) -> list:
-    for frame in deferred:
-        frame.unpersist()
-    deferred.clear()
-    return deferred
-
-
 def q_pack_sequences(spark, sf_dir):
     """Concat-and-chunk packing assignment (seq_len=128): exact global
     token prefix sums via the range-partitioned distributed prefix-sum
@@ -2794,15 +2789,11 @@ def q_corpus_prepare(spark, sf_dir):
     # benchmark-membership marker are two window aggregates over the same
     # gram hash, so the pair costs one explode + three 8-byte-key
     # exchanges where the r5 composition paid three explodes and five.
-    # The PERSIST-based fusion (curation.span_contamination_fused) was
-    # A/B-measured and LOST twice — r5 pre-rebalance (~1.7x) and again
-    # post-rebalance (15.4 s vs 13.3 s at sf1-shape): the cache
-    # materialization barrier plus AQE's restrictions on cached plans
-    # cost more than re-exploding short docs saves.  The window form
-    # fuses with NO cache, so it keeps the pipelined shape AND the single
-    # tokenization; produced rows verified identical (gate + set-equality
-    # A/B).  Flags are emitted for non-benchmark docs only — exactly the
-    # set the former inner decon join kept.
+    # A fusion through a persisted pre-combined frame lost its A/B twice
+    # (15.4 s vs 13.3 s at sf1-shape, OPTIMIZATION_r06.md); the window
+    # form fuses with NO cache, so it keeps the pipelined shape AND the
+    # single tokenization.  Flags are emitted for non-benchmark docs only —
+    # exactly the set the former inner decon join kept.
     flags = curation.span_decon_flags(
         docs, F.col("doc_id") % 50 == 0, gram_words=4, max_dup_frac=0.2
     ).withColumnRenamed("id", "doc_id")

@@ -32,16 +32,14 @@ def build_session(
     # smaller splits keep every core busy long before the 128 MB default
     # would.  16 MB costs nothing in local mode (task dispatch is ~ms) and
     # still yields ≤ 8 tasks/GB; a pure-I/O deployment at cluster scale
-    # should raise this back to 128m-1g via the env knob.  Row-group
+    # should raise this back to 128m-1g through ``extra_conf``.  Row-group
     # granularity still bounds real splits — sources/tables.py rebalances
     # the genuinely unsplittable small files.
-    max_partition_bytes = os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "16m")
-
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.files.maxPartitionBytes", max_partition_bytes)
+        .config("spark.sql.files.maxPartitionBytes", "16m")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # NOTE (r6, measured): lowering coalescePartitions.minPartitionSize

@@ -18,13 +18,13 @@ local[32]:
 * tables whose natural split count already covers the cores (bytes >=
   cores x maxPartitionBytes) are returned untouched — at 100 TB nothing is
   ever rebalanced;
-* tables above ``SPARK_GRAFT_REBALANCE_MAX_BYTES`` (default 64 MB) are
-  returned untouched — their row groups give adequate parallelism and a
-  full-table shuffle would cost more than the tail it saves;
+* tables above ``_REBALANCE_MAX_BYTES`` (64 MB) are returned untouched —
+  their row groups give adequate parallelism and a full-table shuffle would
+  cost more than the tail it saves;
 * tiny dimension tables (< 16 KB: region, nation) are returned untouched —
   a 32-way exchange of a 2 KB table is pure scheduling overhead.
 
-The exchange moves at most ``REBALANCE_MAX_BYTES`` of compressed input once,
+The exchange moves at most ``_REBALANCE_MAX_BYTES`` of compressed input once,
 and buys cores-way parallelism for every downstream projection.  Plan-guard
 tests account for exactly this one RoundRobinPartitioning exchange and still
 forbid any other shuffle in the pure-projection pipelines.
@@ -36,27 +36,12 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-# Rebalance policy knobs (env-overridable; see module docstring).
-_REBALANCE_MODE = os.environ.get("SPARK_GRAFT_SCAN_REBALANCE", "auto")
-_REBALANCE_MAX_BYTES = int(
-    os.environ.get("SPARK_GRAFT_REBALANCE_MAX_BYTES", str(64 * 1024 * 1024))
-)
+# Rebalance policy bounds (see module docstring).
+_REBALANCE_MAX_BYTES = 64 * 1024 * 1024
 _REBALANCE_MIN_BYTES = 16 * 1024
 
 # per-path (bytes, n_row_groups) cache — one footer read per path per process
 _PATH_META: dict = {}
-
-
-def _bytes_value(conf_val: str) -> int:
-    """Parse Spark byte-conf strings ('134217728b', '128m', '1g')."""
-    s = conf_val.strip().lower()
-    mult = 1
-    for suffix, m in (("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30), ("b", 1)):
-        if s.endswith(suffix):
-            s = s[: -len(suffix)]
-            mult = m
-            break
-    return int(float(s)) * mult
 
 
 def _path_meta(path: str) -> tuple:
@@ -93,8 +78,6 @@ def maybe_rebalance_scan(
     (module docstring has the full policy).  No-op for big inputs, for
     inputs whose natural splits already fill the cluster, and for tiny
     dimension tables."""
-    if _REBALANCE_MODE == "off":
-        return df
     try:
         n_bytes, n_row_groups = _path_meta(path)
     except OSError:
@@ -102,10 +85,7 @@ def maybe_rebalance_scan(
     cores = spark.sparkContext.defaultParallelism
     if n_bytes < _REBALANCE_MIN_BYTES or n_bytes > _REBALANCE_MAX_BYTES:
         return df
-    try:
-        max_pb = _bytes_value(spark.conf.get("spark.sql.files.maxPartitionBytes"))
-    except Exception:
-        max_pb = 128 << 20
+    max_pb = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
     # natural scan parallelism: byte splits capped by row-group granularity
     natural = min(max(1, n_bytes // max_pb + 1), n_row_groups)
     if natural >= cores:

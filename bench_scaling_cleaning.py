@@ -72,11 +72,11 @@ def _synth_docs(spark, n_docs: int):
 
 def _cleaning_job(docs):
     """The measured job: the repetition projection through the Arrow
-    Counter kernel (REPETITION_IMPL default), materialized via the noop
-    sink — count() would column-prune the kernel away entirely."""
+    Counter kernel, materialized via the noop sink — count() would
+    column-prune the kernel away entirely."""
     from apollo_service_spark.plans.queries import _with_repetition_stats
 
-    out = _with_repetition_stats(docs, impl="arrow").drop("text")
+    out = _with_repetition_stats(docs).drop("text")
     out.write.format("noop").mode("overwrite").save()
 
 

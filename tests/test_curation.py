@@ -412,21 +412,20 @@ def test_gopher_quality_flags_literal_cases(spark):
     assert out[6].ok_symbol_ratio is True and out[6].ok_alpha_words is False
 
 
-def test_span_contamination_fused_equals_composition(spark):
-    """The fused single-gram-pass operator must produce EXACTLY the
-    composed dup_span_stats + decontaminate verdicts (same thresholds,
-    train docs only)."""
+def test_span_decon_flags_equals_composition(spark):
+    """The single-gram-pass flags must be EXACTLY the composed
+    dup_span_stats + decontaminate verdicts (same thresholds, train docs
+    only)."""
     import os
 
-    docs = spark.read.parquet(
-        os.path.join("/root/testdata/sf0.001", "documents.parquet")
-    )
+    from tests.conftest import SF_DIR
+
+    docs = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
     bench_pred = F.col("doc_id") % 50 == 0
-    cleanup = []
-    fused = {
+    flags = {
         r.id: (r.keep_spans, r.contaminated)
-        for r in curation.span_contamination_fused(
-            docs, bench_pred, gram_words=4, max_dup_frac=0.2, cleanup=cleanup
+        for r in curation.span_decon_flags(
+            docs, bench_pred, gram_words=4, max_dup_frac=0.2
         ).collect()
     }
     spans = {
@@ -441,9 +440,10 @@ def test_span_contamination_fused_equals_composition(spark):
             docs.filter(~bench_pred), docs.filter(bench_pred), gram_words=4
         ).collect()
     }
-    assert set(fused) == set(decon)  # train docs only
-    for i, (ks, cont) in fused.items():
+    assert set(flags) == set(decon)  # train docs only
+    for i, (ks, cont) in flags.items():
         assert ks == spans[i], f"doc {i} spans"
         assert cont == decon[i], f"doc {i} contamination"
-    for frame in cleanup:
-        frame.unpersist()
+    # the fixture exercises both verdicts of both flags
+    assert {ks for ks, _ in flags.values()} == {True, False}
+    assert {cont for _, cont in flags.values()} == {True, False}

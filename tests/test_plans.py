@@ -62,7 +62,7 @@ def test_frontier_dedup_is_anti_join(spark, documents):
 
 
 def test_predicate_pipeline_stays_in_codegen(spark, documents):
-    """canonicalize + is_ignored + categorize must run inside one
+    """canonicalize + is_ignored_fused + categorize must run inside one
     WholeStageCodegen span — no Python, no extra exchanges."""
     from apollo_service_spark.functions import urlkit
 
@@ -72,7 +72,7 @@ def test_predicate_pipeline_stays_in_codegen(spark, documents):
                  F.lit("#frag")).alias("url")
     )
     out = urls.select(urlkit.canonicalize(F.col("url")).alias("u")).filter(
-        ~urlkit.is_ignored(F.col("u"))
+        ~urlkit.is_ignored_fused(F.col("u"))
     ).select(urlkit.categorize(F.col("u")).alias("c"))
     plan = _plan(out)
     # formatted mode marks codegen'd operators with '*' and '[codegen id : N]'
@@ -369,8 +369,8 @@ def test_repetition_stats_zero_exchange(spark):
     """Repetition stats are per-doc scalars: any Exchange or Expand here
     means the explode+groupBy shape crept back (it shuffled ~2 string rows
     per word, twice).  The per-doc compute is ONE ArrowEvalPython node —
-    the Counter kernel, the measured default over the Catalyst folds
-    (REPETITION_IMPL; BENCH/ROUND5.md) — and never row-at-a-time Python."""
+    the Counter kernel, measured ~4× faster than the Catalyst folds
+    (BENCH/ROUND5.md) — and never row-at-a-time Python."""
     import __spark_entry__ as em
 
     import re
@@ -386,18 +386,6 @@ def test_repetition_stats_zero_exchange(spark):
     assert "BatchEvalPython" not in plan, plan
     n_arrow = len(re.findall(r"^\(\d+\) ArrowEvalPython", plan, flags=re.MULTILINE))
     assert n_arrow == 1, f"{n_arrow} ArrowEvalPython nodes\n{plan}"
-
-
-def test_repetition_stats_catalyst_variant_pure_jvm(spark):
-    """The retained impl="catalyst" path must stay entirely JVM-side —
-    it exists precisely for pipelines that must run Python-free."""
-    from apollo_service_spark.plans.queries import _with_repetition_stats
-    from apollo_service_spark.sources.tables import load_table
-
-    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
-    plan = _plan(_with_repetition_stats(docs, impl="catalyst").drop("text"))
-    assert "Exchange" not in plan, plan
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
 
 
 def test_corpus_clean_single_join(spark):
@@ -491,40 +479,63 @@ def test_decontaminate_broadcast_probe_single_corpus_shuffle(spark, documents):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, plan
 
 
-def test_span_contamination_fused_single_explode(spark, documents):
-    """The fused span+decontamination operator must explode grams ONCE and
-    serve all three consumers (distinct-doc counts, benchmark gram set,
-    per-doc reduce) from the persisted pre-combined frame: exactly one
-    Generate, at least three InMemoryTableScans of the shared cache. An
-    unpersisted lazy frame silently un-fuses — Catalyst clones the
-    multiply-consumed subtree into independent explodes (verified: three
-    Generates, with the benchmark copy column-pruned differently so even
-    runtime exchange reuse cannot dedupe it)."""
+def test_span_decon_flags_single_explode(spark, documents):
+    """span_decon_flags must explode grams ONCE and serve the distinct-doc
+    count, the benchmark marker and the per-doc reduce from that one
+    pipeline, with no cache: exactly one Generate, no InMemoryTableScan.
+    Its two window aggregates share the gram-hash partitioning; a fusion
+    through a persisted frame lost its A/B twice (OPTIMIZATION_r06.md)."""
     import re
 
-    from apollo_service_spark.operators.curation import span_contamination_fused
+    from apollo_service_spark.operators.curation import span_decon_flags
 
-    cleanup = []
-    out = span_contamination_fused(
-        documents, F.col("doc_id") % 50 == 0, cleanup=cleanup
-    )
-    plan = _plan(out)
+    plan = _plan(span_decon_flags(documents, F.col("doc_id") % 50 == 0))
     n_generate = len(re.findall(r"^\(\d+\) Generate", plan, flags=re.MULTILINE))
-    n_cached = len(
-        re.findall(r"^\(\d+\) InMemoryTableScan", plan, flags=re.MULTILINE)
-    )
     assert n_generate == 1, f"{n_generate} Generates\n{plan}"
-    assert n_cached >= 3, f"{n_cached} cache scans\n{plan}"
-    for frame in cleanup:
-        frame.unpersist()
+    assert "InMemoryTableScan" not in plan, plan
+
+
+def test_rebalance_reads_byte_string_split_size(spark, tmp_path):
+    """The rebalance decision reads maxPartitionBytes through Spark's own
+    parser, so a unit-suffixed value such as "1mb" counts as 1 MiB. The
+    fixture has more row groups than cores and more MiB than cores: at
+    1mb its natural splits cover the cores and the scan must stay as it is;
+    at the session's 16m it is one split and must be rebalanced."""
+    import random
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from apollo_service_spark.sources.tables import load_table
+
+    cores = spark.sparkContext.defaultParallelism
+    rng = random.Random(7)
+    n_rows = 1024 * (cores + 2)
+    blobs = [rng.randbytes(1024).hex() for _ in range(n_rows)]  # incompressible
+    pq.write_table(
+        pa.table({"k": list(range(n_rows)), "blob": blobs}),
+        str(tmp_path / "wide.parquet"),
+        row_group_size=1024,
+        compression="none",
+    )
+    prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    try:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", "1mb")
+        plan = _plan(load_table(spark, str(tmp_path), "wide", rebalance=True))
+        assert "RoundRobinPartitioning" not in plan, plan
+        spark.conf.set("spark.sql.files.maxPartitionBytes", "16m")
+        plan = _plan(load_table(spark, str(tmp_path), "wide", rebalance=True))
+        assert "RoundRobinPartitioning" in plan, plan
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
 
 
 def test_corpus_prepare_no_single_partition(spark):
     """The end-to-end manifest composes every curation stage and must stay
     fully distributed: the packing prefix sum and quota window ride the
     range-partition/WindowGroupLimit machinery, never a single-partition
-    exchange. (Spans + decontamination stay UNFUSED here by measurement —
-    see q_corpus_prepare's comment; the fused variant is guarded above.)"""
+    exchange. (Spans + decontamination come from span_decon_flags, whose
+    single explode is guarded above.)"""
     import __spark_entry__ as em
 
     plan = _plan(em.queries()["corpus_prepare"](spark, SF_DIR))

@@ -181,8 +181,6 @@ def test_arrow_repetition_kernel_matches_catalyst(spark):
     window_join coalesces its null gram array to empty)."""
     import random
 
-    from apollo_service_spark.plans.queries import _with_repetition_stats
-
     rng = random.Random(20260819)
     vocab = ["aa", "bb", "cc", "dd", "ü", "ee ee"]  # embedded space via join
     cases = [
@@ -216,22 +214,6 @@ def test_arrow_repetition_kernel_matches_catalyst(spark):
     }
     for i, t in enumerate(cases):
         assert cat_raw[i] == arr_raw[i], (i, t, cat_raw[i], arr_raw[i])
-
-    # and the derived fracs + keep flag through the shared staging helper
-    out_cols = ["doc_id", "top_bigram_frac", "dup_trigram_frac", "keep"]
-    cat = {
-        r[0]: tuple(r[1:])
-        for r in _with_repetition_stats(docs, impl="catalyst")
-        .select(*out_cols)
-        .collect()
-    }
-    arr = {
-        r[0]: tuple(r[1:])
-        for r in _with_repetition_stats(docs, impl="arrow")
-        .select(*out_cols)
-        .collect()
-    }
-    assert cat == arr
 
 
 def test_arrow_repetition_kernel_mega_doc(spark):

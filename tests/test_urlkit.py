@@ -68,7 +68,7 @@ def test_is_document_matches_python(url_df):
 
 
 def test_is_ignored_matches_python(url_df):
-    got = _spark_map(url_df, urlkit.is_ignored(F.col("url")))
+    got = _spark_map(url_df, urlkit.is_ignored_fused(F.col("url")))
     for url in URLS:
         assert got[url] == urlkit.is_ignored_py(url), url
 
@@ -164,10 +164,10 @@ def test_is_redirect_404_scraper_rule(spark):
 
 
 def test_is_ignored_fused_equivalent(spark):
-    """is_ignored_fused (single-rlike, used where the url is a wide
-    expression) must match the contains/endswith decomposition exactly —
-    including case-insensitivity, the '.jpg' substring-vs-suffix overlap,
-    and extra user patterns."""
+    """is_ignored_fused (one rlike over the fused alternation) must match
+    the Python reference is_ignored_py exactly — including
+    case-insensitivity, the '.jpg' substring-vs-suffix overlap, and extra
+    user patterns."""
     cases = [
         "https://h.com/page",
         "https://h.com/LOGIN/next",
@@ -186,19 +186,14 @@ def test_is_ignored_fused_equivalent(spark):
     ]
     df = spark.createDataFrame([(u,) for u in cases], "url string")
     for extra in (None, [r"/admin/", r"\?next="]):
-        got_dec = {
-            r["url"]: r["d"]
-            for r in df.select(
-                "url", urlkit.is_ignored(F.col("url"), extra).alias("d")
-            ).collect()
-        }
-        got_fused = {
+        got = {
             r["url"]: r["f"]
             for r in df.select(
                 "url", urlkit.is_ignored_fused(F.col("url"), extra).alias("f")
             ).collect()
         }
-        assert got_dec == got_fused, (extra, got_dec, got_fused)
+        want = {u: urlkit.is_ignored_py(u, extra) for u in cases}
+        assert got == want, (extra, got, want)
 
 
 def test_categorize_config_tier_divergences(spark):

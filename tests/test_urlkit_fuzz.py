@@ -50,7 +50,7 @@ def test_fuzz_mirrors_agree(spark):
         urlkit.canonicalize(F.col("url")).alias("canon"),
         urlkit.categorize(F.col("url")).alias("cat"),
         urlkit.is_document_url(F.col("url")).alias("doc"),
-        urlkit.is_ignored(F.col("url")).alias("ign"),
+        urlkit.is_ignored_fused(F.col("url")).alias("ign"),
     ).collect()
     assert len(got) == len(urls)
     for row in got:
