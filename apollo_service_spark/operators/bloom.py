@@ -1,17 +1,11 @@
-"""Distributed-built, broadcast-applied bloom filter for the URL-seen set.
+"""Bloom filter bitmap kernel of the partitioned URL-seen store (seen.py).
 
-The load-bearing join of the frontier engine is ``new_links LEFT ANTI JOIN
-seen`` (reference semantics: `apollo.py:592-604`). At 10^10 seen URLs the
-anti-join's shuffle dominates; a bloom pre-filter splits candidates into
-*definitely-new* (bit miss — skips the join entirely; the overwhelming
-majority during frontier expansion) and *maybe-seen* (goes to the exact
-anti-join, which keeps correctness exact).
-
-Build is distributed: each partition folds its rows into a local numpy
-bitmap inside ``mapInPandas`` (one m/8-byte blob per partition crosses the
-wire, not the rows), the driver ORs the blobs and broadcasts the result.
+The store keeps one bitmap per partition id; each ``applyInArrow`` task
+builds or probes its own partition's bitmap with :class:`BloomFilter`.
 Membership uses double hashing (Kirsch–Mitzenmacher): k indices derived from
-two JVM-side ``xxhash64`` values, so the Python side never re-hashes strings.
+two JVM-side ``xxhash64`` values (:func:`hash_columns`), so the Python side
+never re-hashes strings. A bloom miss means definitely new; a hit is a
+*maybe*, which the store resolves exactly against the partition's url set.
 """
 
 from __future__ import annotations
@@ -19,10 +13,8 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType
 
 _H1_SALT = 0x9E3779B9
 _H2_SALT = 0x85EBCA6B
@@ -47,7 +39,7 @@ def optimal_k(m_bits: int, n_items: int) -> int:
 
 
 class BloomFilter:
-    """Immutable bitmap + params; picklable for ``spark.sparkContext.broadcast``."""
+    """One bitmap + its params: a seen-store partition's filter."""
 
     def __init__(self, bitmap: np.ndarray, n_bits: int, k: int):
         self.bitmap = bitmap  # uint8 array of n_bits/8 bytes
@@ -82,47 +74,3 @@ class BloomFilter:
         return cls(
             np.zeros(n_bits // 8, dtype=np.uint8), n_bits, optimal_k(n_bits, n_items)
         )
-
-
-def build_bloom(
-    df: DataFrame, col_name: str, n_items: int, fpp: float = 0.01
-) -> BloomFilter:
-    """Fold `df[col_name]` into a BloomFilter, one bitmap per partition."""
-    n_bits = optimal_bits(n_items, fpp)
-    k = optimal_k(n_bits, n_items)
-    h1, h2 = hash_columns(F.col(col_name))
-    hashed = df.select(h1.alias("h1"), h2.alias("h2"))
-
-    def fold(batches):
-        bloom = BloomFilter(np.zeros(n_bits // 8, dtype=np.uint8), n_bits, k)
-        for pdf in batches:
-            bloom.add_batch(pdf["h1"].to_numpy(), pdf["h2"].to_numpy())
-        yield pd.DataFrame({"bitmap": [bloom.bitmap.tobytes()]})
-
-    blobs = hashed.mapInPandas(fold, schema="bitmap binary").collect()
-    bitmap = np.zeros(n_bits // 8, dtype=np.uint8)
-    for row in blobs:
-        bitmap |= np.frombuffer(row["bitmap"], dtype=np.uint8)
-    return BloomFilter(bitmap, n_bits, k)
-
-
-def split_by_bloom(
-    spark: SparkSession, candidates: DataFrame, col_name: str, bloom: BloomFilter
-) -> tuple:
-    """Return (definitely_new, maybe_seen) using a broadcast bloom.
-
-    ``definitely_new`` needs no further checking; ``maybe_seen`` must still go
-    through the exact anti-join (bloom false positives land there).
-    """
-    bc = spark.sparkContext.broadcast(bloom)
-
-    @F.pandas_udf(BooleanType())
-    def might_contain(h1: pd.Series, h2: pd.Series) -> pd.Series:
-        res = bc.value.might_contain(h1.to_numpy(), h2.to_numpy())
-        return pd.Series(res, index=h1.index)
-
-    h1, h2 = hash_columns(F.col(col_name))
-    flagged = candidates.withColumn("_maybe_seen", might_contain(h1, h2))
-    definitely_new = flagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
-    maybe_seen = flagged.filter(F.col("_maybe_seen")).drop("_maybe_seen")
-    return definitely_new, maybe_seen

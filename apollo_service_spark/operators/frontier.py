@@ -12,9 +12,11 @@ iteration of the driver loop is one Spark job:
 3. **expand** — ``extract_links_udf`` (Arrow) → ``explode`` → canonicalize →
    ignore-pattern / domain / document filters (urlkit, Catalyst-native) →
    robots broadcast gate (robots.py).
-4. **dedup** — bloom pre-filter (bloom.py) then exact
-   ``LEFT ANTI JOIN`` against the accumulated seen set, then against the
-   carryover frontier (reference double-check under lock, `apollo.py:592-604`).
+4. **dedup** — exact ``LEFT ANTI JOIN`` against the carryover frontier and
+   the in-flight batch (reference double-check under lock,
+   `apollo.py:592-604`), then the partitioned bloom seen store (seen.py): a
+   bloom probe and an exact check against the partition's own url set, in
+   one task per partition, so the accumulated seen set never shuffles.
 5. **commit** — frontier, seen delta, crawl log, per-partition lineage and
    iteration metrics land in one SnapshotStore commit; a crawl resumes
    mid-frontier from the latest committed iteration.
@@ -25,7 +27,7 @@ crawl ordering exactly (verified against oracle/simulator.py). Every
 DataFrame crossing iterations round-trips through parquet, which truncates
 lineage — no logical-plan growth across supersteps (SURVEY.md §7 risk 3).
 
-Scale notes: the frontier and seen tables are hash-partitioned by salted
+Scale notes: the frontier table and the seen store are partitioned by salted
 host PLUS a per-url spread offset (`host_salted_partition(url=...)`) so one
 mega-host cannot pin a storage/dedup partition; the politeness budget bounds
 any host's per-iteration BATCH, and the opt-in two-phase selection
@@ -50,7 +52,7 @@ from ..session import codegen_compiles
 from ..sources.storage import SnapshotStore
 from . import politeness as politeness_ops
 from . import robots as robots_ops
-from .bloom import build_bloom, split_by_bloom
+from .seen import PartitionedBloomSeenStore
 
 
 @dataclass
@@ -65,16 +67,8 @@ class CrawlConfig:
     n_partitions: int = 32
     salt: int = 42
     bloom_fpp: float = 0.01
-    use_bloom: bool = True
-    bloom_min_seen: int = 10_000          # below this the exact join is cheap
     max_iterations: int = 1000
-    # "partitioned" (default) maintains per-partition bloom bitmaps + exact
-    # url sets incrementally — the 10^10-scale path (operators/seen.py): cost
-    # per superstep is proportional to the delta and nothing bloom-shaped
-    # crosses the driver. "broadcast" rebuilds+broadcasts one bloom per
-    # iteration (only sane to ~10^8 seen urls; kept for A/B benchmarking).
-    seen_backend: str = "partitioned"
-    expected_urls: int = 1_000_000        # bloom sizing for "partitioned"
+    expected_urls: int = 1_000_000        # seen-store bloom sizing
     # opt-in two-phase batch selection: bounds the per-host window straggler
     # when one mega-host dominates the frontier (politeness.select_batch);
     # None = single exact window (right for skew-free frontiers)
@@ -138,11 +132,10 @@ class FrontierEngine:
         # buys — when the fetch table exceeds cache it degrades to the
         # re-scan behavior, never worse; on a real crawl the pages "table"
         # is the fetch layer (network), and this join is its stand-in.
-        # run() unpersists on completion.
+        # run() persists it and releases it when the run ends, so an engine
+        # that is built but never run caches nothing.
         self.pages_raw = pages
-        self.pages = pages.repartition(self.config.n_partitions, "url").persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
+        self.pages = pages.repartition(self.config.n_partitions, "url")
         # robots rules arrive either pre-parsed (host, disallow_prefix) or
         # as raw fetched bodies (host, body) — the latter run through the
         # reference-exact line scan (robots_ops.parse_robots) first, i.e.
@@ -168,18 +161,13 @@ class FrontierEngine:
             )
         self.politeness = politeness
         self.sitemap_bodies = sitemap_bodies
-        if self.config.seen_backend == "partitioned":
-            from .seen import PartitionedBloomSeenStore
-
-            self.seen_store = PartitionedBloomSeenStore(
-                store.root,
-                n_partitions=self.config.n_partitions,
-                expected_urls=self.config.expected_urls,
-                fpp=self.config.bloom_fpp,
-                salt=self.config.salt,
-            )
-        else:
-            self.seen_store = None
+        self.seen_store = PartitionedBloomSeenStore(
+            store.root,
+            n_partitions=self.config.n_partitions,
+            expected_urls=self.config.expected_urls,
+            fpp=self.config.bloom_fpp,
+            salt=self.config.salt,
+        )
 
     # ------------------------------------------------------------------ init
 
@@ -256,26 +244,17 @@ class FrontierEngine:
         links = links.withColumn("path", urlkit.url_path(F.col("url")))
         return robots_ops.robots_allow(links, self.robots_agg).drop("path")
 
-    def _dedup(
-        self,
-        links: DataFrame,
-        seen: DataFrame | None,
-        exclude: DataFrame,
-        seen_count: int,
-    ) -> DataFrame:
-        """Dedup candidates vs the seen set and vs in-flight/carryover urls.
-
-        Partitioned backend: one partition-local pass (bloom probe + exact
-        pid-local url set inside the task, seen.py:filter_new) — the
-        accumulated seen set never shuffles. Broadcast backend: bloom
-        pre-filter + exact anti-join against the accumulated seen table.
+    def _dedup(self, links: DataFrame, exclude: DataFrame) -> DataFrame:
+        """Dedup candidates vs in-flight/carryover urls and vs the seen set.
 
         ``exclude`` is the union of the carryover frontier and this
         iteration's scheduled batch — the reference's visited-set membership
         includes in-flight URLs (`apollo.py:442-452`), so links back to a
-        just-fetched page must not re-enter the frontier.
+        just-fetched page must not re-enter the frontier. The seen check is
+        one partition-local pass of the seen store (bloom probe + exact
+        pid-local url set inside the task, seen.py:filter_new) — the
+        accumulated seen set never shuffles.
         """
-        cfg = self.config
         # dedup on url alone — host is a pure function of the url, so it is
         # recomputed AFTER the aggregate instead of riding the shuffle as a
         # grouping key (narrower shuffle rows, one fewer key column)
@@ -291,20 +270,7 @@ class FrontierEngine:
         # Python pass. Order vs the seen check is semantically free (both
         # are row filters).
         links = links.join(exclude.select("url"), "url", "left_anti")
-        if self.seen_store is not None:
-            new = self.seen_store.filter_new(links)
-        elif cfg.use_bloom and seen_count >= cfg.bloom_min_seen:
-            bloom = build_bloom(
-                seen, "url", n_items=max(seen_count, 1), fpp=cfg.bloom_fpp
-            )
-            definitely_new, maybe_seen = split_by_bloom(
-                self.spark, links, "url", bloom
-            )
-            checked = maybe_seen.join(seen.select("url"), "url", "left_anti")
-            new = definitely_new.unionByName(checked)
-        else:
-            new = links.join(seen.select("url"), "url", "left_anti")
-        return new.select(*_FRONTIER_SCHEMA)
+        return self.seen_store.filter_new(links).select(*_FRONTIER_SCHEMA)
 
     # ------------------------------------------------------------------ loop
 
@@ -312,9 +278,6 @@ class FrontierEngine:
         cfg = self.config
         store = self.store
         spark = self.spark
-        # re-mark the pages cache (no-op on first run; restores the mark a
-        # previous run()'s completion unpersist removed on engine reuse)
-        self.pages.persist(StorageLevel.MEMORY_AND_DISK)
 
         if resume and store.latest_iteration() >= 0:
             start_iter = store.latest_iteration() + 1
@@ -322,259 +285,259 @@ class FrontierEngine:
             metrics = store.iteration_metrics()
             pages_fetched = sum(m.get("pages_fetched", 0) for m in metrics)
             links_processed = sum(m.get("links_found", 0) for m in metrics)
-            # seen deltas are disjoint (a url is scheduled at most once), so
-            # the cumulative scheduled count IS the seen-set size — no
-            # per-iteration count() job on the accumulated table
-            seen_count = sum(m.get("scheduled", 0) for m in metrics)
         else:
             if seeds is None:
                 raise ValueError("seeds required for a fresh crawl")
-            if self.seen_store is not None:
-                self.seen_store.reset()
+            self.seen_store.reset()
             start_iter = 0
             frontier = self._init_frontier(seeds)
             pages_fetched = 0
             links_processed = 0
-            seen_count = 0
-        # one count per RUN (not per iteration): every subsequent frontier
-        # size is observed for free during the previous commit's write
-        frontier = frontier.persist()
-        frontier_size = frontier.count()
-
-        seen = None
-        if self.seen_store is None:
-            seen = (
-                store.read_accumulated(spark, "seen_delta")
-                if resume and store.latest_iteration() >= 0
-                else None
-            ) or spark.createDataFrame([], "url string")
+        # one count per RUN (not per iteration): the first superstep counts
+        # its input frontier, every later frontier size is observed for free
+        # during the previous commit's write
+        frontier_size = None
 
         reason = "frontier_exhausted"
         iteration = start_iter - 1
-        for iteration in range(start_iter, cfg.max_iterations + start_iter):
-            # stop checks on driver-side counters only — the frontier size of
-            # iteration k is observed during iteration k-1's commit write, so
-            # the loop top runs zero Spark jobs (first iteration: size unknown,
-            # the superstep itself resolves an empty frontier to zero work)
-            if frontier_size == 0:
-                reason = "frontier_exhausted"
-                iteration -= 1
-                frontier.unpersist()
-                break
-            if cfg.max_pages is not None and pages_fetched >= cfg.max_pages:
-                reason = "max_pages"
-                iteration -= 1
-                frontier.unpersist()
-                break
-            if cfg.max_links is not None and links_processed >= cfg.max_links:
-                reason = "max_links"
-                iteration -= 1
-                frontier.unpersist()
-                break
-
-            t0 = time.monotonic()
-            compiles0 = codegen_compiles(spark)
-
-            selected, carryover = politeness_ops.select_batch(
-                frontier,
-                self.politeness,
-                cfg.default_budget,
-                prune_partitions=cfg.politeness_prune,
-            )
-            # deterministic truncation at the page limit (canonical rule for
-            # the reference's racy max_pages stop, apollo.py:538-547). The
-            # within-iteration rank is DERIVED data — (iteration, depth, url)
-            # totally orders the crawl — so the hot loop only materializes it
-            # when the truncation can actually bind (remaining < batch bound);
-            # readers get ranks from crawl_log_df, recomputed distributed.
-            rank_cache: list = []
-            if cfg.max_pages is not None:
-                remaining = cfg.max_pages - pages_fetched
-                if remaining < frontier_size:
-                    ranked_all = politeness_ops.rank_within_iteration(
-                        selected, cfg.n_partitions, cleanup=rank_cache
+        # cache lifetimes: the pages layout lives for the whole run; every
+        # frame a superstep caches (its input frontier included) goes on that
+        # superstep's `cleanup` list. Both are released in `finally`, so a
+        # superstep that raises leaves nothing cached.
+        self.pages.persist(StorageLevel.MEMORY_AND_DISK)
+        try:
+            for iteration in range(start_iter, cfg.max_iterations + start_iter):
+                frontier = frontier.persist()
+                cleanup = [frontier]
+                try:
+                    if frontier_size is None:
+                        frontier_size = frontier.count()
+                    # stop checks on driver-side counters only — the frontier
+                    # size of iteration k is observed during iteration k-1's
+                    # commit write, so past the first superstep's count the
+                    # loop top runs zero Spark jobs
+                    if frontier_size == 0:
+                        reason = "frontier_exhausted"
+                        iteration -= 1
+                        break
+                    if cfg.max_pages is not None and pages_fetched >= cfg.max_pages:
+                        reason = "max_pages"
+                        iteration -= 1
+                        break
+                    if cfg.max_links is not None and links_processed >= cfg.max_links:
+                        reason = "max_links"
+                        iteration -= 1
+                        break
+                    m, frontier_size = self._superstep(
+                        iteration, frontier, frontier_size, pages_fetched, cleanup
                     )
-                    overflow = ranked_all.filter(
-                        F.col("rank") > remaining
-                    ).drop("rank")
-                    ranked = ranked_all.filter(
-                        F.col("rank") <= remaining
-                    ).drop("rank")
-                    carryover = carryover.unionByName(
-                        overflow.select(*_FRONTIER_SCHEMA)
-                    )
-                else:
-                    ranked = selected
+                finally:
+                    for cached in cleanup:
+                        cached.unpersist()
+                pages_fetched += m["pages_fetched"]
+                links_processed += m["links_found"]
+                # read state back from the committed snapshot: truncates
+                # lineage (persisted at the next superstep's top)
+                frontier = store.read(spark, "frontier", iteration)
             else:
-                ranked = selected
-            ranked = ranked.select(*_FRONTIER_SCHEMA).persist()
-            carryover = carryover.select(*_FRONTIER_SCHEMA)
-
-            # batch stats ride the commit writes as observed metrics — no
-            # dedicated .collect()/.count() jobs in the superstep
-            # fetch join: small supersteps probe the raw pages scan with a
-            # broadcast semi-join (scan-only, zero corpus shuffle) and join
-            # the pruned hits; big supersteps use the cached url-partitioned
-            # layout. The gate uses the tightest driver-known bound on the
-            # BATCH size (zero jobs): frontier_size always bounds it, and
-            # when the page limit binds the truncation above caps the batch
-            # at `remaining` — the deep-crawl tail regime (small page budget
-            # against a large residual frontier) takes the fast path.
-            batch_bound = frontier_size
-            if cfg.max_pages is not None:
-                batch_bound = min(
-                    batch_bound, max(cfg.max_pages - pages_fetched, 0)
-                )
-            if batch_bound <= cfg.small_batch_threshold:
-                fetch_src = self.pages_raw.join(
-                    F.broadcast(ranked.select("url")), "url", "left_semi"
-                )
-            else:
-                fetch_src = self.pages
-            obs_batch = Observation()
-            fetched = (
-                ranked.join(fetch_src, "url", "left")
-                .withColumn(
-                    "status",
-                    F.when(F.col("warc_ts").isNull(), F.lit("error"))
-                    .when(F.col("html").isNull(), F.lit("non_html"))
-                    .otherwise(F.lit("fetched")),
-                )
-                .withColumn("is_document", urlkit.is_document_url(F.col("url")))
-                .observe(
-                    obs_batch,
-                    F.count(F.lit(1)).alias("n_selected"),
-                    F.sum(
-                        F.when(F.col("status") != "error", 1).otherwise(0)
-                    ).alias("n_ok"),
-                )
-                .persist()
-            )
-
-            obs_links = Observation()
-            links = self._candidate_links(fetched).observe(
-                obs_links, F.count(F.lit(1)).alias("links_found")
-            )
-            exclude = carryover.select("url").unionByName(ranked.select("url"))
-            new_links = self._dedup(links, seen, exclude, seen_count)
-
-            obs_next = Observation()
-            # plain union, no merge aggregate: the two sides are provably
-            # disjoint and internally unique — carryover ⊂ frontier (unique
-            # by url; the page-limit overflow moved into carryover BEFORE
-            # exclude was built), and new_links was grouped by url then
-            # anti-joined against exclude = carryover ∪ ranked. A
-            # groupBy(url).min(depth) here was a full shuffle of the next
-            # frontier that could never change a row.
-            next_frontier = carryover.unionByName(new_links)
-            next_frontier = (
-                self._repartition_state(next_frontier)
-                .observe(obs_next, F.count(F.lit(1)).alias("next_size"))
-                .persist()
-            )
-
-            crawl_log = fetched.select(
-                "url",
-                "host",
-                "depth",
-                F.lit(iteration).alias("iteration"),
-                "status",
-                "is_document",
-            )
-            lineage = next_frontier.groupBy(
-                F.spark_partition_id().alias("partition_id")
-            ).agg(F.count("*").alias("rows")).withColumn(
-                "iteration", F.lit(iteration)
-            )
-
-            # seen-store blobs/url files are updated BEFORE the manifest
-            # commit so the store is always a superset of the committed seen
-            # set (crash-safe: supersets only cause extra exclusions of urls
-            # the crawl already scheduled, never lost urls)
-            store_update_s = 0.0
-            if self.seen_store is not None:
-                t_upd = time.monotonic()
-                self.seen_store.update(ranked.select("url", "host"))
-                store_update_s = round(time.monotonic() - t_upd, 4)
-
-            def _metrics() -> dict:
-                # evaluated by the store AFTER the table writes — the writes
-                # are the actions that populate the observations
-                batch = _obs_metrics(
-                    obs_batch,
-                    lambda: fetched.agg(
-                        F.count(F.lit(1)).alias("n_selected"),
-                        F.sum(
-                            F.when(F.col("status") != "error", 1).otherwise(0)
-                        ).alias("n_ok"),
-                    ).collect()[0].asDict(),
-                )
-                link_m = _obs_metrics(
-                    obs_links, lambda: {"links_found": links.count()}
-                )
-                return {
-                    "scheduled": int(batch["n_selected"] or 0),
-                    "pages_fetched": int(batch["n_ok"] or 0),
-                    "links_found": int(link_m["links_found"] or 0),
-                    "frontier_size": frontier_size,
-                    "wall_s": round(time.monotonic() - t0, 4),
-                    # fixed-cost breakdown (VERDICT r3 task #2): the store
-                    # update's wall; commit adds per-table write_walls_s
-                    "store_update_s": store_update_s,
-                    # zero once every plan of the superstep is in Spark's
-                    # generated-class cache (session.codegen_compiles)
-                    "codegen_compiles": codegen_compiles(spark) - compiles0,
-                }
-
-            m = store.commit(
-                iteration,
-                {
-                    "frontier": next_frontier,
-                    "seen_delta": ranked.select("url"),
-                    "crawl_log": crawl_log,
-                    "lineage": lineage,
-                },
-                metrics=_metrics,
-            )
-
-            pages_fetched += m["pages_fetched"]
-            links_processed += m["links_found"]
-            seen_count += m["scheduled"]
-            frontier_size = int(
-                _obs_metrics(
-                    obs_next, lambda: {"next_size": next_frontier.count()}
-                )["next_size"]
-                or 0
-            )
-
-            frontier.unpersist()
-            ranked.unpersist()
-            fetched.unpersist()
-            next_frontier.unpersist()
-            # ranking's range-partitioned intermediate (when the page-limit
-            # truncation bound this iteration) — safe to drop now that the
-            # commit actions have materialized everything derived from it
-            for cached in rank_cache:
-                cached.unpersist()
-
-            # read state back from the committed snapshot: truncates lineage
-            # (persisted here, once — the loop top never re-persists)
-            frontier = store.read(spark, "frontier", iteration).persist()
-            if self.seen_store is None:
-                seen = store.read_accumulated(spark, "seen_delta")
-        else:
-            reason = "max_iterations"
-            frontier.unpersist()
-
-        # every exit path converges here: release the cached pages layout
-        # (run() re-marks it on entry, so engine reuse stays cached)
-        self.pages.unpersist()
+                reason = "max_iterations"
+        finally:
+            self.pages.unpersist()
         return CrawlResultState(
             iterations=iteration - start_iter + 1 if iteration >= start_iter else 0,
             pages_fetched=pages_fetched,
             links_processed=links_processed,
             stopped_reason=reason,
         )
+
+    def _superstep(
+        self,
+        iteration: int,
+        frontier: DataFrame,
+        frontier_size: int,
+        pages_fetched: int,
+        cleanup: list,
+    ) -> tuple:
+        """One superstep: select, fetch, expand, dedup and commit.
+
+        Returns the committed metrics and the next frontier's size. Every
+        frame it caches is appended to ``cleanup``, which the caller
+        releases in ``finally``.
+        """
+        cfg = self.config
+        spark = self.spark
+        t0 = time.monotonic()
+        compiles0 = codegen_compiles(spark)
+
+        selected, carryover = politeness_ops.select_batch(
+            frontier,
+            self.politeness,
+            cfg.default_budget,
+            prune_partitions=cfg.politeness_prune,
+        )
+        # deterministic truncation at the page limit (canonical rule for
+        # the reference's racy max_pages stop, apollo.py:538-547). The
+        # within-iteration rank is DERIVED data — (iteration, depth, url)
+        # totally orders the crawl — so the hot loop only materializes it
+        # when the truncation can actually bind (remaining < batch bound);
+        # readers get ranks from crawl_log_df, recomputed distributed.
+        if cfg.max_pages is not None:
+            remaining = cfg.max_pages - pages_fetched
+            if remaining < frontier_size:
+                ranked_all = politeness_ops.rank_within_iteration(
+                    selected, cfg.n_partitions, cleanup=cleanup
+                )
+                overflow = ranked_all.filter(
+                    F.col("rank") > remaining
+                ).drop("rank")
+                ranked = ranked_all.filter(
+                    F.col("rank") <= remaining
+                ).drop("rank")
+                carryover = carryover.unionByName(
+                    overflow.select(*_FRONTIER_SCHEMA)
+                )
+            else:
+                ranked = selected
+        else:
+            ranked = selected
+        ranked = ranked.select(*_FRONTIER_SCHEMA).persist()
+        cleanup.append(ranked)
+        carryover = carryover.select(*_FRONTIER_SCHEMA)
+
+        # batch stats ride the commit writes as observed metrics — no
+        # dedicated .collect()/.count() jobs in the superstep
+        # fetch join: small supersteps probe the raw pages scan with a
+        # broadcast semi-join (scan-only, zero corpus shuffle) and join
+        # the pruned hits; big supersteps use the cached url-partitioned
+        # layout. The gate uses the tightest driver-known bound on the
+        # BATCH size (zero jobs): frontier_size always bounds it, and
+        # when the page limit binds the truncation above caps the batch
+        # at `remaining` — the deep-crawl tail regime (small page budget
+        # against a large residual frontier) takes the fast path.
+        batch_bound = frontier_size
+        if cfg.max_pages is not None:
+            batch_bound = min(
+                batch_bound, max(cfg.max_pages - pages_fetched, 0)
+            )
+        if batch_bound <= cfg.small_batch_threshold:
+            fetch_src = self.pages_raw.join(
+                F.broadcast(ranked.select("url")), "url", "left_semi"
+            )
+        else:
+            fetch_src = self.pages
+        obs_batch = Observation()
+        fetched = (
+            ranked.join(fetch_src, "url", "left")
+            .withColumn(
+                "status",
+                F.when(F.col("warc_ts").isNull(), F.lit("error"))
+                .when(F.col("html").isNull(), F.lit("non_html"))
+                .otherwise(F.lit("fetched")),
+            )
+            .withColumn("is_document", urlkit.is_document_url(F.col("url")))
+            .observe(
+                obs_batch,
+                F.count(F.lit(1)).alias("n_selected"),
+                F.sum(
+                    F.when(F.col("status") != "error", 1).otherwise(0)
+                ).alias("n_ok"),
+            )
+            .persist()
+        )
+        cleanup.append(fetched)
+
+        obs_links = Observation()
+        links = self._candidate_links(fetched).observe(
+            obs_links, F.count(F.lit(1)).alias("links_found")
+        )
+        exclude = carryover.select("url").unionByName(ranked.select("url"))
+        new_links = self._dedup(links, exclude)
+
+        obs_next = Observation()
+        # plain union, no merge aggregate: the two sides are provably
+        # disjoint and internally unique — carryover ⊂ frontier (unique
+        # by url; the page-limit overflow moved into carryover BEFORE
+        # exclude was built), and new_links was grouped by url then
+        # anti-joined against exclude = carryover ∪ ranked. A
+        # groupBy(url).min(depth) here was a full shuffle of the next
+        # frontier that could never change a row.
+        next_frontier = carryover.unionByName(new_links)
+        next_frontier = (
+            self._repartition_state(next_frontier)
+            .observe(obs_next, F.count(F.lit(1)).alias("next_size"))
+            .persist()
+        )
+        cleanup.append(next_frontier)
+
+        crawl_log = fetched.select(
+            "url",
+            "host",
+            "depth",
+            F.lit(iteration).alias("iteration"),
+            "status",
+            "is_document",
+        )
+        lineage = next_frontier.groupBy(
+            F.spark_partition_id().alias("partition_id")
+        ).agg(F.count("*").alias("rows")).withColumn(
+            "iteration", F.lit(iteration)
+        )
+
+        # seen-store blobs/url files are updated BEFORE the manifest
+        # commit so the store is always a superset of the committed seen
+        # set (crash-safe: supersets only cause extra exclusions of urls
+        # the crawl already scheduled, never lost urls)
+        t_upd = time.monotonic()
+        self.seen_store.update(ranked.select("url", "host"))
+        store_update_s = round(time.monotonic() - t_upd, 4)
+
+        def _metrics() -> dict:
+            # evaluated by the store AFTER the table writes — the writes
+            # are the actions that populate the observations
+            batch = _obs_metrics(
+                obs_batch,
+                lambda: fetched.agg(
+                    F.count(F.lit(1)).alias("n_selected"),
+                    F.sum(
+                        F.when(F.col("status") != "error", 1).otherwise(0)
+                    ).alias("n_ok"),
+                ).collect()[0].asDict(),
+            )
+            link_m = _obs_metrics(
+                obs_links, lambda: {"links_found": links.count()}
+            )
+            return {
+                "scheduled": int(batch["n_selected"] or 0),
+                "pages_fetched": int(batch["n_ok"] or 0),
+                "links_found": int(link_m["links_found"] or 0),
+                "frontier_size": frontier_size,
+                "wall_s": round(time.monotonic() - t0, 4),
+                # fixed-cost breakdown (VERDICT r3 task #2): the store
+                # update's wall; commit adds per-table write_walls_s
+                "store_update_s": store_update_s,
+                # zero once every plan of the superstep is in Spark's
+                # generated-class cache (session.codegen_compiles)
+                "codegen_compiles": codegen_compiles(spark) - compiles0,
+            }
+
+        m = self.store.commit(
+            iteration,
+            {
+                "frontier": next_frontier,
+                "seen_delta": ranked.select("url"),
+                "crawl_log": crawl_log,
+                "lineage": lineage,
+            },
+            metrics=_metrics,
+        )
+        next_size = int(
+            _obs_metrics(
+                obs_next, lambda: {"next_size": next_frontier.count()}
+            )["next_size"]
+            or 0
+        )
+        return m, next_size
+
 
 def crawl_log_df(
     spark: SparkSession, store: SnapshotStore, cleanup: list | None = None

@@ -1,12 +1,13 @@
-"""Partitioned, incrementally-maintained bloom seen-store (the scale path).
+"""Partitioned, incrementally-maintained bloom seen-store (the crawl's
+URL-seen set).
 
 At 10^10 seen URLs a single bloom filter is ~12 GB — too big to broadcast and
-absurd to rebuild every superstep (which ``bloom.build_bloom`` would do). The
-north-star design is a *partitioned* seen set: URLs are hashed into P
-partitions by salted host hash PLUS a per-url spread offset (a pure function
-of the url — see ``pid_col``), so a mega-host distributes uniformly across
-pids instead of pinning one task; each partition owns a bitmap of m/P bits
-stored as one blob next to the seen table. Per iteration:
+absurd to rebuild every superstep. The north-star design is a *partitioned*
+seen set: URLs are hashed into P partitions by salted host hash PLUS a per-url
+spread offset (a pure function of the url — see ``pid_col``), so a mega-host
+distributes uniformly across pids instead of pinning one task; each partition
+owns a bitmap of m/P bits stored as one blob next to the seen table. Per
+iteration:
 
 * **update**: the iteration's seen delta is grouped by partition id and each
   group's ``applyInPandas`` task OR-merges its delta bits into its own blob
@@ -81,10 +82,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import urlkit
-from .bloom import BloomFilter, optimal_bits, optimal_k
-
-_H1_SALT = 0x9E3779B9
-_H2_SALT = 0x85EBCA6B
+from .bloom import BloomFilter, hash_columns, optimal_bits, optimal_k
 
 _BLOB_RE = re.compile(r"pid=(\d+)-epoch=(\d+)(?:-[0-9a-f]+)?\.bin$")
 
@@ -337,10 +335,11 @@ class PartitionedBloomSeenStore:
         root, urls_root = self.root, self.urls_root
         compact_above = self.compact_above
 
+        h1, h2 = hash_columns(F.col("url"))
         keyed = delta.select(
             F.col("url"),
-            F.xxhash64("url", F.lit(_H1_SALT)).alias("h1"),
-            F.xxhash64("url", F.lit(_H2_SALT)).alias("h2"),
+            h1.alias("h1"),
+            h2.alias("h2"),
             self.pid_col(F.col("host"), F.col("url")).alias("pid"),
         )
 
@@ -415,6 +414,16 @@ class PartitionedBloomSeenStore:
 
     # -- filter --------------------------------------------------------------
 
+    def _keyed(self, candidates: DataFrame) -> DataFrame:
+        """Candidates plus their bloom hash pair (``_h1``, ``_h2``) and
+        partition id (``_pid``) — the grouping input of both filters."""
+        h1, h2 = hash_columns(F.col("url"))
+        return (
+            candidates.withColumn("_h1", h1)
+            .withColumn("_h2", h2)
+            .withColumn("_pid", self.pid_col(F.col("host"), F.col("url")))
+        )
+
     def split_candidates(self, candidates: DataFrame) -> tuple:
         """(definitely_new, maybe_seen) via per-partition blob lookups.
 
@@ -426,11 +435,7 @@ class PartitionedBloomSeenStore:
         root = self.root
         cols = candidates.columns
 
-        keyed = candidates.withColumn(
-            "_h1", F.xxhash64("url", F.lit(_H1_SALT))
-        ).withColumn("_h2", F.xxhash64("url", F.lit(_H2_SALT))).withColumn(
-            "_pid", self.pid_col(F.col("host"), F.col("url"))
-        )
+        keyed = self._keyed(candidates)
         out_schema = keyed.drop("_pid").withColumn(
             "_maybe_seen", F.lit(True)
         ).schema
@@ -478,11 +483,7 @@ class PartitionedBloomSeenStore:
         root, urls_root = self.root, self.urls_root
         cols = candidates.columns
 
-        keyed = candidates.withColumn(
-            "_h1", F.xxhash64("url", F.lit(_H1_SALT))
-        ).withColumn("_h2", F.xxhash64("url", F.lit(_H2_SALT))).withColumn(
-            "_pid", self.pid_col(F.col("host"), F.col("url"))
-        )
+        keyed = self._keyed(candidates)
         out_schema = keyed.drop("_h1", "_h2", "_pid").schema
 
         def check(table: pa.Table) -> pa.Table:

@@ -1887,7 +1887,7 @@ def q_crawl_frontier(spark, sf_dir):
             spark,
             corpus["pages"],
             store,
-            CrawlConfig(default_budget=6, use_bloom=False),
+            CrawlConfig(default_budget=6),
             robots=corpus["robots"],
             politeness=corpus["politeness"],
         )

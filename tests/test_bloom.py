@@ -1,35 +1,39 @@
-"""Bloom filter unit props + frontier equivalence with the bloom path forced."""
+"""Bloom filter unit props: no false negatives, false positives near the
+design rate, over the JVM-side hash pairs the seen store uses."""
 
 import numpy as np
+from pyspark.sql import functions as F
 
-from apollo_service_spark.operators.bloom import (
-    BloomFilter,
-    build_bloom,
-    split_by_bloom,
-)
+from apollo_service_spark.operators.bloom import BloomFilter, hash_columns
+
+
+def _hash_pairs(spark, urls):
+    h1, h2 = hash_columns(F.col("url"))
+    pdf = (
+        spark.createDataFrame([(u,) for u in urls], "url string")
+        .select(h1.alias("h1"), h2.alias("h2"))
+        .toPandas()
+    )
+    return pdf["h1"].to_numpy(), pdf["h2"].to_numpy()
 
 
 def test_bloom_no_false_negatives(spark):
     urls = [f"https://h{i % 7}.com/p{i}" for i in range(2000)]
-    df = spark.createDataFrame([(u,) for u in urls], "url string").repartition(4)
-    bloom = build_bloom(df, "url", n_items=2000, fpp=0.01)
-
-    member_df = spark.createDataFrame([(u,) for u in urls[:500]], "url string")
-    definitely_new, maybe_seen = split_by_bloom(spark, member_df, "url", bloom)
+    h1, h2 = _hash_pairs(spark, urls)
+    bloom = BloomFilter.empty(2000, 0.01)
+    # folded in several batches, as a task folds its Arrow batches
+    for lo in range(0, 2000, 500):
+        bloom.add_batch(h1[lo : lo + 500], h2[lo : lo + 500])
     # every true member must be flagged maybe-seen (bloom cannot miss)
-    assert definitely_new.count() == 0
-    assert maybe_seen.count() == 500
+    assert bloom.might_contain(h1, h2).all()
 
 
 def test_bloom_fpp_reasonable(spark):
-    urls = [f"https://h/{i}" for i in range(5000)]
-    df = spark.createDataFrame([(u,) for u in urls], "url string").repartition(4)
-    bloom = build_bloom(df, "url", n_items=5000, fpp=0.01)
-    probe = spark.createDataFrame(
-        [(f"https://other/{i}",) for i in range(5000)], "url string"
-    )
-    _new, maybe = split_by_bloom(spark, probe, "url", bloom)
-    fp = maybe.count()
+    h1, h2 = _hash_pairs(spark, [f"https://h/{i}" for i in range(5000)])
+    bloom = BloomFilter.empty(5000, 0.01)
+    bloom.add_batch(h1, h2)
+    p1, p2 = _hash_pairs(spark, [f"https://other/{i}" for i in range(5000)])
+    fp = int(bloom.might_contain(p1, p2).sum())
     assert fp / 5000 < 0.05  # generous bound on the 1% target
 
 
@@ -39,26 +43,3 @@ def test_bloom_local_roundtrip():
     h2 = np.arange(100, dtype=np.int64) * 40503 + 7
     bloom.add_batch(h1, h2)
     assert bloom.might_contain(h1, h2).all()
-
-
-def test_frontier_equivalence_with_bloom_forced(
-    spark, small_corpus, small_corpus_spark, tmp_path
-):
-    """Crawl equivalence must hold when every dedup goes through the bloom
-    pre-filter + exact-confirm path."""
-    from tests.test_frontier import _log_tuples, _run_engine, _sim_inputs
-
-    from apollo_service_spark.operators.frontier import CrawlConfig
-    from apollo_service_spark.oracle.simulator import SimConfig, simulate
-
-    pages, seeds, robots, politeness = _sim_inputs(small_corpus)
-    sim = simulate(pages, seeds, SimConfig(), robots=robots, politeness=politeness)
-    _state, store = _run_engine(
-        spark,
-        small_corpus_spark,
-        str(tmp_path / "bloomcrawl"),
-        CrawlConfig(use_bloom=True, bloom_min_seen=0),
-    )
-    assert _log_tuples(spark, store) == {
-        (r["url"], r["iteration"], r["rank"]) for r in sim.crawl_log
-    }

@@ -180,6 +180,44 @@ def test_max_links_limit(spark, small_corpus, small_corpus_spark, tmp_path):
     }
 
 
+def test_superstep_exception_releases_caches(
+    spark, small_corpus_spark, tmp_path
+):
+    """A superstep that raises leaves nothing cached: building an engine
+    caches nothing, and when the second commit fails every frame run()
+    cached (pages layout, frontier, batch, fetch result, next frontier,
+    ranking intermediate) has been released by the time the error
+    reaches the caller."""
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    store = SnapshotStore(str(tmp_path / "raises"))
+    engine = FrontierEngine(
+        spark,
+        small_corpus_spark["pages"],
+        store,
+        # max_pages makes the truncation ranking (and its cache) run
+        CrawlConfig(max_pages=25),
+        robots=small_corpus_spark["robots"],
+        politeness=small_corpus_spark["politeness"],
+    )
+    assert cache_manager.isEmpty()
+
+    commit = store.commit
+    calls = []
+
+    def failing_commit(*args, **kwargs):
+        calls.append(args[0])
+        if len(calls) == 2:
+            raise RuntimeError("commit failed")
+        return commit(*args, **kwargs)
+
+    store.commit = failing_commit
+    with pytest.raises(RuntimeError, match="commit failed"):
+        engine.run(seeds=small_corpus_spark["seeds"])
+    assert calls == [0, 1]
+    assert cache_manager.isEmpty()
+
+
 def test_politeness_prune_crawl_identical(
     spark, small_corpus_spark, tmp_path
 ):

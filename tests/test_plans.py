@@ -283,8 +283,6 @@ def test_candidate_link_pipeline_compiles(spark, tmp_path):
         n_gated = gated._candidate_links(pages).count()
     finally:
         spark.conf.set("spark.sql.codegen.fallback", prev)
-        engine.pages.unpersist()
-        gated.pages.unpersist()
     assert n == 8 * 20
     # robots is PREFIX match: '/p1' blocks /p1 and /p10../p19 (11 links),
     # '/p2' blocks /p2 — 12 of h1.com's 20 links gated
@@ -293,9 +291,10 @@ def test_candidate_link_pipeline_compiles(spark, tmp_path):
 
 def test_dedup_reuses_groupby_partitioning(spark, documents, tmp_path):
     """_dedup's exclusion anti-join must reuse the url hash layout the
-    candidate groupBy already produced: exactly one exchange per input
-    branch (links, exclude, seen), none between the aggregate and the
-    joins. A fourth exchange means the join stopped reusing the groupBy's
+    candidate groupBy already produced. Exactly three exchanges: the links
+    aggregate, the exclude side, and the seen store's pid grouping
+    (seen.py:filter_new) — none between the aggregate and the join. A
+    fourth exchange means the join stopped reusing the groupBy's
     partitioning (e.g. someone re-keyed the aggregate by (url, host))."""
     import re
 
@@ -306,7 +305,6 @@ def test_dedup_reuses_groupby_partitioning(spark, documents, tmp_path):
     # filters, not limit(): GlobalLimit plans its own Exchange SinglePartition
     # which would pollute the exchange count under test
     exclude = links.filter(F.crc32(F.col("url")) % 7 == 0).select("url")
-    seen = links.filter(F.crc32(F.col("url")) % 11 == 0).select("url")
     engine = FrontierEngine(
         spark,
         links.select(
@@ -315,17 +313,14 @@ def test_dedup_reuses_groupby_partitioning(spark, documents, tmp_path):
             F.lit(None).cast("string").alias("text"), F.lit("en").alias("lang"),
         ),
         SnapshotStore(str(tmp_path)),
-        CrawlConfig(seen_backend="broadcast", use_bloom=False),
+        CrawlConfig(),
     )
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            plan = _plan(engine._dedup(links, seen, exclude, seen_count=0))
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+        plan = _plan(engine._dedup(links, exclude))
     finally:
-        engine.pages.unpersist()
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     exchanges = re.findall(r"^\(\d+\) Exchange", plan, flags=re.MULTILINE)
     assert len(exchanges) == 3, plan
 

@@ -65,7 +65,7 @@ def test_crawl_equivalence_partitioned_backend(
         spark,
         small_corpus_spark,
         str(tmp_path / "pb"),
-        CrawlConfig(seen_backend="partitioned", expected_urls=10_000),
+        CrawlConfig(expected_urls=10_000),
     )
     assert _log_tuples(spark, store) == {
         (r["url"], r["iteration"], r["rank"]) for r in sim.crawl_log
