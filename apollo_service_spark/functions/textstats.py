@@ -12,6 +12,7 @@ fallback (BENCH/ROUND5.md).
 
 from __future__ import annotations
 
+import hashlib
 import re
 from collections import Counter
 
@@ -391,6 +392,26 @@ def word_char_count(text: Column) -> Column:
     )
 
 
+def rounded_frac(num: Column, den: Column) -> Column:
+    """``num / den`` rounded to 4 places, 0.0 when ``den`` is 0 or NULL —
+    the form every curation fraction takes before its threshold, so the
+    oracle comparison is exact."""
+    return F.round(F.coalesce(num / F.nullif(den, F.lit(0)), F.lit(0.0)), 4)
+
+
+def repetition_verdict(
+    wchars: Column, top_cnt: Column, top_g: Column, dupchars: Column
+) -> tuple:
+    """``(top_bigram_frac, dup_trigram_frac, keep)`` from the repetition
+    scalars: the character fraction of the most frequent 2-gram (its
+    count × its characters without the joining space) and of the
+    duplicated 3-grams, over the word characters; ``keep`` applies the
+    Gopher thresholds (top-2-gram <= 0.20, dup-3-gram <= 0.30)."""
+    top = rounded_frac(top_cnt * (F.length(top_g) - 1), wchars)
+    dup = rounded_frac(dupchars, wchars)
+    return top, dup, (top <= 0.20) & (dup <= 0.30)
+
+
 # Java regex \s is ASCII-only ([ \t\n\x0B\f\r]); Python's \s is
 # Unicode-aware.  The kernel below must reproduce F.split(text, r"\s+")
 # exactly, so it spells the Java class out instead of using \s.
@@ -434,3 +455,63 @@ def repetition_stats_py(text) -> tuple:
     c3 = Counter(map(" ".join, zip(toks, toks[1:], toks[2:])))
     dupchars = sum((c - 1) * (len(g) - 2) for g, c in c3.items() if c > 1)
     return (wchars, top_cnt, top_g, dupchars)
+
+
+def space_tokens(text) -> list:
+    """The token list ``F.filter(F.split(text, " "), x -> x != "")`` builds
+    — split on the single space character only (tabs, newlines and U+00A0
+    stay inside tokens), empty tokens dropped; NULL text has no tokens,
+    as ``window_join``'s coalesce gives it no windows."""
+    return [] if text is None else [t for t in text.split(" ") if t]
+
+
+def word_windows(
+    toks: list, n: int, stride: int = 1, keep_partial: bool = False
+) -> list:
+    """Pure-Python twin of :func:`window_join`: the space-joined ``n``-token
+    windows starting every ``stride`` tokens — all of them when
+    ``keep_partial`` (the short tail included), otherwise only the full
+    ones."""
+    last = len(toks) if keep_partial else len(toks) - n + 1
+    return [" ".join(toks[i : i + n]) for i in range(0, last, stride)]
+
+
+def hash64(s: str) -> int:
+    """Deterministic signed 64-bit hash of a string (8-byte BLAKE2b of its
+    UTF-8 bytes): equal on every Python worker, unlike the salted
+    ``hash()``."""
+    return int.from_bytes(
+        hashlib.blake2b(s.encode("utf-8"), digest_size=8).digest(),
+        "little",
+        signed=True,
+    )
+
+
+# the one-pass kernel's fixed window widths: CCNet lines of 3 words, and
+# the 4-grams the span-coverage and decontamination verdicts share
+LINE_WORDS = 3
+GRAM_WORDS = 4
+
+
+def doc_pass_py(text) -> tuple:
+    """Everything the curation filters need from one document, read once
+    (the row kernel of ``udfs.doc_pass_udf``):
+
+    - the four repetition scalars of :func:`repetition_stats_py` (same
+      code, on the same Java ``\\s+`` tokens);
+    - from the space-split tokens ``window_join`` sees: the :func:`hash64`
+      of every CCNet line (``LINE_WORDS``-token windows at stride
+      ``LINE_WORDS``, short tail kept) with the line's length in code
+      points, and the :func:`hash64` of every overlapping ``GRAM_WORDS``
+      gram.
+
+    Returns ``(wchars, top_cnt, top_g, dupchars, line_h, line_chars,
+    gram_h)``; the three lists are empty for NULL or wordless text."""
+    toks = space_tokens(text)
+    lines = word_windows(toks, LINE_WORDS, LINE_WORDS, keep_partial=True)
+    grams = word_windows(toks, GRAM_WORDS)
+    return repetition_stats_py(text) + (
+        [hash64(x) for x in lines],
+        [len(x) for x in lines],
+        [hash64(g) for g in grams],
+    )

@@ -1,6 +1,6 @@
 """Arrow-vectorized pandas UDFs — the only Python in the hot path.
 
-Three kernels cross the Arrow boundary (everything else in the engine is a
+These kernels cross the Arrow boundary (everything else in the engine is a
 Catalyst column expression):
 
 * ``extract_text_udf``  — HTML→markdown extraction, semantics of the
@@ -11,8 +11,12 @@ Catalyst column expression):
 * ``repetition_stats_udf`` — the Gopher repetition scalars; SQL-expressible
   (the Catalyst folds exist and are the test reference) but measured 4×
   slower than this Counter kernel at corpus scale, so the Arrow form is the
-  only production path (plans/queries.py ``_with_repetition_stats``;
-  BENCH/ROUND5.md).
+  only production path of the standalone repetition gate
+  (plans/queries.py ``_with_repetition_stats``; BENCH/ROUND5.md).
+* ``doc_pass_udf`` — ``corpus_prepare``'s single read of each document: the
+  same repetition scalars plus 64-bit hashes of its CCNet lines and its
+  4-grams, which ``curation.doc_pass_flags`` explodes once for the
+  line-dedup, span and decontamination verdicts.
 
 Batch sizing is controlled by ``spark.sql.execution.arrow.maxRecordsPerBatch``
 (set in ``session.build_session``); the per-row functions are pure so the
@@ -24,11 +28,11 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType, LongType, StringType, StructField, StructType,
+    ArrayType, IntegerType, LongType, StringType, StructField, StructType,
 )
 
 from .html import extract_links, extract_text, extract_text_only
-from .textstats import repetition_stats_py
+from .textstats import doc_pass_py, repetition_stats_py
 
 
 @F.pandas_udf(StringType())
@@ -111,5 +115,28 @@ def repetition_stats_udf(text: pd.Series) -> pd.DataFrame:
             "top_g": rows.map(lambda r: r[2]),
             "dupchars": rows.map(lambda r: r[3]),
         },
+        index=text.index,
+    )
+
+
+_DOC_PASS_SCHEMA = StructType(
+    _REPETITION_SCHEMA.fields
+    + [
+        StructField("line_h", ArrayType(LongType())),
+        StructField("line_chars", ArrayType(IntegerType())),
+        StructField("gram_h", ArrayType(LongType())),
+    ]
+)
+
+
+@F.pandas_udf(_DOC_PASS_SCHEMA)
+def doc_pass_udf(text: pd.Series) -> pd.DataFrame:
+    """One read of each document for the whole curation filter stack
+    (``textstats.doc_pass_py``): the repetition scalars plus the 64-bit
+    hashes of its CCNet lines (with their lengths) and of its overlapping
+    4-grams, which ``curation.doc_pass_flags`` explodes once."""
+    return pd.DataFrame(
+        [doc_pass_py(t) for t in text],
+        columns=_DOC_PASS_SCHEMA.fieldNames(),
         index=text.index,
     )

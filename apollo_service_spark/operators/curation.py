@@ -49,6 +49,10 @@ from pyspark.sql import functions as F
 from ..functions import sampling, textstats
 from .ranking import global_row_number, global_running_sum
 
+# CCNet duplicated-line threshold of the curation composition
+# (``q_corpus_clean`` and :func:`doc_pass_flags`)
+MAX_LINE_DUP_FRAC = 0.3
+
 # C4's public line blocklist (Raffel et al. 2020 §2.2, abbreviated to the
 # phrases that survive verbatim in the paper); callers pass their own list
 # when the corpus language/vocabulary differs.
@@ -238,7 +242,7 @@ def pack_sequences(
     id_col: str = "doc_id",
     text_col: str = "text",
     seq_len: int = 128,
-    n_partitions: int = 32,
+    n_partitions: int | None = None,
     cleanup: list | None = None,
     tokens_col: str | None = None,
 ) -> DataFrame:
@@ -260,9 +264,12 @@ def pack_sequences(
     tests/test_plans.py) and the only data-sized shuffle is the range
     repartition, which carries (id, count) pairs, NOT text.
 
-    Long-lived callers pass ``cleanup`` exactly as for
-    ``global_row_number`` (the persisted range-partitioned intermediate
-    is appended; unpersist after the materializing action).
+    ``n_partitions`` is the prefix sum's range-partition count, by default
+    the session's shuffle partitions (``ranking.global_row_number``); each
+    of its steps runs one task per range partition.  Long-lived callers
+    pass ``cleanup`` exactly as for ``global_row_number`` (the persisted
+    range-partitioned intermediate is appended; unpersist after the
+    materializing action).
 
     Tokenization is the whitespace count the ``token_counts`` gate query
     verifies — swap ``textstats.count_tokens`` for a BPE UDF without
@@ -462,72 +469,148 @@ def decontaminate(
     )
 
 
+def doc_pass_flags(
+    docs: DataFrame,
+    bench_filter: Column,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    max_dup_frac: float = 0.2,
+) -> DataFrame:
+    """Every per-document curation verdict that needs the text's words,
+    from ONE read of each document: the Gopher repetition rule
+    (``textstats.repetition_verdict``), the CCNet duplicated-line fraction
+    (``dedup.duplicated_line_stats`` at ``MAX_LINE_DUP_FRAC``), the
+    duplicated-span coverage (:func:`dup_span_stats` at ``max_dup_frac``)
+    and benchmark contamination (:func:`decontaminate`) — exactly the
+    verdicts those standalone operators give, which are its test
+    references.
+
+    Plan: one ArrowEvalPython node (``udfs.doc_pass_udf`` returns the
+    repetition scalars and the 64-bit hashes of the doc's 3-word lines,
+    with their lengths, and of its 4-grams) and one Generate: an
+    ``explode_outer`` over the doc's lines then grams, so a wordless doc
+    keeps one row with a NULL ``kind``.  Then the shape the line and
+    span operators share, run once for both kinds: a map-side
+    pre-combine to one row per ``(kind, h, id, is_bench)`` (within-doc
+    repeats never cross the wire), the distinct-doc count ``COUNT(*)``
+    and the benchmark count ``SUM(is_bench)`` as window aggregates over
+    ``(kind, h)``, and one reduce to the doc id: three exchanges, every
+    key 8-byte hashes and ids.  A wordless doc's row takes the hash of
+    its id as ``h``, so those rows spread over the window's partitions
+    instead of meeting on one NULL key.
+
+    Semantics (fixed by those operators): line and span duplication count
+    distinct-doc sharing over ALL docs, the benchmark included; a doc is
+    contaminated when any of its grams occurs in a benchmark doc;
+    wordless or NULL text is ``keep_lines=keep_spans=true,
+    contaminated=false``.
+
+    Output: ``(id, is_bench, keep_repetition, keep_lines, keep_spans,
+    contaminated)`` — one row per input doc, the benchmark docs included.
+    """
+    from ..functions.udfs import doc_pass_udf
+
+    staged = docs.select(
+        F.col(id_col).alias("id"),
+        bench_filter.alias("is_bench"),
+        doc_pass_udf(F.col(text_col)).alias("_d"),
+    )
+    _, _, keep_repetition = textstats.repetition_verdict(
+        F.col("_d.wchars"), F.col("_d.top_cnt"), F.col("_d.top_g"), F.col("_d.dupchars")
+    )
+    # lines then grams, zipped with the line lengths: a gram's ``chars`` is
+    # the zip's NULL padding, which is what tells the two kinds apart
+    items = F.arrays_zip(
+        F.concat("_d.line_h", "_d.gram_h").alias("h"),
+        F.col("_d.line_chars").alias("chars"),
+    )
+    per = (
+        staged.select(
+            "id",
+            "is_bench",
+            keep_repetition.alias("keep_repetition"),
+            F.explode_outer(items).alias("_i"),
+        )
+        .select(
+            "id",
+            "is_bench",
+            "keep_repetition",
+            F.coalesce(F.col("_i.h"), F.xxhash64("id")).alias("h"),
+            F.when(F.col("_i.chars").isNotNull(), F.lit(0))
+            .when(F.col("_i.h").isNotNull(), F.lit(1))
+            .alias("kind"),
+            F.col("_i.chars").alias("chars"),
+        )
+        .groupBy("kind", "h", "id", "is_bench", "keep_repetition")
+        .agg(F.count(F.lit(1)).alias("occ"), F.sum("chars").alias("chars"))
+    )
+    wk = Window.partitionBy("kind", "h")
+    line, gram = F.col("kind") == 0, F.col("kind") == 1
+    dup = F.count(F.lit(1)).over(wk) > 1
+    in_bench = F.sum(F.when(F.col("is_bench"), 1).otherwise(0)).over(wk) > 0
+    # one reduce keyed by id alone (the two flags are functions of it), so
+    # the output stays hash-partitioned on id for the caller's join
+    per_doc = (
+        per.select("*", dup.alias("dup"), in_bench.alias("in_bench"))
+        .groupBy("id")
+        .agg(
+            F.max("is_bench").alias("is_bench"),
+            F.max("keep_repetition").alias("keep_repetition"),
+            F.sum(F.when(line, F.col("chars"))).alias("allchars"),
+            F.sum(
+                F.when(line & F.col("dup"), F.col("chars")).otherwise(F.lit(0))
+            ).alias("dupchars"),
+            F.sum(F.when(gram, F.col("occ"))).alias("n_grams"),
+            F.sum(
+                F.when(gram & F.col("dup"), F.col("occ")).otherwise(F.lit(0))
+            ).alias("n_dup_grams"),
+            F.sum(
+                F.when(gram & F.col("in_bench"), F.col("occ")).otherwise(F.lit(0))
+            ).alias("n_hit_grams"),
+        )
+    )
+    line_frac = textstats.rounded_frac(F.col("dupchars"), F.col("allchars"))
+    span_frac = F.coalesce(
+        F.col("n_dup_grams") / F.nullif(F.col("n_grams"), F.lit(0)), F.lit(0.0)
+    )
+    return per_doc.select(
+        "id",
+        "is_bench",
+        "keep_repetition",
+        (line_frac <= MAX_LINE_DUP_FRAC).alias("keep_lines"),
+        (span_frac <= max_dup_frac).alias("keep_spans"),
+        (F.col("n_hit_grams") > 0).alias("contaminated"),
+    )
+
+
 def span_decon_flags(
     docs: DataFrame,
     bench_filter: Column,
     id_col: str = "doc_id",
     text_col: str = "text",
-    gram_words: int = 4,
+    gram_words: int = textstats.GRAM_WORDS,
     max_dup_frac: float = 0.2,
 ) -> DataFrame:
-    """One-pass ``keep_spans`` + ``contaminated`` flags for the non-benchmark
-    docs — the composition :func:`dup_span_stats` ∘ :func:`decontaminate`
-    computes, from a SINGLE gram explode and with no persist barrier (r6).
-
-    No cache is needed: both the distinct-doc count and the
-    benchmark-membership marker are WINDOW aggregates over the same gram
-    hash — ``nd = COUNT(*) OVER (PARTITION BY h)`` and
-    ``ndb = SUM(is_bench) OVER (PARTITION BY h)`` share one window — so the
-    plan is one explode + three 8-byte-key exchanges where the composition
-    paid three explodes (spans corpus, decon corpus, benchmark) and five.
-
-    Semantics are exactly the composed operators' (gate-verified through
-    ``corpus_prepare``): span duplication counts distinct-doc sharing over
-    ALL documents (benchmark included); contamination marks a train doc
-    when any of its windows occurs anywhere in the benchmark; gram-less
-    docs come back ``keep_spans=true, contaminated=false``.
+    """``keep_spans`` + ``contaminated`` for the non-benchmark docs — the
+    composition :func:`dup_span_stats` ∘ :func:`decontaminate` computes,
+    as a projection of :func:`doc_pass_flags` (one gram explode, no
+    cache).  Its kernel hashes ``textstats.GRAM_WORDS``-grams only, so
+    any other ``gram_words`` is refused.
 
     Output: ``(id, keep_spans, contaminated)`` — non-benchmark docs only.
     """
-    w = F.filter(F.split(F.col(text_col), " "), lambda x: x != "")
-    grams = textstats.window_join(w, gram_words, stride=1, keep_partial=False)
-    per = (
-        docs.select(
-            F.col(id_col).alias("id"),
-            bench_filter.alias("is_bench"),
-            F.explode(grams).alias("g"),
+    if gram_words != textstats.GRAM_WORDS:
+        raise ValueError(
+            f"span_decon_flags hashes {textstats.GRAM_WORDS}-grams, "
+            f"not {gram_words}-grams"
         )
-        .select("id", "is_bench", F.xxhash64("g").alias("h"))
-        .groupBy("h", "id", "is_bench")
-        .agg(F.count(F.lit(1)).alias("occ"))
-    )
-    wh = Window.partitionBy("h")
-    train = (
-        per.withColumn("nd", F.count(F.lit(1)).over(wh))
-        .withColumn(
-            "ndb",
-            F.sum(F.when(F.col("is_bench"), 1).otherwise(0)).over(wh),
+    return (
+        doc_pass_flags(
+            docs, bench_filter, id_col=id_col, text_col=text_col,
+            max_dup_frac=max_dup_frac,
         )
         .filter(~F.col("is_bench"))
-    )
-    per_doc = train.groupBy("id").agg(
-        F.sum("occ").alias("n_grams"),
-        F.sum(
-            F.when(F.col("nd") > 1, F.col("occ")).otherwise(F.lit(0))
-        ).alias("n_dup_grams"),
-        F.sum(
-            F.when(F.col("ndb") > 0, F.col("occ")).otherwise(F.lit(0))
-        ).alias("n_hit_grams"),
-    )
-    base = docs.filter(~bench_filter).select(F.col(id_col).alias("id"))
-    joined = base.join(per_doc, "id", "left")
-    frac = F.coalesce(
-        F.col("n_dup_grams") / F.nullif(F.col("n_grams"), F.lit(0)), F.lit(0.0)
-    )
-    return joined.select(
-        "id",
-        (frac <= max_dup_frac).alias("keep_spans"),
-        (F.coalesce(F.col("n_hit_grams"), F.lit(0)) > 0).alias("contaminated"),
+        .select("id", "keep_spans", "contaminated")
     )
 
 
@@ -577,7 +660,7 @@ def quality_tiers(
     score_col: str = "quality",
     n_tiers: int = 3,
     labels: tuple[str, ...] = ("head", "middle", "tail"),
-    n_partitions: int = 32,
+    n_partitions: int | None = None,
     cleanup: list | None = None,
 ) -> DataFrame:
     """CCNet-style quality bucketing (Wenzek et al. 2019 §4): rank all
@@ -593,7 +676,8 @@ def quality_tiers(
     single-partition exchange — a naive ``ntile() OVER (ORDER BY score)``
     serializes the corpus through one task); ``N`` is a 1-row aggregate
     broadcast via cross-join.  Two scans of the scored input, one range
-    shuffle of (id, score) pairs — at 100 TB the alternative that avoids
+    shuffle of (id, score) pairs into ``n_partitions`` (default: the
+    session's shuffle partitions) — at 100 TB the alternative that avoids
     even the rank (approx-percentile thresholds) loses exactness at tier
     borders; CCNet itself cuts exact thirds.
 

@@ -825,12 +825,7 @@ def duplicated_line_stats(
             F.sum("chars").alias("allchars"),
         )
     )
-    frac = F.round(
-        F.coalesce(
-            F.col("dupchars") / F.nullif(F.col("allchars"), F.lit(0)), F.lit(0.0)
-        ),
-        4,
-    )
+    frac = textstats.rounded_frac(F.col("dupchars"), F.col("allchars"))
     return per_doc.select(
         "id",
         "n_lines",

@@ -161,7 +161,9 @@ def budgets_from_error_rates(
 
 
 def rank_within_iteration(
-    selected: DataFrame, n_partitions: int = 32, cleanup: list | None = None
+    selected: DataFrame,
+    n_partitions: int | None = None,
+    cleanup: list | None = None,
 ) -> DataFrame:
     """Canonical within-iteration fetch rank: global (depth, url) order, 1-based.
 

@@ -49,7 +49,7 @@ def _offset_by_range_partition(
     out_col: str,
     total: Column,
     local: Callable[[WindowSpec], Column],
-    n_partitions: int,
+    n_partitions: int | None,
     cleanup: list | None,
 ) -> DataFrame:
     """The three distributed steps (module doc) shared by both rankers.
@@ -58,7 +58,10 @@ def _offset_by_range_partition(
     ``local(win)`` returns the named within-partition window column over
     ``win`` (partitioned by range-partition id, ordered by ``order_cols``).
     ``out_col`` = offset of the row's partition + its local value, bigint.
+    ``n_partitions=None`` takes the session's ``spark.sql.shuffle.partitions``.
     """
+    if n_partitions is None:
+        n_partitions = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
     part = (
         df.repartitionByRange(n_partitions, *cols)
@@ -93,7 +96,7 @@ def global_row_number(
     df: DataFrame,
     order_cols: list,
     rank_col: str = "rank",
-    n_partitions: int = 32,
+    n_partitions: int | None = None,
     cleanup: list | None = None,
 ) -> DataFrame:
     """1-based global row_number (bigint) over the total order
@@ -102,6 +105,11 @@ def global_row_number(
     ``order_cols`` may be column names or Column expressions; the order must
     be total (ties would make the rank nondeterministic, exactly as with a
     plain window).
+
+    ``n_partitions`` is the range-partition count, by default the session's
+    ``spark.sql.shuffle.partitions`` (``build_session`` sets it to the core
+    count): every range partition is one task in each of the steps, so a
+    fixed count above the cores only adds task overhead.
 
     ``cleanup``: optional list the persisted intermediate is appended to;
     the caller unpersists the appended frame(s) AFTER the action that
@@ -124,7 +132,7 @@ def global_running_sum(
     order_cols: list,
     value_col: str,
     sum_col: str = "running_sum",
-    n_partitions: int = 32,
+    n_partitions: int | None = None,
     cleanup: list | None = None,
     inclusive: bool = False,
 ) -> DataFrame:
@@ -132,7 +140,8 @@ def global_running_sum(
     ``order_cols`` — the running-sum twin of :func:`global_row_number`,
     with the same three-step shape (range-partition → within-partition
     window → broadcast per-partition offsets) and the same persisted-pid
-    determinism contract (see module doc; ``cleanup`` works identically).
+    determinism contract (see module doc; ``n_partitions`` and ``cleanup``
+    work identically).
 
     ``inclusive=False`` (the default) sums the values STRICTLY BEFORE the
     row in the total order — the "offset of this row" convention a

@@ -1387,26 +1387,14 @@ def _with_repetition_stats(docs: "DataFrame") -> "DataFrame":
         ).alias("top"),
         F.col("_rep.dupchars").alias("dupchars"),
     ).drop("_rep")
-    top_frac = F.round(
-        F.coalesce(
-            F.col("top.cnt")
-            * (F.length(F.col("top.g")) - 1)
-            / F.nullif(F.col("wchars"), F.lit(0)),
-            F.lit(0.0),
-        ),
-        4,
-    )
-    dup_frac = F.round(
-        F.coalesce(
-            F.col("dupchars") / F.nullif(F.col("wchars"), F.lit(0)), F.lit(0.0)
-        ),
-        4,
+    top_frac, dup_frac, keep = textstats.repetition_verdict(
+        F.col("wchars"), F.col("top.cnt"), F.col("top.g"), F.col("dupchars")
     )
     return staged.select(
         *[c for c in docs.columns],
         top_frac.alias("top_bigram_frac"),
         dup_frac.alias("dup_trigram_frac"),
-        ((top_frac <= 0.20) & (dup_frac <= 0.30)).alias("keep"),
+        keep.alias("keep"),
     )
 
 
@@ -2225,19 +2213,12 @@ def q_corpus_clean(spark, sf_dir):
     repetition fracs — ride ONE scan with zero shuffles; the line-dedup
     branch is the only corpus-global state and the only join.  Nothing
     Python, nothing collected."""
-    return _corpus_clean_from(load_table(spark, sf_dir, "documents", rebalance=True))
-
-
-def _corpus_clean_from(docs):
-    """corpus_clean over a caller-supplied documents frame — the single
-    source of the clean logic, so ``q_corpus_prepare`` can feed it the
-    SHARED cached scan (r6) without duplicating semantics."""
+    docs = load_table(spark, sf_dir, "documents", rebalance=True)
     base = _with_repetition_stats(
         docs.select(
             "doc_id",
             "text",
-            textstats.detect_lang(F.col("text")).alias("lang"),
-            F.round(textstats.quality_score(F.col("text")), 4).alias("quality"),
+            *_lang_quality(),
             (
                 pii.count_emails(F.col("text"))
                 + pii.count_phones(F.col("text"))
@@ -2246,7 +2227,9 @@ def _corpus_clean_from(docs):
         )
     ).select("doc_id", "lang", "quality", "n_pii", F.col("keep").alias("keep_repetition"))
     lines = dedup.duplicated_line_stats(
-        docs, words_per_line=3, max_dup_frac=0.3
+        docs,
+        words_per_line=textstats.LINE_WORDS,
+        max_dup_frac=curation.MAX_LINE_DUP_FRAC,
     ).withColumnRenamed("id", "doc_id").select(
         "doc_id", F.col("keep").alias("keep_lines")
     )
@@ -2254,25 +2237,43 @@ def _corpus_clean_from(docs):
     # join LEFT and default keep_lines to true so EVERY doc gets a verdict
     # (an empty doc has no duplicated lines; quality/lang reject it instead)
     keep_lines = F.coalesce(F.col("keep_lines"), F.lit(True))
-    out = (
+    return (
         base.join(lines, "doc_id", "left")
         .select(
             "doc_id",
             "lang",
             "quality",
             "n_pii",
-            (F.col("quality") >= 0.6667).alias("keep_quality"),
+            (F.col("quality") >= _MIN_QUALITY).alias("keep_quality"),
             "keep_repetition",
             keep_lines.alias("keep_lines"),
-            (
-                (F.col("lang") != "und")
-                & (F.col("quality") >= 0.6667)
-                & F.col("keep_repetition")
-                & keep_lines
-            ).alias("keep"),
+            _clean_keep(keep_lines).alias("keep"),
         )
     )
-    return out
+
+
+_MIN_QUALITY = 0.6667
+
+
+def _lang_quality() -> list:
+    """The ``lang`` and rounded ``quality`` columns of a frame carrying
+    ``text`` — the JVM-side inputs of the clean verdict."""
+    return [
+        textstats.detect_lang(F.col("text")).alias("lang"),
+        F.round(textstats.quality_score(F.col("text")), 4).alias("quality"),
+    ]
+
+
+def _clean_keep(keep_lines: "Column") -> "Column":
+    """corpus_clean's KEEP verdict over the ``lang``, ``quality`` and
+    ``keep_repetition`` columns and the line verdict ``keep_lines`` — the
+    one predicate ``corpus_clean`` and ``corpus_prepare`` both apply."""
+    return (
+        (F.col("lang") != "und")
+        & (F.col("quality") >= _MIN_QUALITY)
+        & F.col("keep_repetition")
+        & keep_lines
+    )
 
 
 def _sql_corpus_clean() -> str:
@@ -2755,11 +2756,17 @@ def q_corpus_prepare(spark, sf_dir):
        (``pack_sequences``) — chunk ids shift as upstream filters change,
        which is why packing must run last.
 
-    Every stage is the same operator its standalone gate query verifies;
-    the oracle recomposes the same SQL fragments.  Plan-wise the scalars
-    still ride single scans per stage; the stage boundaries are joins on
-    the 8-byte doc id, the quota window, and the range-partitioned prefix
-    sum — nothing here collects to the driver.
+    Stages 1-3 keep the standalone gate operators' verdicts, and the
+    oracle recomposes those operators' SQL fragments; the plan computes
+    them differently.  Everything that needs the text's words (Gopher
+    repetition, CCNet lines, span coverage, decontamination) comes from
+    ONE read of each document: ``curation.doc_pass_flags`` runs one Arrow
+    kernel and one explode that serves both the line and the gram
+    hashes (tests/test_curation.py checks it against the four standalone
+    operators composed).  Lang and quality are a JVM projection of a
+    second scan, joined to the flags on the 8-byte doc id.  Then the
+    quota window and the range-partitioned prefix sum, sized to the
+    session's shuffle partitions — nothing here collects to the driver.
 
     Scale note on the TESTDATA corpus specifically: the synthetic
     generator draws from a ~40-word vocabulary, so line/gram duplication
@@ -2770,39 +2777,25 @@ def q_corpus_prepare(spark, sf_dir):
     ones (CCNet 0.3, Lee-style 0.2).  The bench timing at sf0.1 still
     exercises every upstream stage at full volume.
     """
-    # One shared LAZY scan frame feeds every branch.  Persisting it was
-    # A/B-measured and REJECTED (the third cache-based negative result this
-    # round): gc-bracketed interleaved runs at sf1-shape gave 5.2-5.4 s
-    # uncached vs 8.4-10.9 s with the docs frame cached — the
+    # Both scans are LAZY.  Persisting the docs frame was A/B-measured and
+    # REJECTED (r6): gc-bracketed interleaved runs at sf1-shape gave
+    # 5.2-5.4 s uncached vs 8.4-10.9 s with the docs frame cached — the
     # unpersist/refill cycle plus AQE's restrictions on InMemoryRelation
-    # plans cost far more than the three duplicated scan+rebalance stages
-    # they replace (an earlier non-interleaved A/B that favored the cache
-    # was ordering-biased).  Catalyst clones the lazy subtree per branch;
-    # that duplication is the cheap side of this trade.
+    # plans cost more than the duplicated scan they replace.
     cleanup = _drain(_PREPARE_DEFERRED)
     docs = load_table(spark, sf_dir, "documents", rebalance=True)
-    clean = _corpus_clean_from(docs).select(
-        "doc_id", F.col("keep").alias("keep_clean")
+    # flags for the non-benchmark docs only: benchmark docs (% 50 == 0)
+    # are excluded from the manifest
+    flags = (
+        curation.doc_pass_flags(docs, F.col("doc_id") % 50 == 0)
+        .filter(~F.col("is_bench"))
+        .withColumnRenamed("id", "doc_id")
     )
-    # Span coverage + decontamination come from ONE gram pipeline
-    # (curation.span_decon_flags, r6): the distinct-doc count and the
-    # benchmark-membership marker are two window aggregates over the same
-    # gram hash, so the pair costs one explode + three 8-byte-key
-    # exchanges where the r5 composition paid three explodes and five.
-    # A fusion through a persisted pre-combined frame lost its A/B twice
-    # (15.4 s vs 13.3 s at sf1-shape, OPTIMIZATION_r06.md); the window
-    # form fuses with NO cache, so it keeps the pipelined shape AND the
-    # single tokenization.  Flags are emitted for non-benchmark docs only —
-    # exactly the set the former inner decon join kept.
-    flags = curation.span_decon_flags(
-        docs, F.col("doc_id") % 50 == 0, gram_words=4, max_dup_frac=0.2
-    ).withColumnRenamed("id", "doc_id")
-    survivors = (
-        docs.join(clean, "doc_id")
-        .join(flags, "doc_id")  # inner: benchmark docs (% 50 == 0) drop out
-        .filter(
-            F.col("keep_clean") & F.col("keep_spans") & ~F.col("contaminated")
-        )
+    scored = docs.select("doc_id", "source", "text", *_lang_quality())
+    survivors = scored.join(flags, "doc_id").filter(
+        _clean_keep(F.col("keep_lines"))
+        & F.col("keep_spans")
+        & ~F.col("contaminated")
     )
     quota = curation.domain_quota(
         survivors.select("doc_id", "source", "text"),
@@ -2811,8 +2804,8 @@ def q_corpus_prepare(spark, sf_dir):
     )
     # Fork barrier (r6 final): BOTH remaining consumers — the split
     # projection and the packer — sit on quota's lineage, and their join
-    # re-evaluates the ENTIRE upstream (scan → clean → flags → joins →
-    # quota window) once per side: measured 4.9 s per evaluation vs 8.3 s
+    # re-evaluates the ENTIRE upstream (scans → flags → join → quota
+    # window) once per side: measured 4.9 s per evaluation vs 8.3 s
     # for the whole query at sf1-shape, i.e. runtime exchange reuse
     # recovers only a fraction (most subtrees canonicalize unequal — the
     # branches prune different columns).  Persisting the NARROW post-quota

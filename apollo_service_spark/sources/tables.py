@@ -15,9 +15,13 @@ guide's prescribed fix ("one huge unsplittable file … repartition
 immediately after the read").  The rule is scale-adaptive, not tuned to
 local[32]:
 
-* tables whose natural split count already covers the cores (bytes >=
-  cores x maxPartitionBytes) are returned untouched — at 100 TB nothing is
-  ever rebalanced;
+* tables whose natural split count already covers the cores are returned
+  untouched — at 100 TB nothing is ever rebalanced.  The natural count is
+  the byte splits (bytes / maxPartitionBytes + 1) or, when larger, the
+  file count — Spark charges every file an open cost when it packs
+  splits, so fewer small files than cores plan one scan partition each —
+  capped by the row-group count, since a split holding no row group reads
+  nothing;
 * tables above ``_REBALANCE_MAX_BYTES`` (64 MB) are returned untouched —
   their row groups give adequate parallelism and a full-table shuffle would
   cost more than the tail it saves;
@@ -40,24 +44,33 @@ from pyspark.sql import DataFrame, SparkSession
 _REBALANCE_MAX_BYTES = 64 * 1024 * 1024
 _REBALANCE_MIN_BYTES = 16 * 1024
 
-# per-path (bytes, n_row_groups) cache — one footer read per path per process
+# per-path (file listing, (bytes, n_files, n_row_groups)): a table rewritten
+# at the same path lists other names, sizes or mtimes, so its footers are
+# read again and its entry replaced
 _PATH_META: dict = {}
 
 
 def _path_meta(path: str) -> tuple:
-    """(total_bytes, n_row_groups) for a parquet file or directory of them."""
-    cached = _PATH_META.get(path)
-    if cached is not None:
-        return cached
-    files = []
+    """(total_bytes, n_files, n_row_groups) for a parquet file or directory
+    of them."""
+    path = os.path.abspath(path)
     if os.path.isfile(path):
         files = [path]
     else:
-        for dirpath, _dirs, names in os.walk(path):
-            files.extend(
-                os.path.join(dirpath, f) for f in names if f.endswith(".parquet")
-            )
-    total = sum(os.path.getsize(f) for f in files)
+        files = sorted(
+            os.path.join(dirpath, f)
+            for dirpath, _dirs, names in os.walk(path)
+            for f in names
+            if f.endswith(".parquet")
+        )
+    listing = []
+    for f in files:
+        st = os.stat(f)
+        listing.append((f, st.st_size, st.st_mtime_ns))
+    cached = _PATH_META.get(path)
+    if cached is not None and cached[0] == listing:
+        return cached[1]
+    total = sum(size for _, size, _ in listing)
     n_rg = 0
     try:
         import pyarrow.parquet as pq
@@ -65,9 +78,9 @@ def _path_meta(path: str) -> tuple:
         for f in files:
             n_rg += pq.ParquetFile(f).metadata.num_row_groups
     except Exception:
-        n_rg = max(1, len(files))
-    meta = (total, max(1, n_rg))
-    _PATH_META[path] = meta
+        n_rg = len(files)
+    meta = (total, len(files), max(1, n_rg))
+    _PATH_META[path] = (listing, meta)
     return meta
 
 
@@ -79,15 +92,16 @@ def maybe_rebalance_scan(
     inputs whose natural splits already fill the cluster, and for tiny
     dimension tables."""
     try:
-        n_bytes, n_row_groups = _path_meta(path)
+        n_bytes, n_files, n_row_groups = _path_meta(path)
     except OSError:
         return df
     cores = spark.sparkContext.defaultParallelism
     if n_bytes < _REBALANCE_MIN_BYTES or n_bytes > _REBALANCE_MAX_BYTES:
         return df
     max_pb = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
-    # natural scan parallelism: byte splits capped by row-group granularity
-    natural = min(max(1, n_bytes // max_pb + 1), n_row_groups)
+    # natural scan parallelism: byte splits, at least one per file, capped
+    # by row-group granularity
+    natural = min(max(n_bytes // max_pb + 1, n_files), n_row_groups)
     if natural >= cores:
         return df
     return df.repartition(cores)

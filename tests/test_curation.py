@@ -447,3 +447,77 @@ def test_span_decon_flags_equals_composition(spark):
     # the fixture exercises both verdicts of both flags
     assert {ks for ks, _ in flags.values()} == {True, False}
     assert {cont for _, cont in flags.values()} == {True, False}
+
+
+def test_span_decon_flags_refuses_other_gram_widths(spark):
+    """The one-pass kernel hashes 4-grams only; another width must fail
+    loudly rather than return 4-gram verdicts."""
+    docs = spark.createDataFrame([(1, "a b c d e")], "doc_id long, text string")
+    with pytest.raises(ValueError):
+        curation.span_decon_flags(docs, F.col("doc_id") % 50 == 0, gram_words=5)
+
+
+def test_doc_pass_flags_equals_standalone_operators(spark):
+    """The fused one-read flags must be EXACTLY the four standalone gate
+    operators' verdicts: Gopher repetition (``_with_repetition_stats``),
+    CCNet lines (``dedup.duplicated_line_stats``, wordless docs kept), span
+    coverage (``dup_span_stats``) and decontamination (``decontaminate``,
+    train docs).  The fixture adds NULL, empty, short and self-repeating
+    docs to the sf0.001 documents; it must hit both values of every flag,
+    hold benchmark docs, and hold a doc repeating a gram within itself."""
+    import os
+
+    from apollo_service_spark.functions import textstats
+    from apollo_service_spark.operators import dedup
+    from apollo_service_spark.plans.queries import _with_repetition_stats
+    from tests.conftest import SF_DIR
+
+    extra = spark.createDataFrame(
+        [
+            (10_001, None),
+            (10_002, ""),
+            (10_003, "two words"),
+            (10_004, "three words here"),
+            (10_005, "the cat sat on the mat the cat sat on the mat"),
+        ],
+        "doc_id long, text string",
+    )
+    docs = (
+        spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
+        .select("doc_id", "text")
+        .unionByName(extra)
+    )
+    bench = F.col("doc_id") % 50 == 0
+    fused = {r.id: r for r in curation.doc_pass_flags(docs, bench).collect()}
+    rep = {r.doc_id: r.keep for r in _with_repetition_stats(docs).collect()}
+    lines = {
+        r.id: r.keep
+        for r in dedup.duplicated_line_stats(docs, max_dup_frac=0.3).collect()
+    }
+    spans = {r.id: r.keep for r in curation.dup_span_stats(docs).collect()}
+    decon = {
+        r.id: r.contaminated
+        for r in curation.decontaminate(
+            docs.filter(~bench), docs.filter(bench)
+        ).collect()
+    }
+    assert set(fused) == set(rep)
+    for i, r in fused.items():
+        assert r.keep_repetition == rep[i], f"doc {i} repetition"
+        assert r.keep_lines == lines.get(i, True), f"doc {i} lines"
+        assert r.keep_spans == spans[i], f"doc {i} spans"
+        assert r.is_bench == (i % 50 == 0)
+        if not r.is_bench:
+            assert r.contaminated == decon[i], f"doc {i} contamination"
+    for flag in ("keep_repetition", "keep_lines", "keep_spans", "contaminated"):
+        assert {getattr(r, flag) for r in fused.values()} == {True, False}, flag
+    assert any(r.is_bench for r in fused.values())
+    assert 10_002 not in lines  # a wordless doc: no line rows, kept
+    texts = {r.doc_id: r.text for r in docs.collect()}
+    assert any(
+        len(set(g)) < len(g)
+        for g in (
+            textstats.word_windows(textstats.space_tokens(t), 4)
+            for t in texts.values()
+        )
+    )

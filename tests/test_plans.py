@@ -20,6 +20,17 @@ def _plan(df) -> str:
     )
 
 
+def _distinct_nodes(plan: str, name: str) -> int:
+    """Nodes called ``name`` in a formatted plan, counted by distinct
+    ``(N)`` id: the formatted plan prints a cached subtree once per
+    reference, so counting lines counts repeats."""
+    import re
+
+    return len(
+        set(re.findall(rf"^\((\d+)\) {re.escape(name)}\b", plan, flags=re.MULTILINE))
+    )
+
+
 @pytest.fixture(scope="module")
 def documents(spark):
     return spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
@@ -525,12 +536,83 @@ def test_rebalance_reads_byte_string_split_size(spark, tmp_path):
         spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
 
 
+def _write_files(path, n_files: int, rows_per_file: int = 16) -> None:
+    """``n_files`` one-row-group parquet files of incompressible rows."""
+    import random
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = random.Random(n_files)
+    path.mkdir(parents=True, exist_ok=True)
+    for i in range(n_files):
+        blobs = [rng.randbytes(512).hex() for _ in range(rows_per_file)]
+        pq.write_table(
+            pa.table({"k": list(range(rows_per_file)), "blob": blobs}),
+            str(path / f"part-{i:05d}.parquet"),
+            compression="none",
+        )
+
+
+def test_rebalance_counts_one_partition_per_small_file(spark, tmp_path):
+    """A table of one small file per core plans one scan partition per file,
+    so its natural parallelism already covers the cores: no round-robin
+    exchange, though its bytes fit in one split.  A relative table path
+    decides the same."""
+    from apollo_service_spark.sources.tables import load_table
+
+    cores = spark.sparkContext.defaultParallelism
+    _write_files(tmp_path / "multi.parquet", cores)
+    for sf_dir in (str(tmp_path), os.path.relpath(tmp_path)):
+        df = load_table(spark, sf_dir, "multi", rebalance=True)
+        assert df.rdd.getNumPartitions() == cores
+        assert "RoundRobinPartitioning" not in _plan(df), sf_dir
+
+
+def test_rebalance_sees_a_table_rewritten_in_place(spark, tmp_path):
+    """The row-group count is cached with the file listing it was read
+    from: a table rewritten at the same path from one row-group file to
+    eight files must change the rebalance decision."""
+    import shutil
+
+    from apollo_service_spark.sources.tables import load_table
+
+    table = tmp_path / "t.parquet"
+    _write_files(table, 1, rows_per_file=64)
+    plan = _plan(load_table(spark, str(tmp_path), "t", rebalance=True))
+    assert "RoundRobinPartitioning" in plan, plan
+    shutil.rmtree(table)
+    _write_files(table, 8)
+    plan = _plan(load_table(spark, str(tmp_path), "t", rebalance=True))
+    assert "RoundRobinPartitioning" not in plan, plan
+
+
+def test_corpus_prepare_reads_each_document_once(spark):
+    """corpus_prepare reads the text's words in ONE Arrow kernel and ONE
+    explode (curation.doc_pass_flags), scans documents at most twice (the
+    flags and the lang/quality projection), and sizes its prefix-sum range
+    partitioning to the session, not to a fixed 32."""
+    import re
+
+    import __spark_entry__ as em
+
+    plan = _plan(em.queries()["corpus_prepare"](spark, SF_DIR))
+    assert _distinct_nodes(plan, "ArrowEvalPython") == 1, plan
+    assert _distinct_nodes(plan, "Generate") == 1, plan
+    assert _distinct_nodes(plan, "Scan parquet") <= 2, plan
+    locations = set(re.findall(r"Location: \w+ \[(.*?)\]", plan))
+    assert locations and all(l.endswith("documents.parquet") for l in locations)
+    counts = {int(n) for n in re.findall(r"rangepartitioning\(.*, (\d+)\)", plan)}
+    assert counts == {int(spark.conf.get("spark.sql.shuffle.partitions"))}, plan
+    assert counts == {spark.sparkContext.defaultParallelism}, plan
+
+
 def test_corpus_prepare_no_single_partition(spark):
     """The end-to-end manifest composes every curation stage and must stay
     fully distributed: the packing prefix sum and quota window ride the
     range-partition/WindowGroupLimit machinery, never a single-partition
-    exchange. (Spans + decontamination come from span_decon_flags, whose
-    single explode is guarded above.)"""
+    exchange. (Its word-level flags come from curation.doc_pass_flags,
+    whose single kernel and explode are guarded above.)"""
     import __spark_entry__ as em
 
     plan = _plan(em.queries()["corpus_prepare"](spark, SF_DIR))

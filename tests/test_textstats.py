@@ -246,3 +246,46 @@ def test_arrow_repetition_kernel_mega_doc(spark):
     expected_dup = ((n3 + 1) // 2 - 1) * 3 + (n3 // 2 - 1) * 3
     assert rep["dupchars"] == expected_dup
     assert out[2]["top_cnt"] == 1
+
+
+def test_doc_pass_kernel_matches_window_join(spark):
+    """The one-pass kernel (udfs.doc_pass_udf) must hash exactly the lines
+    and grams ``window_join`` builds from ``F.split(text, " ")`` — same
+    strings, same code-point lengths — and return exactly
+    ``repetition_stats_py``'s scalars, on fuzzed text: tabs, newlines and
+    U+00A0 inside tokens, runs of spaces, fewer than 3 and fewer than 4
+    words, empty and NULL text."""
+    import random
+
+    from apollo_service_spark.functions.udfs import doc_pass_udf
+
+    rng = random.Random(20261017)
+    pieces = ["aa", "bb", "ü", "cc", "x\ty", "p\nq", " ", "a b", " ", "  ", "\t"]
+    cases = [
+        None, "", " ", "   ", " ", "one", "one two", "one  two three",
+        " one two three four ", "a\tb c\nd e f g",
+    ] + ["".join(rng.choices(pieces, k=rng.randint(0, 40))) for _ in range(60)]
+    docs = spark.createDataFrame(list(enumerate(cases)), "doc_id int, text string")
+    w = F.filter(F.split(F.col("text"), " "), lambda x: x != "")
+    lines = textstats.window_join(w, 3, stride=3, keep_partial=True)
+    grams = textstats.window_join(w, 4)
+    rows = docs.select(
+        "doc_id",
+        lines.alias("lines"),
+        F.transform(lines, F.length).alias("line_len"),
+        grams.alias("grams"),
+        doc_pass_udf(F.col("text")).alias("d"),
+    ).collect()
+    assert len(rows) == len(cases)
+    for r in rows:
+        text, d = cases[r.doc_id], r.d
+        toks = textstats.space_tokens(text)
+        py_lines = textstats.word_windows(toks, 3, stride=3, keep_partial=True)
+        py_grams = textstats.word_windows(toks, 4)
+        assert py_lines == r.lines, (text, py_lines, r.lines)
+        assert py_grams == r.grams, (text, py_grams, r.grams)
+        assert d.line_h == [textstats.hash64(x) for x in py_lines]
+        assert d.line_chars == r.line_len
+        assert d.gram_h == [textstats.hash64(g) for g in py_grams]
+        scalars = (d.wchars, d.top_cnt, d.top_g, d.dupchars)
+        assert scalars == textstats.repetition_stats_py(text), text
