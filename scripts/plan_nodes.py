@@ -8,14 +8,19 @@ shuffle partitions, as ``session.build_session`` sets it up.
 
 Prints one JSON line:
 
-- ``scans``, ``exchanges``, ``broadcast_exchanges``, ``generate`` and
-  ``arrow_eval_python``: nodes of the key's formatted physical plan, counted
-  by distinct ``(N)`` id, because the formatted plan prints a cached subtree
-  once per reference;
-- ``jobs``, ``stages`` and ``tasks``: what one warm run of the key into a
-  parquet sink cost, read from Spark's status store through
-  ``perfbench.status``. The key runs once untimed first, so the count is of
-  a warm run with its code already generated.
+- ``scans``, ``exchanges``, ``broadcast_exchanges``, ``generate``,
+  ``arrow_eval_python`` (pandas UDFs) and ``flat_map_groups_in_arrow``
+  (``applyInArrow`` passes, such as the seen store's): nodes of the key's
+  formatted physical plan, counted by distinct ``(N)`` id, because the
+  formatted plan prints a cached subtree once per reference;
+- ``jobs``, ``stages``, ``tasks`` and ``python_bytes`` (Arrow bytes sent to
+  and returned from Python workers): what one warm run of the key cost,
+  building its frame and writing it into a parquet sink, read from Spark's
+  status stores through ``perfbench.status``. The build counts because a
+  key may run an engine there: ``crawl_frontier`` crawls (the seen store's
+  ``applyInArrow`` passes included) before it returns the crawl log, so its
+  returned plan holds none of that work. The key runs once first, so the
+  count is of a warm run with its code already generated.
 """
 
 from __future__ import annotations
@@ -39,6 +44,7 @@ NODES = {
     "broadcast_exchanges": r"BroadcastExchange",
     "generate": r"Generate",
     "arrow_eval_python": r"ArrowEvalPython",
+    "flat_map_groups_in_arrow": r"FlatMapGroupsInArrow",
 }
 
 
@@ -72,10 +78,10 @@ def main(argv: list) -> int:
         with tempfile.TemporaryDirectory() as out:
             sink = os.path.join(out, "out.parquet")
             query(spark, sf_dir).write.mode("overwrite").parquet(sink)  # warm-up
-            df = query(spark, sf_dir)
-            counts = plan_counts(df)
             spark.sparkContext.setJobDescription(label)
             t = time.perf_counter()
+            df = query(spark, sf_dir)
+            counts = plan_counts(df)
             df.write.mode("overwrite").parquet(sink)
             wall = time.perf_counter() - t
             spark.sparkContext.setJobDescription(None)
@@ -85,6 +91,7 @@ def main(argv: list) -> int:
             jobs=summary["spark.jobs"],
             stages=summary["spark.stages"],
             tasks=summary["spark.tasks"],
+            python_bytes=summary["spark.python_data_bytes"],
         )
         print(json.dumps({"key": key, "cores": cores, **counts}))
     finally:

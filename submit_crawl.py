@@ -6,6 +6,9 @@ Cluster usage (north-rule deployment shape)::
     zip -r apollo_service_spark.zip apollo_service_spark
     spark-submit --py-files apollo_service_spark.zip \
         --conf spark.sql.adaptive.enabled=true \
+        --conf spark.sql.codegen.cache.maxEntries=1000 \
+        --conf spark.sql.adaptive.optimizer.excludedRules=\
+org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation \
         submit_crawl.py \
         --pages s3://bucket/pages_table \      # or --warc-dir s3://bucket/segments/ \
         --seeds s3://bucket/seeds_table \
@@ -15,9 +18,23 @@ Cluster usage (north-rule deployment shape)::
         [--resume] [--max-iterations N] [--depth-limit N] \
         [--n-partitions 4096] [--default-budget 100]
 
-Local smoke (what the sandbox runs)::
+Under spark-submit the session comes from the ``--conf`` flags: pass the
+ones ``session.build_session`` sets that the engine relies on (the codegen
+cache size, and the AQEPropagateEmptyRelation exclusion that keeps the
+superstep's ``df.observe`` metrics alive). ``spark.python.daemon.module`` is
+not set on this path: the engine's worker daemon
+(``apollo_service_spark.worker_daemon``) is started with ``python -m`` before
+any task runs, so it needs the package on the executors' ``PYTHONPATH`` when
+the daemon starts, and ``--py-files`` only adds its zip to each task's path
+after that. Set it together with ``spark.executorEnv.PYTHONPATH`` where the
+package is installed on the executors.
+
+Local smoke::
 
     python submit_crawl.py --demo /tmp/apollo_demo
+
+``--demo`` builds its session with ``session.build_session``, as every other
+local entry point does.
 
 The job is idempotent per iteration: every superstep commits an atomic
 snapshot, so re-running with ``--resume`` continues mid-frontier after any
@@ -68,11 +85,15 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     from apollo_service_spark.operators.frontier import CrawlConfig, FrontierEngine
+    from apollo_service_spark.session import build_session
     from apollo_service_spark.sources.storage import SnapshotStore
 
-    # under spark-submit the session comes preconfigured from --conf flags;
-    # getOrCreate() attaches to it (locally it builds a default one)
-    spark = SparkSession.builder.appName("apollo-frontier-crawl").getOrCreate()
+    if args.demo:
+        spark = build_session(app_name="apollo-frontier-crawl")
+    else:
+        # under spark-submit the session comes preconfigured from --conf
+        # flags (module docstring); getOrCreate() attaches to it
+        spark = SparkSession.builder.appName("apollo-frontier-crawl").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     if args.demo:
