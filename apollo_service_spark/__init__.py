@@ -16,7 +16,6 @@ Subpackages
 ``operators``  frontier engine, seen store, politeness, robots, clustering
 ``plans``      the queries()/oracle_sql() registry used by the driver
 ``oracle``     single-process reference simulator for crawl-equivalence tests
-``streaming``  structured-streaming surface for continuous crawling
 """
 
 __version__ = "0.1.0"

@@ -38,50 +38,13 @@ from pyspark.sql.types import (
     ArrayType, IntegerType, LongType, StringType, StructField, StructType,
 )
 
-from .html import extract_links, extract_text, extract_text_only
+from .html import extract_links, extract_text_only
 from .textstats import doc_pass_py, repetition_stats_py
 
 
 @F.pandas_udf(StringType())
 def extract_text_udf(html: pd.Series) -> pd.Series:
     return html.map(extract_text_only)
-
-
-_DOC_SCHEMA = StructType(
-    [
-        StructField("text", StringType()),
-        StructField("clean_title", StringType()),
-        StructField("page_title", StringType()),
-    ]
-)
-
-
-def _extract_doc(html) -> tuple:
-    if html is None:
-        return ("", "", "")
-    if isinstance(html, (bytes, bytearray)):
-        try:
-            html = bytes(html).decode("utf-8", errors="replace")
-        except Exception:
-            return ("", "", "")
-    return extract_text(html)
-
-
-@F.pandas_udf(_DOC_SCHEMA)
-def extract_doc_udf(html: pd.Series) -> pd.DataFrame:
-    """Full extraction record: markdown text + cleaned title + raw title
-    (the reference scraper's per-page output, scraper.py:211-330) in one
-    Arrow pass — callers derive metadata (sha2 doc ids, display names)
-    JVM-side from the struct fields."""
-    rows = html.map(_extract_doc)
-    return pd.DataFrame(
-        {
-            "text": rows.map(lambda r: r[0]),
-            "clean_title": rows.map(lambda r: r[1]),
-            "page_title": rows.map(lambda r: r[2]),
-        },
-        index=html.index,
-    )
 
 
 @F.pandas_udf(ArrayType(StringType()))

@@ -108,18 +108,3 @@ def connected_components(
         f"connected_components did not converge in {max_iterations} rounds "
         "(graph diameter exceeds the cap); raise max_iterations"
     )
-
-
-def dedup_clusters(
-    pairs: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-) -> DataFrame:
-    """``(component, n_members, keep_id)`` per near-dup cluster: the
-    canonical survivor is the minimum id (== the component label), the rest
-    are the cluster's drop set. One aggregation over the component output."""
-    comp = connected_components(pairs, src, dst)
-    return comp.groupBy("component").agg(
-        F.count(F.lit(1)).alias("n_members"),
-        F.min("id").alias("keep_id"),
-    )

@@ -9,8 +9,7 @@ Five tiers, all shuffle-conscious:
   buckets only* (the LSH trick: candidate pairs ∝ collisions, not n²) →
   exact Jaccard verify on the candidates.
 * **SimHash** — 64-bit sign-sum of per-token hashes (vectorized via
-  higher-order array functions); near-dups = identical simhash or Hamming
-  distance ≤ r via band rotation.
+  higher-order array functions); near-dups = identical simhash.
 * **embedding cosine** — see similarity.py; near-dup = cosine ≥ threshold.
 * **winnowing** — MOSS fingerprints (O(n) vectorized hash pipeline in an
   Arrow UDF) → inverted-index self-join on the 64-bit fingerprint; catches
@@ -41,14 +40,13 @@ def _capped_pairs(
     cap: int,
     drop_observation: Observation | None,
     id_col: str = "id",
-    payload_cols: tuple = (),
 ) -> DataFrame:
     """Candidate (id_a, id_b) pairs within each key-group, for groups of at
     most ``cap`` rows; oversized groups are dropped whole and their row
     count observed as ``rows_dropped``.
 
     The capped path deliberately does NOT self-join: the cap bounds each
-    group, so collecting the group's ids (+ payload) into one array and
+    group, so collecting the group's ids into one array and
     exploding the a<b pairs is safe (≤ cap ids buffered, ≤ cap² pairs per
     group), computes the upstream frame ONCE instead of twice, and keeps the
     drop Observation on a linearly-consumed node. (A CollectMetrics node
@@ -57,9 +55,7 @@ def _capped_pairs(
     duplicate observes zero rows and clobbers the real count with null, the
     bug this structure exists to avoid.) The mega-group OOM guard is the
     sizes pre-filter: ``collect_list`` only ever runs on groups already
-    proven ≤ cap.
-
-    payload columns ``c`` come back as ``{c}_a`` / ``{c}_b``."""
+    proven ≤ cap."""
     sizes = df.groupBy(*keys).agg(F.count(F.lit(1)).alias("_gsz"))
     if drop_observation is not None:
         sizes = sizes.observe(
@@ -77,27 +73,13 @@ def _capped_pairs(
         )
     small = sizes.filter(F.col("_gsz") <= cap).drop("_gsz")
     kept = df.join(small, keys)
-    item = (
-        F.struct(F.col(id_col).alias("_i"), *[F.col(c) for c in payload_cols])
-        if payload_cols
-        else F.col(id_col)
-    )
-    grp = kept.groupBy(*keys).agg(F.sort_array(F.collect_list(item)).alias("_arr"))
-    gt = (
-        (lambda x: x["_i"] > F.col("_a._i"))
-        if payload_cols
-        else (lambda x: x > F.col("_a"))
+    grp = kept.groupBy(*keys).agg(
+        F.sort_array(F.collect_list(F.col(id_col))).alias("_arr")
     )
     paired = grp.select(F.explode("_arr").alias("_a"), "_arr").select(
-        "_a", F.explode(F.filter(F.col("_arr"), gt)).alias("_b")
+        "_a",
+        F.explode(F.filter(F.col("_arr"), lambda x: x > F.col("_a"))).alias("_b"),
     )
-    if payload_cols:
-        return paired.select(
-            F.col("_a._i").alias("id_a"),
-            F.col("_b._i").alias("id_b"),
-            *[F.col(f"_a.{c}").alias(f"{c}_a") for c in payload_cols],
-            *[F.col(f"_b.{c}").alias(f"{c}_b") for c in payload_cols],
-        )
     return paired.select(
         F.col("_a").alias("id_a"), F.col("_b").alias("id_b")
     )
@@ -433,96 +415,6 @@ def simhash_dup_groups(
         id_col, "simhash"
     )
     return _capped_groups(sh, "simhash", id_col, "n", max_ids_per_group)
-
-
-def simhash_near_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    hamming_max: int = 3,
-    max_bucket_size: int | None = None,
-    drop_observation: Observation | None = None,
-) -> DataFrame:
-    """Near-dup pairs at Hamming distance ≤ ``hamming_max`` between 64-bit
-    simhashes, via pigeonhole banding.
-
-    The 64 bits are split into ``hamming_max + 1`` contiguous bands: any two
-    hashes within Hamming distance ``hamming_max`` differ in at most
-    ``hamming_max`` bands, so they agree EXACTLY on at least one band —
-    candidate pairs are found with equality joins on (band_index, band_value)
-    buckets (candidates ∝ collisions, never n²), then verified with
-    ``bit_count(a XOR b)``. Returns (id_a, id_b, hamming), id_a < id_b.
-
-    ``max_bucket_size`` (opt-in, default None) guards degenerate bands with
-    the same recall-for-runtime trade as in ``minhash_lsh_pairs`` — here the
-    pigeonhole guarantee ("agree on ≥1 band") is likewise voided for pairs
-    whose only agreeing bands are oversized.
-    """
-    n_bands = hamming_max + 1
-    width = 64 // n_bands
-    sh = (
-        with_simhash(docs.select(id_col, text_col), text_col)
-        .select(F.col(id_col).alias("id"), "simhash")
-        .filter(F.col("simhash").isNotNull())
-    )
-
-    def band_value(b: int):
-        # band b covers bits [b*width, ...); the last band takes the remainder
-        w = width if b < n_bands - 1 else 64 - b * width
-        mask = F.lit(-1 if w == 64 else (1 << w) - 1).cast("bigint")
-        return F.shiftrightunsigned("simhash", b * width).bitwiseAND(mask)
-
-    banded = sh.select(
-        "id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"), band_value(b).alias("value")
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("bv"),
-    ).select("id", "simhash", F.col("bv.band").alias("band"), F.col("bv.value").alias("value"))
-
-    if max_bucket_size is not None:
-        cand = (
-            _capped_pairs(
-                banded,
-                ["band", "value"],
-                max_bucket_size,
-                drop_observation,
-                payload_cols=("simhash",),
-            )
-            .withColumnRenamed("simhash_a", "sh_a")
-            .withColumnRenamed("simhash_b", "sh_b")
-            .dropDuplicates(["id_a", "id_b"])
-        )
-    else:
-        cand = (
-            banded.alias("a")
-            .join(
-                banded.alias("b"),
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.value") == F.col("b.value"))
-                & (F.col("a.id") < F.col("b.id")),
-            )
-            .select(
-                F.col("a.id").alias("id_a"),
-                F.col("b.id").alias("id_b"),
-                F.col("a.simhash").alias("sh_a"),
-                F.col("b.simhash").alias("sh_b"),
-            )
-            .dropDuplicates(["id_a", "id_b"])
-        )
-    hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    return (
-        cand.withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= hamming_max)
-        .select("id_a", "id_b", "hamming")
-    )
 
 
 # --------------------------------------------------------------------------

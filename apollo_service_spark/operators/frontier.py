@@ -33,11 +33,8 @@ lineage — no logical-plan growth across supersteps (SURVEY.md §7 risk 3).
 Scale notes: the frontier table and the seen store are partitioned by salted
 host PLUS a per-url spread offset (`host_salted_partition(url=...)`) so one
 mega-host cannot pin a storage/dedup partition; the politeness budget bounds
-any host's per-iteration BATCH, and the opt-in two-phase selection
-(`CrawlConfig.politeness_prune` → politeness.select_batch) bounds the
-per-host WINDOW straggler a mega-host frontier would otherwise create;
-robots and politeness dims are broadcast; AQE handles residual skew in the
-anti-join.
+any host's per-iteration BATCH (politeness.select_batch); robots and
+politeness dims are broadcast; AQE handles residual skew in the anti-join.
 """
 
 from __future__ import annotations
@@ -72,10 +69,6 @@ class CrawlConfig:
     bloom_fpp: float = 0.01
     max_iterations: int = 1000
     expected_urls: int = 1_000_000        # seen-store bloom sizing
-    # opt-in two-phase batch selection: bounds the per-host window straggler
-    # when one mega-host dominates the frontier (politeness.select_batch);
-    # None = single exact window (right for skew-free frontiers)
-    politeness_prune: int | None = None
     # frontiers at or below this size fetch via a broadcast semi-join probe
     # over the RAW pages scan (no corpus shuffle, no cache materialization)
     # instead of the repartitioned+cached join — the small-superstep fast
@@ -373,10 +366,7 @@ class FrontierEngine:
         compiles0 = codegen_compiles(spark)
 
         selected, carryover = politeness_ops.select_batch(
-            frontier,
-            self.politeness,
-            cfg.default_budget,
-            prune_partitions=cfg.politeness_prune,
+            frontier, self.politeness, cfg.default_budget
         )
         # deterministic truncation at the page limit (canonical rule for
         # the reference's racy max_pages stop, apollo.py:538-547). The

@@ -350,26 +350,3 @@ def make_wav(n_samples: int, amplitude: int, sample_rate: int = 8000) -> bytes:
         + struct.pack("<I", len(data))
         + data
     )
-
-
-def frame_sample_plan(media: DataFrame, every_n_seconds: int = 5) -> DataFrame:
-    """For video rows, emit a (media_id, frame_ts) sampling plan (1:N) —
-    the decode of each frame is downstream of this plan and stubbed."""
-    from pyspark.sql import functions as F
-
-    # without a real container parser, duration is estimated from size at a
-    # nominal bitrate (deterministic stand-in; replace with real probe)
-    est_duration_s = (F.length("payload") / F.lit(250_000)).cast("int")
-    return (
-        media.filter(F.col("kind") == "video")
-        .select(
-            "media_id",
-            F.explode(
-                F.sequence(
-                    F.lit(0),
-                    F.greatest(est_duration_s - 1, F.lit(0)),
-                    F.lit(every_n_seconds),
-                )
-            ).alias("frame_ts"),
-        )
-    )

@@ -35,7 +35,6 @@ def select_batch(
     frontier: DataFrame,
     politeness: DataFrame | None,
     default_budget: int,
-    prune_partitions: int | None = None,
     order: list | None = None,
 ) -> tuple:
     """Split frontier into (selected, carryover) by per-host budget.
@@ -50,22 +49,13 @@ def select_batch(
     north-star names, with the priority column free to come from anywhere
     (link-graph PageRank, OPIC cash, recrawl staleness). The order MUST be
     total (tie-break on ``url``) or the crawl ordering stops being
-    replayable; the same order is used by both the pruning pre-pass and the
-    exact window, which is what keeps the pruned path's selected set
-    identical.
+    replayable.
 
-    ``prune_partitions`` (opt-in) bounds the mega-host window straggler: the
-    per-host ``row_number`` window puts ALL of a host's frontier rows in one
-    task, so a host holding most of a 10^10 frontier serializes the batch
-    selection. With pruning, a first window over (host, per-url sub-partition)
-    keeps only each sub-partition's top-``budget`` rows — any row outside its
-    sub-partition's top-budget cannot be in the host's global top-budget, so
-    the final exact window runs over ≤ prune_partitions × budget rows per
-    host (parallelism = prune_partitions per host for the heavy pass). Rows
-    pruned locally join the carryover unchanged. The selected set is
-    IDENTICAL to the single-window path (asserted in tests); the cost is one
-    extra shuffle of the frontier delta, which is why it is opt-in rather
-    than the default for skew-free crawls.
+    The per-host ``row_number`` window puts all of a host's frontier rows in
+    one task. Without a politeness table every host has the same literal
+    budget, and Spark plans ``selected`` with a partial ``WindowGroupLimit``
+    before the window's exchange, so each map task ships at most ``budget``
+    rows per host (plan-guarded in tests/test_plans.py).
     """
     if order is None:
         order = frontier_order()
@@ -77,28 +67,10 @@ def select_batch(
     else:
         base = frontier.withColumn("budget", F.lit(default_budget))
 
-    pruned_out = None
-    if prune_partitions is not None and prune_partitions > 1:
-        sub = F.pmod(
-            F.xxhash64("url", F.lit(0x51_7C_C1B7)), F.lit(prune_partitions)
-        )
-        w_local = Window.partitionBy("host", "_sub").orderBy(*order)
-        flagged = base.withColumn("_sub", sub).withColumn(
-            "_lr", F.row_number().over(w_local)
-        )
-        pruned_out = flagged.filter(F.col("_lr") > F.col("budget")).drop(
-            "_sub", "_lr", "budget"
-        )
-        base = flagged.filter(F.col("_lr") <= F.col("budget")).drop(
-            "_sub", "_lr"
-        )
-
     win = Window.partitionBy("host").orderBy(*order)
     ranked = base.withColumn("_rank", F.row_number().over(win))
     selected = ranked.filter(F.col("_rank") <= F.col("budget")).drop("_rank", "budget")
     carryover = ranked.filter(F.col("_rank") > F.col("budget")).drop("_rank", "budget")
-    if pruned_out is not None:
-        carryover = carryover.unionByName(pruned_out)
     return selected, carryover
 
 

@@ -1,14 +1,10 @@
 """Similarity search over embedding columns (array<float>).
 
-* ``cosine_topk``    — brute-force cosine top-k, fully JVM-side
-  (``zip_with`` dot product + window rank). Correctness baseline; at 100 TB
-  this is the per-partition scan you only run on a filtered candidate set.
-* ``lsh_topk``       — the scale path: random-hyperplane (sign) LSH buckets;
-  candidates are pairs sharing a bucket in any of ``n_tables`` tables, so the
-  join is bucket-local instead of a full cross join. Recall < 1 by design;
-  the tests measure it against the brute-force baseline.
-* ``ivf_topk``       — IVF-style: k-means-lite centroids (sampled seeds,
-  one assignment pass), queries probe ``n_probe`` nearest cells.
+* ``cosine_topk``   — brute-force cosine top-k: the (small) query side is
+  broadcast as a numpy matrix and each corpus Arrow batch is scored with one
+  matmul, then ranked per query.
+* ``neardup_pairs`` — embedding-cosine near-duplicate pairs: an all-pairs
+  self-join with a JVM-side cosine, run on a pre-filtered candidate set.
 """
 
 from __future__ import annotations
@@ -61,14 +57,12 @@ def cosine_topk(
     import pandas as pd
 
     # the query side is deliberately driver-collected (small by contract);
-    # the guard stops a caller from collecting a 10M-row query set — route
-    # large query sets through lsh_topk / ivf_topk instead
+    # the guard stops a caller from collecting a 10M-row query set
     q_pd = queries.select(q_id, q_vec).limit(max_queries + 1).toPandas()
     if len(q_pd) > max_queries:
         raise ValueError(
             f"cosine_topk collects the query side to the driver; got more "
-            f"than max_queries={max_queries} rows — use lsh_topk or ivf_topk "
-            f"for large query sets"
+            f"than max_queries={max_queries} rows"
         )
     q_ids = q_pd[q_id].to_numpy()
     q_mat = np.vstack(q_pd[q_vec].to_list()).astype(np.float64)
@@ -101,140 +95,9 @@ def cosine_topk(
     )
 
 
-def _hyperplane(dim: int, table: int, bit: int) -> list:
-    """Deterministic pseudo-random unit-ish hyperplane from a hash counter."""
-    import hashlib
-    import struct
-
-    vals = []
-    for d in range(dim):
-        h = hashlib.sha256(f"{table}:{bit}:{d}".encode()).digest()[:8]
-        (u,) = struct.unpack(">q", h)
-        vals.append(u / float(2**63))
-    return vals
-
-
-def lsh_bucket(vec, planes: list):
-    """Sign-LSH bucket id for one table: bit b = sign(vec · plane_b)."""
-    bucket = F.lit(0).cast("bigint")
-    for b, plane in enumerate(planes):
-        proj = F.aggregate(
-            F.zip_with(
-                vec,
-                F.array(*[F.lit(v).cast("double") for v in plane]),
-                lambda x, y: x * y,
-            ),
-            F.lit(0.0).cast("double"),
-            lambda acc, v: acc + v,
-        )
-        bucket = bucket + F.when(proj >= 0, F.shiftleft(F.lit(1).cast("bigint"), b)).otherwise(
-            F.lit(0).cast("bigint")
-        )
-    return bucket
-
-
-def lsh_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    dim: int,
-    k: int = 10,
-    n_tables: int = 4,
-    n_bits: int = 8,
-    q_id: str = "q_id",
-    c_id: str = "vec_id",
-    q_vec: str = "q_vec",
-    c_vec: str = "embedding",
-) -> DataFrame:
-    """Bucketed ANN: exact cosine only within shared LSH buckets."""
-    tables = [
-        [_hyperplane(dim, t, b) for b in range(n_bits)] for t in range(n_tables)
-    ]
-
-    def bucketize(df: DataFrame, vec_col: str, keep: list) -> DataFrame:
-        out = df.select(
-            *keep,
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(t).alias("table"),
-                            lsh_bucket(F.col(vec_col), tables[t]).alias("bucket"),
-                        )
-                        for t in range(n_tables)
-                    ]
-                )
-            ).alias("tb"),
-        )
-        return out.select(*keep, F.col("tb.table").alias("table"), F.col("tb.bucket").alias("bucket"))
-
-    qb = bucketize(queries, q_vec, [q_id, q_vec])
-    cb = bucketize(corpus, c_vec, [c_id, c_vec])
-    cand = (
-        qb.join(cb, ["table", "bucket"])
-        .select(q_id, c_id, q_vec, c_vec)
-        .dropDuplicates([q_id, c_id])
-    )
-    scored = cand.select(
-        F.col(q_id), F.col(c_id), cosine(F.col(q_vec), F.col(c_vec)).alias("score")
-    )
-    win = Window.partitionBy(q_id).orderBy(F.desc("score"), F.col(c_id))
-    return scored.withColumn("rnk", F.row_number().over(win)).filter(F.col("rnk") <= k)
-
-
-def ivf_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 10,
-    n_cells: int = 16,
-    n_probe: int = 4,
-    q_id: str = "q_id",
-    c_id: str = "vec_id",
-    q_vec: str = "q_vec",
-    c_vec: str = "embedding",
-    seed: int = 42,
-) -> DataFrame:
-    """IVF-lite: centroids = deterministic corpus sample; one assignment pass
-    partitions the corpus into cells; each query probes its n_probe nearest
-    centroids and scans only those cells."""
-    centroids = (
-        corpus.select(F.col(c_id).alias("cent_src"), F.col(c_vec).alias("cent_vec"))
-        .orderBy(F.pmod(F.xxhash64(F.col("cent_src"), F.lit(seed)), F.lit(1_000_003)))
-        .limit(n_cells)
-        .withColumn("cell", F.monotonically_increasing_id())
-        .select("cell", "cent_vec")
-    )
-    cent_b = F.broadcast(centroids)
-
-    def nearest_cells(df: DataFrame, vec_col: str, keep: list, probes: int) -> DataFrame:
-        scored = df.crossJoin(cent_b).select(
-            *keep,
-            F.col("cell"),
-            cosine(F.col(vec_col), F.col("cent_vec")).alias("cscore"),
-        )
-        win = Window.partitionBy(*keep).orderBy(F.desc("cscore"), F.col("cell"))
-        return (
-            scored.withColumn("crnk", F.row_number().over(win))
-            .filter(F.col("crnk") <= probes)
-            .drop("cscore", "crnk")
-        )
-
-    corpus_cells = nearest_cells(corpus, c_vec, [c_id, c_vec], 1)
-    query_cells = nearest_cells(queries, q_vec, [q_id, q_vec], n_probe)
-    cand = query_cells.join(corpus_cells, "cell").select(q_id, c_id, q_vec, c_vec)
-    scored = cand.select(
-        F.col(q_id), F.col(c_id), cosine(F.col(q_vec), F.col(c_vec)).alias("score")
-    ).dropDuplicates([q_id, c_id])
-    win = Window.partitionBy(q_id).orderBy(F.desc("score"), F.col(c_id))
-    return scored.withColumn("rnk", F.row_number().over(win)).filter(F.col("rnk") <= k)
-
-
 def neardup_pairs(
     df: DataFrame,
     threshold: float = 0.9,
-    method: str = "lsh",
-    dim: int | None = None,
-    n_tables: int = 6,
-    n_bits: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
@@ -243,74 +106,16 @@ def neardup_pairs(
 
     The dense-vector flavor of the dedup family (``operators/dedup.py``:
     exact hash / MinHash+LSH / SimHash / n-gram Jaccard) — near-dup on an
-    embedding column instead of token sets.
-
-    * ``method="exact"`` — all-pairs self-join with a JVM-side cosine.
-      O(n^2): the correctness baseline, run on a pre-filtered candidate set
-      (one suspect partition, one bucket), never a 100 TB corpus.
-    * ``method="lsh"`` — the scale path: sign-LSH bucketing (the same
-      deterministic hyperplanes as ``lsh_topk``); a candidate pair is any
-      two ids sharing a bucket in ANY of ``n_tables`` tables, then exact
-      cosine verifies each candidate. The self-join is bucket-local —
-      equality join on (table, bucket) — so no cross product ever
-      materializes; the shuffle carries (id, vec) keyed by bucket. Recall
-      < 1 by design and measured against the exact baseline in
-      tests/test_similarity.py: for pairs at cosine >= 0.9, 6 tables x
-      8 bits collide with probability ~1 - (1 - (1 - acos(s)/pi)^8)^6
-      >= 0.99. Requires ``dim``.
-
-    score is the exact cosine (double) in both methods — the LSH stage only
-    selects candidates, never decides membership.
+    embedding column instead of token sets. An all-pairs self-join with a
+    JVM-side cosine: O(n^2), so run it on a pre-filtered candidate set (one
+    suspect partition, one bucket), never a whole corpus. score is the exact
+    cosine (double).
     """
     a = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"))
     b = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"))
-    if method == "exact":
-        cand = a.join(b, F.col("id_a") < F.col("id_b"))
-    elif method == "lsh":
-        if dim is None:
-            raise ValueError("method='lsh' requires dim")
-        tables = [
-            [_hyperplane(dim, t, bit) for bit in range(n_bits)]
-            for t in range(n_tables)
-        ]
-
-        def bucketize(side: DataFrame, idc: str, vecc: str) -> DataFrame:
-            return side.select(
-                idc,
-                vecc,
-                F.explode(
-                    F.array(
-                        *[
-                            F.struct(
-                                F.lit(t).alias("table"),
-                                lsh_bucket(F.col(vecc), tables[t]).alias(
-                                    "bucket"
-                                ),
-                            )
-                            for t in range(n_tables)
-                        ]
-                    )
-                ).alias("tb"),
-            ).select(
-                idc,
-                vecc,
-                F.col("tb.table").alias("table"),
-                F.col("tb.bucket").alias("bucket"),
-            )
-
-        cand = (
-            bucketize(a, "id_a", "_va")
-            .join(
-                bucketize(b, "id_b", "_vb"),
-                ["table", "bucket"],
-            )
-            .filter(F.col("id_a") < F.col("id_b"))
-            .dropDuplicates(["id_a", "id_b"])
-        )
-    else:
-        raise ValueError(f"unknown method {method!r}")
     return (
-        cand.select(
+        a.join(b, F.col("id_a") < F.col("id_b"))
+        .select(
             "id_a",
             "id_b",
             cosine(F.col("_va"), F.col("_vb")).alias("score"),

@@ -1688,9 +1688,7 @@ def q_embed_neardup(spark, sf_dir):
     does: each vector vec_id < 60 gets a shifted copy (x*1.1 + 0.05, id +
     1_000_000) whose cosine to its source is >= 0.93 while every cross pair
     stays <= 0.48 — a wide margin around threshold 0.8, so float-vs-double
-    drift between engines can't flip membership. The exact all-pairs method
-    is the oracle-checkable baseline; the LSH-bucketed scale path is
-    recall-tested against it in tests/test_similarity.py.
+    drift between engines can't flip membership.
 
     The score column is intentionally NOT emitted: Spark and DuckDB agree on
     which pairs clear the threshold (wide margin) but not bit-for-bit on the
@@ -1704,7 +1702,7 @@ def q_embed_neardup(spark, sf_dir):
         ),
     )
     both = emb.select("vec_id", "embedding").unionByName(near)
-    pairs = similarity.neardup_pairs(both, threshold=0.8, method="exact")
+    pairs = similarity.neardup_pairs(both, threshold=0.8)
     return pairs.select("id_a", "id_b")
 
 

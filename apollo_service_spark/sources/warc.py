@@ -259,40 +259,6 @@ def read_warc(spark, path: str):
     return warc_records(files.select(F.col("content").alias("segment")))
 
 
-def segments_from_pages(pages, n_segments: int = 8):
-    """Serialize a ``pages``-shaped frame (url, warc_ts, html, …) into WARC
-    segment blobs — the inverse of :func:`pages_from_warc`.  HTML rows
-    become ``text/html`` response records carrying the html bytes;
-    non-HTML rows (``html`` null — the corpus's fetched-but-never-expanded
-    document urls) become ``application/octet-stream`` records with an
-    empty payload, so the null/non-null distinction the engine's fetch
-    stage branches on survives the round trip.  Deterministic: segment
-    assignment is ``crc32(url) % n_segments`` and records sort by url
-    within a segment, so the same pages always produce the same bytes."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    def _pack(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        pdf = pdf.sort_values("url")
-        recs = []
-        for url, ts, html in zip(pdf["url"], pdf["warc_ts"], pdf["html"]):
-            if html is None:
-                recs.append((url, ts.to_pydatetime(), b"", "application/octet-stream"))
-            else:
-                recs.append((url, ts.to_pydatetime(), bytes(html), "text/html"))
-        blob = build_warc_segment(recs, f"segment-{int(pdf['seg'].iloc[0])}")
-        return pd.DataFrame({"segment": [blob]})
-
-    return (
-        pages.select(
-            "url", "warc_ts", "html",
-            (F.crc32(F.col("url")) % n_segments).alias("seg"),
-        )
-        .groupBy("seg")
-        .applyInPandas(_pack, schema="segment binary")
-    )
-
-
 def pages_from_warc(records):
     """WARC records → the engine's ``pages`` shape (url, warc_ts, html,
     text, lang): ``text/html`` payloads become the html column, anything
@@ -359,121 +325,4 @@ def cdx_index(segments):
             "urlkey string, url string, warc_ts timestamp, "
             "filename string, offset long, length long"
         ),
-    )
-
-
-def read_cdx_index(spark, path: str):
-    """Index on-disk segments: binaryFile → (filename, segment) → cdx_index."""
-    from pyspark.sql import functions as F
-
-    files = spark.read.format("binaryFile").load(path)
-    return cdx_index(
-        files.select(
-            F.col("path").alias("filename"), F.col("content").alias("segment")
-        )
-    )
-
-
-def build_wet_record(url: str, ts: datetime, text: str) -> bytes:
-    """One WET *conversion* record (the Common-Crawl extracted-text
-    artifact): same WARC/1.0 framing as :func:`build_warc_record` but
-    ``WARC-Type: conversion`` with a bare UTF-8 text body (no HTTP block —
-    WET bodies are the extracted text itself, per the published format)."""
-    payload = text.encode("utf-8")
-    date = _warc_date(ts)
-    rec_id = hashlib.sha256(f"wet\x00{url}\x00{date}".encode()).hexdigest()
-    header = (
-        b"WARC/1.0" + _CRLF
-        + b"WARC-Type: conversion" + _CRLF
-        + f"WARC-Record-ID: <urn:sha256:{rec_id}>".encode() + _CRLF
-        + f"WARC-Date: {date}".encode() + _CRLF
-        + f"WARC-Target-URI: {url}".encode() + _CRLF
-        + b"Content-Type: text/plain" + _CRLF
-        + f"Content-Length: {len(payload)}".encode() + _CRLF
-        + _CRLF
-    )
-    return header + payload + _CRLF + _CRLF
-
-
-def parse_wet_segment(blob: bytes) -> list:
-    """Scan a WET segment: one ``{url, warc_ts, text}`` per *conversion*
-    record (same framing scan as :func:`parse_warc_segment`; warcinfo and
-    any response records in a mixed blob are skipped)."""
-    records = []
-    pos = 0
-    n = len(blob)
-    while pos < n:
-        head_end = blob.find(_CRLF + _CRLF, pos)
-        if head_end < 0:
-            raise ValueError(f"unterminated WARC header block at offset {pos}")
-        fields = {}
-        lines = blob[pos:head_end].decode("utf-8").split("\r\n")
-        if not lines[0].startswith("WARC/"):
-            raise ValueError(f"missing WARC version line at offset {pos}")
-        for line in lines[1:]:
-            key, _, value = line.partition(":")
-            fields[key.strip().lower()] = value.strip()
-        length = int(fields["content-length"])
-        body_end = head_end + 4 + length
-        if body_end + 4 > n or blob[body_end:body_end + 4] != _CRLF + _CRLF:
-            raise ValueError(f"truncated/unterminated record at offset {pos}")
-        if fields.get("warc-type") == "conversion":
-            records.append(
-                {
-                    "url": fields["warc-target-uri"],
-                    "warc_ts": datetime.strptime(
-                        fields["warc-date"], _WARC_DATE_FMT
-                    ),
-                    "text": blob[head_end + 4:body_end].decode("utf-8"),
-                }
-            )
-        pos = body_end + 4
-    return records
-
-
-def wet_segments_from_pages(pages, n_segments: int = 8):
-    """pages → WET segments: the extraction kernel (``extract_text_udf`` —
-    the same byte-identity-tested Arrow UDF the crawl pipeline uses) runs
-    JVM-adjacent over the html column, then each segment task serializes
-    its extracted texts as conversion records.  Null-html rows (non-HTML
-    documents) produce no WET record, exactly as Common Crawl's WET files
-    carry only extracted pages."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from ..functions.udfs import extract_text_udf
-
-    def _pack(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        pdf = pdf.sort_values("url")
-        blob = b"".join(
-            [build_warcinfo(f"wet-segment-{int(pdf['seg'].iloc[0])}")]
-            + [
-                build_wet_record(u, t.to_pydatetime(), x)
-                for u, t, x in zip(pdf["url"], pdf["warc_ts"], pdf["text"])
-            ]
-        )
-        return pd.DataFrame({"segment": [blob]})
-
-    extracted = pages.filter(F.col("html").isNotNull()).select(
-        "url",
-        "warc_ts",
-        extract_text_udf(F.col("html")).alias("text"),
-        (F.crc32(F.col("url")) % n_segments).alias("seg"),
-    )
-    return extracted.groupBy("seg").applyInPandas(_pack, schema="segment binary")
-
-
-def wet_records(segments):
-    """Distributed WET parse: (segment binary) → (url, warc_ts, text)."""
-    import pandas as pd
-
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for blob in pdf["segment"]:
-                rows.extend(parse_wet_segment(bytes(blob)))
-            yield pd.DataFrame(rows, columns=["url", "warc_ts", "text"])
-
-    return segments.mapInPandas(
-        gen, schema="url string, warc_ts timestamp, text string"
     )

@@ -8,11 +8,15 @@ shuffle partitions, as ``session.build_session`` sets it up.
 
 Prints one JSON line:
 
-- ``scans``, ``exchanges``, ``broadcast_exchanges``, ``generate``,
-  ``arrow_eval_python`` (pandas UDFs) and ``flat_map_groups_in_arrow``
-  (``applyInArrow`` passes, such as the seen store's): nodes of the key's
+- ``scans``, ``exchanges``, ``broadcast_exchanges``, ``generate`` and
+  ``arrow_eval_python`` (pandas UDFs): nodes of the key's returned frame's
   formatted physical plan, counted by distinct ``(N)`` id, because the
   formatted plan prints a cached subtree once per reference;
+- ``flat_map_groups_in_arrow`` (``applyInArrow`` passes, such as the seen
+  store's): nodes counted the same way but over the physical plan of every
+  SQL execution of the warm run, summed, because those passes run while
+  ``crawl_frontier`` builds its frame and never appear in the returned
+  frame's plan;
 - ``jobs``, ``stages``, ``tasks`` and ``python_bytes`` (Arrow bytes sent to
   and returned from Python workers): what one warm run of the key cost,
   building its frame and writing it into a parquet sink, read from Spark's
@@ -44,18 +48,33 @@ NODES = {
     "broadcast_exchanges": r"BroadcastExchange",
     "generate": r"Generate",
     "arrow_eval_python": r"ArrowEvalPython",
-    "flat_map_groups_in_arrow": r"FlatMapGroupsInArrow",
 }
+
+
+def _distinct(plan: str, rx: str) -> int:
+    return len(set(re.findall(rf"^\((\d+)\) {rx}\b", plan, flags=re.MULTILINE)))
 
 
 def plan_counts(df) -> dict:
     plan = df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
-    return {
-        name: len(set(re.findall(rf"^\((\d+)\) {rx}\b", plan, flags=re.MULTILINE)))
-        for name, rx in NODES.items()
-    }
+    return {name: _distinct(plan, rx) for name, rx in NODES.items()}
+
+
+def executed_flat_map_groups(reader: StatusReader, label: str) -> int:
+    """FlatMapGroupsInArrow nodes summed over the formatted physical plans
+    of the SQL executions run under ``label`` (the SQL status store keeps
+    each execution's final plan, formatted, with the UI off)."""
+    reader.drain()
+    sql = reader.spark._jsparkSession.sharedState().statusStore()
+    n = 0
+    it = sql.executionsList().iterator()
+    while it.hasNext():
+        e = it.next()
+        if e.description() == label:
+            n += _distinct(e.physicalPlanDescription(), "FlatMapGroupsInArrow")
+    return n
 
 
 def main(argv: list) -> int:
@@ -86,8 +105,10 @@ def main(argv: list) -> int:
             wall = time.perf_counter() - t
             spark.sparkContext.setJobDescription(None)
         cores = spark.sparkContext.defaultParallelism
-        summary = StatusReader(spark).summary(label, wall, cores)
+        reader = StatusReader(spark)
+        summary = reader.summary(label, wall, cores)
         counts.update(
+            flat_map_groups_in_arrow=executed_flat_map_groups(reader, label),
             jobs=summary["spark.jobs"],
             stages=summary["spark.stages"],
             tasks=summary["spark.tasks"],

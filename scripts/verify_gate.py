@@ -18,6 +18,8 @@ import duckdb
 import __spark_entry__ as em
 from apollo_service_spark.session import build_session
 
+USAGE = "usage: python scripts/verify_gate.py [--json OUT.json] [query ...]"
+
 SF = "/root/testdata/sf0.01"
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -54,6 +56,9 @@ def main():
     json_out = None
     if "--json" in args:
         i = args.index("--json")
+        if i + 1 >= len(args):
+            print(f"--json needs a path\n{USAGE}", file=sys.stderr)
+            sys.exit(2)
         json_out = args[i + 1]
         args = args[:i] + args[i + 2:]
     only = set(args)

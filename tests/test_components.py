@@ -5,10 +5,7 @@ import random
 
 import pytest
 
-from apollo_service_spark.operators.components import (
-    connected_components,
-    dedup_clusters,
-)
+from apollo_service_spark.operators.components import connected_components
 
 
 def _pairs_df(spark, edges):
@@ -64,11 +61,6 @@ def test_components_disjoint_cliques(spark):
     cliq = lambda ids: [(a, b) for a in ids for b in ids if a < b]
     edges = cliq([1, 2, 3, 4]) + cliq([10, 11, 12])
     comp = connected_components(_pairs_df(spark, edges))
-    clusters = {
-        (r["component"], r["n_members"], r["keep_id"])
-        for r in dedup_clusters(_pairs_df(spark, edges)).collect()
-    }
-    assert clusters == {(1, 4, 1), (10, 3, 10)}
     got = {r["id"]: r["component"] for r in comp.collect()}
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10}
 

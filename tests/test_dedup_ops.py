@@ -1,4 +1,4 @@
-"""Dedup-operator semantics: LSH recall/caps, SimHash Hamming banding."""
+"""Dedup-operator semantics: LSH recall and caps, SimHash groups, winnowing."""
 
 import time
 
@@ -54,50 +54,6 @@ def test_minhash_lsh_bucket_cap_bounds_degenerate_groups(spark):
     # the same corpus IS fully grouped by the O(n) representation
     groups = dedup.duplicate_groups(_docs(spark, rows)).collect()
     assert len(groups) == 1 and groups[0]["n_dups"] == n
-
-
-def _brute_hamming_pairs(spark, df, hamming_max):
-    sh = dedup.with_simhash(df.select("doc_id", "text")).select(
-        F.col("doc_id").alias("id"), "simhash"
-    )
-    a, b = sh.alias("a"), sh.alias("b")
-    return {
-        (r["id_a"], r["id_b"])
-        for r in a.join(b, F.col("a.id") < F.col("b.id"))
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.bit_count(
-                F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-            ).alias("h"),
-        )
-        .filter(F.col("h") <= hamming_max)
-        .collect()
-    }
-
-
-@pytest.mark.parametrize("hamming_max", [2, 3])
-def test_simhash_near_pairs_matches_bruteforce(spark, hamming_max):
-    """Pigeonhole banding must find EXACTLY the pairs the O(n²) cross-join
-    finds — banding affects cost, never the result set."""
-    rows = []
-    for i in range(15):
-        words = [f"tok{i}w{j}" for j in range(40)]
-        rows.append((i, " ".join(words)))
-        # near-dup: flip two tokens -> small Hamming distance
-        words[3], words[7] = "changed", "alsochanged"
-        rows.append((i + 1000, " ".join(words)))
-    df = _docs(spark, rows)
-    got = {
-        (r["id_a"], r["id_b"])
-        for r in dedup.simhash_near_pairs(df, hamming_max=hamming_max).collect()
-    }
-    want = _brute_hamming_pairs(spark, df, hamming_max)
-    assert got == want
-    # distance-0 pairs (exact copies) always survive any banding
-    dup = _docs(spark, [(1, "a b c d e"), (2, "a b c d e")])
-    got_dup = dedup.simhash_near_pairs(dup, hamming_max=hamming_max).collect()
-    assert {(r["id_a"], r["id_b"]) for r in got_dup} == {(1, 2)}
 
 
 def test_cosine_topk_guards_large_query_sets(spark):
@@ -197,15 +153,16 @@ def test_cap_drop_counts_observed(spark):
     assert out == 0
     assert obs2.get["rows_dropped"] == 300 * n_shingles
 
-    # simhash band cap: 50 identical docs → every (band, value) bucket holds
-    # 50 rows; cap 10 drops all 50×n_bands banded rows
-    sdf = _docs(spark, [(i, "identical simhash body") for i in range(50)])
+    # minhash band cap: 50 identical docs → every (band, bucket) bucket holds
+    # 50 rows; cap 10 drops all 50×bands banded rows
+    mdf = _docs(spark, [(i, "identical minhash body") for i in range(50)])
     obs3 = Observation()
-    out = dedup.simhash_near_pairs(
-        sdf, hamming_max=3, max_bucket_size=10, drop_observation=obs3
+    out = dedup.minhash_lsh_pairs(
+        mdf, n_hashes=16, bands=4, shingle_n=2, jaccard_threshold=0.5,
+        max_bucket_size=10, drop_observation=obs3,
     ).count()
     assert out == 0
-    assert obs3.get["rows_dropped"] == 50 * 4  # hamming_max+1 bands
+    assert obs3.get["rows_dropped"] == 50 * 4  # 4 bands
 
     # no-drop case: observation reports 0 (and results match uncapped)
     small = _docs(spark, [(1, "aaa bbb ccc ddd"), (2, "aaa bbb ccc eee")])

@@ -218,23 +218,6 @@ def test_superstep_exception_releases_caches(
     assert cache_manager.isEmpty()
 
 
-def test_politeness_prune_crawl_identical(
-    spark, small_corpus_spark, tmp_path
-):
-    """CrawlConfig.politeness_prune (two-phase batch selection for mega-host
-    frontiers) must leave the whole crawl byte-identical: same log, same
-    ranks, same seen set as the single-window default."""
-    base_cfg = CrawlConfig()
-    _, store_base = _run_engine(
-        spark, small_corpus_spark, str(tmp_path / "base"), base_cfg
-    )
-    pruned_cfg = CrawlConfig(politeness_prune=4)
-    _, store_pruned = _run_engine(
-        spark, small_corpus_spark, str(tmp_path / "pruned"), pruned_cfg
-    )
-    assert _log_tuples(spark, store_pruned) == _log_tuples(spark, store_base)
-
-
 @pytest.fixture(scope="module")
 def repeated_crawls(spark, small_corpus_spark, tmp_path_factory):
     """Two identical 5-superstep crawls, back to back, with the codegen

@@ -1,14 +1,11 @@
-"""Streaming extraction pipeline + multimodal plumbing tests."""
+"""Multimodal plumbing tests: media header decode, features, decoders."""
 
 import struct
-
-from pyspark.sql import functions as F
 
 from apollo_service_spark.operators.multimodal import (
     MEDIA_SCHEMA,
     decode_media_meta,
     extract_features,
-    frame_sample_plan,
 )
 
 
@@ -76,81 +73,6 @@ def test_extract_features_deterministic(spark):
     assert all(len(v) == 16 for v in a.values())
     norm = sum(x * x for x in a[1]) ** 0.5
     assert abs(norm - 1.0) < 1e-3
-
-
-def test_frame_sample_plan(spark):
-    plan = frame_sample_plan(_media_df(spark), every_n_seconds=1).collect()
-    assert all(r["media_id"] == 4 for r in plan)
-    assert len(plan) >= 2  # 1 MB at nominal bitrate ≈ 4s → several frames
-
-
-def test_streaming_extraction_incremental(spark, small_corpus_spark, tmp_path):
-    """AvailableNow drain processes existing files; a second run with new
-    files processes ONLY the new ones (file-source exactly-once)."""
-    from apollo_service_spark.streaming.pipeline import run_extraction_once
-
-    pages_dir = str(tmp_path / "pages")
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    pages = small_corpus_spark["pages"]
-    first = pages.filter(F.col("url").contains("host0"))
-    second = pages.filter(F.col("url").contains("host1"))
-
-    first.write.mode("append").parquet(pages_dir)
-    run_extraction_once(spark, pages_dir, out_dir, ckpt)
-    n1 = spark.read.parquet(out_dir).count()
-    assert n1 == first.filter(F.col("html").isNotNull()).count()
-
-    second.write.mode("append").parquet(pages_dir)
-    run_extraction_once(spark, pages_dir, out_dir, ckpt)
-    n2 = spark.read.parquet(out_dir).count()
-    assert n2 == n1 + second.filter(F.col("html").isNotNull()).count()
-
-    out = spark.read.parquet(out_dir)
-    assert set(out.columns) == {
-        "url", "host", "category", "year", "warc_ts", "extracted",
-        "doc_id", "doc_name",
-    }
-    # S8 metadata invariant: doc_id is the sha256 hex of the extracted text
-    import hashlib
-
-    for r in out.select("extracted", "doc_id").collect():
-        assert r["doc_id"] == hashlib.sha256(
-            r["extracted"].encode("utf-8")
-        ).hexdigest()
-
-
-def test_windowed_fetch_metrics_batch_semantics(spark, small_corpus_spark):
-    """The watermarked windowed agg evaluated on a static frame (batch parity)."""
-    from apollo_service_spark.streaming.pipeline import windowed_fetch_metrics
-
-    pages = small_corpus_spark["pages"]
-    got = windowed_fetch_metrics(pages).agg(F.sum("pages_fetched")).collect()[0][0]
-    assert got == pages.count()
-
-
-def test_extraction_stream_drops_redirect_404_pages(spark, small_corpus_spark):
-    """A pages frame carrying final_url loses its redirect-404 rows before
-    extraction (scraper.py:193-198); pages without redirect info survive."""
-    from apollo_service_spark.streaming.pipeline import extraction_stream
-
-    pages = small_corpus_spark["pages"].filter(F.col("html").isNotNull())
-    n_all = pages.count()
-    # redirect every host1 page to a not-found target; leave the rest alone
-    paged = pages.withColumn(
-        "final_url",
-        F.when(
-            F.col("url").contains("host1"),
-            F.concat(F.lit("https://host1.example.com/not-found")),
-        ).otherwise(F.col("url")),
-    )
-    n_redirected = paged.filter(F.col("url").contains("host1")).count()
-    out = extraction_stream(paged)
-    assert out.count() == n_all - n_redirected
-    assert out.filter(F.col("url").contains("host1")).count() == 0
-    # without a final_url column the stream is unchanged (backward compat)
-    assert extraction_stream(pages).count() == n_all
 
 
 def test_decoder_roundtrip_fuzz():

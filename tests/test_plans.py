@@ -118,8 +118,7 @@ def test_priority_window_partial_topk(spark, documents):
     """A priority-ordered budget selection plans with WindowGroupLimit —
     Spark's partial per-partition top-k that runs BEFORE the window's
     exchange, so each map task ships at most budget rows per host instead
-    of the host's whole frontier slice (the planner-native analog of the
-    opt-in prune_partitions pre-pass). Guarded because the rank-limit
+    of the host's whole frontier slice. Guarded because the rank-limit
     pushdown only fires when the row_number filter is recognizably
     budget-shaped; a refactor that breaks the shape silently reverts to
     shuffling every candidate row."""

@@ -253,21 +253,3 @@ def test_select_batch_priority_order(spark):
     sel, carry = select_batch(frontier, None, default_budget=2, order=order)
     assert sorted(r["url"] for r in sel.collect()) == ["https://h/b", "https://h/d"]
     assert sorted(r["url"] for r in carry.collect()) == ["https://h/a", "https://h/c"]
-
-
-def test_select_batch_priority_pruned_path_identical(spark):
-    rng = random.Random(13)
-    rows = [
-        (f"https://h{i % 3}/p{i}", f"h{i % 3}", 0, rng.randrange(50))
-        for i in range(120)
-    ]
-    frontier = spark.createDataFrame(rows, "url string, host string, depth int, score int")
-    order = [F.col("score").desc(), F.col("url").asc()]
-    sel_plain, _ = select_batch(frontier, None, default_budget=4, order=order)
-    sel_pruned, carry_pruned = select_batch(
-        frontier, None, default_budget=4, order=order, prune_partitions=4
-    )
-    key = lambda r: (r["host"], r["url"])  # noqa: E731
-    assert sorted(map(key, sel_plain.collect())) == sorted(map(key, sel_pruned.collect()))
-    # nothing lost: selected + carryover partition the frontier
-    assert sel_pruned.count() + carry_pruned.count() == len(rows)

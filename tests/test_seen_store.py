@@ -197,11 +197,9 @@ def test_mega_host_spreads_across_pids(spark, tmp_path):
     assert store.filter_new(_urls_df(spark, fresh)).count() == 500
 
 
-def test_politeness_prune_selects_identical_batch(spark):
-    """Two-phase select_batch (prune_partitions) must select EXACTLY the
-    single-window batch — the local top-budget pre-prune is a superset of
-    the global per-host top-budget — and route every pruned row to
-    carryover."""
+def test_select_batch_honors_per_host_budgets(spark):
+    """A politeness-table budget overrides the default for its host, and
+    selected + carryover partition the frontier."""
     from apollo_service_spark.operators import politeness as pol
 
     rows = [
@@ -212,21 +210,11 @@ def test_politeness_prune_selects_identical_batch(spark):
     budgets = spark.createDataFrame(
         [("mega.com", 7)], "host string, budget int"
     )
-
-    def batch(prune):
-        sel, carry = pol.select_batch(
-            frontier, budgets, default_budget=5, prune_partitions=prune
-        )
-        return (
-            {(r["url"], r["host"], r["depth"]) for r in sel.collect()},
-            {(r["url"], r["host"], r["depth"]) for r in carry.collect()},
-        )
-
-    sel_base, carry_base = batch(None)
-    sel_pruned, carry_pruned = batch(16)
-    assert sel_pruned == sel_base
-    assert carry_pruned == carry_base
-    assert len(sel_base) == 7 + 10 * 5  # budgets honored
+    sel, carry = pol.select_batch(frontier, budgets, default_budget=5)
+    sel = {(r["url"], r["host"], r["depth"]) for r in sel.collect()}
+    carry = {(r["url"], r["host"], r["depth"]) for r in carry.collect()}
+    assert len(sel) == 7 + 10 * 5
+    assert not sel & carry and sel | carry == set(rows)
 
 
 def test_segment_cache_never_stale_across_interleaved_supersteps(spark, tmp_path):

@@ -1,4 +1,4 @@
-"""ANN variants: exactness of brute force, recall of LSH/IVF vs brute force."""
+"""Embedding similarity: brute-force cosine top-k and near-dup pairs."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -12,22 +12,6 @@ def emb(spark):
     return spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
 
 
-@pytest.fixture(scope="module")
-def split(emb):
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    corpus = emb.filter(F.col("vec_id") >= 10)
-    return queries, corpus
-
-
-def _topk_sets(df):
-    out = {}
-    for r in df.collect():
-        out.setdefault(r["q_id"], set()).add(r["vec_id"])
-    return out
-
-
 def test_bruteforce_self_similarity(spark, emb):
     """A vector's nearest neighbor in a corpus containing itself is itself."""
     queries = emb.filter(F.col("vec_id") < 5).select(
@@ -36,53 +20,6 @@ def test_bruteforce_self_similarity(spark, emb):
     top1 = similarity.cosine_topk(queries, emb, k=1)
     rows = {r["q_id"]: r["vec_id"] for r in top1.collect()}
     assert rows == {i: i for i in range(5)}
-
-
-def test_lsh_recall_vs_bruteforce(spark, split):
-    queries, corpus = split
-    dim = len(corpus.select("embedding").first()[0])
-    exact = _topk_sets(similarity.cosine_topk(queries, corpus, k=10))
-    # random embeddings are near-orthogonal (top-neighbor cosine ~0.2), the
-    # hardest case for sign-LSH: recall needs many short tables. 16×4-bit
-    # gives P(collide in ≥1 table) ≈ 0.8 for θ≈78° neighbors.
-    approx = _topk_sets(
-        similarity.lsh_topk(queries, corpus, dim=dim, k=10, n_tables=16, n_bits=4)
-    )
-    recalls = [
-        len(exact[q] & approx.get(q, set())) / len(exact[q]) for q in exact
-    ]
-    mean_recall = sum(recalls) / len(recalls)
-    assert mean_recall >= 0.5, f"LSH mean recall {mean_recall}"
-
-
-def test_ivf_recall_vs_bruteforce(spark, split):
-    queries, corpus = split
-    exact = _topk_sets(similarity.cosine_topk(queries, corpus, k=10))
-    approx = _topk_sets(
-        similarity.ivf_topk(queries, corpus, k=10, n_cells=8, n_probe=4)
-    )
-    recalls = [
-        len(exact[q] & approx.get(q, set())) / len(exact[q]) for q in exact
-    ]
-    mean_recall = sum(recalls) / len(recalls)
-    assert mean_recall >= 0.5, f"IVF mean recall {mean_recall}"
-
-
-def test_lsh_candidates_subset_scored_correctly(spark, split):
-    """Scores LSH reports must equal brute-force scores for the same pair."""
-    queries, corpus = split
-    dim = len(corpus.select("embedding").first()[0])
-    exact = similarity.cosine_topk(queries, corpus, k=50).select(
-        "q_id", "vec_id", F.round("score", 6).alias("score")
-    )
-    approx = similarity.lsh_topk(
-        queries, corpus, dim=dim, k=10, n_tables=4, n_bits=6
-    ).select("q_id", "vec_id", F.round("score", 6).alias("ascore"))
-    joined = approx.join(exact, ["q_id", "vec_id"])
-    mismatched = joined.filter(
-        F.abs(F.col("score") - F.col("ascore")) > 1e-5
-    ).count()
-    assert mismatched == 0
 
 
 def _planted_neardup_df(emb):
@@ -100,32 +37,8 @@ def _planted_neardup_df(emb):
 
 def test_neardup_exact_finds_planted_pairs(spark, emb):
     both = _planted_neardup_df(emb)
-    pairs = similarity.neardup_pairs(both, threshold=0.8, method="exact")
+    pairs = similarity.neardup_pairs(both, threshold=0.8)
     got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
     assert got == {(i, i + 1000) for i in range(40)}
     # score is the exact cosine: all planted pairs far from the threshold
     assert all(r["score"] > 0.9 for r in pairs.collect())
-
-
-def test_neardup_lsh_recall_vs_exact(spark, emb):
-    """The bucketed scale path must recover nearly every exact pair, and
-    every pair it emits must be a true pair (cosine verify is exact)."""
-    both = _planted_neardup_df(emb)
-    exact = {
-        (r["id_a"], r["id_b"])
-        for r in similarity.neardup_pairs(
-            both, threshold=0.8, method="exact"
-        ).collect()
-    }
-    # planted pairs sit at cosine ~0.93 → per-bit collision p = 1 -
-    # acos(0.93)/pi = 0.88; 6 bits x 8 tables gives expected pair recall
-    # 1 - (1 - 0.88^6)^8 ~ 0.99 (8 bits x 6 tables measured only 0.85)
-    lsh = {
-        (r["id_a"], r["id_b"])
-        for r in similarity.neardup_pairs(
-            both, threshold=0.8, method="lsh", dim=64, n_tables=8, n_bits=6
-        ).collect()
-    }
-    assert lsh <= exact  # no false pairs: candidates are cosine-verified
-    recall = len(lsh) / len(exact)
-    assert recall >= 0.9, f"LSH pair recall {recall} below 0.9"

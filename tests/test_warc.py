@@ -104,19 +104,26 @@ def test_engine_crawls_warc_backed_pages(spark, tmp_path):
     )
     from apollo_service_spark.sources.corpus import corpus_to_spark, gen_corpus
     from apollo_service_spark.sources.storage import SnapshotStore
-    from apollo_service_spark.sources.warc import (
-        pages_from_warc,
-        segments_from_pages,
-    )
+    from apollo_service_spark.sources.warc import pages_from_warc
 
     corpus = corpus_to_spark(spark, gen_corpus(n_hosts=3, n_pages=60, seed=7))
     warc_dir = tmp_path / "segments"
     os.makedirs(warc_dir)
-    blobs = segments_from_pages(corpus["pages"], n_segments=4).collect()
-    assert len(blobs) == 4
-    for i, row in enumerate(blobs):
+    # html rows become text/html records; null-html rows (the corpus's
+    # never-expanded documents) become empty application/octet-stream
+    # records, so the null/non-null split the fetch stage branches on
+    # survives the round trip
+    recs = [
+        (r["url"], r["warc_ts"], b"", "application/octet-stream")
+        if r["html"] is None
+        else (r["url"], r["warc_ts"], bytes(r["html"]), "text/html")
+        for r in corpus["pages"].select("url", "warc_ts", "html")
+        .orderBy("url")
+        .collect()
+    ]
+    for i in range(4):
         with open(warc_dir / f"part-{i}.warc", "wb") as fh:
-            fh.write(bytes(row["segment"]))
+            fh.write(build_warc_segment(recs[i::4], f"segment-{i}"))
 
     pages_warc = pages_from_warc(read_warc(spark, str(warc_dir)))
     # the round trip preserves the null/non-null html split exactly
@@ -152,7 +159,7 @@ def test_cdx_index_random_access(spark, tmp_path):
     urlkey column is the SURT transform, so the sorted index clusters
     each domain's pages adjacently."""
     from apollo_service_spark.functions.urlkit import surt_key_py
-    from apollo_service_spark.sources.warc import read_cdx_index
+    from apollo_service_spark.sources.warc import cdx_index
 
     blobs = {}
     for s in range(2):
@@ -166,7 +173,10 @@ def test_cdx_index_random_access(spark, tmp_path):
             fh.write(blob)
         blobs[f"part-{s}.warc"] = blob
 
-    index = read_cdx_index(spark, str(tmp_path)).collect()
+    files = spark.read.format("binaryFile").load(str(tmp_path))
+    index = cdx_index(
+        files.selectExpr("path AS filename", "content AS segment")
+    ).collect()
     assert len(index) == 10
     full = {
         (name, r["url"]): r["payload"]
@@ -185,34 +195,6 @@ def test_cdx_index_random_access(spark, tmp_path):
     keys = sorted(r["urlkey"] for r in index)
     hosts_in_order = [k.split(")")[0] for k in keys]
     assert hosts_in_order == sorted(hosts_in_order)
-
-
-def test_wet_roundtrip_byte_identical_extraction(spark, tmp_path):
-    """WET (the Common-Crawl extracted-text artifact): pages → extraction
-    kernel → conversion records → parse must give EXACTLY the text the
-    in-repo extractor produces per url (the BASELINE byte-identity
-    invariant, carried through serialization).  Null-html document rows
-    produce no WET record, matching the published format."""
-    from apollo_service_spark.functions.html import extract_text_only
-    from apollo_service_spark.sources.corpus import corpus_to_spark, gen_corpus
-    from apollo_service_spark.sources.warc import (
-        wet_records,
-        wet_segments_from_pages,
-    )
-
-    corpus = gen_corpus(n_hosts=3, n_pages=40, seed=5)
-    sdf = corpus_to_spark(spark, corpus)
-    segs = wet_segments_from_pages(sdf["pages"], n_segments=3)
-    got = {
-        r["url"]: r["text"] for r in wet_records(segs).collect()
-    }
-    pages_pd = corpus["pages"]
-    html_rows = pages_pd[pages_pd["html"].notna()]
-    assert len(got) == len(html_rows)
-    for _, row in html_rows.iterrows():
-        assert got[row["url"]] == extract_text_only(row["html"]), row["url"]
-    # non-HTML rows produced no record
-    assert set(got) == set(html_rows["url"])
 
 
 def test_gzip_segment_roundtrip_and_compressed_cdx_offsets():
