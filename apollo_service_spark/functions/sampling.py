@@ -19,7 +19,7 @@ deterministic in both engines.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 DEFAULT_BUCKETS = 10_000
@@ -34,7 +34,8 @@ def hash_bucket(key, n_buckets: int = DEFAULT_BUCKETS, salt: str = "") -> Column
     NULL keys hash like any other value (via a ``<NULL>`` sentinel) instead
     of propagating NULL through the comparison chain — otherwise every
     NULL-keyed row would silently fall into a CASE's ``otherwise`` branch
-    (the last split label) while ``sample_fraction`` dropped the same rows.
+    (the last split label) while a ``hash_bucket(...) < cutoff`` filter
+    dropped the same rows.
     A real key whose string form is exactly ``<NULL>`` collides with the
     sentinel; accepted and documented."""
     col = key if isinstance(key, Column) else F.col(key)
@@ -65,8 +66,8 @@ def split_label(
         # it and the weight would be silently ignored (ADVICE r4)
         raise ValueError(
             "split_label with a single label assigns all rows to it "
-            f"(weight {total} would be ignored); use sample_fraction for a "
-            "fractional subset"
+            f"(weight {total} would be ignored); filter on hash_bucket for "
+            "a fractional subset"
         )
     bucket = hash_bucket(key, n_buckets, salt)
     expr = None
@@ -79,15 +80,3 @@ def split_label(
     last = labels[-1][0]
     return F.lit(last) if expr is None else expr.otherwise(last)
 
-
-def sample_fraction(
-    df: DataFrame,
-    key,
-    fraction: float,
-    n_buckets: int = DEFAULT_BUCKETS,
-    salt: str = "",
-) -> DataFrame:
-    """Keep a deterministic ~``fraction`` of rows by key hash.  Unlike
-    ``DataFrame.sample`` the result is identical across runs, partitionings
-    and cluster sizes, and consistent across tables sharing the key."""
-    return df.filter(hash_bucket(key, n_buckets, salt) < int(round(fraction * n_buckets)))

@@ -214,8 +214,7 @@ def surt_key(url: Column) -> Column:
 
 def surt_key_py(url: str) -> str:
     """Python twin of :func:`surt_key` (same urlparse-permissive parse the
-    other _py twins use) — the CDX indexer's per-record key function and
-    the fuzz oracle for the Catalyst expression."""
+    other _py twins use) — the fuzz oracle for the Catalyst expression."""
     from urllib.parse import urlparse
 
     p = urlparse(url)

@@ -62,49 +62,50 @@ def connected_components(
         .distinct()
         .persist()
     )
-    labels = (
-        edges.select(F.col("u").alias("id"))
-        .distinct()
-        .withColumn("component", F.col("id"))
-        .localCheckpoint()
-    )
     import gc
 
-    for _ in range(max_iterations):
-        # neighbor labels: for node u, the labels of all its neighbors v
-        neighbor_min = (
-            edges.join(labels.withColumnRenamed("id", "v"), "v")
-            .groupBy(F.col("u").alias("id"))
-            .agg(F.min("component").alias("nbr_min"))
+    try:
+        labels = (
+            edges.select(F.col("u").alias("id"))
+            .distinct()
+            .withColumn("component", F.col("id"))
+            .localCheckpoint()
         )
-        new_labels = (
-            labels.join(neighbor_min, "id", "left")
-            .select(
-                "id",
-                F.least("component", F.coalesce("nbr_min", "component")).alias(
-                    "component"
-                ),
-                (
-                    F.coalesce("nbr_min", "component") < F.col("component")
-                ).alias("_changed"),
+        for _ in range(max_iterations):
+            # neighbor labels: for node u, the labels of all its neighbors v
+            neighbor_min = (
+                edges.join(labels.withColumnRenamed("id", "v"), "v")
+                .groupBy(F.col("u").alias("id"))
+                .agg(F.min("component").alias("nbr_min"))
             )
+            new_labels = (
+                labels.join(neighbor_min, "id", "left")
+                .select(
+                    "id",
+                    F.least("component", F.coalesce("nbr_min", "component")).alias(
+                        "component"
+                    ),
+                    (
+                        F.coalesce("nbr_min", "component") < F.col("component")
+                    ).alias("_changed"),
+                )
+            )
+            # one action: truncate lineage + count changed labels (eager
+            # checkpoint materializes everything, so the limit(1) probe is free)
+            new_labels = new_labels.localCheckpoint()
+            changed = new_labels.filter("_changed").limit(1).count()
+            labels = new_labels.drop("_changed")
+            # a checkpointed RDD cannot be unpersisted by handle; dropping the
+            # Python reference promptly (rebind + collect) lets the JVM
+            # ContextCleaner reclaim the PREVIOUS round's copy within seconds,
+            # keeping live storage at ~2 label frames instead of one per round
+            del neighbor_min, new_labels
+            gc.collect()
+            if changed == 0:
+                return labels
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iterations} rounds "
+            "(graph diameter exceeds the cap); raise max_iterations"
         )
-        # one action: truncate lineage + count changed labels (eager
-        # checkpoint materializes everything, so the limit(1) probe is free)
-        new_labels = new_labels.localCheckpoint()
-        changed = new_labels.filter("_changed").limit(1).count()
-        labels = new_labels.drop("_changed")
-        # a checkpointed RDD cannot be unpersisted by handle; dropping the
-        # Python reference promptly (rebind + collect) lets the JVM
-        # ContextCleaner reclaim the PREVIOUS round's copy within seconds,
-        # keeping live storage at ~2 label frames instead of one per round
-        del neighbor_min, new_labels
-        gc.collect()
-        if changed == 0:
-            edges.unpersist()
-            return labels
-    edges.unpersist()
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iterations} rounds "
-        "(graph diameter exceeds the cap); raise max_iterations"
-    )
+    finally:
+        edges.unpersist()

@@ -3,7 +3,8 @@
 Five tiers, all shuffle-conscious:
 
 * **exact** — fingerprint (xxhash64 of normalized text) groupBy; one shuffle
-  on a 64-bit key, keep min doc_id per group.
+  on a 64-bit key, the doc ids of every fingerprint shared by more than one
+  doc.
 * **MinHash + LSH** — shingle → k minhashes (JVM-side: xxhash64 per
   permutation-salt, `F.array_min`) → band buckets → self-join *within
   buckets only* (the LSH trick: candidate pairs ∝ collisions, not n²) →
@@ -87,15 +88,6 @@ def _capped_pairs(
 # --------------------------------------------------------------------------
 # exact dedup
 # --------------------------------------------------------------------------
-
-
-def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Keep the lowest id per normalized-text fingerprint."""
-    fp = docs.select(
-        F.col(id_col), textstats.fingerprint(F.col(text_col)).alias("fp")
-    )
-    keep = fp.groupBy("fp").agg(F.min(id_col).alias(id_col))
-    return docs.join(keep, id_col, "left_semi")
 
 
 def duplicate_groups(
@@ -549,7 +541,7 @@ def winnow_fingerprints(
     64-bit key, the same one-shuffle posting shape as
     :func:`ngram_jaccard_pairs`.
 
-    The whole-document xxhash64 in :func:`exact_dedup` answers "byte-equal
+    The whole-document xxhash64 in :func:`duplicate_groups` answers "byte-equal
     after normalization?"; winnowing answers "which documents share RUNS of
     text?" — the containment/boilerplate case exact dedup cannot see.
 

@@ -54,41 +54,44 @@ def pagerank(
             .distinct()
         )
     nodes = nodes.select("id").persist()
-    n = nodes.count()  # one job up front; the scalar parameterizes the plan
-    if n == 0:
-        nodes.unpersist()
-        raise ValueError("pagerank over an empty graph (no nodes)")
+    edges_deg = None
+    try:
+        n = nodes.count()  # one job up front; the scalar parameterizes the plan
+        if n == 0:
+            raise ValueError("pagerank over an empty graph (no nodes)")
 
-    deg = edges.groupBy(src).agg(F.count(F.lit(1)).alias("out_deg"))
-    edges_deg = edges.join(deg, src).select(
-        F.col(src).alias("src"), F.col(dst).alias("dst"), "out_deg"
-    )
-    if n_partitions:
-        edges_deg = edges_deg.repartition(n_partitions, "src")
-    edges_deg = edges_deg.persist()
-    edges_deg.count()
-
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n)).localCheckpoint()
-    teleport = (1.0 - damping) / n
-    for _ in range(iterations):
-        contribs = (
-            edges_deg.join(ranks.withColumnRenamed("id", "src"), "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum(F.col("rank") / F.col("out_deg")).alias("mass"))
+        deg = edges.groupBy(src).agg(F.count(F.lit(1)).alias("out_deg"))
+        edges_deg = edges.join(deg, src).select(
+            F.col(src).alias("src"), F.col(dst).alias("dst"), "out_deg"
         )
-        new_ranks = (
-            nodes.join(contribs, "id", "left")
-            .select(
-                "id",
-                (
-                    F.lit(teleport)
-                    + F.lit(damping) * F.coalesce(F.col("mass"), F.lit(0.0))
-                ).alias("rank"),
+        if n_partitions:
+            edges_deg = edges_deg.repartition(n_partitions, "src")
+        edges_deg = edges_deg.persist()
+        edges_deg.count()
+
+        ranks = nodes.withColumn("rank", F.lit(1.0 / n)).localCheckpoint()
+        teleport = (1.0 - damping) / n
+        for _ in range(iterations):
+            contribs = (
+                edges_deg.join(ranks.withColumnRenamed("id", "src"), "src")
+                .groupBy(F.col("dst").alias("id"))
+                .agg(F.sum(F.col("rank") / F.col("out_deg")).alias("mass"))
             )
-            .localCheckpoint()
-        )
-        ranks = new_ranks
-        gc.collect()  # drop the previous round's checkpoint reference
-    edges_deg.unpersist()
-    nodes.unpersist()
-    return ranks
+            new_ranks = (
+                nodes.join(contribs, "id", "left")
+                .select(
+                    "id",
+                    (
+                        F.lit(teleport)
+                        + F.lit(damping) * F.coalesce(F.col("mass"), F.lit(0.0))
+                    ).alias("rank"),
+                )
+                .localCheckpoint()
+            )
+            ranks = new_ranks
+            gc.collect()  # drop the previous round's checkpoint reference
+        return ranks
+    finally:
+        if edges_deg is not None:
+            edges_deg.unpersist()
+        nodes.unpersist()

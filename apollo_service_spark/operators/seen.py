@@ -10,7 +10,7 @@ owns a bitmap of m/P bits stored as one blob next to the seen table. Per
 iteration:
 
 * **update**: the iteration's seen delta is grouped by partition id and each
-  group's ``applyInPandas`` task OR-merges its delta bits into its own blob
+  group's ``applyInArrow`` task OR-merges its delta bits into its own blob
   (exclusive writer per pid, atomic ``os.replace``) — cost proportional to
   the DELTA, not the accumulated set;
 * **filter**: candidates are grouped by the same pid; each task loads only
@@ -25,7 +25,9 @@ iteration:
   only exchange in the dedup path is the one groupBy-pid shuffle of the
   (small) candidate delta. Each task reads only its own pid's files
   (accumulated/P bytes), which is the same IO a bucketed-join scan would do,
-  minus the join machinery.
+  minus the join machinery. Both reads go through one worker-local LRU
+  (``_FileCache``: ``_SEGMENTS`` for url-file segments, ``_BLOOMS`` for
+  bitmaps), so a worker re-reads only the files added since its last task.
 
 Crash-safety invariant: blobs and url files are updated BEFORE the snapshot
 manifest commits, so the store is always a superset of the committed seen
@@ -35,7 +37,7 @@ already scheduled (it is also in the exclude set) — never a lost URL
 (tests/test_seen_store.py locks this in).
 
 Concurrency contract (task retries / zombie attempts): Spark can run two
-attempts of the same ``applyInPandas`` group — a hung attempt's retry
+attempts of the same ``applyInArrow`` group — a hung attempt's retry
 finishes, the stage moves on, and the original attempt completes LATER.
 Three rules make every interleaving safe:
 
@@ -87,6 +89,11 @@ from .bloom import BloomFilter, hash_columns, optimal_bits, optimal_k
 _BLOB_RE = re.compile(r"pid=(\d+)-epoch=(\d+)(?:-[0-9a-f]+)?\.bin$")
 
 
+def _blob_prefix(root: str, pid: int) -> str:
+    """Path prefix shared by every epoch of a pid's blob."""
+    return os.path.join(root, f"pid={pid:05d}-epoch=")
+
+
 def _latest_blob(root: str, pid: int) -> str | None:
     """Highest-epoch blob for a pid (readers ignore zombie re-creations of
     older epochs); returns None when the pid has no blob yet.
@@ -98,16 +105,16 @@ def _latest_blob(root: str, pid: int) -> str | None:
     long-lived Python worker's ``_BLOOMS`` entry serve the PREVIOUS crawl's
     bitmap (bloom false negatives ⇒ seen urls re-scheduled)."""
     best, best_epoch = None, -1
-    for path in glob.glob(os.path.join(root, f"pid={pid:05d}-epoch=*.bin")):
+    for path in glob.glob(_blob_prefix(root, pid) + "*.bin"):
         m = _BLOB_RE.search(path)
         if m and (int(m.group(2)), path) > (best_epoch, best or ""):
             best, best_epoch = path, int(m.group(2))
     return best
 
 
-def _read_delta_tables(pid_dir: str, columns=None):
-    """Read every delta parquet in a pid dir, tolerating a concurrent
-    compaction racing the reader.
+def _read_pid_dir(pid_dir: str, read) -> list:
+    """``read(path)`` of every delta parquet in a pid dir, tolerating a
+    concurrent compaction racing the reader.
 
     A compaction is write-new-then-delete-old, so a single glob+read pass has
     a window: glob BEFORE the compact file's ``os.replace`` lands, read AFTER
@@ -119,151 +126,110 @@ def _read_delta_tables(pid_dir: str, columns=None):
     compaction completed, and compactions per pid are finite between calls).
     """
     while True:
-        tables = []
-        vanished = False
-        for f in sorted(glob.glob(os.path.join(pid_dir, "*.parquet"))):
-            try:
-                tables.append(pq.read_table(f, columns=columns))
-            except FileNotFoundError:
-                vanished = True
-                break
-        if not vanished:
-            return tables
+        try:
+            return [
+                read(f)
+                for f in sorted(glob.glob(os.path.join(pid_dir, "*.parquet")))
+            ]
+        except FileNotFoundError:
+            continue
 
 
 _MIX = 0xFF51AFD7ED558CCD  # 64-bit mix multiplier for the (h1,h2) pair key
 
 
-class _SegmentCache:
-    """Executor-local cache of per-delta-file membership segments.
+def _pair_key(h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
+    """Combined 64-bit key of the (h1,h2) pair — wraparound multiply-xor
+    mixes both words; a pair-key collision between DIFFERENT urls needs a
+    joint 64-bit accident, which ``filter_new`` resolves with a string check
+    on the hits only."""
+    return (h1.astype(np.uint64) * np.uint64(_MIX)) ^ h2.astype(np.uint64)
 
-    The store's delta files are immutable once written (append-only, uniquely
-    named; compaction writes a NEW file and deletes the old ones), so a
-    Python worker that already parsed a file never needs to re-read it: a
-    steady-state superstep's filter cost becomes proportional to the files
-    ADDED since the last superstep, not the accumulated set — the same
-    reason the update path scales (cost tracks the delta). On a real cluster
-    this is the executor-local SSD/memory cache every S3-backed store layers
-    in front of immutable blobs.
 
-    A segment is ``(key_unsorted, key_sorted, url_column)``: the mixed
-    64-bit (h1,h2) pair key aligned with the file's rows (for the exact url
-    resolve mask), the same keys sorted (for ``np.searchsorted`` membership),
-    and the Arrow url column (strings stay Arrow-packed until a hit
-    materializes just the colliding rows). Eviction is LRU by byte budget;
-    entries for files a compaction deleted are dropped when their pid dir is
-    next globbed (immutability makes stale entries harmless, just wasteful).
+class _FileCache:
+    """Worker-local LRU of values loaded from immutable, path-keyed files.
+
+    Delta url files are append-only and uniquely named (compaction writes a
+    NEW file and deletes the old ones), and blob paths are never reused, so
+    a worker that already loaded a path never re-reads it: a steady-state
+    superstep's filter cost tracks the files ADDED since the last one, not
+    the accumulated set. On a real cluster this is the executor-local
+    SSD/memory cache every S3-backed store layers in front of immutable
+    blobs.
+
+    ``load(path)`` returns ``(value, nbytes)``. Eviction is LRU by byte
+    budget and always keeps the newest entry: a reused worker that Spark
+    hands different pid groups each superstep would otherwise keep one
+    entry per file it ever touched (at the module's 10^10-url sizing, the
+    whole multi-GB store). ``keep_only`` drops entries for files that were
+    deleted or superseded; immutability makes them harmless, just wasteful.
     """
 
-    def __init__(self, max_bytes: int = 512 * 1024 * 1024):
+    def __init__(self, load, max_bytes: int = 512 * 1024 * 1024):
         from collections import OrderedDict
 
+        self.load = load
         self.max_bytes = max_bytes
-        self.entries = OrderedDict()  # path -> (segment, nbytes)
+        self.entries = OrderedDict()  # path -> (value, nbytes)
         self.total = 0
-
-    def _segment_from_table(self, table):
-        h1 = table.column("h1").to_numpy().astype(np.uint64)
-        h2 = table.column("h2").to_numpy().astype(np.uint64)
-        key = h1 * np.uint64(_MIX) ^ h2
-        urls = table.column("url").combine_chunks()
-        nbytes = key.nbytes * 2 + urls.nbytes
-        return (key, np.sort(key), urls), nbytes
 
     def get(self, path: str):
         hit = self.entries.get(path)
         if hit is not None:
             self.entries.move_to_end(path)
             return hit[0]
-        # may raise FileNotFoundError — caller re-globs (compaction race)
-        seg, nbytes = self._segment_from_table(
-            pq.read_table(path, columns=["h1", "h2", "url"])
-        )
-        self.entries[path] = (seg, nbytes)
+        # may raise FileNotFoundError — the pid-dir reader re-globs
+        # (compaction race)
+        value, nbytes = self.load(path)
+        self.entries[path] = (value, nbytes)
         self.total += nbytes
         while self.total > self.max_bytes and len(self.entries) > 1:
-            _, (_seg, freed) = self.entries.popitem(last=False)
+            _, (_value, freed) = self.entries.popitem(last=False)
             self.total -= freed
-        return seg
+        return value
 
-    def prune(self, pid_dir: str, live: set):
-        """Drop entries for this pid dir that a compaction deleted."""
-        prefix = pid_dir.rstrip(os.sep) + os.sep
-        dead = [
-            p
-            for p in self.entries
-            if p.startswith(prefix) and p not in live
-        ]
-        for p in dead:
-            _seg, freed = self.entries.pop(p)
-            self.total -= freed
-
-
-class _BloomCache:
-    """Worker-local bloom-bitmap LRU, keyed by blob path (epoch-versioned
-    names are immutable, so entries can never be stale). Two bounds: old
-    epochs of the SAME pid are evicted eagerly when a newer epoch loads, and
-    a total byte budget evicts LRU across pids — a reused Python worker that
-    Spark hands different pid groups each superstep would otherwise
-    accumulate one full bitmap per pid it ever touched (at the module's
-    10^10-url sizing, the whole multi-GB store per worker)."""
-
-    def __init__(self, max_bytes: int = 512 * 1024 * 1024):
-        from collections import OrderedDict
-
-        self.max_bytes = max_bytes
-        self.entries = OrderedDict()  # path -> bitmap
-        self.total = 0
-
-    def get(self, path: str) -> np.ndarray:
-        bm = self.entries.get(path)
-        if bm is not None:
-            self.entries.move_to_end(path)
-            return bm
-        bm = np.fromfile(path, dtype=np.uint8)
-        stem = path.rsplit("-epoch=", 1)[0]
-        for old in [
-            p for p in self.entries if p.rsplit("-epoch=", 1)[0] == stem
+    def keep_only(self, prefix: str, live_paths) -> None:
+        """Drop the entries under ``prefix`` whose path is not live."""
+        for p in [
+            p for p in self.entries if p.startswith(prefix) and p not in live_paths
         ]:
-            self.total -= self.entries.pop(old).nbytes
-        self.entries[path] = bm
-        self.total += bm.nbytes
-        while self.total > self.max_bytes and len(self.entries) > 1:
-            _, dropped = self.entries.popitem(last=False)
-            self.total -= dropped.nbytes
-        return bm
+            self.total -= self.entries.pop(p)[1]
 
 
-_SEGMENTS = _SegmentCache()
-_BLOOMS = _BloomCache()
+def _load_segment(path: str):
+    """Membership segment of one delta file: ``(key_unsorted, key_sorted,
+    url_column)`` — the pair key aligned with the file's rows (for the exact
+    url resolve mask), the same keys sorted (for ``np.searchsorted``
+    membership), and the Arrow url column (strings stay Arrow-packed until a
+    hit materializes just the colliding rows)."""
+    table = pq.read_table(path, columns=["h1", "h2", "url"])
+    key = _pair_key(table.column("h1").to_numpy(), table.column("h2").to_numpy())
+    urls = table.column("url").combine_chunks()
+    return (key, np.sort(key), urls), key.nbytes * 2 + urls.nbytes
 
 
-def _load_pid_segments(pid_dir: str, cache: _SegmentCache):
-    """All membership segments for a pid, via the worker-local cache.
-
-    Same compaction-race contract as ``_read_delta_tables``: if any file
-    vanishes between the glob and its read, redo the whole pass — the
-    re-glob then sees the compact file that subsumed it.
-    """
-    while True:
-        paths = sorted(glob.glob(os.path.join(pid_dir, "*.parquet")))
-        cache.prune(pid_dir, set(paths))
-        segments = []
-        vanished = False
-        for path in paths:
-            try:
-                segments.append(cache.get(path))
-            except FileNotFoundError:
-                vanished = True
-                break
-        if not vanished:
-            return segments
+def _load_bitmap(path: str):
+    bitmap = np.fromfile(path, dtype=np.uint8)
+    return bitmap, bitmap.nbytes
 
 
-def _cached_bitmap(path: str) -> np.ndarray:
-    """Bloom bitmap by blob path via the worker-local LRU (see
-    :class:`_BloomCache` for the two eviction bounds)."""
-    return _BLOOMS.get(path)
+_SEGMENTS = _FileCache(_load_segment)
+_BLOOMS = _FileCache(_load_bitmap)
+
+
+def _maybe_seen(root: str, pid: int, table: pa.Table, n_bits: int, k: int):
+    """Bloom maybe-seen flags of a pid group's rows (``_h1``/``_h2``), read
+    from the pid's latest blob through ``_BLOOMS``; None when the pid has no
+    blob yet (every row is new). Loading an epoch drops the pid's older
+    epochs from the cache: readers never select them again."""
+    path = _latest_blob(root, pid)
+    if path is None:
+        return None
+    _BLOOMS.keep_only(_blob_prefix(root, pid), {path})
+    bloom = BloomFilter(_BLOOMS.get(path), n_bits, k)
+    return bloom.might_contain(
+        table.column("_h1").to_numpy(), table.column("_h2").to_numpy()
+    )
 
 
 class PartitionedBloomSeenStore:
@@ -367,7 +333,7 @@ class PartitionedBloomSeenStore:
             # pid-dependent offset spreads compactions across supersteps
             # (each still compacts at the same long-run frequency).
             if len(existing) > compact_above + (pid % compact_above):
-                tables = _read_delta_tables(pid_dir)
+                tables = _read_pid_dir(pid_dir, pq.read_table)
                 cname = os.path.join(
                     pid_dir, f"compact-{uuid.uuid4().hex}.parquet"
                 )
@@ -393,7 +359,7 @@ class PartitionedBloomSeenStore:
             # siblings left by retried/speculative attempts (which would
             # otherwise orphan one full-size bitmap per retry, since a plain
             # `epoch <` check never matches them at the final epoch)
-            for old in glob.glob(os.path.join(root, f"pid={pid:05d}-epoch=*.bin")):
+            for old in glob.glob(_blob_prefix(root, pid) + "*.bin"):
                 m = _BLOB_RE.search(old)
                 if m and (int(m.group(2)), old) < (epoch, path):
                     with contextlib.suppress(FileNotFoundError):
@@ -442,17 +408,12 @@ class PartitionedBloomSeenStore:
 
         def check(table: pa.Table) -> pa.Table:
             pid = int(table.column("_pid")[0].as_py())
-            path = _latest_blob(root, pid)
-            table = table.drop_columns(["_pid"])
-            if path is None:
+            flags = _maybe_seen(root, pid, table, n_bits, k)
+            if flags is None:
                 flags = np.zeros(table.num_rows, dtype=bool)
-            else:
-                bloom = BloomFilter(_cached_bitmap(path), n_bits, k)
-                flags = bloom.might_contain(
-                    table.column("_h1").to_numpy(),
-                    table.column("_h2").to_numpy(),
-                )
-            return table.append_column("_maybe_seen", pa.array(flags))
+            return table.drop_columns(["_pid"]).append_column(
+                "_maybe_seen", pa.array(flags)
+            )
 
         flagged = keyed.groupBy("_pid").applyInArrow(check, schema=out_schema)
         definitely_new = flagged.filter(~F.col("_maybe_seen")).select(*cols)
@@ -488,62 +449,45 @@ class PartitionedBloomSeenStore:
 
         def check(table: pa.Table) -> pa.Table:
             pid = int(table.column("_pid")[0].as_py())
-            blob = _latest_blob(root, pid)
-            out_cols = [
-                c for c in table.column_names if c not in ("_h1", "_h2", "_pid")
-            ]
-            if blob is None:
-                return table.select(out_cols)
-            h1 = table.column("_h1").to_numpy()
-            h2 = table.column("_h2").to_numpy()
-            bloom = BloomFilter(_cached_bitmap(blob), n_bits, k)
-            maybe = bloom.might_contain(h1, h2)
-            keep = None
-            if maybe.any():
-                pid_dir = os.path.join(urls_root, f"pid={pid:05d}")
-                # membership segments come from the worker-local cache of
-                # immutable delta files: only files written SINCE this
-                # worker's last call hit the filesystem (steady-state cost
-                # tracks the delta, not the accumulated set)
-                segments = _load_pid_segments(pid_dir, _SEGMENTS)
-                if segments:
-                    # combined 64-bit key of the (h1,h2) pair — wraparound
-                    # multiply-xor mixes both words; a pair-key collision
-                    # between DIFFERENT urls needs a joint 64-bit accident,
-                    # resolved below with a string check on the hits only
-                    cand_key = (
-                        h1.astype(np.uint64) * np.uint64(_MIX)
-                    ) ^ h2.astype(np.uint64)
-                    hits = np.zeros(len(cand_key), dtype=bool)
-                    for _key, key_sorted, _urls in segments:
-                        if len(key_sorted) == 0:
-                            continue
-                        idx = np.searchsorted(key_sorted, cand_key)
-                        idx[idx == len(key_sorted)] = 0
-                        hits |= key_sorted[idx] == cand_key
-                    hits &= maybe
-                    if hits.any():
-                        # exact resolve: Arrow is_in of the url column
-                        # against the colliding segment rows — C++ hash-set
-                        # probe, zero Python strings
-                        hit_keys = cand_key[hits]
-                        chunks = []
-                        for key, _key_sorted, urls in segments:
-                            relevant = np.isin(key, hit_keys)
-                            if relevant.any():
-                                chunks.append(urls.filter(pa.array(relevant)))
-                        if chunks:
-                            confirmed = (
-                                pc.is_in(
-                                    table.column("url"),
-                                    value_set=pa.chunked_array(chunks),
-                                )
-                                .to_numpy(zero_copy_only=False)
-                                .astype(bool)
-                            )
-                            keep = ~(hits & confirmed)
-            if keep is None:
-                return table.select(out_cols)
-            return table.filter(pa.array(keep)).select(out_cols)
+            maybe = _maybe_seen(root, pid, table, n_bits, k)
+            out = table.drop_columns(["_h1", "_h2", "_pid"])
+            if maybe is None or not maybe.any():
+                return out
+            pid_dir = os.path.join(urls_root, f"pid={pid:05d}")
+            # membership segments come from the worker-local cache of
+            # immutable delta files: only files written SINCE this
+            # worker's last call hit the filesystem (steady-state cost
+            # tracks the delta, not the accumulated set); entries for
+            # files a compaction deleted are dropped first
+            prefix = pid_dir + os.sep
+            _SEGMENTS.keep_only(prefix, set(glob.glob(prefix + "*.parquet")))
+            segments = _read_pid_dir(pid_dir, _SEGMENTS.get)
+            cand_key = _pair_key(
+                table.column("_h1").to_numpy(), table.column("_h2").to_numpy()
+            )
+            hits = np.zeros(len(cand_key), dtype=bool)
+            for _key, key_sorted, _urls in segments:
+                if len(key_sorted) == 0:
+                    continue
+                idx = np.searchsorted(key_sorted, cand_key)
+                idx[idx == len(key_sorted)] = 0
+                hits |= key_sorted[idx] == cand_key
+            hits &= maybe
+            if not hits.any():
+                return out
+            # exact resolve: Arrow is_in of the url column against the
+            # colliding segment rows — C++ hash-set probe, zero Python strings
+            hit_keys = cand_key[hits]
+            chunks = []
+            for key, _key_sorted, urls in segments:
+                relevant = np.isin(key, hit_keys)
+                if relevant.any():
+                    chunks.append(urls.filter(pa.array(relevant)))
+            confirmed = (
+                pc.is_in(out.column("url"), value_set=pa.chunked_array(chunks))
+                .to_numpy(zero_copy_only=False)
+                .astype(bool)
+            )
+            return out.filter(pa.array(~(hits & confirmed)))
 
         return keyed.groupBy("_pid").applyInArrow(check, schema=out_schema)

@@ -1879,36 +1879,40 @@ def q_crawl_frontier(spark, sf_dir):
         )
         engine.run(seeds=corpus["seeds"])
         cache: list = []
-        log = crawl_log_df(spark, store, cleanup=cache).select(
-            "url", "iteration", "rank", "status", "is_document"
-        )
-        # SQL-checkable projection of the full crawl: per-iteration scheduled
-        # counts + the rank-density invariant (ranks are exactly 1..n per
-        # iteration, so max(rank) must equal count(*)). The per-url ordering
-        # itself is pytest-oracled against the single-process simulator
-        # (tests/test_frontier.py, tests/test_simulator.py); the DuckDB oracle
-        # pins the schedule as constants, which for the seed-pinned corpus
-        # (gen_corpus(3, 60, 42), budget 6) is a total check of the crawl's
-        # iteration structure.
-        agg = (
-            log.groupBy("iteration")
-            .agg(
-                F.count(F.lit(1)).alias("n_scheduled"),
-                F.sum(
-                    F.when(F.col("status") == "fetched", 1).otherwise(0)
-                ).alias("n_fetched"),
-                F.sum(F.when(F.col("is_document"), 1).otherwise(0)).alias(
-                    "n_documents"
-                ),
-                F.max("rank").alias("max_rank"),
+        try:
+            log = crawl_log_df(spark, store, cleanup=cache).select(
+                "url", "iteration", "rank", "status", "is_document"
             )
-        )
-        # materialize before the store directory vanishes, then release the
-        # rank derivation's persisted intermediate (no per-invocation cache
-        # leak); the 6-row aggregate travels as a local-backed DataFrame
-        rows = agg.collect()
-        for frame in cache:
-            frame.unpersist()
+            # SQL-checkable projection of the full crawl: per-iteration
+            # scheduled counts + the rank-density invariant (ranks are exactly
+            # 1..n per iteration, so max(rank) must equal count(*)). The
+            # per-url ordering itself is pytest-oracled against the
+            # single-process simulator (tests/test_frontier.py,
+            # tests/test_simulator.py); the DuckDB oracle pins the schedule as
+            # constants, which for the seed-pinned corpus (gen_corpus(3, 60,
+            # 42), budget 6) is a total check of the crawl's iteration
+            # structure.
+            agg = (
+                log.groupBy("iteration")
+                .agg(
+                    F.count(F.lit(1)).alias("n_scheduled"),
+                    F.sum(
+                        F.when(F.col("status") == "fetched", 1).otherwise(0)
+                    ).alias("n_fetched"),
+                    F.sum(F.when(F.col("is_document"), 1).otherwise(0)).alias(
+                        "n_documents"
+                    ),
+                    F.max("rank").alias("max_rank"),
+                )
+            )
+            # materialize before the store directory vanishes; the 6-row
+            # aggregate travels as a local-backed DataFrame
+            rows = agg.collect()
+        finally:
+            # release the rank derivation's persisted intermediate, also
+            # when the collect raises (no per-invocation cache leak)
+            for frame in cache:
+                frame.unpersist()
         return spark.createDataFrame(rows, agg.schema)
 
 

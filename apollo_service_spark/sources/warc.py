@@ -102,8 +102,7 @@ def build_warc_segment(
     content_type]) tuple, concatenated — the on-disk segment layout.
     ``compress=True`` produces the REAL Common-Crawl layout: one gzip
     member per record (``.warc.gz``), deterministic (mtime pinned to 0,
-    fixed compression level), which is what makes compressed-domain
-    ranged reads — and therefore CDX offsets — possible."""
+    fixed compression level)."""
     out = [build_warcinfo(segment_name)]
     for rec in records:
         out.append(build_warc_record(*rec))
@@ -120,10 +119,9 @@ _GZIP_MAGIC = b"\x1f\x8b"
 
 
 def _gzip_members(blob: bytes) -> list:
-    """Split a multi-member gzip stream into ``(offset, length, data)``
-    per member — the real Common-Crawl segment layout is one gzip member
-    PER RECORD, which is exactly what makes compressed-domain ranged
-    reads possible (the CDX index points at member boundaries)."""
+    """Split a multi-member gzip stream into each member's decompressed
+    data — the real Common-Crawl segment layout is one gzip member PER
+    RECORD."""
     import zlib
 
     out = []
@@ -143,37 +141,27 @@ def _gzip_members(blob: bytes) -> list:
         except zlib.error as exc:
             raise ValueError(f"corrupt gzip member at offset {pos}: {exc}")
         consumed = n - pos - len(d.unused_data)
-        out.append((pos, consumed, data))
+        out.append(data)
         pos += consumed
     return out
 
 
-def parse_warc_segment(blob: bytes, with_offsets: bool = False) -> list:
+def parse_warc_segment(blob: bytes) -> list:
     """Scan one segment; return a dict per *response* record:
-    ``{url, warc_ts (naive-UTC datetime), content_type, payload (bytes)}``
-    — plus ``offset``/``length`` when ``with_offsets`` is set, so a CDX
-    index built from these slices supports ranged random access.
+    ``{url, warc_ts (naive-UTC datetime), content_type, payload (bytes)}``.
 
     Accepts BOTH layouts Common Crawl uses: plain concatenated records,
     and ``.warc.gz`` (one gzip member per record — detected by magic
-    bytes).  For gzip input, offsets/lengths are COMPRESSED-domain member
-    extents, matching real CDX semantics: slicing (offset, length) out of
-    the ``.warc.gz`` file yields a standalone gzip member this same
-    function parses.
+    bytes).
 
     Structural errors raise ``ValueError`` with the byte offset — a
     truncated or corrupt segment must fail loudly, not yield partial rows
     (at crawl scale a silently half-read segment is unrecoverable data
     loss; the caller retries the whole file)."""
     if blob[:2] == _GZIP_MAGIC:
-        records = []
-        for moff, mlen, data in _gzip_members(blob):
-            for rec in parse_warc_segment(data, with_offsets=False):
-                if with_offsets:
-                    rec["offset"] = moff
-                    rec["length"] = mlen
-                records.append(rec)
-        return records
+        return [
+            rec for data in _gzip_members(blob) for rec in parse_warc_segment(data)
+        ]
     records = []
     pos = 0
     n = len(blob)
@@ -219,9 +207,6 @@ def parse_warc_segment(blob: bytes, with_offsets: bool = False) -> list:
                 "content_type": content_type,
                 "payload": body[http_end + 4:],
             }
-            if with_offsets:
-                rec["offset"] = pos
-                rec["length"] = body_end + 4 - pos
             records.append(rec)
         pos = body_end + 4
     return records
@@ -279,50 +264,3 @@ def pages_from_warc(records):
         F.lit(None).cast("string").alias("lang"),
     )
 
-
-def cdx_index(segments):
-    """CDX-style URL index over WARC segments — the random-access map
-    Common Crawl serves as its public URL index: fetching ONE page out of
-    a 100 TB crawl is then a ranged read of ``length`` bytes at ``offset``
-    in ``filename``, never a segment scan.  Input: a frame of
-    ``(filename string, segment binary)`` rows (the binaryFile reader's
-    ``path``/``content``); output: one row per response record
-    ``(urlkey, url, warc_ts, filename, offset, length)`` where ``urlkey``
-    is the SURT transform (``urlkit.surt_key_py`` — same function the
-    Catalyst ``surt_keys`` gate query pins), so sorting the index clusters
-    each domain's pages adjacently exactly as CDX files do.  One parse
-    task per segment, zero shuffles; callers sort/partition the output as
-    their serving layout requires."""
-    import pandas as pd
-
-    from ..functions.urlkit import surt_key_py
-
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for fname, blob in zip(pdf["filename"], pdf["segment"]):
-                for rec in parse_warc_segment(bytes(blob), with_offsets=True):
-                    rows.append(
-                        {
-                            "urlkey": surt_key_py(rec["url"]),
-                            "url": rec["url"],
-                            "warc_ts": rec["warc_ts"],
-                            "filename": fname,
-                            "offset": rec["offset"],
-                            "length": rec["length"],
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "urlkey", "url", "warc_ts", "filename", "offset", "length",
-                ],
-            )
-
-    return segments.mapInPandas(
-        gen,
-        schema=(
-            "urlkey string, url string, warc_ts timestamp, "
-            "filename string, offset long, length long"
-        ),
-    )

@@ -9,30 +9,30 @@ def _docs(spark, n=400):
     return spark.range(n).select(F.col("id").alias("doc_id"))
 
 
-def test_partition_independent(spark):
-    """The whole point: the sample is IDENTICAL regardless of layout —
-    df.sample() fails this."""
-    df = _docs(spark)
-    a = {r["doc_id"] for r in sampling.sample_fraction(df, "doc_id", 0.3).collect()}
-    b = {
-        r["doc_id"]
-        for r in sampling.sample_fraction(
-            df.repartition(13, "doc_id"), "doc_id", 0.3
+def _labels(df, salt=""):
+    return {
+        r["doc_id"]: r["s"]
+        for r in df.select(
+            "doc_id", sampling.split_label("doc_id", salt=salt).alias("s")
         ).collect()
     }
-    c = {
-        r["doc_id"]
-        for r in sampling.sample_fraction(df.coalesce(1), "doc_id", 0.3).collect()
-    }
-    assert a == b == c
-    assert 0.2 < len(a) / 400 < 0.4
 
 
-def test_salt_changes_sample_fraction_holds(spark):
+def test_partition_independent(spark):
+    """The whole point: the split is IDENTICAL regardless of layout —
+    df.sample() fails this."""
     df = _docs(spark)
-    a = {r["doc_id"] for r in sampling.sample_fraction(df, "doc_id", 0.3, salt="x").collect()}
-    b = {r["doc_id"] for r in sampling.sample_fraction(df, "doc_id", 0.3, salt="y").collect()}
-    assert a != b  # different experiments, different rows
+    a = _labels(df)
+    b = _labels(df.repartition(13, "doc_id"))
+    c = _labels(df.coalesce(1))
+    assert a == b == c
+    assert len(a) == 400
+    assert 0.8 < sum(s == "train" for s in a.values()) / 400 < 1.0
+
+
+def test_salt_changes_split_labels(spark):
+    df = _docs(spark)
+    assert _labels(df, salt="x") != _labels(df, salt="y")  # new experiment
 
 
 def test_split_labels_partition_and_sum(spark):

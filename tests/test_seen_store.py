@@ -296,10 +296,13 @@ def test_concurrent_compaction_readers_never_lose_membership(tmp_path):
     import pyarrow.parquet as pq
 
     from apollo_service_spark.operators.seen import (
-        _SegmentCache,
-        _load_pid_segments,
-        _read_delta_tables,
+        _FileCache,
+        _load_segment,
+        _read_pid_dir,
     )
+
+    def read_urls(path):
+        return pq.read_table(path, columns=["url"])
 
     pid_dir = tmp_path / "pid=00000"
     pid_dir.mkdir()
@@ -333,7 +336,7 @@ def test_concurrent_compaction_readers_never_lose_membership(tmp_path):
                     committed.extend(urls)
                 existing = sorted(_glob(os.path.join(str(pid_dir), "*.parquet")))
                 if len(existing) > 3:  # compact aggressively: many race windows
-                    tables = _read_delta_tables(str(pid_dir))
+                    tables = _read_pid_dir(str(pid_dir), pq.read_table)
                     _write(
                         pa.concat_tables(tables),
                         f"compact-{_uuid.uuid4().hex}.parquet",
@@ -345,28 +348,28 @@ def test_concurrent_compaction_readers_never_lose_membership(tmp_path):
             stop.set()
 
     def reader() -> None:
-        cache = _SegmentCache()
+        cache = _FileCache(_load_segment)
+        prefix = str(pid_dir) + os.sep
         while not stop.is_set() and not failures:
             with lock:
                 snapshot = set(committed)
-            tables = _read_delta_tables(str(pid_dir), columns=["url"])
+            tables = _read_pid_dir(str(pid_dir), read_urls)
             via_tables = set()
             for t in tables:
                 via_tables.update(t.column("url").to_pylist())
             missing = snapshot - via_tables
             if missing:
-                failures.append(("_read_delta_tables dropped", sorted(missing)[:5]))
+                failures.append(("whole-table read dropped", sorted(missing)[:5]))
                 return
             with lock:
                 snapshot = set(committed)
             via_segments = set()
-            for _key, _sorted_key, url_col in _load_pid_segments(
-                str(pid_dir), cache
-            ):
+            cache.keep_only(prefix, set(_glob(prefix + "*.parquet")))
+            for _key, _sorted_key, url_col in _read_pid_dir(str(pid_dir), cache.get):
                 via_segments.update(url_col.to_pylist())
             missing = snapshot - via_segments
             if missing:
-                failures.append(("_load_pid_segments dropped", sorted(missing)[:5]))
+                failures.append(("cached-segment read dropped", sorted(missing)[:5]))
                 return
 
     threads = [threading.Thread(target=writer)] + [
@@ -379,6 +382,82 @@ def test_concurrent_compaction_readers_never_lose_membership(tmp_path):
     assert not failures, failures
     # final state is complete and consistent
     final = set()
-    for t in _read_delta_tables(str(pid_dir), columns=["url"]):
+    for t in _read_pid_dir(str(pid_dir), read_urls):
         final.update(t.column("url").to_pylist())
     assert final == set(committed)
+
+
+def test_file_cache_eviction_rules(tmp_path):
+    """The worker-local file cache's four rules, driver-side: a hit never
+    re-reads its file; ``keep_only`` drops a segment a compaction deleted;
+    the byte budget evicts least-recently-used entries but always keeps the
+    newest; and probing a pid's epoch-1 blob leaves only epoch 1 of that pid
+    cached (epoch 0 is superseded, readers never select it again)."""
+    import os
+
+    import numpy as np
+    import pyarrow as pa
+
+    from apollo_service_spark.operators import seen
+
+    loads = []
+
+    def load(path):
+        loads.append(path)
+        return path, os.path.getsize(path)
+
+    def write(name, size):
+        path = str(tmp_path / name)
+        with open(path, "wb") as fh:
+            fh.write(b"x" * size)
+        return path
+
+    # a hit does not re-read the file
+    cache = seen._FileCache(load, max_bytes=250)
+    a = write("a", 100)
+    assert cache.get(a) == a and cache.get(a) == a
+    assert loads == [a]
+
+    # keep_only drops a compacted-away segment under the prefix only
+    pid_dir = tmp_path / "pid=00000"
+    pid_dir.mkdir()
+    delta = write("pid=00000/delta-1.parquet", 10)
+    compact = write("pid=00000/compact-1.parquet", 10)
+    cache.get(delta)
+    cache.get(compact)
+    os.remove(delta)
+    prefix = str(pid_dir) + os.sep
+    cache.keep_only(prefix, {compact})
+    assert list(cache.entries) == [a, compact] and cache.total == 110
+
+    # the budget evicts LRU entries but always keeps the newest
+    cache.get(a)  # a is now most recently used; compact is LRU
+    b = write("b", 100)
+    cache.get(b)  # 210 <= 250: nothing evicted
+    c = write("c", 100)
+    cache.get(c)  # 310 > 250: the LRU (compact), then a, go
+    assert list(cache.entries) == [b, c] and cache.total == 200
+    huge = write("huge", 1000)
+    cache.get(huge)  # over budget on its own: still cached, the rest goes
+    assert list(cache.entries) == [huge] and cache.total == 1000
+
+    # superseded epochs: only the newest blob of a pid stays in _BLOOMS
+    root = tmp_path / "bloom"
+    root.mkdir()
+    n_bits, k = 8192, 3
+    table = pa.table(
+        {"_h1": pa.array([1, 2], pa.int64()), "_h2": pa.array([3, 4], pa.int64())}
+    )
+    other = root / "pid=00001-epoch=000000-cc.bin"
+    np.zeros(n_bits // 8, dtype=np.uint8).tofile(other)
+    seen._maybe_seen(str(root), 1, table, n_bits, k)
+    epoch0 = root / "pid=00000-epoch=000000-aa.bin"
+    np.zeros(n_bits // 8, dtype=np.uint8).tofile(epoch0)
+    assert not seen._maybe_seen(str(root), 0, table, n_bits, k).any()
+    assert str(epoch0) in seen._BLOOMS.entries
+    epoch1 = root / "pid=00000-epoch=000001-bb.bin"
+    np.full(n_bits // 8, 0xFF, dtype=np.uint8).tofile(epoch1)
+    assert seen._maybe_seen(str(root), 0, table, n_bits, k).all()
+    cached = [p for p in seen._BLOOMS.entries if p.startswith(str(root))]
+    assert cached == [str(other), str(epoch1)]
+    assert seen._maybe_seen(str(root), 2, table, n_bits, k) is None

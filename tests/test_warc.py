@@ -151,58 +151,10 @@ def test_engine_crawls_warc_backed_pages(spark, tmp_path):
     )
 
 
-def test_cdx_index_random_access(spark, tmp_path):
-    """Every CDX index row must support ranged random access: slicing
-    exactly (offset, length) bytes out of the segment file and parsing
-    THAT slice alone yields the record, byte-identical payload — the
-    one-page-from-100TB read path Common Crawl's URL index serves.  The
-    urlkey column is the SURT transform, so the sorted index clusters
-    each domain's pages adjacently."""
-    from apollo_service_spark.functions.urlkit import surt_key_py
-    from apollo_service_spark.sources.warc import cdx_index
-
-    blobs = {}
-    for s in range(2):
-        recs = [
-            (f"https://h{i % 3}.test/s{s}/p{i}", TS, f"payload {s}/{i}".encode())
-            for i in range(5)
-        ]
-        blob = build_warc_segment(recs, f"seg-{s}")
-        path = os.path.join(tmp_path, f"part-{s}.warc")
-        with open(path, "wb") as fh:
-            fh.write(blob)
-        blobs[f"part-{s}.warc"] = blob
-
-    files = spark.read.format("binaryFile").load(str(tmp_path))
-    index = cdx_index(
-        files.selectExpr("path AS filename", "content AS segment")
-    ).collect()
-    assert len(index) == 10
-    full = {
-        (name, r["url"]): r["payload"]
-        for name, blob in blobs.items()
-        for r in parse_warc_segment(blob)
-    }
-    for row in index:
-        name = row["filename"].rsplit("/", 1)[-1]
-        sliced = blobs[name][row["offset"]: row["offset"] + row["length"]]
-        recs = parse_warc_segment(sliced)
-        assert len(recs) == 1
-        assert recs[0]["url"] == row["url"]
-        assert recs[0]["payload"] == full[(name, row["url"])]
-        assert row["urlkey"] == surt_key_py(row["url"])
-    # SURT ordering clusters domains: all h0 keys sort before all h1 keys
-    keys = sorted(r["urlkey"] for r in index)
-    hosts_in_order = [k.split(")")[0] for k in keys]
-    assert hosts_in_order == sorted(hosts_in_order)
-
-
-def test_gzip_segment_roundtrip_and_compressed_cdx_offsets():
+def test_gzip_segment_roundtrip():
     """The real Common-Crawl layout: .warc.gz with one gzip member per
     record. Parsing the compressed blob must equal parsing the plain one,
-    and with_offsets must report COMPRESSED-domain member extents — slicing
-    (offset, length) out of the .warc.gz bytes yields a standalone gzip
-    member that parses to the byte-identical record (real CDX semantics)."""
+    and a truncated member must fail loudly."""
     recs = [
         (f"https://gz.test/{i}", TS, f"payload-{i}".encode() * (i + 1))
         for i in range(4)
@@ -217,16 +169,6 @@ def test_gzip_segment_roundtrip_and_compressed_cdx_offsets():
         (r["url"], r["payload"]) for r in b
     ]
 
-    indexed = parse_warc_segment(gz, with_offsets=True)
-    # offsets tile the compressed blob: warcinfo member + 4 record members
-    assert indexed[0]["offset"] > 0  # warcinfo member precedes
-    for rec in indexed:
-        member = gz[rec["offset"]: rec["offset"] + rec["length"]]
-        assert member[:2] == b"\x1f\x8b"
-        got = parse_warc_segment(member)
-        assert len(got) == 1
-        assert got[0]["url"] == rec["url"]
-        assert got[0]["payload"] == rec["payload"]
     # truncation fails loudly in the compressed domain too
     with pytest.raises(ValueError, match="gzip"):
         parse_warc_segment(gz[:-4])
