@@ -61,10 +61,13 @@ Three rules make every interleaving safe:
   enable it), keeping concurrent same-group attempts a rare retry case
   rather than the norm.
 
-On a real cluster the blobs live on the shared store (S3/HDFS) and each task
-reads/writes only its own ~MB-scale blob; nothing bloom-shaped ever crosses
-the driver. Size ``n_partitions`` so accumulated/P fits a task: at 10^10 urls
-and 4096 pids a partition holds ~2.4M urls (~200 MB raw, ~50 MB parquet).
+On a real cluster the store root must be a shared POSIX path that every
+executor mounts: the store reads and writes it with ``os``, ``glob`` and
+``os.replace`` (whose rename must be atomic), so an ``s3://`` or ``hdfs://``
+URL does not work. Each task reads/writes only its own ~MB-scale blob;
+nothing bloom-shaped ever crosses the driver. Size ``n_partitions`` so
+accumulated/P fits a task: at 10^10 urls and 4096 pids a partition holds
+~2.4M urls (~200 MB raw, ~50 MB parquet).
 """
 
 from __future__ import annotations

@@ -13,9 +13,12 @@ hashes values sorted by column name). Aggregates that DuckDB widens to
 HUGEINT are cast to BIGINT; float aggregates are rounded to stabilize the
 order-insensitive value hash.
 
-Entries with no ``oracle_sql`` (greedy clustering, MinHash/SimHash, the full
-frontier crawl) are genuinely non-SQL-expressible; the driver records the
-weaker rows-only check and the pytest suite covers them against hand oracles.
+Each query is one record, registered with ``_register`` right after its
+build function and oracle; ``queries()`` and ``oracle_sql()`` are two views
+of the records in registration order. Where the operator itself is not
+SQL-expressible (greedy clustering, MinHash/SimHash, the full frontier
+crawl) the query emits an SQL-checkable invariant of its result, and the
+pytest suite covers the rest against hand oracles.
 """
 
 from __future__ import annotations
@@ -82,515 +85,286 @@ def _urls_df(
     )
 
 
-def q_surt_keys(spark, sf_dir):
-    """SURT index keys (the CDX/Common-Crawl URL-index key transform,
-    ``urlkit.surt_key``) for every distinct url — one scan, zero Python,
-    pure string algebra inside codegen.  At index scale the property that
-    matters is the SORT ORDER this key induces (one domain's pages
-    adjacent, subdomains right after their apex) — pinned by the fuzz
-    test; this query pins the transform itself cross-engine."""
-    urls = _urls_df(spark, sf_dir).select("url").distinct()
-    return urls.select("url", urlkit.surt_key(F.col("url")).alias("surt"))
-
-
-SQL_SURT_KEYS = f"""{ORACLE_URLS_CTE}
-SELECT DISTINCT url,
-  array_to_string(list_reverse(string_split(lower(host), '.')), ',')
-    || ')' || lower(path)
-    || CASE WHEN query <> '' THEN '?' || lower(query) ELSE '' END AS surt
-FROM parsed"""
-
-
 # --------------------------------------------------------------------------
-# Crawl-domain operator queries (SURVEY.md §2.2-2.4)
+# The registry: one record per query, in registration order
 # --------------------------------------------------------------------------
 
 
-def q_url_categorize_counts(spark, sf_dir):
-    """F10: order-sensitive CASE categorizer → counts per category."""
-    urls = _urls_df(spark, sf_dir)
-    return (
-        urls.select(urlkit.categorize(F.col("url")).alias("category"))
-        .groupBy("category")
-        .agg(F.count("*").alias("cnt"))
+class _Query:
+    """One registry query: its name, build function, oracle and deferred
+    frames.
+
+    Calling the record builds the query's frame under the Spark job tag
+    ``apollo:query:<name>``, so the build's eager work is attributable;
+    the caller's own action on the returned frame runs untagged.
+
+    A ``deferred`` build function takes a ``cleanup`` list and persists
+    intermediates into it while returning a lazy plan: the caller's action
+    stays the only materialization (forcing one inside the query cost a
+    reproducible +33% — VERDICT r4 wrong #3), so the frames must stay
+    cached until that action has run. The record releases them at the start
+    of its next call, when the build raises, or on :func:`release_all`,
+    which bounds a session at one call's frames per query."""
+
+    def __init__(self, build, oracle, deferred: bool):
+        self.name = build.__name__.removeprefix("q_")
+        self.build = build
+        self.oracle = oracle  # the SQL, or a function that returns it
+        self.deferred = deferred
+        self.frames: list = []
+
+    def __call__(self, spark: SparkSession, sf_dir: str) -> DataFrame:
+        self.release()
+        kwargs = {"cleanup": self.frames} if self.deferred else {}
+        sc = spark.sparkContext
+        tag = f"apollo:query:{self.name}"
+        sc.addJobTag(tag)
+        try:
+            return self.build(spark, sf_dir, **kwargs)
+        except BaseException:
+            self.release()
+            raise
+        finally:
+            sc.removeJobTag(tag)
+
+    def release(self) -> None:
+        for frame in self.frames:
+            frame.unpersist()
+        self.frames.clear()
+
+
+_REGISTRY: dict = {}
+
+
+def _register(build, oracle, deferred: bool = False) -> None:
+    query = _Query(build, oracle, deferred)
+    assert query.name not in _REGISTRY, query.name
+    _REGISTRY[query.name] = query
+
+
+def queries() -> dict:
+    """Every registry query by name, in registration order."""
+    return dict(_REGISTRY)
+
+
+def oracle_sql() -> dict:
+    """Every query's DuckDB oracle SQL by name, in registration order.
+    Oracles built from fragments registered later (or, for
+    ``crawl_frontier``, from the cached single-process simulator run) are
+    resolved here rather than at import."""
+    return {
+        name: q.oracle() if callable(q.oracle) else q.oracle
+        for name, q in _REGISTRY.items()
+    }
+
+
+def release_all() -> None:
+    """Release every query's deferred frames (for one-shot callers that
+    are done with the frames the registry returned)."""
+    for query in _REGISTRY.values():
+        query.release()
+
+
+# --------------------------------------------------------------------------
+# Registered first: the 25 queries outside the r5 correctness sample (50 of
+# the 75 keys; the curation/WARC tier never appeared in any
+# CORRECTNESS_r*.json), so a prefix-shaped sample covers the
+# least-recently-verified queries (VERDICT r5 "next round" #1). Registration
+# order is the order queries() returns, pinned by tests/test_registry.py: a
+# block moves only with its place in that order.
+# --------------------------------------------------------------------------
+
+
+def q_minhash_pairs(spark, sf_dir):
+    """MinHash+LSH near-dup pairs on planted perturbed copies, oracled by
+    exact 3-gram Jaccard: at threshold 0.5 the banding must be rows-per-band
+    = 1 (bands = n_hashes = 32) so the per-pair miss probability is
+    (1-J)^32 ≤ 2.3e-10 — the LSH result is exactly the J ≥ 0.5 pair set
+    (precision is exact by construction: candidates are verified with exact
+    Jaccard). Production dedup at J ≥ 0.8 uses the coarser 8×4 banding."""
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 40)
+    near = docs.select(
+        (F.col("doc_id") + 1_000_000).alias("doc_id"),
+        F.concat(F.col("text"), F.lit(" tail")).alias("text"),
     )
+    both = docs.select("doc_id", "text").unionByName(near)
+    return dedup.minhash_lsh_pairs(
+        both, n_hashes=32, bands=32, shingle_n=3, jaccard_threshold=0.5
+    ).select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
 
 
-# derived from the urlkit config-tier constants so engine and oracle can't
-# drift (VERDICT r4 wrong #2: a hand-copied list silently masked divergence)
-_SOCIAL_RE_SQL = (
-    "(" + "|".join(k.replace(".", "\\.") for k in urlkit.SOCIAL_MEDIA_KEYWORDS) + ")"
+SQL_MINHASH_PAIRS = """WITH combined AS (
+  SELECT doc_id, text FROM documents WHERE doc_id < 40
+  UNION ALL
+  SELECT doc_id + 1000000, text || ' tail' FROM documents WHERE doc_id < 40
+), toks AS (
+  SELECT doc_id AS id,
+    list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '') AS t
+  FROM combined
+), sh AS (
+  SELECT id, list_distinct(list_transform(range(1, greatest(len(t) - 2, 0) + 1),
+      i -> concat_ws(' ', t[i], t[i+1], t[i+2]))) AS s
+  FROM toks WHERE len(t) >= 3
 )
-_BANK_RE_SQL = "(" + "|".join(urlkit.BANK_KEYWORDS) + ")"
-_FILE_RE_SQL = "\\.(" + "|".join(urlkit.FILE_EXTENSIONS) + ")($|\\?)"
-
-SQL_URL_CATEGORIZE = f"""{ORACLE_URLS_CTE}
-SELECT category, CAST(COUNT(*) AS BIGINT) AS cnt FROM (
-  SELECT CASE
-    WHEN regexp_matches(url, '{_SOCIAL_RE_SQL}', 'i') THEN 'social_media'
-    WHEN NOT regexp_matches(url, '{_BANK_RE_SQL}', 'i') THEN 'misc'
-    WHEN regexp_matches(url, '{_FILE_RE_SQL}', 'i') THEN 'file'
-    ELSE 'bank' END AS category
-  FROM parsed
-) GROUP BY category"""
+SELECT a.id AS id_a, b.id AS id_b,
+ROUND(CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
+  / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))), 6) AS jaccard
+FROM sh a JOIN sh b ON a.id < b.id
+WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
+  / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.5"""
+_register(q_minhash_pairs, SQL_MINHASH_PAIRS)
 
 
-def q_url_year_counts(spark, sf_dir):
-    """F11/A8-A9: year precedence (filename → query values → path) → counts."""
-    urls = _urls_df(spark, sf_dir, rebalance=True)
-    return (
-        urls.select(urlkit.extract_year(F.col("url")).alias("year"))
-        .groupBy("year")
-        .agg(F.count("*").alias("cnt"))
+def q_simhash_groups(spark, sf_dir):
+    """SimHash exact-64-bit duplicate groups on planted exact copies.
+
+    SimHash is computed over the distinct-token set, so identical token sets
+    ⇒ identical simhash — the DuckDB oracle groups by the sorted distinct
+    token set (verified equivalent on this corpus; a cross-set 64-bit
+    collision would be a genuine hash accident)."""
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 60)
+    dupes = docs.select(
+        (F.col("doc_id") + 1_000_000).alias("doc_id"), "text"
+    )
+    both = docs.select("doc_id", "text").unionByName(dupes)
+    groups = dedup.simhash_dup_groups(both)
+    return groups.select(
+        F.element_at("doc_ids", 1).alias("min_id"), F.col("n").alias("n_dups")
     )
 
 
-SQL_URL_YEAR = f"""{ORACLE_URLS_CTE}
-SELECT year, CAST(COUNT(*) AS BIGINT) AS cnt FROM (
-  SELECT COALESCE(
-    NULLIF(regexp_extract(string_split(path, '/')[-1], '(19|20)[0-9][0-9]', 0), ''),
-    NULLIF(regexp_extract(query, '(19|20)[0-9][0-9]', 0), ''),
-    NULLIF(regexp_extract(path, '(19|20)[0-9][0-9]', 0), ''),
-    'No Year') AS year
-  FROM parsed
-) GROUP BY year"""
-
-
-def q_url_document_flags(spark, sf_dir):
-    """F8: document-URL predicate → per-flag counts."""
-    urls = _urls_df(spark, sf_dir)
-    return (
-        urls.select(urlkit.is_document_url(F.col("url")).alias("is_document"))
-        .groupBy("is_document")
-        .agg(F.count("*").alias("cnt"))
-    )
-
-
-SQL_URL_DOCUMENT = f"""{ORACLE_URLS_CTE}
-SELECT regexp_matches(lower(path), '\\.(pdf|doc|docx|xls|xlsx|ppt|pptx|txt|rtf|csv)$') AS is_document,
-       CAST(COUNT(*) AS BIGINT) AS cnt
-FROM parsed GROUP BY 1"""
-
-
-def q_url_ignore_filter(spark, sf_dir):
-    """F2: ignore-pattern regex filter — surviving urls.
-
-    Uses the FUSED single-rlike form (r6): the url here is the synthesized
-    CASE expression, and pushdown substitutes that tree into every term of
-    the contains/endswith decomposition — ~30 CASE evaluations per row
-    (measured 1.3 s vs 0.35 s at sf1-shape).  One alternation references
-    the url exactly once; property-tested equivalent (tests/test_urlkit.py)
-    and hash-identical on the gate."""
-    urls = _urls_df(spark, sf_dir)
-    return urls.filter(~urlkit.is_ignored_fused(F.col("url"))).select("url")
-
-
-_IGNORE_RE_SQL = (
-    "(logout|login|signin|signout"
-    "|\\.(zip|rar|exe|dmg|jpeg|png|gif|mov|jpg|mp3|m4v|avi|mp4|aspx)$"
-    "|\\.jpg|/404)"
+SQL_SIMHASH_GROUPS = """WITH combined AS (
+  SELECT doc_id, text FROM documents WHERE doc_id < 60
+  UNION ALL
+  SELECT doc_id + 1000000, text FROM documents WHERE doc_id < 60
+), keyed AS (
+  SELECT doc_id,
+    list_sort(list_distinct(list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> ''))) AS key
+  FROM combined
 )
+SELECT CAST(MIN(doc_id) AS BIGINT) AS min_id, CAST(COUNT(*) AS BIGINT) AS n_dups
+FROM keyed GROUP BY key HAVING COUNT(*) > 1"""
+_register(q_simhash_groups, SQL_SIMHASH_GROUPS)
 
-SQL_URL_IGNORE = f"""{ORACLE_URLS_CTE}
-SELECT url FROM parsed WHERE NOT regexp_matches(url, '{_IGNORE_RE_SQL}', 'i')"""
 
+def q_extract_text(spark, sf_dir):
+    """Flagship pandas UDF: HTML→markdown over the synthetic pages table.
+    Returns (n_pages, n_identical): pages processed and pages whose UDF
+    output is byte-identical to the expected text column. The generator is
+    seed-pinned, so both numbers are constants the DuckDB oracle asserts:
+    gen_corpus(3, 60, 42) yields exactly 60 html pages, and the per-row
+    invariant requires n_identical == n_pages."""
+    from ..functions.udfs import extract_text_udf
+    from ..sources.corpus import corpus_to_spark, gen_corpus
 
-def q_url_host_counts(spark, sf_dir):
-    """A2: group-by host (parse_url on the Spark side)."""
-    urls = _urls_df(spark, sf_dir)
-    return (
-        urls.select(urlkit.url_host(F.col("url")).alias("host"))
-        .groupBy("host")
-        .agg(F.count("*").alias("cnt"))
+    corpus = corpus_to_spark(spark, gen_corpus(n_hosts=3, n_pages=60, seed=42))
+    pages = corpus["pages"].filter(F.col("html").isNotNull())
+    out = pages.select(
+        "url",
+        extract_text_udf(F.col("html")).alias("extracted"),
+        F.col("text").alias("expected"),
+    ).withColumn(
+        "byte_identical",
+        F.col("extracted").cast("binary") == F.col("expected").cast("binary"),
+    )
+    return out.agg(
+        F.count(F.lit(1)).alias("n_pages"),
+        F.sum(F.when(F.col("byte_identical"), 1).otherwise(0)).alias(
+            "n_identical"
+        ),
     )
 
 
-SQL_URL_HOST = f"""{ORACLE_URLS_CTE}
-SELECT host, CAST(COUNT(*) AS BIGINT) AS cnt FROM parsed GROUP BY host"""
+SQL_EXTRACT_TEXT = """SELECT CAST(60 AS BIGINT) AS n_pages,
+CAST(60 AS BIGINT) AS n_identical"""
+_register(q_extract_text, SQL_EXTRACT_TEXT)
 
 
-def q_url_path_prefix_counts(spark, sf_dir):
-    """A3: path truncated to depth 2 → counts."""
-    urls = _urls_df(spark, sf_dir, rebalance=True)
-    return (
-        urls.select(
-            urlkit.path_prefix(urlkit.url_path(F.col("url")), 2).alias("path_prefix")
+def q_media_features(spark, sf_dir):
+    """Real multimodal decode through the mapInPandas plumbing with a
+    DuckDB-checkable invariant (VERDICT r3 task #6): per documents.doc_id a
+    payload is synthesized deterministically (solid-color 24-bit BMP /
+    binary PPM, constant-amplitude 16-bit PCM WAV), decoded by the REAL
+    pure-Python decoders (operators/multimodal.py), and featurized by
+    ``extract_features`` (color histogram + channel means / RMS-peak energy).
+    The emitted integer stats must reproduce the generator arithmetic, which
+    the oracle recomputes in closed form from doc_id — so the decode path,
+    not the generator, is what the gate checks."""
+    import pandas as pd
+
+    from ..operators import multimodal as mm
+
+    docs = (
+        load_table(spark, sf_dir, "documents")
+        .select("doc_id")
+        .filter(F.col("doc_id") < 60)
+    )
+
+    def synth(batches):
+        for pdf in batches:
+            rows = {"media_id": [], "kind": [], "payload": [], "mime": []}
+            for raw_id in pdf["doc_id"]:
+                i = int(raw_id)
+                if i % 3 == 0:
+                    payload = mm.make_bmp(
+                        8, 6, ((i * 37) % 256, (i * 59) % 256, (i * 83) % 256)
+                    )
+                    kind, mime = "image", "image/bmp"
+                elif i % 3 == 1:
+                    payload = mm.make_ppm(
+                        5,
+                        4,
+                        ((i * 11 + 3) % 256, (i * 17 + 5) % 256, (i * 23 + 7) % 256),
+                    )
+                    kind, mime = "image", "image/x-portable-pixmap"
+                else:
+                    payload = mm.make_wav(800 + (i % 5) * 80, (i * 13) % 1000)
+                    kind, mime = "audio", "audio/wav"
+                rows["media_id"].append(i)
+                rows["kind"].append(kind)
+                rows["payload"].append(payload)
+                rows["mime"].append(mime)
+            yield pd.DataFrame(rows)
+
+    media = docs.mapInPandas(synth, schema=mm.MEDIA_SCHEMA)
+    meta = mm.decode_media_meta(media)
+    feats = mm.extract_features(media, dim=64)
+    is_img = F.col("format").isin("bmp", "ppm")
+    px = lambda idx: (  # noqa: E731
+        F.when(
+            is_img,
+            F.round(F.element_at("feature", idx) * 255).cast("int"),
+        ).otherwise(F.lit(-1))
+    )
+    return meta.join(feats, "media_id").select(
+        F.col("media_id").cast("bigint").alias("media_id"),
+        "format",
+        F.col("width").cast("int").alias("width"),
+        F.col("height").cast("int").alias("height"),
+        F.col("duration_ms").cast("int").alias("duration_ms"),
+        px(49).alias("mean_r"),
+        px(50).alias("mean_g"),
+        px(51).alias("mean_b"),
+        F.when(
+            F.col("format") == "wav",
+            F.round(F.element_at("feature", 2) * 32768).cast("int"),
         )
-        .groupBy("path_prefix")
-        .agg(F.count("*").alias("cnt"))
+        .otherwise(F.lit(-1))
+        .alias("peak"),
     )
 
 
-SQL_URL_PATH_PREFIX = f"""{ORACLE_URLS_CTE}
-SELECT CASE WHEN regexp_extract(rtrim(path, '/'), '^/[^/]+(/[^/]+)?', 0) = ''
-            THEN '/' ELSE regexp_extract(rtrim(path, '/'), '^/[^/]+(/[^/]+)?', 0) END AS path_prefix,
-       CAST(COUNT(*) AS BIGINT) AS cnt
-FROM parsed GROUP BY 1"""
-
-
-def q_frontier_dedup(spark, sf_dir):
-    """J1: the load-bearing anti-join — candidates ∖ seen."""
-    urls = _urls_df(spark, sf_dir)
-    candidates = urls.filter(F.col("doc_id") % 2 == 0).select("url")
-    seen = urls.filter(F.col("doc_id") % 3 == 0).select("url")
-    return candidates.join(seen, "url", "left_anti").select("url").distinct()
-
-
-SQL_FRONTIER_DEDUP = f"""{ORACLE_URLS_CTE}
-SELECT DISTINCT url FROM parsed c WHERE doc_id % 2 = 0
-  AND NOT EXISTS (SELECT 1 FROM parsed s WHERE s.doc_id % 3 = 0 AND s.url = c.url)"""
-
-
-def q_politeness_rank(spark, sf_dir):
-    """§2.5: per-host budget via window ranking (budget 8 for host0, else 4)."""
-    urls = _urls_df(spark, sf_dir).dropDuplicates(["url"])
-    win = Window.partitionBy("host").orderBy("url")
-    budget = F.when(F.col("host").startswith("host0"), 8).otherwise(4)
-    return (
-        urls.withColumn("rnk", F.row_number().over(win))
-        .filter(F.col("rnk") <= budget)
-        .select("host", "url", "rnk")
-    )
-
-
-SQL_POLITENESS = f"""{ORACLE_URLS_CTE}
-SELECT host, url, rnk FROM (
-  SELECT host, url, CAST(ROW_NUMBER() OVER (PARTITION BY host ORDER BY url) AS INT) AS rnk
-  FROM (SELECT DISTINCT host, url FROM parsed)
-) WHERE rnk <= CASE WHEN host LIKE 'host0%' THEN 8 ELSE 4 END"""
-
-
-def q_robots_gate(spark, sf_dir):
-    """F4/J4: per-host Disallow-prefix gating via broadcast rules."""
-    from ..operators.robots import aggregate_rules, robots_allow
-
-    urls = _urls_df(spark, sf_dir).dropDuplicates(["url"])
-    rules = spark.createDataFrame(
-        [
-            ("host1.example.com", "/admin"),
-            ("host1.example.com", "/media"),
-            ("host3.example.com", "/sec"),
-            ("host4.ubl.com.pk", "/united"),
-        ],
-        "host string, disallow_prefix string",
-    )
-    links = urls.withColumn("path", urlkit.url_path(F.col("url")))
-    return robots_allow(links, aggregate_rules(rules)).select("url")
-
-
-SQL_ROBOTS = f"""{ORACLE_URLS_CTE}
-SELECT url FROM (SELECT DISTINCT url, host, path FROM parsed) p
-WHERE NOT EXISTS (
-  SELECT 1 FROM (VALUES ('host1.example.com', '/admin'),
-                        ('host1.example.com', '/media'),
-                        ('host3.example.com', '/sec'),
-                        ('host4.ubl.com.pk', '/united')) r(host, prefix)
-  WHERE r.host = p.host AND p.path LIKE r.prefix || '%')"""
-
-
-def q_robots_parse(spark, sf_dir):
-    """S3 upstream half: raw robots.txt text → (host, disallow_prefix)
-    rules, the reference's exact line scan (apollo.py:260-264) as pure
-    Catalyst (split → explode → startswith → substring+trim → distinct).
-
-    Bodies are synthesized per doc_id with every parser edge the reference
-    semantics pin: a CRLF-terminated line (trailing \\r stripped), an empty
-    ``Disallow:`` (dropped), a lowercase ``disallow:`` (ignored — exact
-    case), an indented ``  Disallow:`` (ignored — no whitespace tolerance),
-    a path containing a colon (split on FIRST colon only), an ``Allow:``
-    line and a ``User-agent:`` header (both ignored — the reference applies
-    every Disallow to every agent). Hosts repeat across doc_ids, so the
-    DISTINCT set is what survives."""
-    from ..operators.robots import parse_robots
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    d = F.col("doc_id")
-    line_admin = F.concat(F.lit("Disallow: /admin"), (d % 5).cast("string"))
-    line_edge = (
-        F.when(d % 4 == 0, F.lit("Disallow:"))
-        .when(d % 4 == 1, F.lit("disallow: /lower"))
-        .when(d % 4 == 2, F.lit("  Disallow: /indent"))
-        .otherwise(F.concat(F.lit("Disallow: /x:y"), (d % 3).cast("string")))
-    )
-    line_media = F.concat(
-        F.lit("Disallow: /media/"), (d % 7).cast("string"), F.lit("\r")
-    )
-    body = F.concat_ws(
-        "\n",
-        F.lit("User-agent: *"),
-        line_admin,
-        line_edge,
-        line_media,
-        F.lit("Allow: /public"),
-    )
-    bodies = docs.select(F.expr(HOST_SQL).alias("host"), body.alias("body"))
-    return parse_robots(bodies)
-
-
-SQL_ROBOTS_PARSE = f"""WITH bodies AS (
-  SELECT {HOST_SQL} AS host,
-         'User-agent: *' || chr(10)
-         || 'Disallow: /admin' || CAST(doc_id % 5 AS STRING) || chr(10)
-         || (CASE doc_id % 4
-               WHEN 0 THEN 'Disallow:'
-               WHEN 1 THEN 'disallow: /lower'
-               WHEN 2 THEN '  Disallow: /indent'
-               ELSE 'Disallow: /x:y' || CAST(doc_id % 3 AS STRING) END) || chr(10)
-         || 'Disallow: /media/' || CAST(doc_id % 7 AS STRING) || chr(13) || chr(10)
-         || 'Allow: /public' AS body
-  FROM documents
-), lines AS (
-  SELECT host, unnest(string_split(body, chr(10))) AS line FROM bodies
-), rules AS (
-  SELECT host,
-         regexp_replace(substring(line, 10), '^\\s+|\\s+$', '', 'g') AS disallow_prefix
-  FROM lines WHERE line LIKE 'Disallow:%'
-)
-SELECT DISTINCT host, disallow_prefix FROM rules WHERE disallow_prefix <> ''"""
-
-
-def q_sitemap_extract(spark, sf_dir):
-    """Sitemap discovery: ``<loc>`` extraction over synthesized urlset XML —
-    whitespace-trimmed, XML-entity-unescaped (``&amp;`` last so an
-    author-escaped ``&amp;lt;`` round-trips), non-http and empty locs
-    dropped, DISTINCT per host. Sub-sitemap ``.xml`` locs are kept (a
-    sitemapindex's children re-enter the fetch loop as ordinary urls)."""
-    from ..operators.sitemap import parse_sitemap_locs
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    d = F.col("doc_id")
-    host = F.expr(HOST_SQL)
-    loc_page = F.concat(
-        F.lit("<loc>https://"), host, F.lit("/page"), d.cast("string"), F.lit("</loc>")
-    )
-    loc_ws = F.concat(
-        F.lit("<loc>\n  https://"), host, F.lit("/ws"), (d % 7).cast("string"), F.lit("  \n</loc>")
-    )
-    loc_ent = F.concat(
-        F.lit("<loc>https://"), host, F.lit("/q?a=1&amp;b="), (d % 5).cast("string"), F.lit("</loc>")
-    )
-    loc_edge = (
-        F.when(d % 3 == 0, F.concat(F.lit("<loc>ftp://"), host, F.lit("/skip</loc>")))
-        .when(d % 3 == 1, F.lit("<loc></loc>"))
-        .otherwise(
-            F.concat(F.lit("<loc>https://sub.example.com/map"), (d % 4).cast("string"), F.lit(".xml</loc>"))
-        )
-    )
-    body = F.concat(
-        F.lit('<?xml version="1.0"?><urlset>'),
-        loc_page, loc_ws, loc_ent, loc_edge,
-        F.lit("</urlset>"),
-    )
-    bodies = docs.select(host.alias("host"), body.alias("body"))
-    return parse_sitemap_locs(bodies)
-
-
-SQL_SITEMAP_EXTRACT = f"""WITH bodies AS (
-  SELECT {HOST_SQL} AS host,
-         '<?xml version="1.0"?><urlset>'
-         || '<loc>https://' || {HOST_SQL} || '/page' || CAST(doc_id AS STRING) || '</loc>'
-         || '<loc>' || chr(10) || '  https://' || {HOST_SQL} || '/ws' || CAST(doc_id % 7 AS STRING) || '  ' || chr(10) || '</loc>'
-         || '<loc>https://' || {HOST_SQL} || '/q?a=1&amp;b=' || CAST(doc_id % 5 AS STRING) || '</loc>'
-         || (CASE doc_id % 3
-               WHEN 0 THEN '<loc>ftp://' || {HOST_SQL} || '/skip</loc>'
-               WHEN 1 THEN '<loc></loc>'
-               ELSE '<loc>https://sub.example.com/map' || CAST(doc_id % 4 AS STRING) || '.xml</loc>' END)
-         || '</urlset>' AS body
-  FROM documents
-), locs AS (
-  SELECT host, unnest(regexp_extract_all(body, '<loc>([^<]*)</loc>', 1)) AS raw
-  FROM bodies
-), urls AS (
-  SELECT host,
-         replace(replace(replace(replace(replace(
-           regexp_replace(raw, '^\\s+|\\s+$', '', 'g'),
-           '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&apos;', ''''), '&amp;', '&') AS url
-  FROM locs
-)
-SELECT DISTINCT host, url FROM urls
-WHERE url LIKE 'http://%' OR url LIKE 'https://%'"""
-
-
-def q_robots_sitemaps(spark, sf_dir):
-    """robots.txt ``Sitemap:`` directive discovery (case-insensitive
-    directive, first-colon split preserving the value's own ``https://``,
-    relative values dropped) — the standard path from a fetched robots body
-    to :func:`..operators.sitemap.parse_sitemap_locs` input."""
-    from ..operators.robots import parse_sitemap_directives
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    d = F.col("doc_id")
-    host = F.expr(HOST_SQL)
-    line_edge = (
-        F.when(d % 4 == 0, F.concat(F.lit("Sitemap: https://"), host, F.lit("/sitemap.xml")))
-        .when(d % 4 == 1, F.concat(F.lit("sitemap: https://"), host, F.lit("/s"), (d % 6).cast("string"), F.lit(".xml")))
-        .when(d % 4 == 2, F.concat(F.lit("SITEMAP:https://"), host, F.lit("/caps.xml")))
-        .otherwise(F.lit("Sitemap: /relative.xml"))
-    )
-    line_shared = F.concat(
-        F.lit("Sitemap: https://cdn.example.com/shared-"), (d % 3).cast("string"), F.lit(".xml")
-    )
-    body = F.concat_ws(
-        "\n", F.lit("User-agent: *"), line_edge, line_shared, F.lit("Disallow: /x")
-    )
-    bodies = docs.select(host.alias("host"), body.alias("body"))
-    return parse_sitemap_directives(bodies)
-
-
-SQL_ROBOTS_SITEMAPS = f"""WITH bodies AS (
-  SELECT {HOST_SQL} AS host,
-         'User-agent: *' || chr(10)
-         || (CASE doc_id % 4
-               WHEN 0 THEN 'Sitemap: https://' || {HOST_SQL} || '/sitemap.xml'
-               WHEN 1 THEN 'sitemap: https://' || {HOST_SQL} || '/s' || CAST(doc_id % 6 AS STRING) || '.xml'
-               WHEN 2 THEN 'SITEMAP:https://' || {HOST_SQL} || '/caps.xml'
-               ELSE 'Sitemap: /relative.xml' END) || chr(10)
-         || 'Sitemap: https://cdn.example.com/shared-' || CAST(doc_id % 3 AS STRING) || '.xml' || chr(10)
-         || 'Disallow: /x' AS body
-  FROM documents
-), lines AS (
-  SELECT host, unnest(string_split(body, chr(10))) AS line FROM bodies
-), vals AS (
-  SELECT host,
-         regexp_replace(substring(line, 9), '^\\s+|\\s+$', '', 'g') AS sitemap_url
-  FROM lines WHERE lower(line) LIKE 'sitemap:%'
-)
-SELECT DISTINCT host, sitemap_url FROM vals
-WHERE sitemap_url LIKE 'http://%' OR sitemap_url LIKE 'https://%'"""
-
-
-def q_crawl_delay_budgets(spark, sf_dir):
-    """Crawl-delay → politeness budgets: parse the de-facto robots
-    extension (case-insensitive directive, try_cast value, per-host MIN)
-    and derive per-host budgets for ``select_batch`` (floor(30 s period /
-    delay), clamped to [1, 20]) — the site's own rate request feeding the
-    scheduler. Bodies exercise the value edges: mixed-case directives, a
-    fractional delay, a non-numeric value (ignored), a missing line, and a
-    second always-valid delay so the MIN merge is live on every host."""
-    from ..operators.politeness import budgets_from_delays
-    from ..operators.robots import parse_crawl_delays
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    d = F.col("doc_id")
-    line_edge = (
-        F.when(d % 5 == 0, F.lit("Crawl-delay: 2"))
-        .when(d % 5 == 1, F.lit("crawl-delay: 0.5"))
-        .when(d % 5 == 2, F.lit("Crawl-Delay: 10"))
-        .when(d % 5 == 3, F.lit("Crawl-delay: fast"))
-        .otherwise(F.lit("# no delay"))
-    )
-    line_num = F.concat(F.lit("Crawl-delay: "), (d % 13 + 1).cast("string"))
-    body = F.concat_ws(
-        "\n", F.lit("User-agent: *"), line_edge, line_num, F.lit("Disallow: /x")
-    )
-    bodies = docs.select(F.expr(HOST_SQL).alias("host"), body.alias("body"))
-    delays = parse_crawl_delays(bodies)
-    budgets = budgets_from_delays(delays, iteration_seconds=30.0, max_budget=20)
-    return delays.join(budgets, "host").select("host", "crawl_delay", "budget")
-
-
-SQL_CRAWL_DELAY_BUDGETS = f"""WITH bodies AS (
-  SELECT {HOST_SQL} AS host,
-         'User-agent: *' || chr(10)
-         || (CASE doc_id % 5
-               WHEN 0 THEN 'Crawl-delay: 2'
-               WHEN 1 THEN 'crawl-delay: 0.5'
-               WHEN 2 THEN 'Crawl-Delay: 10'
-               WHEN 3 THEN 'Crawl-delay: fast'
-               ELSE '# no delay' END) || chr(10)
-         || 'Crawl-delay: ' || CAST(doc_id % 13 + 1 AS STRING) || chr(10)
-         || 'Disallow: /x' AS body
-  FROM documents
-), lines AS (
-  SELECT host, unnest(string_split(body, chr(10))) AS line FROM bodies
-), vals AS (
-  SELECT host,
-         TRY_CAST(regexp_replace(substring(line, 13), '^\\s+|\\s+$', '', 'g') AS DOUBLE) AS d
-  FROM lines WHERE lower(line) LIKE 'crawl-delay:%'
-), delays AS (
-  SELECT host, MIN(d) AS crawl_delay FROM vals
-  WHERE d IS NOT NULL AND d > 0 GROUP BY host
-)
-SELECT host, crawl_delay,
-       CAST(LEAST(GREATEST(1, FLOOR(30.0 / crawl_delay)), 20) AS INTEGER) AS budget
-FROM delays"""
-
-
-def q_backoff_budgets(spark, sf_dir):
-    """Adaptive politeness backoff: per-host next-iteration budgets scaled
-    by the previous superstep's observed error rate —
-    ``greatest(1, (default · ok) div total)`` in exact integer arithmetic
-    (a float error-rate's reduction-order ulp could flip a floor boundary
-    between engines). Synthesis: each doc is one fetch; errors hit a
-    deterministic doc_id stripe so hosts carry different rates."""
-    from ..operators.politeness import budgets_from_error_rates
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    d = F.col("doc_id")
-    log = docs.select(
-        F.expr(HOST_SQL).alias("host"),
-        ((d % 3 == 0) & ((d % 7).isin(2, 3))).cast("int").alias("is_error"),
-    )
-    budgets = budgets_from_error_rates(log, default_budget=8)
-    rates = log.groupBy("host").agg(
-        F.round(
-            F.sum(F.col("is_error").cast("long")).cast("double") / F.count("*"), 6
-        ).alias("err_rate")
-    )
-    return budgets.join(rates, "host").select("host", "budget", "err_rate")
-
-
-SQL_BACKOFF_BUDGETS = f"""WITH log AS (
-  SELECT {HOST_SQL} AS host,
-         CASE WHEN doc_id % 3 = 0 AND doc_id % 7 IN (2, 3) THEN 1 ELSE 0 END AS is_error
-  FROM documents
-), agg AS (
-  SELECT host, COUNT(*) AS n, SUM(is_error) AS e FROM log GROUP BY host
-)
-SELECT host,
-       CAST(GREATEST(1, (8 * (n - e)) // n) AS INTEGER) AS budget,
-       ROUND(CAST(e AS DOUBLE) / n, 6) AS err_rate
-FROM agg"""
-
-
-def q_priority_schedule(spark, sf_dir):
-    """§2.5 priority-queue variant: the SAME budgeted per-host window as
-    ``politeness_rank``, but ordered by a per-url PRIORITY score instead of
-    the BFS (depth, url) order — ``select_batch(order=...)``, the
-    north-star's "per-domain politeness-budget priority queue" with the
-    priority column supplied by the caller (here a deterministic Knuth-hash
-    score standing in for PageRank/OPIC; the real crawl would join
-    ``operators.pagerank`` output). Budget 5/host; ties broken on url so
-    the schedule stays replayable."""
-    from ..operators.politeness import select_batch
-
-    urls = (
-        _urls_df(spark, sf_dir)
-        .groupBy("url", "host")
-        .agg(F.min("doc_id").alias("doc_id"))
-    )
-    frontier = urls.select(
-        "url", "host", ((F.col("doc_id") * 2654435761) % 997).alias("score")
-    )
-    selected, _carry = select_batch(
-        frontier,
-        politeness=None,
-        default_budget=5,
-        order=[F.col("score").desc(), F.col("url").asc()],
-    )
-    return selected.select(
-        "host", "url", F.col("score").cast("long").alias("score")
-    )
-
-
-SQL_PRIORITY_SCHEDULE = f"""{ORACLE_URLS_CTE}
-, u AS (SELECT url, host, MIN(doc_id) AS doc_id FROM parsed GROUP BY url, host),
-scored AS (SELECT host, url, (doc_id * 2654435761) % 997 AS score FROM u)
-SELECT host, url, CAST(score AS BIGINT) AS score FROM (
-  SELECT host, url, score,
-         ROW_NUMBER() OVER (PARTITION BY host ORDER BY score DESC, url) AS rn
-  FROM scored
-) WHERE rn <= 5"""
+SQL_MEDIA_FEATURES = """SELECT CAST(doc_id AS BIGINT) AS media_id,
+  CASE doc_id % 3 WHEN 0 THEN 'bmp' WHEN 1 THEN 'ppm' ELSE 'wav' END AS format,
+  CAST(CASE doc_id % 3 WHEN 0 THEN 8 WHEN 1 THEN 5 ELSE -1 END AS INT) AS width,
+  CAST(CASE doc_id % 3 WHEN 0 THEN 6 WHEN 1 THEN 4 ELSE -1 END AS INT) AS height,
+  CAST(CASE WHEN doc_id % 3 = 2 THEN 100 + (doc_id % 5) * 10 ELSE -1 END AS INT) AS duration_ms,
+  CAST(CASE doc_id % 3 WHEN 0 THEN (doc_id * 37) % 256 WHEN 1 THEN (doc_id * 11 + 3) % 256 ELSE -1 END AS INT) AS mean_r,
+  CAST(CASE doc_id % 3 WHEN 0 THEN (doc_id * 59) % 256 WHEN 1 THEN (doc_id * 17 + 5) % 256 ELSE -1 END AS INT) AS mean_g,
+  CAST(CASE doc_id % 3 WHEN 0 THEN (doc_id * 83) % 256 WHEN 1 THEN (doc_id * 23 + 7) % 256 ELSE -1 END AS INT) AS mean_b,
+  CAST(CASE WHEN doc_id % 3 = 2 THEN (doc_id * 13) % 1000 ELSE -1 END AS INT) AS peak
+FROM documents WHERE doc_id < 60"""
+_register(q_media_features, SQL_MEDIA_FEATURES)
 
 
 # query-stripped path fragment (branch 1 is the only one with a '?query'):
@@ -647,1099 +421,10 @@ WHERE NOT (
       AND (strpos(COALESCE(final_url, url), 'not-found') > 0
            OR strpos(COALESCE(final_url, url), 'error') > 0))
 )"""
+_register(q_redirect_404_filter, SQL_REDIRECT_404)
 
 
-# --------------------------------------------------------------------------
-# Relational operators over the TPC-H-ish tables (SURVEY.md §2.3-2.7)
-# --------------------------------------------------------------------------
-
-
-def q_topk_recent_orders(spark, sf_dir):
-    """O3/O4: sort desc + limit with total tie-break."""
-    orders = load_table(spark, sf_dir, "orders")
-    return orders.orderBy(
-        F.desc("o_orderdate"), F.asc("o_orderkey")
-    ).select("o_orderkey", "o_orderdate").limit(10)
-
-
-SQL_TOPK_ORDERS = """SELECT o_orderkey, o_orderdate FROM orders
-ORDER BY o_orderdate DESC, o_orderkey ASC LIMIT 10"""
-
-
-def q_pagination_orders(spark, sf_dir):
-    """O5: offset/limit pagination."""
-    orders = load_table(spark, sf_dir, "orders")
-    return (
-        orders.orderBy("o_orderkey")
-        .select("o_orderkey", "o_orderstatus")
-        .offset(20)
-        .limit(10)
-    )
-
-
-SQL_PAGINATION = """SELECT o_orderkey, o_orderstatus FROM orders
-ORDER BY o_orderkey OFFSET 20 LIMIT 10"""
-
-
-def q_status_rollup(spark, sf_dir):
-    """A12: rollup with grand total."""
-    orders = load_table(spark, sf_dir, "orders")
-    return orders.rollup("o_orderstatus").agg(
-        F.count("*").alias("cnt"),
-        F.round(F.sum("o_totalprice"), 2).alias("total_price"),
-    )
-
-
-SQL_STATUS_ROLLUP = """SELECT o_orderstatus, CAST(COUNT(*) AS BIGINT) AS cnt,
-ROUND(SUM(o_totalprice), 2) AS total_price
-FROM orders GROUP BY ROLLUP (o_orderstatus)"""
-
-
-def q_semi_join_customers(spark, sf_dir):
-    """U4/J5: left-semi — customers that have orders, per segment."""
-    customer = load_table(spark, sf_dir, "customer")
-    orders = load_table(spark, sf_dir, "orders")
-    return (
-        customer.join(orders, customer.c_custkey == orders.o_custkey, "left_semi")
-        .groupBy("c_mktsegment")
-        .agg(F.count("*").alias("cnt"))
-    )
-
-
-SQL_SEMI_JOIN = """SELECT c_mktsegment, CAST(COUNT(*) AS BIGINT) AS cnt FROM customer
-WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-GROUP BY c_mktsegment"""
-
-
-def q_anti_join_customers(spark, sf_dir):
-    """J2/U3: left-anti — customers with no orders."""
-    customer = load_table(spark, sf_dir, "customer")
-    orders = load_table(spark, sf_dir, "orders")
-    return customer.join(
-        orders, customer.c_custkey == orders.o_custkey, "left_anti"
-    ).select("c_custkey", "c_name")
-
-
-SQL_ANTI_JOIN = """SELECT c_custkey, c_name FROM customer
-WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)"""
-
-
-def q_region_revenue(spark, sf_dir):
-    """J6-shape: 3-way equi-join chain with broadcast dims + agg."""
-    customer = load_table(spark, sf_dir, "customer")
-    orders = load_table(spark, sf_dir, "orders")
-    nation = load_table(spark, sf_dir, "nation")
-    region = load_table(spark, sf_dir, "region")
-    return (
-        orders.join(customer, orders.o_custkey == customer.c_custkey)
-        .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-        .groupBy("r_name")
-        .agg(
-            F.count("*").alias("n_orders"),
-            F.round(F.sum("o_totalprice"), 2).alias("revenue"),
-        )
-    )
-
-
-SQL_REGION_REVENUE = """SELECT r_name, CAST(COUNT(*) AS BIGINT) AS n_orders,
-ROUND(SUM(o_totalprice), 2) AS revenue
-FROM orders JOIN customer ON o_custkey = c_custkey
-JOIN nation ON c_nationkey = n_nationkey
-JOIN region ON n_regionkey = r_regionkey
-GROUP BY r_name"""
-
-
-def q_pricing_summary(spark, sf_dir):
-    """TPC-H Q1 shape: the canonical partial/final hash aggregate."""
-    lineitem = load_table(spark, sf_dir, "lineitem")
-    return (
-        lineitem.filter(F.col("l_shipdate") <= F.lit("2000-09-02"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("sum_disc_price"),
-            F.round(F.avg("l_discount"), 6).alias("avg_disc"),
-            F.count("*").alias("count_order"),
-        )
-    )
-
-
-SQL_PRICING_SUMMARY = """SELECT l_returnflag, l_linestatus,
-ROUND(SUM(l_quantity), 2) AS sum_qty,
-ROUND(SUM(l_extendedprice), 2) AS sum_base_price,
-ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-ROUND(AVG(l_discount), 6) AS avg_disc,
-CAST(COUNT(*) AS BIGINT) AS count_order
-FROM lineitem WHERE l_shipdate <= TIMESTAMP '2000-09-02 00:00:00'
-GROUP BY l_returnflag, l_linestatus"""
-
-
-def q_events_window(spark, sf_dir):
-    """§2.5: row_number per user — first 3 events by time."""
-    events = load_table(spark, sf_dir, "events")
-    win = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return (
-        events.withColumn("rnk", F.row_number().over(win))
-        .filter(F.col("rnk") <= 3)
-        .select("user_id", "event_id", "rnk")
-    )
-
-
-SQL_EVENTS_WINDOW = """SELECT user_id, event_id, rnk FROM (
-SELECT user_id, event_id,
-CAST(ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS INT) AS rnk
-FROM events) WHERE rnk <= 3"""
-
-
-def q_events_tumbling(spark, sf_dir):
-    """Streaming analog: tumbling 1-hour windowed counts per event type."""
-    events = load_table(spark, sf_dir, "events")
-    return (
-        events.groupBy(
-            F.date_trunc("hour", F.col("ts")).alias("window_start"),
-            "event_type",
-        )
-        .agg(
-            F.count("*").alias("cnt"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-        )
-    )
-
-
-SQL_EVENTS_TUMBLING = """SELECT date_trunc('hour', ts) AS window_start, event_type,
-CAST(COUNT(*) AS BIGINT) AS cnt, ROUND(SUM(value), 2) AS total_value
-FROM events GROUP BY 1, 2"""
-
-
-def q_events_json(spark, sf_dir):
-    """JSON scalar extraction from the props column."""
-    events = load_table(spark, sf_dir, "events")
-    return (
-        events.select(
-            F.get_json_object(F.col("props"), "$.k").cast("int").alias("k_bucket")
-        )
-        .groupBy("k_bucket")
-        .agg(F.count("*").alias("cnt"))
-    )
-
-
-SQL_EVENTS_JSON = """SELECT CAST(json_extract_string(props, '$.k') AS INT) AS k_bucket,
-CAST(COUNT(*) AS BIGINT) AS cnt FROM events GROUP BY 1"""
-
-
-def q_sessionize_events(spark, sf_dir):
-    """Gap-based sessionization (30-min inactivity): lag + cumulative sum of
-    session-break flags per user — the stateful-streaming classic expressed
-    as two windows."""
-    events = load_table(spark, sf_dir, "events")
-    order_win = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    prev_ts = F.lag("ts").over(order_win)
-    is_break = F.when(
-        prev_ts.isNull()
-        | (F.unix_timestamp("ts") - F.unix_timestamp(prev_ts) > 1800),
-        1,
-    ).otherwise(0)
-    with_breaks = events.withColumn("brk", is_break)
-    session_id = F.sum("brk").over(
-        order_win.rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return (
-        with_breaks.withColumn("session_id", session_id.cast("int"))
-        .groupBy("user_id", "session_id")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 2).alias("session_value"),
-        )
-    )
-
-
-SQL_SESSIONIZE = """WITH flagged AS (
-  SELECT user_id, value,
-    CASE WHEN lag(ts) OVER w IS NULL
-           OR epoch(ts) - epoch(lag(ts) OVER w) > 1800
-         THEN 1 ELSE 0 END AS brk,
-    ts, event_id
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-), sessions AS (
-  SELECT user_id, value,
-    CAST(SUM(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id
-         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS INT) AS session_id
-  FROM flagged
-)
-SELECT user_id, session_id, CAST(COUNT(*) AS BIGINT) AS n_events,
-ROUND(SUM(value), 2) AS session_value
-FROM sessions GROUP BY user_id, session_id"""
-
-
-def q_status_pivot(spark, sf_dir):
-    """A13 shape: pivot success/fail tallies — conditional aggregation."""
-    events = load_table(spark, sf_dir, "events")
-    return events.groupBy("event_type").agg(
-        F.sum(F.when(F.col("value") >= 100, 1).otherwise(0)).alias("high"),
-        F.sum(F.when(F.col("value") < 100, 1).otherwise(0)).alias("low"),
-    )
-
-
-SQL_STATUS_PIVOT = """SELECT event_type,
-CAST(SUM(CASE WHEN value >= 100 THEN 1 ELSE 0 END) AS BIGINT) AS high,
-CAST(SUM(CASE WHEN value < 100 THEN 1 ELSE 0 END) AS BIGINT) AS low
-FROM events GROUP BY event_type"""
-
-
-def q_distinct_users(spark, sf_dir):
-    """Exact distinct counting per group (the dedup-cardinality metric)."""
-    events = load_table(spark, sf_dir, "events")
-    return events.groupBy("event_type").agg(
-        F.countDistinct("user_id").alias("n_users")
-    )
-
-
-SQL_DISTINCT_USERS = """SELECT event_type,
-CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users
-FROM events GROUP BY event_type"""
-
-
-def q_url_filename(spark, sf_dir):
-    """Scalar-function coverage: basename extraction (year_extractor.py:93)."""
-    urls = _urls_df(spark, sf_dir)
-    return (
-        urls.select(urlkit.url_filename(F.col("url")).alias("filename"))
-        .groupBy("filename")
-        .agg(F.count("*").alias("cnt"))
-    )
-
-
-SQL_URL_FILENAME = f"""{ORACLE_URLS_CTE}
-SELECT string_split(path, '/')[-1] AS filename, CAST(COUNT(*) AS BIGINT) AS cnt
-FROM parsed GROUP BY 1"""
-
-
-POST_CATEGORIES = {
-    "query_engine": ["query", "filter", "join", "scan"],
-    "streaming": ["stream", "window", "batch", "value"],
-    "storage": ["table", "row", "data", "key"],
-}
-
-
-def q_post_categorize(spark, sf_dir):
-    """F14: keyword-argmax post categorizer (ties → first category, zero →
-    'other', empty → 'uncategorized') over documents.text."""
-    docs = load_table(spark, sf_dir, "documents")
-    return (
-        docs.select(
-            textstats.categorize_post(F.col("text"), POST_CATEGORIES).alias(
-                "post_category"
-            )
-        )
-        .groupBy("post_category")
-        .agg(F.count("*").alias("cnt"))
-    )
-
-
-def _sql_rx(kw):
-    """Regex-quote a keyword and escape SQL single quotes for embedding in a
-    DuckDB regexp literal (mirrors textstats._kw_rx on the Spark side)."""
-    import re
-
-    return re.escape(kw).replace("'", "''")
-
-
-def _cat_score_sql(keywords):
-    return " + ".join(
-        f"CASE WHEN regexp_matches(text, '\\b{_sql_rx(kw)}\\b', 'i') THEN 1 ELSE 0 END"
-        for kw in keywords
-    )
-
-
-SQL_POST_CATEGORIZE = f"""SELECT post_category, CAST(COUNT(*) AS BIGINT) AS cnt FROM (
-SELECT CASE
-  WHEN text IS NULL OR trim(text) = '' THEN 'uncategorized'
-  WHEN greatest(qe, st, sto) = 0 THEN 'other'
-  WHEN qe = greatest(qe, st, sto) THEN 'query_engine'
-  WHEN st = greatest(qe, st, sto) THEN 'streaming'
-  ELSE 'storage' END AS post_category
-FROM (
-  SELECT {_cat_score_sql(POST_CATEGORIES['query_engine'])} AS qe,
-         {_cat_score_sql(POST_CATEGORIES['streaming'])} AS st,
-         {_cat_score_sql(POST_CATEGORIES['storage'])} AS sto,
-         text
-  FROM documents)) GROUP BY post_category"""
-
-
-# content-type → extension map (reference downloader.py:260-277 shape)
-_EXT_CONTENT_TYPES = {
-    "pdf": "application/pdf",
-    "xlsx": "application/vnd.openxmlformats-officedocument.spreadsheetml.sheet",
-    "docx": "application/vnd.openxmlformats-officedocument.wordprocessingml.document",
-    "csv": "text/csv",
-    "txt": "text/plain",
-}
-
-
-def q_download_manifest(spark, sf_dir):
-    """S9: download-manifest projection — document urls not yet downloaded,
-    with extension and content-type (literal map lookup), skip-if-exists as
-    an anti-join (downloader.py:223-233)."""
-    urls = _urls_df(spark, sf_dir).dropDuplicates(["url"])
-    docs = urls.filter(urlkit.is_document_url(F.col("url")))
-    ext = F.element_at(
-        F.split(F.lower(urlkit.url_path(F.col("url"))), r"\."), -1
-    )
-    ct_map = F.create_map(
-        *[F.lit(x) for pair in _EXT_CONTENT_TYPES.items() for x in pair]
-    )
-    already = urls.filter(F.col("doc_id") % 5 == 0).select("url")
-    return (
-        docs.join(already, "url", "left_anti")
-        .select(
-            "url",
-            ext.alias("ext"),
-            F.coalesce(ct_map[ext], F.lit("application/octet-stream")).alias(
-                "content_type"
-            ),
-        )
-    )
-
-
-SQL_DOWNLOAD_MANIFEST = f"""{ORACLE_URLS_CTE}
-SELECT url, ext,
-  CASE ext
-    WHEN 'pdf' THEN 'application/pdf'
-    WHEN 'xlsx' THEN 'application/vnd.openxmlformats-officedocument.spreadsheetml.sheet'
-    WHEN 'docx' THEN 'application/vnd.openxmlformats-officedocument.wordprocessingml.document'
-    WHEN 'csv' THEN 'text/csv'
-    WHEN 'txt' THEN 'text/plain'
-    ELSE 'application/octet-stream' END AS content_type
-FROM (
-  SELECT DISTINCT url, string_split(lower(path), '.')[-1] AS ext
-  FROM parsed p
-  WHERE regexp_matches(lower(path), '\\.(pdf|doc|docx|xls|xlsx|ppt|pptx|txt|rtf|csv)$')
-    AND NOT EXISTS (SELECT 1 FROM parsed d WHERE d.doc_id % 5 = 0 AND d.url = p.url)
-)"""
-
-
-# FB keyword report (F12/F13/A11): keywords are data; the list below mixes
-# corpus words with a regex-metachar keyword ('a.b') to pin the re.escape
-# semantics (fb_scrape_service.py:186) in the correctness gate.
-FB_KEYWORDS = ["query", "spark", "batch", "win", "a.b"]
-
-
-def q_fb_keyword_counts(spark, sf_dir):
-    """A11: per-keyword loose (substring) / strict (word-boundary) match
-    counts over documents.text — the reference's headline FB-scrape output
-    (fb_scrape_service.py:155-189, 333-340)."""
-    docs = load_table(spark, sf_dir, "documents")
-    return textstats.keyword_match_counts(docs, F.col("text"), FB_KEYWORDS)
-
-
-def _kw_counts_sql(kw):
-    rx = _sql_rx(kw.lower())
-    lit = kw.lower().replace("'", "''")
-    name = kw.replace("'", "''")
-    return f"""SELECT '{name}' AS keyword,
-  CAST(SUM(CASE WHEN contains(lower(text), '{lit}') THEN 1 ELSE 0 END) AS BIGINT) AS loose_matches,
-  CAST(SUM(CASE WHEN contains(lower(text), '{lit}')
-                 AND regexp_matches(lower(text), '\\b{rx}\\b') THEN 1 ELSE 0 END) AS BIGINT) AS strict_matches
-FROM documents"""
-
-
-SQL_FB_KEYWORD_COUNTS = "\nUNION ALL\n".join(_kw_counts_sql(k) for k in FB_KEYWORDS)
-
-
-def q_filename_sanitize(spark, sf_dir):
-    """F16: filename sanitizer — one translate() replacing the 9 invalid
-    filename characters with '_' (fb_scrape_service.py:149-153). Applied to
-    full urls (which carry '/', ':', '?') as the downloader does when naming
-    files after their source url."""
-    urls = _urls_df(spark, sf_dir).dropDuplicates(["url"])
-    return urls.select(
-        "url", urlkit.sanitize_filename(F.col("url")).alias("safe_name")
-    )
-
-
-SQL_FILENAME_SANITIZE = f"""{ORACLE_URLS_CTE}
-SELECT DISTINCT url,
-  translate(url, '<>:"/\\|?*', '_________') AS safe_name
-FROM parsed"""
-
-
-def q_page_metadata(spark, sf_dir):
-    """S8: metadata sidecar columns — document_id = sha2(content, 256) plus a
-    sanitized display name (scraper.py:303-330's document_id/name fields)."""
-    docs = load_table(spark, sf_dir, "documents")
-    name = F.substring(F.trim(F.col("text")), 1, 32)
-    return docs.select(
-        "doc_id",
-        F.sha2(F.col("text"), 256).alias("content_sha"),
-        urlkit.sanitize_filename(name).alias("doc_name"),
-        F.length("text").alias("n_bytes"),
-    )
-
-
-SQL_PAGE_METADATA = """SELECT doc_id,
-  sha256(text) AS content_sha,
-  translate(substr(trim(text), 1, 32), '<>:"/\\|?*', '_________') AS doc_name,
-  CAST(length(text) AS INT) AS n_bytes
-FROM documents"""
-
-
-def q_events_recent(spark, sf_dir):
-    """S11: ts-BETWEEN windowed source scan (the FB since/until fetch,
-    fb_scrape_service.py:221-304) — the range predicate reaches the parquet
-    scan as PushedFilters; tests/test_plans.py additionally asserts partition
-    pruning on a date-partitioned layout of the same table."""
-    events = load_table(spark, sf_dir, "events")
-    return (
-        events.filter(
-            (F.col("ts") >= F.lit("2024-01-08 00:00:00").cast("timestamp"))
-            & (F.col("ts") < F.lit("2024-01-15 00:00:00").cast("timestamp"))
-        )
-        .groupBy(F.to_date("ts").alias("day"), "event_type")
-        .agg(
-            F.count("*").alias("cnt"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-        )
-    )
-
-
-SQL_EVENTS_RECENT = """SELECT CAST(ts AS DATE) AS day, event_type,
-CAST(COUNT(*) AS BIGINT) AS cnt, ROUND(SUM(value), 2) AS total_value
-FROM events
-WHERE ts >= TIMESTAMP '2024-01-08 00:00:00' AND ts < TIMESTAMP '2024-01-15 00:00:00'
-GROUP BY 1, 2"""
-
-
-def q_downloads_by_year(spark, sf_dir):
-    """A13 on the real manifest: download results tallied per extracted year
-    (downloader.py:381-410) — manifest (S9) × year extractor (F11) × a
-    deterministic success flag, pivoted to success/fail counts."""
-    manifest = q_download_manifest(spark, sf_dir)
-    # deterministic download outcome both dialects can compute: first hex
-    # digit of md5(url) < '8' (≈50/50) — stands in for the HTTP result
-    with_year = manifest.select(
-        "url",
-        urlkit.extract_year(F.col("url")).alias("year"),
-        (F.substring(F.md5(F.col("url")), 1, 1) < F.lit("8")).alias("ok"),
-    )
-    return with_year.groupBy("year").agg(
-        F.sum(F.when(F.col("ok"), 1).otherwise(0)).alias("succeeded"),
-        F.sum(F.when(~F.col("ok"), 1).otherwise(0)).alias("failed"),
-    )
-
-
-SQL_DOWNLOADS_BY_YEAR = f"""{ORACLE_URLS_CTE}
-, manifest AS (
-  SELECT DISTINCT url, path, query FROM parsed p
-  WHERE regexp_matches(lower(path), '\\.(pdf|doc|docx|xls|xlsx|ppt|pptx|txt|rtf|csv)$')
-    AND NOT EXISTS (SELECT 1 FROM parsed d WHERE d.doc_id % 5 = 0 AND d.url = p.url)
-), yeared AS (
-  SELECT COALESCE(
-    NULLIF(regexp_extract(string_split(path, '/')[-1], '(19|20)[0-9][0-9]', 0), ''),
-    NULLIF(regexp_extract(query, '(19|20)[0-9][0-9]', 0), ''),
-    NULLIF(regexp_extract(path, '(19|20)[0-9][0-9]', 0), ''),
-    'No Year') AS year,
-    substr(md5(url), 1, 1) < '8' AS ok
-  FROM manifest
-)
-SELECT year,
-CAST(SUM(CASE WHEN ok THEN 1 ELSE 0 END) AS BIGINT) AS succeeded,
-CAST(SUM(CASE WHEN ok THEN 0 ELSE 1 END) AS BIGINT) AS failed
-FROM yeared GROUP BY year"""
-
-
-def q_attachment_stats(spark, sf_dir):
-    """F17/S12: nested array<struct> projection — posts carry
-    ``attachments: array<struct<type,url,width,height>>``
-    (fb_scrape_service.py:400-428, deal_scrape_service.py:244-331); project
-    with ``transform(attachments, a -> a.url)``, flatten with explode, and
-    roll up per attachment type. The attachments are synthesized
-    deterministically from documents (every doc gets an image; every third a
-    video), parsed from a shared JSON fragment so the Spark side exercises
-    real ArrayType(StructType) columns."""
-    docs = load_table(spark, sf_dir, "documents")
-    att_schema = "array<struct<type:string,url:string,width:int,height:int>>"
-    json_col = F.concat(
-        F.lit('[{"type":"image","url":"https://cdn.example.com/img/'),
-        F.col("doc_id").cast("string"),
-        F.lit('.png","width":'),
-        (F.col("doc_id") % 800 + 100).cast("string"),
-        F.lit(',"height":'),
-        (F.col("doc_id") % 600 + 100).cast("string"),
-        F.lit("}"),
-        F.when(
-            F.col("doc_id") % 3 == 0,
-            F.concat(
-                F.lit(',{"type":"video","url":"https://cdn.example.com/vid/'),
-                F.col("doc_id").cast("string"),
-                F.lit('.mp4","width":640,"height":480}'),
-            ),
-        ).otherwise(F.lit("")),
-        F.lit("]"),
-    )
-    posts = docs.select(
-        "doc_id", F.from_json(json_col, att_schema).alias("attachments")
-    )
-    urls = posts.select(
-        F.explode(F.transform("attachments", lambda a: a["url"])).alias("att_url")
-    )
-    att = posts.select(F.explode("attachments").alias("att"))
-    by_type = att.groupBy(F.col("att.type").alias("att_type")).agg(
-        F.count("*").alias("cnt"),
-        F.round(F.avg("att.width"), 4).alias("avg_width"),
-    )
-    n_urls = urls.agg(F.count("*").alias("n")).select("n")
-    # single result: per-type rollup joined with the projected-url count
-    return by_type.crossJoin(F.broadcast(n_urls).withColumnRenamed("n", "total_urls"))
-
-
-SQL_ATTACHMENT_STATS = """WITH att AS (
-  SELECT 'image' AS att_type,
-         CAST(doc_id % 800 + 100 AS INT) AS width
-  FROM documents
-  UNION ALL
-  SELECT 'video', 640 FROM documents WHERE doc_id % 3 = 0
-)
-SELECT att_type, CAST(COUNT(*) AS BIGINT) AS cnt,
-ROUND(AVG(width), 4) AS avg_width,
-(SELECT CAST(COUNT(*) AS BIGINT) FROM att) AS total_urls
-FROM att GROUP BY att_type"""
-
-
-def q_union_distinct(spark, sf_dir):
-    """U1/U2: union + distinct across heterogeneous sources."""
-    events = load_table(spark, sf_dir, "events")
-    orders = load_table(spark, sf_dir, "orders")
-    a = events.select(F.col("event_type").alias("tag"))
-    b = orders.select(F.col("o_orderpriority").alias("tag"))
-    return a.unionByName(b).distinct()
-
-
-SQL_UNION_DISTINCT = """SELECT event_type AS tag FROM events
-UNION SELECT o_orderpriority AS tag FROM orders"""
-
-
-# --------------------------------------------------------------------------
-# Training-data pipeline operators (documents / embeddings)
-# --------------------------------------------------------------------------
-
-
-def q_dedup_exact(spark, sf_dir):
-    """Exact dedup via normalized-text fingerprint, planted duplicates."""
-    docs = load_table(spark, sf_dir, "documents")
-    dupes = docs.filter(F.col("doc_id") < 50).withColumn(
-        "doc_id", F.col("doc_id") + 1_000_000
-    )
-    both = docs.unionByName(dupes)
-    groups = dedup.duplicate_groups(both)
-    return groups.select(
-        F.element_at("doc_ids", 1).alias("min_id"),
-        F.col("n_dups"),
-    )
-
-
-SQL_DEDUP_EXACT = """WITH combined AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 1000000 AS doc_id, text FROM documents WHERE doc_id < 50
-), keyed AS (
-  SELECT doc_id, lower(regexp_replace(trim(text), '\\s+', ' ', 'g')) AS norm
-  FROM combined
-)
-SELECT CAST(MIN(doc_id) AS BIGINT) AS min_id, CAST(COUNT(*) AS BIGINT) AS n_dups
-FROM keyed GROUP BY norm HAVING COUNT(*) > 1"""
-
-
-def q_token_counts(spark, sf_dir):
-    """Whitespace token counting per document (length histogram)."""
-    docs = load_table(spark, sf_dir, "documents")
-    return (
-        docs.select(textstats.token_count(F.col("text")).alias("n_tokens"))
-        .groupBy("n_tokens")
-        .agg(F.count("*").alias("cnt"))
-    )
-
-
-SQL_TOKEN_COUNTS = """SELECT n_tokens, CAST(COUNT(*) AS BIGINT) AS cnt FROM (
-SELECT CAST(length(list_filter(string_split_regex(text, '\\s+'), x -> x <> '')) AS INT) AS n_tokens
-FROM documents) GROUP BY n_tokens"""
-
-
-def q_quality_scores(spark, sf_dir):
-    """Quality-band scoring: length / punctuation / word-length heuristics."""
-    docs = load_table(spark, sf_dir, "documents", rebalance=True)
-    return (
-        docs.select(
-            "doc_id", F.round(textstats.quality_score(F.col("text")), 4).alias("quality")
-        )
-    )
-
-
-SQL_QUALITY = """SELECT doc_id, ROUND((
-  CASE WHEN n_tokens BETWEEN 10 AND 100000 THEN 1.0 ELSE 0.0 END
-+ CASE WHEN (CASE WHEN n > 0 THEN punct / n ELSE 0.0 END) <= 0.2 THEN 1.0 ELSE 0.0 END
-+ CASE WHEN (CASE WHEN n_tokens > 0 THEN chars / n_tokens ELSE 0.0 END) BETWEEN 2.0 AND 12.0 THEN 1.0 ELSE 0.0 END
-) / 3.0, 4) AS quality FROM (
-  SELECT doc_id,
-    CAST(length(text) AS DOUBLE) AS n,
-    CAST(length(text) - length(regexp_replace(text, '[^\\w\\s]', '', 'g')) AS DOUBLE) AS punct,
-    CAST(length(list_filter(string_split_regex(text, '\\s+'), x -> x <> '')) AS DOUBLE) AS n_tokens,
-    CAST(list_sum(list_transform(list_filter(string_split_regex(text, '\\s+'), x -> x <> ''), x -> length(x))) AS DOUBLE) AS chars
-  FROM documents)"""
-
-
-def q_lang_detect(spark, sf_dir):
-    """Stopword-heuristic language ID → counts per detected language."""
-    docs = load_table(spark, sf_dir, "documents", rebalance=True)
-    return (
-        docs.select(textstats.detect_lang(F.col("text")).alias("detected"))
-        .groupBy("detected")
-        .agg(F.count("*").alias("cnt"))
-    )
-
-
-def _lang_hits_sql(lang_words):
-    return " + ".join(
-        f"CASE WHEN regexp_matches(lower(text), '\\b{_sql_rx(w)}\\b') THEN 1 ELSE 0 END"
-        for w in lang_words
-    )
-
-
-SQL_LANG_DETECT = f"""SELECT detected, CAST(COUNT(*) AS BIGINT) AS cnt FROM (
-SELECT CASE WHEN best = 0 THEN 'und'
-            WHEN en = best THEN 'en'
-            WHEN de = best THEN 'de'
-            ELSE 'es' END AS detected FROM (
-  SELECT en, de, es, greatest(en, de, es) AS best FROM (
-    SELECT {_lang_hits_sql(['the','and','of','to','a','in','is','it','that','for'])} AS en,
-           {_lang_hits_sql(['der','die','das','und','ist','ein','nicht','mit','sich','auf'])} AS de,
-           {_lang_hits_sql(['el','la','de','que','y','en','un','es','se','no'])} AS es
-    FROM documents))) GROUP BY detected"""
-
-
-def q_repetition_stats(spark, sf_dir):
-    """Gopher-style repetition filters (Rae et al. 2021, public): per doc the
-    character fraction of the MOST FREQUENT word 2-gram (argmax by count,
-    ties to the lexicographically smallest gram) and the character mass of
-    duplicated word 3-grams (occurrences beyond the first), both over total
-    word characters; plus the keep flag at the published-style thresholds
-    (top-2-gram <= 0.20, dup-3-gram <= 0.30, applied to the rounded values
-    so the oracle comparison is exact).
-
-    Plan shape: ZERO shuffles — every statistic is per-doc, so the whole
-    query is one scan plus one ArrowEvalPython projection
-    (``udfs.repetition_stats_udf``, the Counter kernel; semantics pinned
-    to the Catalyst folds ``top_run``/``dup_run_chars`` by property test).
-    The Arrow kernel is the only production path — the interpreted
-    higher-order-function folds were the cleaning stack's slowest stage
-    (~4× slower end-to-end at 400k docs) and both pure-Catalyst rewrites
-    lost; see ``_with_repetition_stats`` and BENCH/ROUND5.md.  Scales: no
-    exchange at all (the earlier explode+double-groupBy shape shuffled
-    ~2 string rows per word, twice); the worst skew is one pathological
-    doc, which costs its own O(W) Counter pass in its own task."""
-    docs = load_table(spark, sf_dir, "documents", rebalance=True)
-    return _with_repetition_stats(docs.select("doc_id", "text")).drop("text")
-
-
-def _repetition_raw_cols() -> list:
-    """The three per-doc scalars the repetition fracs derive from, as
-    Catalyst folds over a ``text`` column — the reference
-    ``udfs.repetition_stats_udf`` is property-tested against
-    (tests/test_textstats.py); production uses the kernel."""
-    return [
-        textstats.word_char_count(F.col("text")).alias("wchars"),
-        textstats.top_run(
-            F.array_sort(textstats.word_ngrams(F.col("text"), 2))
-        ).alias("top"),
-        textstats.dup_run_chars(
-            F.array_sort(textstats.word_ngrams(F.col("text"), 3)), 3
-        ).alias("dupchars"),
-    ]
-
-
-def _with_repetition_stats(docs: "DataFrame") -> "DataFrame":
-    """Append ``top_bigram_frac`` / ``dup_trigram_frac`` / ``keep`` to a
-    frame carrying ``text`` — two stacked projections (raw scalars, then
-    fracs) so each raw scalar is evaluated once, zero shuffles (one
-    ArrowEvalPython node, no exchange).
-
-    The raw scalars come from ``udfs.repetition_stats_udf``, the Counter
-    kernel: 400k 60-word docs on 32 cores, noop-materialized, interleaved
-    runs — Catalyst folds [5.48..8.44] s vs Arrow [1.38..1.82] s (~4×
-    end-to-end; the folds were the cleaning stack's slowest stage and both
-    pure-Catalyst rewrites lost, BENCH/ROUND5.md).  The folds stay as
-    ``_repetition_raw_cols``, the reference the kernel is property-tested
-    against (tests/test_textstats.py)."""
-    from ..functions.udfs import repetition_stats_udf
-
-    staged = docs.select(
-        "*", repetition_stats_udf(F.col("text")).alias("_rep")
-    ).select(
-        "*",
-        F.col("_rep.wchars").alias("wchars"),
-        F.struct(
-            F.col("_rep.top_cnt").alias("cnt"),
-            F.col("_rep.top_g").alias("g"),
-        ).alias("top"),
-        F.col("_rep.dupchars").alias("dupchars"),
-    ).drop("_rep")
-    top_frac, dup_frac, keep = textstats.repetition_verdict(
-        F.col("wchars"), F.col("top.cnt"), F.col("top.g"), F.col("dupchars")
-    )
-    return staged.select(
-        *[c for c in docs.columns],
-        top_frac.alias("top_bigram_frac"),
-        dup_frac.alias("dup_trigram_frac"),
-        keep.alias("keep"),
-    )
-
-
-SQL_REPETITION_STATS = """WITH base AS (
-  SELECT doc_id,
-    COALESCE(list_sum(list_transform(w, x -> length(x))), 0) AS wchars,
-    CASE WHEN len(w) >= 2
-         THEN list_transform(range(1, len(w)), i -> w[i] || ' ' || w[i+1])
-         ELSE [] END AS bi,
-    CASE WHEN len(w) >= 3
-         THEN list_transform(range(1, len(w)-1), i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])
-         ELSE [] END AS tri
-  FROM (SELECT doc_id, list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS w
-        FROM documents)
-), counts AS (
-  SELECT doc_id, n, g, COUNT(*) AS cnt FROM (
-    SELECT doc_id, 2 AS n, unnest(bi) AS g FROM base
-    UNION ALL
-    SELECT doc_id, 3 AS n, unnest(tri) AS g FROM base
-  ) GROUP BY doc_id, n, g
-), top AS (
-  SELECT doc_id, cnt, g FROM (
-    SELECT doc_id, cnt, g,
-           ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY cnt DESC, g ASC) AS r
-    FROM counts WHERE n = 2) WHERE r = 1
-), dup AS (
-  SELECT doc_id, SUM((cnt - 1) * (length(g) - 2)) AS dupchars
-  FROM counts WHERE n = 3 AND cnt > 1 GROUP BY doc_id
-)
-SELECT b.doc_id,
-  ROUND(COALESCE(t.cnt * (length(t.g) - 1) / (NULLIF(b.wchars, 0) * 1.0), 0.0), 4) AS top_bigram_frac,
-  ROUND(COALESCE(d.dupchars / (NULLIF(b.wchars, 0) * 1.0), 0.0), 4) AS dup_trigram_frac,
-  (ROUND(COALESCE(t.cnt * (length(t.g) - 1) / (NULLIF(b.wchars, 0) * 1.0), 0.0), 4) <= 0.20
-   AND ROUND(COALESCE(d.dupchars / (NULLIF(b.wchars, 0) * 1.0), 0.0), 4) <= 0.30) AS keep
-FROM base b LEFT JOIN top t USING (doc_id) LEFT JOIN dup d USING (doc_id)"""
-
-
-def q_tfidf_top_terms(spark, sf_dir):
-    """TF-IDF top-5 terms per language: corpus-wide document frequency,
-    per-language term frequency, score = tf * ln((N+1)/(df+1)), ranked by
-    the ROUNDED score (then term asc) so the ordering is identical across
-    engines regardless of last-ULP ln() differences.
-
-    Plan shape: one explode, two partial-aggregable shuffles (term tf by
-    (lang, term); df by term after a distinct on (doc_id, term)), a
-    broadcast of the 1-row corpus count, and a per-lang window over at most
-    |vocab| rows — the heavy lifting is all map-side-combinable counts."""
-    docs = load_table(spark, sf_dir, "documents", rebalance=True)
-    words = docs.select(
-        "doc_id", "lang", F.explode(textstats.tokens(F.col("text"))).alias("term")
-    )
-    tf = words.groupBy("lang", "term").agg(F.count("*").alias("tf"))
-    dfreq = (
-        words.select("doc_id", "term")
-        .distinct()
-        .groupBy("term")
-        .agg(F.count("*").alias("df"))
-    )
-    total = docs.agg(F.count("*").alias("n_docs"))
-    scored = (
-        tf.join(dfreq, "term")
-        .crossJoin(F.broadcast(total))
-        .select(
-            "lang",
-            "term",
-            "tf",
-            "df",
-            F.round(
-                F.col("tf")
-                * F.log((F.col("n_docs") + F.lit(1.0)) / (F.col("df") + F.lit(1.0))),
-                4,
-            ).alias("score"),
-        )
-    )
-    win = Window.partitionBy("lang").orderBy(F.col("score").desc(), F.col("term").asc())
-    return (
-        scored.withColumn("rk", F.row_number().over(win))
-        .filter(F.col("rk") <= 5)
-        .select("lang", "term", "tf", "df", "score", "rk")
-    )
-
-
-SQL_TFIDF_TOP_TERMS = """WITH words AS (
-  SELECT doc_id, lang,
-         unnest(list_filter(string_split_regex(text, '\\s+'), x -> x <> '')) AS term
-  FROM documents
-), tf AS (
-  SELECT lang, term, COUNT(*) AS tf FROM words GROUP BY lang, term
-), dfreq AS (
-  SELECT term, COUNT(*) AS df
-  FROM (SELECT DISTINCT doc_id, term FROM words) GROUP BY term
-), total AS (SELECT COUNT(*) AS n_docs FROM documents)
-SELECT lang, term, tf, df, score, rk FROM (
-  SELECT lang, term, tf, df, score,
-         CAST(ROW_NUMBER() OVER (PARTITION BY lang ORDER BY score DESC, term ASC) AS INT) AS rk
-  FROM (SELECT lang, term, tf, df,
-               ROUND(tf * ln((n_docs + 1.0) / (df + 1.0)), 4) AS score
-        FROM tf JOIN dfreq USING (term) CROSS JOIN total)
-) WHERE rk <= 5"""
-
-
-def q_ngram_jaccard(spark, sf_dir):
-    """Token-set Jaccard near-dup pairs on planted perturbed copies."""
-    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 40)
-    near = docs.select(
-        (F.col("doc_id") + 1_000_000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" extra trailing words")).alias("text"),
-    )
-    both = docs.select("doc_id", "text").unionByName(near)
-    pairs = dedup.ngram_jaccard_pairs(both, shingle_n=1, threshold=0.6)
-    return pairs.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-
-
-SQL_NGRAM_JACCARD = """WITH combined AS (
-  SELECT doc_id, text FROM documents WHERE doc_id < 40
-  UNION ALL
-  SELECT doc_id + 1000000, text || ' extra trailing words' FROM documents WHERE doc_id < 40
-), toks AS (
-  SELECT doc_id AS id,
-         list_distinct(list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '')) AS sh
-  FROM combined
-)
-SELECT a.id AS id_a, b.id AS id_b,
-ROUND(CAST(length(list_intersect(a.sh, b.sh)) AS DOUBLE)
-  / (length(a.sh) + length(b.sh) - length(list_intersect(a.sh, b.sh))), 6) AS jaccard
-FROM toks a JOIN toks b ON a.id < b.id
-WHERE CAST(length(list_intersect(a.sh, b.sh)) AS DOUBLE)
-  / (length(a.sh) + length(b.sh) - length(list_intersect(a.sh, b.sh))) >= 0.6"""
-
-
-def q_winnow_neardup(spark, sf_dir):
-    """Near-dup pairs by shared MOSS-winnowed rolling-hash fingerprints
-    (k=20 chars, window=4) — documents sharing ≥40 selected fingerprints.
-    The posting explode → 64-bit-key self-join is the same one-shuffle
-    inverted-index shape as ``ngram_jaccard``; the fingerprint itself is a
-    true O(n) rolling recurrence in an Arrow-batched UDF.
-
-    k is the noise floor: a fingerprint only fires on a shared run of
-    ≥ k + window - 1 chars, and k=8 made every common 8-char substring a
-    hot posting key (avg posting list 143, max 3826 at sf0.1 — the
-    within-key self-join fanned out to 257M rows for 5000 docs). k=20
-    (~4 words) keeps only genuine shared runs: avg posting 1.24, the same
-    join emits 1.0M rows — 250× less — and that ratio is what survives a
-    100 TB corpus, where boilerplate-hot keys are the known failure mode
-    of posting-list self-joins."""
-    docs = load_table(spark, sf_dir, "documents", rebalance=True)
-    pairs = dedup.winnow_pairs(docs, k=20, window=4, min_shared=40)
-    return pairs.select(
-        F.col("id_a").cast("long").alias("id_a"),
-        F.col("id_b").cast("long").alias("id_b"),
-        F.col("n_shared").cast("long").alias("n_shared"),
-    )
-
-
-def _winnow_sql(k: int = 20, window: int = 4, min_shared: int = 40) -> str:
-    """DuckDB oracle for winnowing: O(n·k) per-position polynomial hashes
-    reproduce the UDF's hash values exactly, then a ROWS-window min
-    + distinct selects the same fingerprint set.  Coefficients are
-    mod-reduced at build time (``pow(base, e, mod)``) and every product is
-    reduced per-term: a raw ``base^19`` coefficient would overflow even
-    HUGEINT, while per-term reduction bounds each product by
-    codepoint·mod < 2^82 and the k-term sum by k·mod < 2^66.  Base and
-    modulus come from the operator's own constants so the two engines
-    cannot drift."""
-    mod = dedup._WINNOW_MOD
-    base = dedup._WINNOW_BASE
-    terms = " + ".join(
-        f"(unicode(substr(t, i+{j}, 1))::HUGEINT"
-        f" * {pow(base, k - 1 - j, mod)}::HUGEINT) % {mod}::HUGEINT"
-        for j in range(k)
-    )
-    return f"""WITH norm AS (
-  SELECT doc_id, lower(regexp_replace(trim(text), '\\s+', ' ', 'g')) AS t FROM documents
-), pos AS (
-  SELECT doc_id, t, unnest(range(1, length(t) - {k} + 2)) AS i
-  FROM norm WHERE length(t) >= {k}
-), hashes AS (
-  SELECT doc_id, i, (({terms}) % {mod}::HUGEINT)::BIGINT AS h FROM pos
-), wins AS (
-  SELECT doc_id, i,
-         min(h) OVER (PARTITION BY doc_id ORDER BY i
-                      ROWS BETWEEN CURRENT ROW AND {window - 1} FOLLOWING) AS fp,
-         count(*) OVER (PARTITION BY doc_id) AS n_hashes
-  FROM hashes
-), fps AS (
-  SELECT DISTINCT doc_id, fp FROM wins WHERE i <= n_hashes - {window} + 1
-)
-SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_shared
-FROM fps a JOIN fps b ON a.fp = b.fp AND a.doc_id < b.doc_id
-GROUP BY 1, 2 HAVING count(*) >= {min_shared}"""
-
-
-SQL_WINNOW_NEARDUP = _winnow_sql()
-
-
-def q_dedup_components(spark, sf_dir):
-    """Transitive closure of the winnowing near-dup pairs: each document in
-    any pair gets its connected-component label (min doc_id in the
-    component) — the pairs→clusters step a dedup pipeline runs before
-    choosing survivors. Iterative hash-min label propagation with per-round
-    lineage truncation (operators/components.py)."""
-    from ..operators.components import connected_components
-
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = dedup.winnow_pairs(docs, k=20, window=4, min_shared=40)
-    comp = connected_components(pairs)
-    return comp.select(
-        F.col("id").cast("long").alias("doc_id"),
-        F.col("component").cast("long").alias("component"),
-    )
-
-
-SQL_DEDUP_COMPONENTS = f"""WITH RECURSIVE pairs AS (
-{SQL_WINNOW_NEARDUP}
-), edges AS (
-  SELECT id_a AS u, id_b AS v FROM pairs
-  UNION
-  SELECT id_b AS u, id_a AS v FROM pairs
-), nodes AS (
-  SELECT DISTINCT u FROM edges
-), walk(a, b) AS (
-  -- reachability closure: b reachable from a (recursive UNION dedups states)
-  SELECT u, u FROM nodes
-  UNION
-  SELECT w.a, e.v FROM walk w JOIN edges e ON e.u = w.b
-)
-SELECT a AS doc_id, min(b) AS component FROM walk GROUP BY a"""
-
-
-def q_dedup_survivors(spark, sf_dir):
-    """The step a dedup pipeline actually ENDS with: from near-dup pairs to
-    the surviving corpus. Winnowing pairs → connected components → keep
-    exactly one document per component (the min-id label, i.e. the doc
-    whose id IS its component) plus every unpaired document; ``had_dups``
-    marks survivors that represent a dropped cluster.
-
-    Scale shape: the component table only holds docs that appeared in a
-    pair — a sliver of the corpus — so the left join back to the full scan
-    is AQE-broadcastable; everything upstream is the capped posting-join +
-    hash-min propagation the standalone gate queries verify."""
-    from ..operators.components import connected_components
-
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = dedup.winnow_pairs(docs, k=20, window=4, min_shared=40)
-    comp = connected_components(pairs).select(
-        F.col("id").alias("doc_id"), "component"
-    )
-    return (
-        docs.select("doc_id")
-        .join(comp, "doc_id", "left")
-        .filter(F.col("component").isNull() | (F.col("component") == F.col("doc_id")))
-        .select(
-            F.col("doc_id").cast("long").alias("doc_id"),
-            F.col("component").isNotNull().alias("had_dups"),
-        )
-    )
-
-
-SQL_DEDUP_SURVIVORS = f"""WITH comp AS (
-{SQL_DEDUP_COMPONENTS}
-)
-SELECT d.doc_id, (c.component IS NOT NULL) AS had_dups
-FROM documents d LEFT JOIN comp c ON c.doc_id = d.doc_id
-WHERE c.component IS NULL OR c.component = d.doc_id"""
-
-
-def q_ann_cosine_topk(spark, sf_dir):
-    """Brute-force cosine top-3 neighbors for the first 5 vectors."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    corpus = emb.filter(F.col("vec_id") >= 5)
-    topk = similarity.cosine_topk(queries, corpus, k=3)
-    return topk.select("q_id", "vec_id", "rnk")
-
-
-SQL_ANN_COSINE = """SELECT q_id, vec_id, rnk FROM (
-  SELECT q.vec_id AS q_id, c.vec_id AS vec_id,
-  CAST(ROW_NUMBER() OVER (PARTITION BY q.vec_id
-       ORDER BY list_cosine_similarity(q.embedding, c.embedding) DESC, c.vec_id) AS INT) AS rnk
-  FROM embeddings q JOIN embeddings c ON q.vec_id < 5 AND c.vec_id >= 5
-) WHERE rnk <= 3"""
-
-
-def q_embed_neardup(spark, sf_dir):
-    """Embedding-cosine near-dup pairs (the dense-vector dedup flavor).
-
-    The raw embeddings have no natural near-dups (max pairwise cosine 0.51
-    at sf0.01), so the query plants them the same way ``ngram_jaccard``
-    does: each vector vec_id < 60 gets a shifted copy (x*1.1 + 0.05, id +
-    1_000_000) whose cosine to its source is >= 0.93 while every cross pair
-    stays <= 0.48 — a wide margin around threshold 0.8, so float-vs-double
-    drift between engines can't flip membership.
-
-    The score column is intentionally NOT emitted: Spark and DuckDB agree on
-    which pairs clear the threshold (wide margin) but not bit-for-bit on the
-    cosine value.
-    """
-    emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 60)
-    near = emb.select(
-        (F.col("vec_id") + 1_000_000).alias("vec_id"),
-        F.transform("embedding", lambda x: x * F.lit(1.1) + F.lit(0.05)).alias(
-            "embedding"
-        ),
-    )
-    both = emb.select("vec_id", "embedding").unionByName(near)
-    pairs = similarity.neardup_pairs(both, threshold=0.8)
-    return pairs.select("id_a", "id_b")
-
-
-SQL_EMBED_NEARDUP = """WITH sub AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS embedding
-  FROM embeddings WHERE vec_id < 60
-), combined AS (
-  SELECT vec_id, embedding FROM sub
-  UNION ALL
-  SELECT vec_id + 1000000, list_transform(embedding, x -> x * 1.1 + 0.05)
-  FROM sub
-)
-SELECT a.vec_id AS id_a, b.vec_id AS id_b
-FROM combined a JOIN combined b ON a.vec_id < b.vec_id
-WHERE list_cosine_similarity(a.embedding, b.embedding) >= 0.8"""
-
-
-# --------------------------------------------------------------------------
-# Non-SQL-expressible operators (rows-only driver check; pytest oracles)
-# --------------------------------------------------------------------------
-
-
-# persisted ranker intermediates from the previous q_cluster_greedy call,
-# released at the start of the next one (see the comment in the function)
-_CLUSTER_GREEDY_DEFERRED: list = []
-
-
-def _drain(deferred: list) -> list:
-    """Unpersist a deferred registry's frames and return it, emptied, for
-    the current invocation to register its own."""
-    for frame in deferred:
-        frame.unpersist()
-    deferred.clear()
-    return deferred
-
-
-def q_cluster_greedy(spark, sf_dir):
+def q_cluster_greedy(spark, sf_dir, cleanup):
     """A4/A5: greedy path-prefix clustering over the synthesized urls,
     projected to its SQL-checkable partition invariant.
 
@@ -1761,17 +446,10 @@ def q_cluster_greedy(spark, sf_dir):
         .select("url")
         .repartition(spark.sparkContext.defaultParallelism)
     )
-    # Deferred cleanup of the domain-id ranker's persisted intermediate:
-    # frames registered by the PREVIOUS invocation are released here, and
-    # this invocation's frames are registered for the next one. Returning
-    # the lazy plan keeps the caller's action as the only materialization
-    # (forcing one inside the query cost a reproducible +33% — VERDICT r4
-    # wrong #3), while the persisted frame stays cached until that action
-    # runs; accumulation is bounded at one invocation's tiny per-domain
-    # frame instead of growing for the session lifetime.
+    # the domain-id ranker persists its tiny per-domain intermediate into
+    # the registry's deferred list (see _Query)
     clusters = cluster_urls(
-        urls, path_depth=2, min_cluster_size=1,
-        cleanup=_drain(_CLUSTER_GREEDY_DEFERRED),
+        urls, path_depth=2, min_cluster_size=1, cleanup=cleanup
     )
     return clusters.groupBy("domain").agg(
         F.sum("url_count").alias("urls_clustered"),
@@ -1784,76 +462,7 @@ SELECT host AS domain,
        CAST(COUNT(DISTINCT url) AS BIGINT) AS urls_clustered,
        CAST(ROW_NUMBER() OVER (ORDER BY host) AS BIGINT) AS domain_id_num
 FROM parsed GROUP BY host"""
-
-
-def q_minhash_pairs(spark, sf_dir):
-    """MinHash+LSH near-dup pairs on planted perturbed copies, oracled by
-    exact 3-gram Jaccard: at threshold 0.5 the banding must be rows-per-band
-    = 1 (bands = n_hashes = 32) so the per-pair miss probability is
-    (1-J)^32 ≤ 2.3e-10 — the LSH result is exactly the J ≥ 0.5 pair set
-    (precision is exact by construction: candidates are verified with exact
-    Jaccard). Production dedup at J ≥ 0.8 uses the coarser 8×4 banding."""
-    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 40)
-    near = docs.select(
-        (F.col("doc_id") + 1_000_000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" tail")).alias("text"),
-    )
-    both = docs.select("doc_id", "text").unionByName(near)
-    return dedup.minhash_lsh_pairs(
-        both, n_hashes=32, bands=32, shingle_n=3, jaccard_threshold=0.5
-    ).select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-
-
-SQL_MINHASH_PAIRS = """WITH combined AS (
-  SELECT doc_id, text FROM documents WHERE doc_id < 40
-  UNION ALL
-  SELECT doc_id + 1000000, text || ' tail' FROM documents WHERE doc_id < 40
-), toks AS (
-  SELECT doc_id AS id,
-    list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '') AS t
-  FROM combined
-), sh AS (
-  SELECT id, list_distinct(list_transform(range(1, greatest(len(t) - 2, 0) + 1),
-      i -> concat_ws(' ', t[i], t[i+1], t[i+2]))) AS s
-  FROM toks WHERE len(t) >= 3
-)
-SELECT a.id AS id_a, b.id AS id_b,
-ROUND(CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-  / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))), 6) AS jaccard
-FROM sh a JOIN sh b ON a.id < b.id
-WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-  / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.5"""
-
-
-def q_simhash_groups(spark, sf_dir):
-    """SimHash exact-64-bit duplicate groups on planted exact copies.
-
-    SimHash is computed over the distinct-token set, so identical token sets
-    ⇒ identical simhash — the DuckDB oracle groups by the sorted distinct
-    token set (verified equivalent on this corpus; a cross-set 64-bit
-    collision would be a genuine hash accident)."""
-    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 60)
-    dupes = docs.select(
-        (F.col("doc_id") + 1_000_000).alias("doc_id"), "text"
-    )
-    both = docs.select("doc_id", "text").unionByName(dupes)
-    groups = dedup.simhash_dup_groups(both)
-    return groups.select(
-        F.element_at("doc_ids", 1).alias("min_id"), F.col("n").alias("n_dups")
-    )
-
-
-SQL_SIMHASH_GROUPS = """WITH combined AS (
-  SELECT doc_id, text FROM documents WHERE doc_id < 60
-  UNION ALL
-  SELECT doc_id + 1000000, text FROM documents WHERE doc_id < 60
-), keyed AS (
-  SELECT doc_id,
-    list_sort(list_distinct(list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> ''))) AS key
-  FROM combined
-)
-SELECT CAST(MIN(doc_id) AS BIGINT) AS min_id, CAST(COUNT(*) AS BIGINT) AS n_dups
-FROM keyed GROUP BY key HAVING COUNT(*) > 1"""
+_register(q_cluster_greedy, SQL_CLUSTER_GREEDY, deferred=True)
 
 
 def q_crawl_frontier(spark, sf_dir):
@@ -1967,127 +576,8 @@ FROM (VALUES
 ) t(iteration, n_scheduled, n_fetched, n_documents, max_rank)"""
 
 
-def q_media_features(spark, sf_dir):
-    """Real multimodal decode through the mapInPandas plumbing with a
-    DuckDB-checkable invariant (VERDICT r3 task #6): per documents.doc_id a
-    payload is synthesized deterministically (solid-color 24-bit BMP /
-    binary PPM, constant-amplitude 16-bit PCM WAV), decoded by the REAL
-    pure-Python decoders (operators/multimodal.py), and featurized by
-    ``extract_features`` (color histogram + channel means / RMS-peak energy).
-    The emitted integer stats must reproduce the generator arithmetic, which
-    the oracle recomputes in closed form from doc_id — so the decode path,
-    not the generator, is what the gate checks."""
-    import pandas as pd
+_register(q_crawl_frontier, _sql_crawl_frontier)
 
-    from ..operators import multimodal as mm
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .filter(F.col("doc_id") < 60)
-    )
-
-    def synth(batches):
-        for pdf in batches:
-            rows = {"media_id": [], "kind": [], "payload": [], "mime": []}
-            for raw_id in pdf["doc_id"]:
-                i = int(raw_id)
-                if i % 3 == 0:
-                    payload = mm.make_bmp(
-                        8, 6, ((i * 37) % 256, (i * 59) % 256, (i * 83) % 256)
-                    )
-                    kind, mime = "image", "image/bmp"
-                elif i % 3 == 1:
-                    payload = mm.make_ppm(
-                        5,
-                        4,
-                        ((i * 11 + 3) % 256, (i * 17 + 5) % 256, (i * 23 + 7) % 256),
-                    )
-                    kind, mime = "image", "image/x-portable-pixmap"
-                else:
-                    payload = mm.make_wav(800 + (i % 5) * 80, (i * 13) % 1000)
-                    kind, mime = "audio", "audio/wav"
-                rows["media_id"].append(i)
-                rows["kind"].append(kind)
-                rows["payload"].append(payload)
-                rows["mime"].append(mime)
-            yield pd.DataFrame(rows)
-
-    media = docs.mapInPandas(synth, schema=mm.MEDIA_SCHEMA)
-    meta = mm.decode_media_meta(media)
-    feats = mm.extract_features(media, dim=64)
-    is_img = F.col("format").isin("bmp", "ppm")
-    px = lambda idx: (  # noqa: E731
-        F.when(
-            is_img,
-            F.round(F.element_at("feature", idx) * 255).cast("int"),
-        ).otherwise(F.lit(-1))
-    )
-    return meta.join(feats, "media_id").select(
-        F.col("media_id").cast("bigint").alias("media_id"),
-        "format",
-        F.col("width").cast("int").alias("width"),
-        F.col("height").cast("int").alias("height"),
-        F.col("duration_ms").cast("int").alias("duration_ms"),
-        px(49).alias("mean_r"),
-        px(50).alias("mean_g"),
-        px(51).alias("mean_b"),
-        F.when(
-            F.col("format") == "wav",
-            F.round(F.element_at("feature", 2) * 32768).cast("int"),
-        )
-        .otherwise(F.lit(-1))
-        .alias("peak"),
-    )
-
-
-SQL_MEDIA_FEATURES = """SELECT CAST(doc_id AS BIGINT) AS media_id,
-  CASE doc_id % 3 WHEN 0 THEN 'bmp' WHEN 1 THEN 'ppm' ELSE 'wav' END AS format,
-  CAST(CASE doc_id % 3 WHEN 0 THEN 8 WHEN 1 THEN 5 ELSE -1 END AS INT) AS width,
-  CAST(CASE doc_id % 3 WHEN 0 THEN 6 WHEN 1 THEN 4 ELSE -1 END AS INT) AS height,
-  CAST(CASE WHEN doc_id % 3 = 2 THEN 100 + (doc_id % 5) * 10 ELSE -1 END AS INT) AS duration_ms,
-  CAST(CASE doc_id % 3 WHEN 0 THEN (doc_id * 37) % 256 WHEN 1 THEN (doc_id * 11 + 3) % 256 ELSE -1 END AS INT) AS mean_r,
-  CAST(CASE doc_id % 3 WHEN 0 THEN (doc_id * 59) % 256 WHEN 1 THEN (doc_id * 17 + 5) % 256 ELSE -1 END AS INT) AS mean_g,
-  CAST(CASE doc_id % 3 WHEN 0 THEN (doc_id * 83) % 256 WHEN 1 THEN (doc_id * 23 + 7) % 256 ELSE -1 END AS INT) AS mean_b,
-  CAST(CASE WHEN doc_id % 3 = 2 THEN (doc_id * 13) % 1000 ELSE -1 END AS INT) AS peak
-FROM documents WHERE doc_id < 60"""
-
-
-def q_extract_text(spark, sf_dir):
-    """Flagship pandas UDF: HTML→markdown over the synthetic pages table.
-    Returns (n_pages, n_identical): pages processed and pages whose UDF
-    output is byte-identical to the expected text column. The generator is
-    seed-pinned, so both numbers are constants the DuckDB oracle asserts:
-    gen_corpus(3, 60, 42) yields exactly 60 html pages, and the per-row
-    invariant requires n_identical == n_pages."""
-    from ..functions.udfs import extract_text_udf
-    from ..sources.corpus import corpus_to_spark, gen_corpus
-
-    corpus = corpus_to_spark(spark, gen_corpus(n_hosts=3, n_pages=60, seed=42))
-    pages = corpus["pages"].filter(F.col("html").isNotNull())
-    out = pages.select(
-        "url",
-        extract_text_udf(F.col("html")).alias("extracted"),
-        F.col("text").alias("expected"),
-    ).withColumn(
-        "byte_identical",
-        F.col("extracted").cast("binary") == F.col("expected").cast("binary"),
-    )
-    return out.agg(
-        F.count(F.lit(1)).alias("n_pages"),
-        F.sum(F.when(F.col("byte_identical"), 1).otherwise(0)).alias(
-            "n_identical"
-        ),
-    )
-
-
-SQL_EXTRACT_TEXT = """SELECT CAST(60 AS BIGINT) AS n_pages,
-CAST(60 AS BIGINT) AS n_identical"""
-
-
-# --------------------------------------------------------------------------
-# Registry
-# --------------------------------------------------------------------------
 
 def q_pii_redact(spark, sf_dir):
     """PII scrub (LLM-pipeline brief): detect + redact emails / phone
@@ -2141,6 +631,7 @@ SELECT doc_id,
 FROM injected""".replace("@EMAIL@", pii.EMAIL_PATTERN).replace(
     "@PHONE@", pii.PHONE_PATTERN
 ).replace("@IP@", pii.IPV4_PATTERN)
+_register(q_pii_redact, SQL_PII_REDACT)
 
 
 def q_line_dedup(spark, sf_dir):
@@ -2173,6 +664,7 @@ SQL_LINE_DEDUP = """WITH words AS (
 SELECT doc_id, n_lines, n_dup_lines, dup_line_char_frac,
        dup_line_char_frac <= 0.3 AS keep
 FROM per_doc"""
+_register(q_line_dedup, SQL_LINE_DEDUP)
 
 
 def q_hash_split(spark, sf_dir):
@@ -2200,6 +692,7 @@ SELECT doc_id, bucket,
        WHEN bucket < 9500 THEN 'valid'
        ELSE 'test' END AS split
 FROM b"""
+_register(q_hash_split, SQL_HASH_SPLIT)
 
 
 def q_corpus_clean(spark, sf_dir):
@@ -2311,6 +804,9 @@ FROM q JOIN r USING (doc_id) LEFT JOIN l USING (doc_id)
        JOIN lg USING (doc_id) JOIN p USING (doc_id)"""
 
 
+_register(q_corpus_clean, _sql_corpus_clean)
+
+
 def q_pagerank(spark, sf_dir):
     """Damped PageRank (5 rounds, d=0.85) over a deterministic synthetic
     link graph on the documents table: doc i links to ``(i*7+j) % N`` for
@@ -2365,56 +861,7 @@ r0 AS (SELECT nd.id, 1.0 / nc.n AS r FROM nodes nd CROSS JOIN ncount nc),
 SELECT id AS doc_id, ROUND(r, 6) AS rank FROM {prev}"""
 
 
-def q_pagerank_schedule(spark, sf_dir):
-    """The composition the north star describes in one sentence: a
-    per-domain politeness-budget priority queue ordered by page IMPORTANCE
-    — ``operators.pagerank`` output joined onto the url frontier as the
-    ``select_batch(order=...)`` priority.  ``priority_schedule`` proves the
-    window accepts any caller order with a stand-in score; this query
-    closes the loop with the real ranker: both component operators are
-    independently gate-verified, and this verifies their composition
-    (rank join → budgeted window) end-to-end against an oracle that
-    recomposes the same SQL fragments.
-
-    Ordering is on the ROUNDED rank (6 decimals, the same grain the
-    pagerank gate compares at) with a url tie-break, so the schedule is
-    identical across engines and replayable.  Plan shape: the rank frame
-    is one extra 8-byte-key join into the same WindowGroupLimit-guarded
-    budget window — no new shuffle class at 10^10 urls."""
-    from ..operators.politeness import select_batch
-
-    ranks = q_pagerank(spark, sf_dir)
-    urls = (
-        _urls_df(spark, sf_dir)
-        .groupBy("url", "host")
-        .agg(F.min("doc_id").alias("doc_id"))
-    )
-    frontier = urls.join(ranks, "doc_id").select("url", "host", "rank")
-    selected, _carry = select_batch(
-        frontier,
-        politeness=None,
-        default_budget=5,
-        order=[F.col("rank").desc(), F.col("url").asc()],
-    )
-    return selected.select("host", "url", "rank")
-
-
-def _sql_pagerank_schedule() -> str:
-    return f"""{ORACLE_URLS_CTE}
-, u AS (SELECT url, host, MIN(doc_id) AS doc_id FROM parsed GROUP BY url, host),
-pr AS (SELECT * FROM ({_sql_pagerank()})),
-scored AS (SELECT u.host, u.url, pr.rank FROM u JOIN pr USING (doc_id))
-SELECT host, url, rank FROM (
-  SELECT host, url, rank,
-         ROW_NUMBER() OVER (PARTITION BY host ORDER BY rank DESC, url) AS rn
-  FROM scored
-) WHERE rn <= 5"""
-
-
-# --------------------------------------------------------------------------
-# Corpus-curation tier (operators/curation.py — public-literature stages a
-# training pipeline runs between crawl and tokenization)
-# --------------------------------------------------------------------------
+_register(q_pagerank, _sql_pagerank)
 
 
 def q_domain_quota(spark, sf_dir):
@@ -2436,6 +883,7 @@ SQL_DOMAIN_QUOTA = """WITH r AS (
       doc_id) AS rn
   FROM documents)
 SELECT doc_id, source, CAST(rn AS BIGINT) AS rn FROM r WHERE rn <= 20"""
+_register(q_domain_quota, SQL_DOMAIN_QUOTA)
 
 
 def q_c4_line_filter(spark, sf_dir):
@@ -2481,6 +929,7 @@ SELECT d.doc_id,
   COALESCE(text_clean, '') AS text_clean,
   COALESCE(n_kept, 0) >= 2 AS keep
 FROM documents d LEFT JOIN per_doc USING (doc_id)"""
+_register(q_c4_line_filter, SQL_C4_LINE_FILTER)
 
 
 def q_dup_span_stats(spark, sf_dir):
@@ -2515,60 +964,10 @@ SELECT d.doc_id,
   ROUND(COALESCE(n_dup_grams / (n_grams * 1.0), 0.0), 4) AS dup_gram_frac,
   COALESCE(n_dup_grams / (n_grams * 1.0), 0.0) <= 0.2 AS keep
 FROM documents d LEFT JOIN per_doc USING (doc_id)"""
+_register(q_dup_span_stats, SQL_DUP_SPAN)
 
 
-def q_dup_span_removal(spark, sf_dir):
-    """Lee-et-al exact-substring removal proper: every word covered by a
-    4-word window occurring more than once corpus-wide (cross-doc or
-    within-doc) is deleted; the cleaned text is reassembled byte-exactly
-    on both engines."""
-    docs = load_table(spark, sf_dir, "documents", rebalance=True)
-    return curation.dup_span_removal(docs, gram_words=4).withColumnRenamed(
-        "id", "doc_id"
-    )
-
-
-SQL_DUP_SPAN_REMOVAL = """WITH words AS (
-  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS w
-  FROM documents
-), grams AS (
-  SELECT doc_id, i, array_to_string(w[i+1 : i+4], ' ') AS g
-  FROM words, unnest(range(len(w) - 3)) AS t(i)
-  WHERE len(w) >= 4
-), cnt AS (
-  SELECT g FROM grams GROUP BY g HAVING count(*) > 1
-), covered AS (
-  SELECT DISTINCT grams.doc_id, t.wp
-  FROM grams JOIN cnt USING (g), unnest(range(grams.i, grams.i + 4)) AS t(wp)
-), toks AS (
-  SELECT doc_id, i AS wp, w[i+1] AS word
-  FROM words, unnest(range(len(w))) AS t(i)
-), kept AS (
-  SELECT toks.doc_id,
-    CAST(count(*) AS BIGINT) AS n_kept,
-    string_agg(toks.word, ' ' ORDER BY toks.wp) AS text_clean
-  FROM toks LEFT JOIN covered
-    ON covered.doc_id = toks.doc_id AND covered.wp = toks.wp
-  WHERE covered.wp IS NULL
-  GROUP BY toks.doc_id)
-SELECT w.doc_id,
-  CAST(len(w.w) AS BIGINT) AS n_words,
-  CAST(len(w.w) - COALESCE(k.n_kept, 0) AS BIGINT) AS n_removed,
-  COALESCE(k.text_clean, '') AS text_clean
-FROM words w LEFT JOIN kept k USING (doc_id)"""
-
-
-# persisted intermediates from the PREVIOUS invocation of each curation
-# gate query, released at the start of the next one (cluster_greedy's
-# deferred-cleanup pattern: the caller's action is the only
-# materialization, the cached frame stays valid until it runs, and
-# accumulation is bounded at one invocation's frames per query)
-_PACK_DEFERRED: list = []
-_TIERS_DEFERRED: list = []
-_PREPARE_DEFERRED: list = []
-
-
-def q_pack_sequences(spark, sf_dir):
+def q_pack_sequences(spark, sf_dir, cleanup):
     """Concat-and-chunk packing assignment (seq_len=128): exact global
     token prefix sums via the range-partitioned distributed prefix-sum
     (no Exchange SinglePartition — plan-guarded), then each doc's chunk
@@ -2576,7 +975,7 @@ def q_pack_sequences(spark, sf_dir):
     SUM OVER — identical numbers, the plan is the difference."""
     docs = load_table(spark, sf_dir, "documents", rebalance=True)
     return curation.pack_sequences(
-        docs, seq_len=128, cleanup=_drain(_PACK_DEFERRED)
+        docs, seq_len=128, cleanup=cleanup
     ).withColumnRenamed("id", "doc_id")
 
 
@@ -2593,6 +992,66 @@ SELECT doc_id, n_tokens, tok_start,
   CASE WHEN n_tokens > 0 THEN tok_start // 128 END AS chunk_first,
   CASE WHEN n_tokens > 0 THEN (tok_start + n_tokens - 1) // 128 END AS chunk_last
 FROM c"""
+_register(q_pack_sequences, SQL_PACK_SEQUENCES, deferred=True)
+
+
+def q_url_blocklist(spark, sf_dir):
+    """RefinedWeb-style URL filtering over the synthesized URL corpus:
+    subdomain-suffix host blocklist + soft-keyword score (capped at 1 per
+    word), keep = unblocked and score ≤ 1.  Pure per-row boolean algebra,
+    zero shuffles."""
+    urls = _urls_df(spark, sf_dir)
+    return curation.host_blocklist_filter(
+        urls,
+        blocked_hosts=("ubl.com.pk",),
+        soft_words=("admin", "login", "deals"),
+        max_soft_score=1,
+    ).select("doc_id", "url", "host_blocked", "soft_score", "keep")
+
+
+SQL_URL_BLOCKLIST = f"""{ORACLE_URLS_CTE}
+SELECT doc_id, url,
+  (host = 'ubl.com.pk' OR suffix(host, '.ubl.com.pk')) AS host_blocked,
+  CAST((CASE WHEN contains(lower(url), 'admin') THEN 1 ELSE 0 END
+      + CASE WHEN contains(lower(url), 'login') THEN 1 ELSE 0 END
+      + CASE WHEN contains(lower(url), 'deals') THEN 1 ELSE 0 END) AS BIGINT) AS soft_score,
+  (NOT (host = 'ubl.com.pk' OR suffix(host, '.ubl.com.pk'))
+   AND (CASE WHEN contains(lower(url), 'admin') THEN 1 ELSE 0 END
+      + CASE WHEN contains(lower(url), 'login') THEN 1 ELSE 0 END
+      + CASE WHEN contains(lower(url), 'deals') THEN 1 ELSE 0 END) <= 1) AS keep
+FROM parsed"""
+_register(q_url_blocklist, SQL_URL_BLOCKLIST)
+
+
+def q_quality_tiers(spark, sf_dir, cleanup):
+    """CCNet head/middle/tail tiers over the verified quality score: exact
+    global rank (distributed, no single-partition exchange) cut into
+    thirds with pinned floor arithmetic both engines run verbatim."""
+    docs = load_table(spark, sf_dir, "documents", rebalance=True)
+    scored = docs.select(
+        F.col("doc_id").alias("id"),
+        F.round(textstats.quality_score(F.col("text")), 4).alias("quality"),
+    )
+    return curation.quality_tiers(
+        scored, cleanup=cleanup
+    ).withColumnRenamed("id", "doc_id")
+
+
+def _sql_quality_tiers() -> str:
+    return f"""WITH q AS ({SQL_QUALITY}),
+r AS (
+  SELECT doc_id, quality,
+    CAST(ROW_NUMBER() OVER (ORDER BY quality DESC, doc_id) AS BIGINT) AS rank,
+    CAST(COUNT(*) OVER () AS BIGINT) AS n
+  FROM q)
+SELECT doc_id, quality, rank,
+  (rank - 1) * 3 // n AS tier,
+  CASE (rank - 1) * 3 // n WHEN 0 THEN 'head' WHEN 1 THEN 'middle'
+       ELSE 'tail' END AS tier_label
+FROM r"""
+
+
+_register(q_quality_tiers, _sql_quality_tiers, deferred=True)
 
 
 def q_decontaminate(spark, sf_dir):
@@ -2630,118 +1089,10 @@ SELECT d.doc_id,
   COALESCE(n_hit_grams, 0) > 0 AS contaminated
 FROM documents d LEFT JOIN per_doc USING (doc_id)
 WHERE d.doc_id % 50 <> 0"""
+_register(q_decontaminate, SQL_DECONTAMINATE)
 
 
-def q_url_blocklist(spark, sf_dir):
-    """RefinedWeb-style URL filtering over the synthesized URL corpus:
-    subdomain-suffix host blocklist + soft-keyword score (capped at 1 per
-    word), keep = unblocked and score ≤ 1.  Pure per-row boolean algebra,
-    zero shuffles."""
-    urls = _urls_df(spark, sf_dir)
-    return curation.host_blocklist_filter(
-        urls,
-        blocked_hosts=("ubl.com.pk",),
-        soft_words=("admin", "login", "deals"),
-        max_soft_score=1,
-    ).select("doc_id", "url", "host_blocked", "soft_score", "keep")
-
-
-SQL_URL_BLOCKLIST = f"""{ORACLE_URLS_CTE}
-SELECT doc_id, url,
-  (host = 'ubl.com.pk' OR suffix(host, '.ubl.com.pk')) AS host_blocked,
-  CAST((CASE WHEN contains(lower(url), 'admin') THEN 1 ELSE 0 END
-      + CASE WHEN contains(lower(url), 'login') THEN 1 ELSE 0 END
-      + CASE WHEN contains(lower(url), 'deals') THEN 1 ELSE 0 END) AS BIGINT) AS soft_score,
-  (NOT (host = 'ubl.com.pk' OR suffix(host, '.ubl.com.pk'))
-   AND (CASE WHEN contains(lower(url), 'admin') THEN 1 ELSE 0 END
-      + CASE WHEN contains(lower(url), 'login') THEN 1 ELSE 0 END
-      + CASE WHEN contains(lower(url), 'deals') THEN 1 ELSE 0 END) <= 1) AS keep
-FROM parsed"""
-
-
-def q_quality_tiers(spark, sf_dir):
-    """CCNet head/middle/tail tiers over the verified quality score: exact
-    global rank (distributed, no single-partition exchange) cut into
-    thirds with pinned floor arithmetic both engines run verbatim."""
-    docs = load_table(spark, sf_dir, "documents", rebalance=True)
-    scored = docs.select(
-        F.col("doc_id").alias("id"),
-        F.round(textstats.quality_score(F.col("text")), 4).alias("quality"),
-    )
-    return curation.quality_tiers(
-        scored, cleanup=_drain(_TIERS_DEFERRED)
-    ).withColumnRenamed("id", "doc_id")
-
-
-SQL_QUALITY_TIERS = f"""WITH q AS ({SQL_QUALITY}),
-r AS (
-  SELECT doc_id, quality,
-    CAST(ROW_NUMBER() OVER (ORDER BY quality DESC, doc_id) AS BIGINT) AS rank,
-    CAST(COUNT(*) OVER () AS BIGINT) AS n
-  FROM q)
-SELECT doc_id, quality, rank,
-  (rank - 1) * 3 // n AS tier,
-  CASE (rank - 1) * 3 // n WHEN 0 THEN 'head' WHEN 1 THEN 'middle'
-       ELSE 'tail' END AS tier_label
-FROM r"""
-
-
-def q_gopher_quality(spark, sf_dir):
-    """The full Gopher document-quality rule set (Rae et al. 2021 App.
-    A1.1) as seven named boolean rules + the conjunction — one projection,
-    zero shuffles (`textstats.gopher_quality_flags`)."""
-    docs = load_table(spark, sf_dir, "documents", rebalance=True)
-    flags = textstats.gopher_quality_flags(F.col("text"))
-    keep = None
-    for c in flags.values():
-        keep = c if keep is None else (keep & c)
-    return docs.select(
-        "doc_id",
-        *[c.alias(name) for name, c in flags.items()],
-        keep.alias("keep"),
-    )
-
-
-_GOPHER_STOPS_SQL = ", ".join(f"'{w}'" for w in textstats.GOPHER_STOP_WORDS)
-
-SQL_GOPHER_QUALITY = f"""WITH t AS (
-  SELECT doc_id, text,
-    list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS toks,
-    string_split(text, chr(10)) AS lines
-  FROM documents
-), m AS (
-  SELECT doc_id, text, toks, lines,
-    len(toks) AS n_words,
-    CASE WHEN len(toks) > 0
-         THEN list_sum(list_transform(toks, x -> length(x))) / (len(toks) * 1.0)
-         ELSE 0.0 END AS mwl,
-    CAST(length(text) - length(replace(text, '#', '')) AS BIGINT)
-      + CAST((length(text) - length(replace(text, '...', ''))) / 3 AS BIGINT)
-      + CAST(length(text) - length(replace(text, '…', '')) AS BIGINT) AS symbols,
-    len(list_filter(lines, l -> l LIKE '•%' OR l LIKE '- %')) AS bullet_lines,
-    len(list_filter(lines, l -> l LIKE '%...' OR l LIKE '%…')) AS ellipsis_lines,
-    len(list_filter(toks, w -> regexp_matches(w, '[A-Za-z]'))) AS alpha_words,
-    len(list_intersect(list_distinct(toks), [{_GOPHER_STOPS_SQL}])) AS stop_hits
-  FROM t)
-SELECT doc_id,
-  (n_words >= 50 AND n_words <= 100000) AS ok_word_count,
-  (mwl >= 3.0 AND mwl <= 10.0) AS ok_mean_word_len,
-  (CASE WHEN n_words > 0 THEN symbols / (n_words * 1.0) ELSE 0.0 END) <= 0.1 AS ok_symbol_ratio,
-  (CASE WHEN len(lines) > 0 THEN bullet_lines / (len(lines) * 1.0) ELSE 0.0 END) < 0.9 AS ok_bullet_lines,
-  (CASE WHEN len(lines) > 0 THEN ellipsis_lines / (len(lines) * 1.0) ELSE 0.0 END) <= 0.3 AS ok_ellipsis_lines,
-  (CASE WHEN n_words > 0 THEN alpha_words / (n_words * 1.0) ELSE 0.0 END) >= 0.8 AS ok_alpha_words,
-  (stop_hits >= 2) AS ok_stop_words,
-  ((n_words >= 50 AND n_words <= 100000)
-   AND (mwl >= 3.0 AND mwl <= 10.0)
-   AND (CASE WHEN n_words > 0 THEN symbols / (n_words * 1.0) ELSE 0.0 END) <= 0.1
-   AND (CASE WHEN len(lines) > 0 THEN bullet_lines / (len(lines) * 1.0) ELSE 0.0 END) < 0.9
-   AND (CASE WHEN len(lines) > 0 THEN ellipsis_lines / (len(lines) * 1.0) ELSE 0.0 END) <= 0.3
-   AND (CASE WHEN n_words > 0 THEN alpha_words / (n_words * 1.0) ELSE 0.0 END) >= 0.8
-   AND (stop_hits >= 2)) AS keep
-FROM m"""
-
-
-def q_corpus_prepare(spark, sf_dir):
+def q_corpus_prepare(spark, sf_dir, cleanup):
     """The end-to-end training-data manifest — every curation stage this
     engine implements, composed in the order a production pipeline runs
     them, ending in the exact (split, sequence-chunk) assignment a
@@ -2784,7 +1135,6 @@ def q_corpus_prepare(spark, sf_dir):
     # 5.2-5.4 s uncached vs 8.4-10.9 s with the docs frame cached — the
     # unpersist/refill cycle plus AQE's restrictions on InMemoryRelation
     # plans cost more than the duplicated scan they replace.
-    cleanup = _drain(_PREPARE_DEFERRED)
     docs = load_table(spark, sf_dir, "documents", rebalance=True)
     # flags for the non-benchmark docs only: benchmark docs (% 50 == 0)
     # are excluded from the manifest
@@ -2889,6 +1239,107 @@ SELECT p.doc_id, p.source,
 FROM packed p JOIN split s USING (doc_id)"""
 
 
+_register(q_corpus_prepare, _sql_corpus_prepare, deferred=True)
+
+
+def q_dup_span_removal(spark, sf_dir):
+    """Lee-et-al exact-substring removal proper: every word covered by a
+    4-word window occurring more than once corpus-wide (cross-doc or
+    within-doc) is deleted; the cleaned text is reassembled byte-exactly
+    on both engines."""
+    docs = load_table(spark, sf_dir, "documents", rebalance=True)
+    return curation.dup_span_removal(docs, gram_words=4).withColumnRenamed(
+        "id", "doc_id"
+    )
+
+
+SQL_DUP_SPAN_REMOVAL = """WITH words AS (
+  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS w
+  FROM documents
+), grams AS (
+  SELECT doc_id, i, array_to_string(w[i+1 : i+4], ' ') AS g
+  FROM words, unnest(range(len(w) - 3)) AS t(i)
+  WHERE len(w) >= 4
+), cnt AS (
+  SELECT g FROM grams GROUP BY g HAVING count(*) > 1
+), covered AS (
+  SELECT DISTINCT grams.doc_id, t.wp
+  FROM grams JOIN cnt USING (g), unnest(range(grams.i, grams.i + 4)) AS t(wp)
+), toks AS (
+  SELECT doc_id, i AS wp, w[i+1] AS word
+  FROM words, unnest(range(len(w))) AS t(i)
+), kept AS (
+  SELECT toks.doc_id,
+    CAST(count(*) AS BIGINT) AS n_kept,
+    string_agg(toks.word, ' ' ORDER BY toks.wp) AS text_clean
+  FROM toks LEFT JOIN covered
+    ON covered.doc_id = toks.doc_id AND covered.wp = toks.wp
+  WHERE covered.wp IS NULL
+  GROUP BY toks.doc_id)
+SELECT w.doc_id,
+  CAST(len(w.w) AS BIGINT) AS n_words,
+  CAST(len(w.w) - COALESCE(k.n_kept, 0) AS BIGINT) AS n_removed,
+  COALESCE(k.text_clean, '') AS text_clean
+FROM words w LEFT JOIN kept k USING (doc_id)"""
+_register(q_dup_span_removal, SQL_DUP_SPAN_REMOVAL)
+
+
+def q_gopher_quality(spark, sf_dir):
+    """The full Gopher document-quality rule set (Rae et al. 2021 App.
+    A1.1) as seven named boolean rules + the conjunction — one projection,
+    zero shuffles (`textstats.gopher_quality_flags`)."""
+    docs = load_table(spark, sf_dir, "documents", rebalance=True)
+    flags = textstats.gopher_quality_flags(F.col("text"))
+    keep = None
+    for c in flags.values():
+        keep = c if keep is None else (keep & c)
+    return docs.select(
+        "doc_id",
+        *[c.alias(name) for name, c in flags.items()],
+        keep.alias("keep"),
+    )
+
+
+_GOPHER_STOPS_SQL = ", ".join(f"'{w}'" for w in textstats.GOPHER_STOP_WORDS)
+
+SQL_GOPHER_QUALITY = f"""WITH t AS (
+  SELECT doc_id, text,
+    list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS toks,
+    string_split(text, chr(10)) AS lines
+  FROM documents
+), m AS (
+  SELECT doc_id, text, toks, lines,
+    len(toks) AS n_words,
+    CASE WHEN len(toks) > 0
+         THEN list_sum(list_transform(toks, x -> length(x))) / (len(toks) * 1.0)
+         ELSE 0.0 END AS mwl,
+    CAST(length(text) - length(replace(text, '#', '')) AS BIGINT)
+      + CAST((length(text) - length(replace(text, '...', ''))) / 3 AS BIGINT)
+      + CAST(length(text) - length(replace(text, '…', '')) AS BIGINT) AS symbols,
+    len(list_filter(lines, l -> l LIKE '•%' OR l LIKE '- %')) AS bullet_lines,
+    len(list_filter(lines, l -> l LIKE '%...' OR l LIKE '%…')) AS ellipsis_lines,
+    len(list_filter(toks, w -> regexp_matches(w, '[A-Za-z]'))) AS alpha_words,
+    len(list_intersect(list_distinct(toks), [{_GOPHER_STOPS_SQL}])) AS stop_hits
+  FROM t)
+SELECT doc_id,
+  (n_words >= 50 AND n_words <= 100000) AS ok_word_count,
+  (mwl >= 3.0 AND mwl <= 10.0) AS ok_mean_word_len,
+  (CASE WHEN n_words > 0 THEN symbols / (n_words * 1.0) ELSE 0.0 END) <= 0.1 AS ok_symbol_ratio,
+  (CASE WHEN len(lines) > 0 THEN bullet_lines / (len(lines) * 1.0) ELSE 0.0 END) < 0.9 AS ok_bullet_lines,
+  (CASE WHEN len(lines) > 0 THEN ellipsis_lines / (len(lines) * 1.0) ELSE 0.0 END) <= 0.3 AS ok_ellipsis_lines,
+  (CASE WHEN n_words > 0 THEN alpha_words / (n_words * 1.0) ELSE 0.0 END) >= 0.8 AS ok_alpha_words,
+  (stop_hits >= 2) AS ok_stop_words,
+  ((n_words >= 50 AND n_words <= 100000)
+   AND (mwl >= 3.0 AND mwl <= 10.0)
+   AND (CASE WHEN n_words > 0 THEN symbols / (n_words * 1.0) ELSE 0.0 END) <= 0.1
+   AND (CASE WHEN len(lines) > 0 THEN bullet_lines / (len(lines) * 1.0) ELSE 0.0 END) < 0.9
+   AND (CASE WHEN len(lines) > 0 THEN ellipsis_lines / (len(lines) * 1.0) ELSE 0.0 END) <= 0.3
+   AND (CASE WHEN n_words > 0 THEN alpha_words / (n_words * 1.0) ELSE 0.0 END) >= 0.8
+   AND (stop_hits >= 2)) AS keep
+FROM m"""
+_register(q_gopher_quality, SQL_GOPHER_QUALITY)
+
+
 def q_warc_roundtrip(spark, sf_dir):
     """WARC ingest surface, verified as a ROUND TRIP (``sources/warc.py``):
     serialize the documents table into Common-Crawl-style WARC segments
@@ -2948,192 +1399,1691 @@ SQL_WARC_ROUNDTRIP = """SELECT
   CAST(octet_length(encode(COALESCE(text, ''))) AS BIGINT) AS n_bytes,
   sha256(COALESCE(text, '')) AS payload_sha
 FROM documents"""
+_register(q_warc_roundtrip, SQL_WARC_ROUNDTRIP)
 
 
-_ORACLES = {
-    "url_categorize_counts": SQL_URL_CATEGORIZE,
-    "url_year_counts": SQL_URL_YEAR,
-    "url_document_flags": SQL_URL_DOCUMENT,
-    "url_ignore_filter": SQL_URL_IGNORE,
-    "url_host_counts": SQL_URL_HOST,
-    "url_path_prefix_counts": SQL_URL_PATH_PREFIX,
-    "frontier_dedup": SQL_FRONTIER_DEDUP,
-    "politeness_rank": SQL_POLITENESS,
-    "priority_schedule": SQL_PRIORITY_SCHEDULE,
-    "backoff_budgets": SQL_BACKOFF_BUDGETS,
-    "robots_gate": SQL_ROBOTS,
-    "robots_parse": SQL_ROBOTS_PARSE,
-    "crawl_delay_budgets": SQL_CRAWL_DELAY_BUDGETS,
-    "sitemap_extract": SQL_SITEMAP_EXTRACT,
-    "robots_sitemaps": SQL_ROBOTS_SITEMAPS,
-    "topk_recent_orders": SQL_TOPK_ORDERS,
-    "pagination_orders": SQL_PAGINATION,
-    "status_rollup": SQL_STATUS_ROLLUP,
-    "semi_join_customers": SQL_SEMI_JOIN,
-    "anti_join_customers": SQL_ANTI_JOIN,
-    "region_revenue": SQL_REGION_REVENUE,
-    "pricing_summary": SQL_PRICING_SUMMARY,
-    "events_window": SQL_EVENTS_WINDOW,
-    "events_tumbling": SQL_EVENTS_TUMBLING,
-    "events_json": SQL_EVENTS_JSON,
-    "sessionize_events": SQL_SESSIONIZE,
-    "status_pivot": SQL_STATUS_PIVOT,
-    "distinct_users": SQL_DISTINCT_USERS,
-    "url_filename": SQL_URL_FILENAME,
-    "post_categorize": SQL_POST_CATEGORIZE,
-    "download_manifest": SQL_DOWNLOAD_MANIFEST,
-    "union_distinct": SQL_UNION_DISTINCT,
-    "dedup_exact": SQL_DEDUP_EXACT,
-    "token_counts": SQL_TOKEN_COUNTS,
-    "quality_scores": SQL_QUALITY,
-    "lang_detect": SQL_LANG_DETECT,
-    "repetition_stats": SQL_REPETITION_STATS,
-    "tfidf_top_terms": SQL_TFIDF_TOP_TERMS,
-    "ngram_jaccard": SQL_NGRAM_JACCARD,
-    "winnow_neardup": SQL_WINNOW_NEARDUP,
-    "dedup_components": SQL_DEDUP_COMPONENTS,
-    "dedup_survivors": SQL_DEDUP_SURVIVORS,
-    "ann_cosine_topk": SQL_ANN_COSINE,
-    "embed_neardup": SQL_EMBED_NEARDUP,
-    "fb_keyword_counts": SQL_FB_KEYWORD_COUNTS,
-    "filename_sanitize": SQL_FILENAME_SANITIZE,
-    "page_metadata": SQL_PAGE_METADATA,
-    "events_recent": SQL_EVENTS_RECENT,
-    "downloads_by_year": SQL_DOWNLOADS_BY_YEAR,
-    "attachment_stats": SQL_ATTACHMENT_STATS,
-    "minhash_pairs": SQL_MINHASH_PAIRS,
-    "simhash_groups": SQL_SIMHASH_GROUPS,
-    "extract_text": SQL_EXTRACT_TEXT,
-    "media_features": SQL_MEDIA_FEATURES,
-    "redirect_404_filter": SQL_REDIRECT_404,
-    "cluster_greedy": SQL_CLUSTER_GREEDY,
-    "pii_redact": SQL_PII_REDACT,
-    "line_dedup": SQL_LINE_DEDUP,
-    "hash_split": SQL_HASH_SPLIT,
-    "corpus_clean": _sql_corpus_clean(),
-    "pagerank": _sql_pagerank(),
-    "domain_quota": SQL_DOMAIN_QUOTA,
-    "c4_line_filter": SQL_C4_LINE_FILTER,
-    "dup_span_stats": SQL_DUP_SPAN,
-    "pack_sequences": SQL_PACK_SEQUENCES,
-    "url_blocklist": SQL_URL_BLOCKLIST,
-    "quality_tiers": SQL_QUALITY_TIERS,
-    "decontaminate": SQL_DECONTAMINATE,
-    "corpus_prepare": _sql_corpus_prepare(),
-    "dup_span_removal": SQL_DUP_SPAN_REMOVAL,
-    "gopher_quality": SQL_GOPHER_QUALITY,
-    "warc_roundtrip": SQL_WARC_ROUNDTRIP,
-    "pagerank_schedule": _sql_pagerank_schedule(),
-    "surt_keys": SQL_SURT_KEYS,
+def q_pagerank_schedule(spark, sf_dir):
+    """The composition the north star describes in one sentence: a
+    per-domain politeness-budget priority queue ordered by page IMPORTANCE
+    — ``operators.pagerank`` output joined onto the url frontier as the
+    ``select_batch(order=...)`` priority.  ``priority_schedule`` proves the
+    window accepts any caller order with a stand-in score; this query
+    closes the loop with the real ranker: both component operators are
+    independently gate-verified, and this verifies their composition
+    (rank join → budgeted window) end-to-end against an oracle that
+    recomposes the same SQL fragments.
+
+    Ordering is on the ROUNDED rank (6 decimals, the same grain the
+    pagerank gate compares at) with a url tie-break, so the schedule is
+    identical across engines and replayable.  Plan shape: the rank frame
+    is one extra 8-byte-key join into the same WindowGroupLimit-guarded
+    budget window — no new shuffle class at 10^10 urls."""
+    from ..operators.politeness import select_batch
+
+    ranks = q_pagerank(spark, sf_dir)
+    urls = (
+        _urls_df(spark, sf_dir)
+        .groupBy("url", "host")
+        .agg(F.min("doc_id").alias("doc_id"))
+    )
+    frontier = urls.join(ranks, "doc_id").select("url", "host", "rank")
+    selected, _carry = select_batch(
+        frontier,
+        politeness=None,
+        default_budget=5,
+        order=[F.col("rank").desc(), F.col("url").asc()],
+    )
+    return selected.select("host", "url", "rank")
+
+
+def _sql_pagerank_schedule() -> str:
+    return f"""{ORACLE_URLS_CTE}
+, u AS (SELECT url, host, MIN(doc_id) AS doc_id FROM parsed GROUP BY url, host),
+pr AS (SELECT * FROM ({_sql_pagerank()})),
+scored AS (SELECT u.host, u.url, pr.rank FROM u JOIN pr USING (doc_id))
+SELECT host, url, rank FROM (
+  SELECT host, url, rank,
+         ROW_NUMBER() OVER (PARTITION BY host ORDER BY rank DESC, url) AS rn
+  FROM scored
+) WHERE rn <= 5"""
+
+
+_register(q_pagerank_schedule, _sql_pagerank_schedule)
+
+
+def q_surt_keys(spark, sf_dir):
+    """SURT index keys (the CDX/Common-Crawl URL-index key transform,
+    ``urlkit.surt_key``) for every distinct url — one scan, zero Python,
+    pure string algebra inside codegen.  At index scale the property that
+    matters is the SORT ORDER this key induces (one domain's pages
+    adjacent, subdomains right after their apex) — pinned by the fuzz
+    test; this query pins the transform itself cross-engine."""
+    urls = _urls_df(spark, sf_dir).select("url").distinct()
+    return urls.select("url", urlkit.surt_key(F.col("url")).alias("surt"))
+
+
+SQL_SURT_KEYS = f"""{ORACLE_URLS_CTE}
+SELECT DISTINCT url,
+  array_to_string(list_reverse(string_split(lower(host), '.')), ',')
+    || ')' || lower(path)
+    || CASE WHEN query <> '' THEN '?' || lower(query) ELSE '' END AS surt
+FROM parsed"""
+_register(q_surt_keys, SQL_SURT_KEYS)
+
+
+# --------------------------------------------------------------------------
+# Crawl-domain operator queries (SURVEY.md §2.2-2.4)
+# --------------------------------------------------------------------------
+
+
+def q_url_categorize_counts(spark, sf_dir):
+    """F10: order-sensitive CASE categorizer → counts per category."""
+    urls = _urls_df(spark, sf_dir)
+    return (
+        urls.select(urlkit.categorize(F.col("url")).alias("category"))
+        .groupBy("category")
+        .agg(F.count("*").alias("cnt"))
+    )
+
+
+# derived from the urlkit config-tier constants so engine and oracle can't
+# drift (VERDICT r4 wrong #2: a hand-copied list silently masked divergence)
+_SOCIAL_RE_SQL = (
+    "(" + "|".join(k.replace(".", "\\.") for k in urlkit.SOCIAL_MEDIA_KEYWORDS) + ")"
+)
+_BANK_RE_SQL = "(" + "|".join(urlkit.BANK_KEYWORDS) + ")"
+_FILE_RE_SQL = "\\.(" + "|".join(urlkit.FILE_EXTENSIONS) + ")($|\\?)"
+
+SQL_URL_CATEGORIZE = f"""{ORACLE_URLS_CTE}
+SELECT category, CAST(COUNT(*) AS BIGINT) AS cnt FROM (
+  SELECT CASE
+    WHEN regexp_matches(url, '{_SOCIAL_RE_SQL}', 'i') THEN 'social_media'
+    WHEN NOT regexp_matches(url, '{_BANK_RE_SQL}', 'i') THEN 'misc'
+    WHEN regexp_matches(url, '{_FILE_RE_SQL}', 'i') THEN 'file'
+    ELSE 'bank' END AS category
+  FROM parsed
+) GROUP BY category"""
+_register(q_url_categorize_counts, SQL_URL_CATEGORIZE)
+
+
+def q_url_year_counts(spark, sf_dir):
+    """F11/A8-A9: year precedence (filename → query values → path) → counts."""
+    urls = _urls_df(spark, sf_dir, rebalance=True)
+    return (
+        urls.select(urlkit.extract_year(F.col("url")).alias("year"))
+        .groupBy("year")
+        .agg(F.count("*").alias("cnt"))
+    )
+
+
+SQL_URL_YEAR = f"""{ORACLE_URLS_CTE}
+SELECT year, CAST(COUNT(*) AS BIGINT) AS cnt FROM (
+  SELECT COALESCE(
+    NULLIF(regexp_extract(string_split(path, '/')[-1], '(19|20)[0-9][0-9]', 0), ''),
+    NULLIF(regexp_extract(query, '(19|20)[0-9][0-9]', 0), ''),
+    NULLIF(regexp_extract(path, '(19|20)[0-9][0-9]', 0), ''),
+    'No Year') AS year
+  FROM parsed
+) GROUP BY year"""
+_register(q_url_year_counts, SQL_URL_YEAR)
+
+
+def q_url_document_flags(spark, sf_dir):
+    """F8: document-URL predicate → per-flag counts."""
+    urls = _urls_df(spark, sf_dir)
+    return (
+        urls.select(urlkit.is_document_url(F.col("url")).alias("is_document"))
+        .groupBy("is_document")
+        .agg(F.count("*").alias("cnt"))
+    )
+
+
+SQL_URL_DOCUMENT = f"""{ORACLE_URLS_CTE}
+SELECT regexp_matches(lower(path), '\\.(pdf|doc|docx|xls|xlsx|ppt|pptx|txt|rtf|csv)$') AS is_document,
+       CAST(COUNT(*) AS BIGINT) AS cnt
+FROM parsed GROUP BY 1"""
+_register(q_url_document_flags, SQL_URL_DOCUMENT)
+
+
+def q_url_ignore_filter(spark, sf_dir):
+    """F2: ignore-pattern regex filter — surviving urls.
+
+    Uses the FUSED single-rlike form (r6): the url here is the synthesized
+    CASE expression, and pushdown substitutes that tree into every term of
+    the contains/endswith decomposition — ~30 CASE evaluations per row
+    (measured 1.3 s vs 0.35 s at sf1-shape).  One alternation references
+    the url exactly once; property-tested equivalent (tests/test_urlkit.py)
+    and hash-identical on the gate."""
+    urls = _urls_df(spark, sf_dir)
+    return urls.filter(~urlkit.is_ignored_fused(F.col("url"))).select("url")
+
+
+_IGNORE_RE_SQL = (
+    "(logout|login|signin|signout"
+    "|\\.(zip|rar|exe|dmg|jpeg|png|gif|mov|jpg|mp3|m4v|avi|mp4|aspx)$"
+    "|\\.jpg|/404)"
+)
+
+SQL_URL_IGNORE = f"""{ORACLE_URLS_CTE}
+SELECT url FROM parsed WHERE NOT regexp_matches(url, '{_IGNORE_RE_SQL}', 'i')"""
+_register(q_url_ignore_filter, SQL_URL_IGNORE)
+
+
+def q_url_host_counts(spark, sf_dir):
+    """A2: group-by host (parse_url on the Spark side)."""
+    urls = _urls_df(spark, sf_dir)
+    return (
+        urls.select(urlkit.url_host(F.col("url")).alias("host"))
+        .groupBy("host")
+        .agg(F.count("*").alias("cnt"))
+    )
+
+
+SQL_URL_HOST = f"""{ORACLE_URLS_CTE}
+SELECT host, CAST(COUNT(*) AS BIGINT) AS cnt FROM parsed GROUP BY host"""
+_register(q_url_host_counts, SQL_URL_HOST)
+
+
+def q_url_path_prefix_counts(spark, sf_dir):
+    """A3: path truncated to depth 2 → counts."""
+    urls = _urls_df(spark, sf_dir, rebalance=True)
+    return (
+        urls.select(
+            urlkit.path_prefix(urlkit.url_path(F.col("url")), 2).alias("path_prefix")
+        )
+        .groupBy("path_prefix")
+        .agg(F.count("*").alias("cnt"))
+    )
+
+
+SQL_URL_PATH_PREFIX = f"""{ORACLE_URLS_CTE}
+SELECT CASE WHEN regexp_extract(rtrim(path, '/'), '^/[^/]+(/[^/]+)?', 0) = ''
+            THEN '/' ELSE regexp_extract(rtrim(path, '/'), '^/[^/]+(/[^/]+)?', 0) END AS path_prefix,
+       CAST(COUNT(*) AS BIGINT) AS cnt
+FROM parsed GROUP BY 1"""
+_register(q_url_path_prefix_counts, SQL_URL_PATH_PREFIX)
+
+
+def q_frontier_dedup(spark, sf_dir):
+    """J1: the load-bearing anti-join — candidates ∖ seen."""
+    urls = _urls_df(spark, sf_dir)
+    candidates = urls.filter(F.col("doc_id") % 2 == 0).select("url")
+    seen = urls.filter(F.col("doc_id") % 3 == 0).select("url")
+    return candidates.join(seen, "url", "left_anti").select("url").distinct()
+
+
+SQL_FRONTIER_DEDUP = f"""{ORACLE_URLS_CTE}
+SELECT DISTINCT url FROM parsed c WHERE doc_id % 2 = 0
+  AND NOT EXISTS (SELECT 1 FROM parsed s WHERE s.doc_id % 3 = 0 AND s.url = c.url)"""
+_register(q_frontier_dedup, SQL_FRONTIER_DEDUP)
+
+
+def q_politeness_rank(spark, sf_dir):
+    """§2.5: per-host budget via window ranking (budget 8 for host0, else 4)."""
+    urls = _urls_df(spark, sf_dir).dropDuplicates(["url"])
+    win = Window.partitionBy("host").orderBy("url")
+    budget = F.when(F.col("host").startswith("host0"), 8).otherwise(4)
+    return (
+        urls.withColumn("rnk", F.row_number().over(win))
+        .filter(F.col("rnk") <= budget)
+        .select("host", "url", "rnk")
+    )
+
+
+SQL_POLITENESS = f"""{ORACLE_URLS_CTE}
+SELECT host, url, rnk FROM (
+  SELECT host, url, CAST(ROW_NUMBER() OVER (PARTITION BY host ORDER BY url) AS INT) AS rnk
+  FROM (SELECT DISTINCT host, url FROM parsed)
+) WHERE rnk <= CASE WHEN host LIKE 'host0%' THEN 8 ELSE 4 END"""
+_register(q_politeness_rank, SQL_POLITENESS)
+
+
+def q_priority_schedule(spark, sf_dir):
+    """§2.5 priority-queue variant: the SAME budgeted per-host window as
+    ``politeness_rank``, but ordered by a per-url PRIORITY score instead of
+    the BFS (depth, url) order — ``select_batch(order=...)``, the
+    north-star's "per-domain politeness-budget priority queue" with the
+    priority column supplied by the caller (here a deterministic Knuth-hash
+    score standing in for PageRank/OPIC; the real crawl would join
+    ``operators.pagerank`` output). Budget 5/host; ties broken on url so
+    the schedule stays replayable."""
+    from ..operators.politeness import select_batch
+
+    urls = (
+        _urls_df(spark, sf_dir)
+        .groupBy("url", "host")
+        .agg(F.min("doc_id").alias("doc_id"))
+    )
+    frontier = urls.select(
+        "url", "host", ((F.col("doc_id") * 2654435761) % 997).alias("score")
+    )
+    selected, _carry = select_batch(
+        frontier,
+        politeness=None,
+        default_budget=5,
+        order=[F.col("score").desc(), F.col("url").asc()],
+    )
+    return selected.select(
+        "host", "url", F.col("score").cast("long").alias("score")
+    )
+
+
+SQL_PRIORITY_SCHEDULE = f"""{ORACLE_URLS_CTE}
+, u AS (SELECT url, host, MIN(doc_id) AS doc_id FROM parsed GROUP BY url, host),
+scored AS (SELECT host, url, (doc_id * 2654435761) % 997 AS score FROM u)
+SELECT host, url, CAST(score AS BIGINT) AS score FROM (
+  SELECT host, url, score,
+         ROW_NUMBER() OVER (PARTITION BY host ORDER BY score DESC, url) AS rn
+  FROM scored
+) WHERE rn <= 5"""
+_register(q_priority_schedule, SQL_PRIORITY_SCHEDULE)
+
+
+def q_backoff_budgets(spark, sf_dir):
+    """Adaptive politeness backoff: per-host next-iteration budgets scaled
+    by the previous superstep's observed error rate —
+    ``greatest(1, (default · ok) div total)`` in exact integer arithmetic
+    (a float error-rate's reduction-order ulp could flip a floor boundary
+    between engines). Synthesis: each doc is one fetch; errors hit a
+    deterministic doc_id stripe so hosts carry different rates."""
+    from ..operators.politeness import budgets_from_error_rates
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id")
+    d = F.col("doc_id")
+    log = docs.select(
+        F.expr(HOST_SQL).alias("host"),
+        ((d % 3 == 0) & ((d % 7).isin(2, 3))).cast("int").alias("is_error"),
+    )
+    budgets = budgets_from_error_rates(log, default_budget=8)
+    rates = log.groupBy("host").agg(
+        F.round(
+            F.sum(F.col("is_error").cast("long")).cast("double") / F.count("*"), 6
+        ).alias("err_rate")
+    )
+    return budgets.join(rates, "host").select("host", "budget", "err_rate")
+
+
+SQL_BACKOFF_BUDGETS = f"""WITH log AS (
+  SELECT {HOST_SQL} AS host,
+         CASE WHEN doc_id % 3 = 0 AND doc_id % 7 IN (2, 3) THEN 1 ELSE 0 END AS is_error
+  FROM documents
+), agg AS (
+  SELECT host, COUNT(*) AS n, SUM(is_error) AS e FROM log GROUP BY host
+)
+SELECT host,
+       CAST(GREATEST(1, (8 * (n - e)) // n) AS INTEGER) AS budget,
+       ROUND(CAST(e AS DOUBLE) / n, 6) AS err_rate
+FROM agg"""
+_register(q_backoff_budgets, SQL_BACKOFF_BUDGETS)
+
+
+def q_robots_gate(spark, sf_dir):
+    """F4/J4: per-host Disallow-prefix gating via broadcast rules."""
+    from ..operators.robots import aggregate_rules, robots_allow
+
+    urls = _urls_df(spark, sf_dir).dropDuplicates(["url"])
+    rules = spark.createDataFrame(
+        [
+            ("host1.example.com", "/admin"),
+            ("host1.example.com", "/media"),
+            ("host3.example.com", "/sec"),
+            ("host4.ubl.com.pk", "/united"),
+        ],
+        "host string, disallow_prefix string",
+    )
+    links = urls.withColumn("path", urlkit.url_path(F.col("url")))
+    return robots_allow(links, aggregate_rules(rules)).select("url")
+
+
+SQL_ROBOTS = f"""{ORACLE_URLS_CTE}
+SELECT url FROM (SELECT DISTINCT url, host, path FROM parsed) p
+WHERE NOT EXISTS (
+  SELECT 1 FROM (VALUES ('host1.example.com', '/admin'),
+                        ('host1.example.com', '/media'),
+                        ('host3.example.com', '/sec'),
+                        ('host4.ubl.com.pk', '/united')) r(host, prefix)
+  WHERE r.host = p.host AND p.path LIKE r.prefix || '%')"""
+_register(q_robots_gate, SQL_ROBOTS)
+
+
+def q_robots_parse(spark, sf_dir):
+    """S3 upstream half: raw robots.txt text → (host, disallow_prefix)
+    rules, the reference's exact line scan (apollo.py:260-264) as pure
+    Catalyst (split → explode → startswith → substring+trim → distinct).
+
+    Bodies are synthesized per doc_id with every parser edge the reference
+    semantics pin: a CRLF-terminated line (trailing \\r stripped), an empty
+    ``Disallow:`` (dropped), a lowercase ``disallow:`` (ignored — exact
+    case), an indented ``  Disallow:`` (ignored — no whitespace tolerance),
+    a path containing a colon (split on FIRST colon only), an ``Allow:``
+    line and a ``User-agent:`` header (both ignored — the reference applies
+    every Disallow to every agent). Hosts repeat across doc_ids, so the
+    DISTINCT set is what survives."""
+    from ..operators.robots import parse_robots
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id")
+    d = F.col("doc_id")
+    line_admin = F.concat(F.lit("Disallow: /admin"), (d % 5).cast("string"))
+    line_edge = (
+        F.when(d % 4 == 0, F.lit("Disallow:"))
+        .when(d % 4 == 1, F.lit("disallow: /lower"))
+        .when(d % 4 == 2, F.lit("  Disallow: /indent"))
+        .otherwise(F.concat(F.lit("Disallow: /x:y"), (d % 3).cast("string")))
+    )
+    line_media = F.concat(
+        F.lit("Disallow: /media/"), (d % 7).cast("string"), F.lit("\r")
+    )
+    body = F.concat_ws(
+        "\n",
+        F.lit("User-agent: *"),
+        line_admin,
+        line_edge,
+        line_media,
+        F.lit("Allow: /public"),
+    )
+    bodies = docs.select(F.expr(HOST_SQL).alias("host"), body.alias("body"))
+    return parse_robots(bodies)
+
+
+SQL_ROBOTS_PARSE = f"""WITH bodies AS (
+  SELECT {HOST_SQL} AS host,
+         'User-agent: *' || chr(10)
+         || 'Disallow: /admin' || CAST(doc_id % 5 AS STRING) || chr(10)
+         || (CASE doc_id % 4
+               WHEN 0 THEN 'Disallow:'
+               WHEN 1 THEN 'disallow: /lower'
+               WHEN 2 THEN '  Disallow: /indent'
+               ELSE 'Disallow: /x:y' || CAST(doc_id % 3 AS STRING) END) || chr(10)
+         || 'Disallow: /media/' || CAST(doc_id % 7 AS STRING) || chr(13) || chr(10)
+         || 'Allow: /public' AS body
+  FROM documents
+), lines AS (
+  SELECT host, unnest(string_split(body, chr(10))) AS line FROM bodies
+), rules AS (
+  SELECT host,
+         regexp_replace(substring(line, 10), '^\\s+|\\s+$', '', 'g') AS disallow_prefix
+  FROM lines WHERE line LIKE 'Disallow:%'
+)
+SELECT DISTINCT host, disallow_prefix FROM rules WHERE disallow_prefix <> ''"""
+_register(q_robots_parse, SQL_ROBOTS_PARSE)
+
+
+def q_crawl_delay_budgets(spark, sf_dir):
+    """Crawl-delay → politeness budgets: parse the de-facto robots
+    extension (case-insensitive directive, try_cast value, per-host MIN)
+    and derive per-host budgets for ``select_batch`` (floor(30 s period /
+    delay), clamped to [1, 20]) — the site's own rate request feeding the
+    scheduler. Bodies exercise the value edges: mixed-case directives, a
+    fractional delay, a non-numeric value (ignored), a missing line, and a
+    second always-valid delay so the MIN merge is live on every host."""
+    from ..operators.politeness import budgets_from_delays
+    from ..operators.robots import parse_crawl_delays
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id")
+    d = F.col("doc_id")
+    line_edge = (
+        F.when(d % 5 == 0, F.lit("Crawl-delay: 2"))
+        .when(d % 5 == 1, F.lit("crawl-delay: 0.5"))
+        .when(d % 5 == 2, F.lit("Crawl-Delay: 10"))
+        .when(d % 5 == 3, F.lit("Crawl-delay: fast"))
+        .otherwise(F.lit("# no delay"))
+    )
+    line_num = F.concat(F.lit("Crawl-delay: "), (d % 13 + 1).cast("string"))
+    body = F.concat_ws(
+        "\n", F.lit("User-agent: *"), line_edge, line_num, F.lit("Disallow: /x")
+    )
+    bodies = docs.select(F.expr(HOST_SQL).alias("host"), body.alias("body"))
+    delays = parse_crawl_delays(bodies)
+    budgets = budgets_from_delays(delays, iteration_seconds=30.0, max_budget=20)
+    return delays.join(budgets, "host").select("host", "crawl_delay", "budget")
+
+
+SQL_CRAWL_DELAY_BUDGETS = f"""WITH bodies AS (
+  SELECT {HOST_SQL} AS host,
+         'User-agent: *' || chr(10)
+         || (CASE doc_id % 5
+               WHEN 0 THEN 'Crawl-delay: 2'
+               WHEN 1 THEN 'crawl-delay: 0.5'
+               WHEN 2 THEN 'Crawl-Delay: 10'
+               WHEN 3 THEN 'Crawl-delay: fast'
+               ELSE '# no delay' END) || chr(10)
+         || 'Crawl-delay: ' || CAST(doc_id % 13 + 1 AS STRING) || chr(10)
+         || 'Disallow: /x' AS body
+  FROM documents
+), lines AS (
+  SELECT host, unnest(string_split(body, chr(10))) AS line FROM bodies
+), vals AS (
+  SELECT host,
+         TRY_CAST(regexp_replace(substring(line, 13), '^\\s+|\\s+$', '', 'g') AS DOUBLE) AS d
+  FROM lines WHERE lower(line) LIKE 'crawl-delay:%'
+), delays AS (
+  SELECT host, MIN(d) AS crawl_delay FROM vals
+  WHERE d IS NOT NULL AND d > 0 GROUP BY host
+)
+SELECT host, crawl_delay,
+       CAST(LEAST(GREATEST(1, FLOOR(30.0 / crawl_delay)), 20) AS INTEGER) AS budget
+FROM delays"""
+_register(q_crawl_delay_budgets, SQL_CRAWL_DELAY_BUDGETS)
+
+
+def q_sitemap_extract(spark, sf_dir):
+    """Sitemap discovery: ``<loc>`` extraction over synthesized urlset XML —
+    whitespace-trimmed, XML-entity-unescaped (``&amp;`` last so an
+    author-escaped ``&amp;lt;`` round-trips), non-http and empty locs
+    dropped, DISTINCT per host. Sub-sitemap ``.xml`` locs are kept (a
+    sitemapindex's children re-enter the fetch loop as ordinary urls)."""
+    from ..operators.sitemap import parse_sitemap_locs
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id")
+    d = F.col("doc_id")
+    host = F.expr(HOST_SQL)
+    loc_page = F.concat(
+        F.lit("<loc>https://"), host, F.lit("/page"), d.cast("string"), F.lit("</loc>")
+    )
+    loc_ws = F.concat(
+        F.lit("<loc>\n  https://"), host, F.lit("/ws"), (d % 7).cast("string"), F.lit("  \n</loc>")
+    )
+    loc_ent = F.concat(
+        F.lit("<loc>https://"), host, F.lit("/q?a=1&amp;b="), (d % 5).cast("string"), F.lit("</loc>")
+    )
+    loc_edge = (
+        F.when(d % 3 == 0, F.concat(F.lit("<loc>ftp://"), host, F.lit("/skip</loc>")))
+        .when(d % 3 == 1, F.lit("<loc></loc>"))
+        .otherwise(
+            F.concat(F.lit("<loc>https://sub.example.com/map"), (d % 4).cast("string"), F.lit(".xml</loc>"))
+        )
+    )
+    body = F.concat(
+        F.lit('<?xml version="1.0"?><urlset>'),
+        loc_page, loc_ws, loc_ent, loc_edge,
+        F.lit("</urlset>"),
+    )
+    bodies = docs.select(host.alias("host"), body.alias("body"))
+    return parse_sitemap_locs(bodies)
+
+
+SQL_SITEMAP_EXTRACT = f"""WITH bodies AS (
+  SELECT {HOST_SQL} AS host,
+         '<?xml version="1.0"?><urlset>'
+         || '<loc>https://' || {HOST_SQL} || '/page' || CAST(doc_id AS STRING) || '</loc>'
+         || '<loc>' || chr(10) || '  https://' || {HOST_SQL} || '/ws' || CAST(doc_id % 7 AS STRING) || '  ' || chr(10) || '</loc>'
+         || '<loc>https://' || {HOST_SQL} || '/q?a=1&amp;b=' || CAST(doc_id % 5 AS STRING) || '</loc>'
+         || (CASE doc_id % 3
+               WHEN 0 THEN '<loc>ftp://' || {HOST_SQL} || '/skip</loc>'
+               WHEN 1 THEN '<loc></loc>'
+               ELSE '<loc>https://sub.example.com/map' || CAST(doc_id % 4 AS STRING) || '.xml</loc>' END)
+         || '</urlset>' AS body
+  FROM documents
+), locs AS (
+  SELECT host, unnest(regexp_extract_all(body, '<loc>([^<]*)</loc>', 1)) AS raw
+  FROM bodies
+), urls AS (
+  SELECT host,
+         replace(replace(replace(replace(replace(
+           regexp_replace(raw, '^\\s+|\\s+$', '', 'g'),
+           '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&apos;', ''''), '&amp;', '&') AS url
+  FROM locs
+)
+SELECT DISTINCT host, url FROM urls
+WHERE url LIKE 'http://%' OR url LIKE 'https://%'"""
+_register(q_sitemap_extract, SQL_SITEMAP_EXTRACT)
+
+
+def q_robots_sitemaps(spark, sf_dir):
+    """robots.txt ``Sitemap:`` directive discovery (case-insensitive
+    directive, first-colon split preserving the value's own ``https://``,
+    relative values dropped) — the standard path from a fetched robots body
+    to :func:`..operators.sitemap.parse_sitemap_locs` input."""
+    from ..operators.robots import parse_sitemap_directives
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id")
+    d = F.col("doc_id")
+    host = F.expr(HOST_SQL)
+    line_edge = (
+        F.when(d % 4 == 0, F.concat(F.lit("Sitemap: https://"), host, F.lit("/sitemap.xml")))
+        .when(d % 4 == 1, F.concat(F.lit("sitemap: https://"), host, F.lit("/s"), (d % 6).cast("string"), F.lit(".xml")))
+        .when(d % 4 == 2, F.concat(F.lit("SITEMAP:https://"), host, F.lit("/caps.xml")))
+        .otherwise(F.lit("Sitemap: /relative.xml"))
+    )
+    line_shared = F.concat(
+        F.lit("Sitemap: https://cdn.example.com/shared-"), (d % 3).cast("string"), F.lit(".xml")
+    )
+    body = F.concat_ws(
+        "\n", F.lit("User-agent: *"), line_edge, line_shared, F.lit("Disallow: /x")
+    )
+    bodies = docs.select(host.alias("host"), body.alias("body"))
+    return parse_sitemap_directives(bodies)
+
+
+SQL_ROBOTS_SITEMAPS = f"""WITH bodies AS (
+  SELECT {HOST_SQL} AS host,
+         'User-agent: *' || chr(10)
+         || (CASE doc_id % 4
+               WHEN 0 THEN 'Sitemap: https://' || {HOST_SQL} || '/sitemap.xml'
+               WHEN 1 THEN 'sitemap: https://' || {HOST_SQL} || '/s' || CAST(doc_id % 6 AS STRING) || '.xml'
+               WHEN 2 THEN 'SITEMAP:https://' || {HOST_SQL} || '/caps.xml'
+               ELSE 'Sitemap: /relative.xml' END) || chr(10)
+         || 'Sitemap: https://cdn.example.com/shared-' || CAST(doc_id % 3 AS STRING) || '.xml' || chr(10)
+         || 'Disallow: /x' AS body
+  FROM documents
+), lines AS (
+  SELECT host, unnest(string_split(body, chr(10))) AS line FROM bodies
+), vals AS (
+  SELECT host,
+         regexp_replace(substring(line, 9), '^\\s+|\\s+$', '', 'g') AS sitemap_url
+  FROM lines WHERE lower(line) LIKE 'sitemap:%'
+)
+SELECT DISTINCT host, sitemap_url FROM vals
+WHERE sitemap_url LIKE 'http://%' OR sitemap_url LIKE 'https://%'"""
+_register(q_robots_sitemaps, SQL_ROBOTS_SITEMAPS)
+
+
+# --------------------------------------------------------------------------
+# Relational operators over the TPC-H-ish tables (SURVEY.md §2.3-2.7)
+# --------------------------------------------------------------------------
+
+
+def q_topk_recent_orders(spark, sf_dir):
+    """O3/O4: sort desc + limit with total tie-break."""
+    orders = load_table(spark, sf_dir, "orders")
+    return orders.orderBy(
+        F.desc("o_orderdate"), F.asc("o_orderkey")
+    ).select("o_orderkey", "o_orderdate").limit(10)
+
+
+SQL_TOPK_ORDERS = """SELECT o_orderkey, o_orderdate FROM orders
+ORDER BY o_orderdate DESC, o_orderkey ASC LIMIT 10"""
+_register(q_topk_recent_orders, SQL_TOPK_ORDERS)
+
+
+def q_pagination_orders(spark, sf_dir):
+    """O5: offset/limit pagination."""
+    orders = load_table(spark, sf_dir, "orders")
+    return (
+        orders.orderBy("o_orderkey")
+        .select("o_orderkey", "o_orderstatus")
+        .offset(20)
+        .limit(10)
+    )
+
+
+SQL_PAGINATION = """SELECT o_orderkey, o_orderstatus FROM orders
+ORDER BY o_orderkey OFFSET 20 LIMIT 10"""
+_register(q_pagination_orders, SQL_PAGINATION)
+
+
+def q_status_rollup(spark, sf_dir):
+    """A12: rollup with grand total."""
+    orders = load_table(spark, sf_dir, "orders")
+    return orders.rollup("o_orderstatus").agg(
+        F.count("*").alias("cnt"),
+        F.round(F.sum("o_totalprice"), 2).alias("total_price"),
+    )
+
+
+SQL_STATUS_ROLLUP = """SELECT o_orderstatus, CAST(COUNT(*) AS BIGINT) AS cnt,
+ROUND(SUM(o_totalprice), 2) AS total_price
+FROM orders GROUP BY ROLLUP (o_orderstatus)"""
+_register(q_status_rollup, SQL_STATUS_ROLLUP)
+
+
+def q_semi_join_customers(spark, sf_dir):
+    """U4/J5: left-semi — customers that have orders, per segment."""
+    customer = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
+    return (
+        customer.join(orders, customer.c_custkey == orders.o_custkey, "left_semi")
+        .groupBy("c_mktsegment")
+        .agg(F.count("*").alias("cnt"))
+    )
+
+
+SQL_SEMI_JOIN = """SELECT c_mktsegment, CAST(COUNT(*) AS BIGINT) AS cnt FROM customer
+WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
+GROUP BY c_mktsegment"""
+_register(q_semi_join_customers, SQL_SEMI_JOIN)
+
+
+def q_anti_join_customers(spark, sf_dir):
+    """J2/U3: left-anti — customers with no orders."""
+    customer = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
+    return customer.join(
+        orders, customer.c_custkey == orders.o_custkey, "left_anti"
+    ).select("c_custkey", "c_name")
+
+
+SQL_ANTI_JOIN = """SELECT c_custkey, c_name FROM customer
+WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)"""
+_register(q_anti_join_customers, SQL_ANTI_JOIN)
+
+
+def q_region_revenue(spark, sf_dir):
+    """J6-shape: 3-way equi-join chain with broadcast dims + agg."""
+    customer = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
+    nation = load_table(spark, sf_dir, "nation")
+    region = load_table(spark, sf_dir, "region")
+    return (
+        orders.join(customer, orders.o_custkey == customer.c_custkey)
+        .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
+        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
+        .groupBy("r_name")
+        .agg(
+            F.count("*").alias("n_orders"),
+            F.round(F.sum("o_totalprice"), 2).alias("revenue"),
+        )
+    )
+
+
+SQL_REGION_REVENUE = """SELECT r_name, CAST(COUNT(*) AS BIGINT) AS n_orders,
+ROUND(SUM(o_totalprice), 2) AS revenue
+FROM orders JOIN customer ON o_custkey = c_custkey
+JOIN nation ON c_nationkey = n_nationkey
+JOIN region ON n_regionkey = r_regionkey
+GROUP BY r_name"""
+_register(q_region_revenue, SQL_REGION_REVENUE)
+
+
+def q_pricing_summary(spark, sf_dir):
+    """TPC-H Q1 shape: the canonical partial/final hash aggregate."""
+    lineitem = load_table(spark, sf_dir, "lineitem")
+    return (
+        lineitem.filter(F.col("l_shipdate") <= F.lit("2000-09-02"))
+        .groupBy("l_returnflag", "l_linestatus")
+        .agg(
+            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
+            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
+            F.round(
+                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
+            ).alias("sum_disc_price"),
+            F.round(F.avg("l_discount"), 6).alias("avg_disc"),
+            F.count("*").alias("count_order"),
+        )
+    )
+
+
+SQL_PRICING_SUMMARY = """SELECT l_returnflag, l_linestatus,
+ROUND(SUM(l_quantity), 2) AS sum_qty,
+ROUND(SUM(l_extendedprice), 2) AS sum_base_price,
+ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
+ROUND(AVG(l_discount), 6) AS avg_disc,
+CAST(COUNT(*) AS BIGINT) AS count_order
+FROM lineitem WHERE l_shipdate <= TIMESTAMP '2000-09-02 00:00:00'
+GROUP BY l_returnflag, l_linestatus"""
+_register(q_pricing_summary, SQL_PRICING_SUMMARY)
+
+
+def q_events_window(spark, sf_dir):
+    """§2.5: row_number per user — first 3 events by time."""
+    events = load_table(spark, sf_dir, "events")
+    win = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    return (
+        events.withColumn("rnk", F.row_number().over(win))
+        .filter(F.col("rnk") <= 3)
+        .select("user_id", "event_id", "rnk")
+    )
+
+
+SQL_EVENTS_WINDOW = """SELECT user_id, event_id, rnk FROM (
+SELECT user_id, event_id,
+CAST(ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS INT) AS rnk
+FROM events) WHERE rnk <= 3"""
+_register(q_events_window, SQL_EVENTS_WINDOW)
+
+
+def q_events_tumbling(spark, sf_dir):
+    """Streaming analog: tumbling 1-hour windowed counts per event type."""
+    events = load_table(spark, sf_dir, "events")
+    return (
+        events.groupBy(
+            F.date_trunc("hour", F.col("ts")).alias("window_start"),
+            "event_type",
+        )
+        .agg(
+            F.count("*").alias("cnt"),
+            F.round(F.sum("value"), 2).alias("total_value"),
+        )
+    )
+
+
+SQL_EVENTS_TUMBLING = """SELECT date_trunc('hour', ts) AS window_start, event_type,
+CAST(COUNT(*) AS BIGINT) AS cnt, ROUND(SUM(value), 2) AS total_value
+FROM events GROUP BY 1, 2"""
+_register(q_events_tumbling, SQL_EVENTS_TUMBLING)
+
+
+def q_events_json(spark, sf_dir):
+    """JSON scalar extraction from the props column."""
+    events = load_table(spark, sf_dir, "events")
+    return (
+        events.select(
+            F.get_json_object(F.col("props"), "$.k").cast("int").alias("k_bucket")
+        )
+        .groupBy("k_bucket")
+        .agg(F.count("*").alias("cnt"))
+    )
+
+
+SQL_EVENTS_JSON = """SELECT CAST(json_extract_string(props, '$.k') AS INT) AS k_bucket,
+CAST(COUNT(*) AS BIGINT) AS cnt FROM events GROUP BY 1"""
+_register(q_events_json, SQL_EVENTS_JSON)
+
+
+def q_sessionize_events(spark, sf_dir):
+    """Gap-based sessionization (30-min inactivity): lag + cumulative sum of
+    session-break flags per user — the stateful-streaming classic expressed
+    as two windows."""
+    events = load_table(spark, sf_dir, "events")
+    order_win = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    prev_ts = F.lag("ts").over(order_win)
+    is_break = F.when(
+        prev_ts.isNull()
+        | (F.unix_timestamp("ts") - F.unix_timestamp(prev_ts) > 1800),
+        1,
+    ).otherwise(0)
+    with_breaks = events.withColumn("brk", is_break)
+    session_id = F.sum("brk").over(
+        order_win.rowsBetween(Window.unboundedPreceding, 0)
+    )
+    return (
+        with_breaks.withColumn("session_id", session_id.cast("int"))
+        .groupBy("user_id", "session_id")
+        .agg(
+            F.count("*").alias("n_events"),
+            F.round(F.sum("value"), 2).alias("session_value"),
+        )
+    )
+
+
+SQL_SESSIONIZE = """WITH flagged AS (
+  SELECT user_id, value,
+    CASE WHEN lag(ts) OVER w IS NULL
+           OR epoch(ts) - epoch(lag(ts) OVER w) > 1800
+         THEN 1 ELSE 0 END AS brk,
+    ts, event_id
+  FROM events
+  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+), sessions AS (
+  SELECT user_id, value,
+    CAST(SUM(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id
+         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS INT) AS session_id
+  FROM flagged
+)
+SELECT user_id, session_id, CAST(COUNT(*) AS BIGINT) AS n_events,
+ROUND(SUM(value), 2) AS session_value
+FROM sessions GROUP BY user_id, session_id"""
+_register(q_sessionize_events, SQL_SESSIONIZE)
+
+
+def q_status_pivot(spark, sf_dir):
+    """A13 shape: pivot success/fail tallies — conditional aggregation."""
+    events = load_table(spark, sf_dir, "events")
+    return events.groupBy("event_type").agg(
+        F.sum(F.when(F.col("value") >= 100, 1).otherwise(0)).alias("high"),
+        F.sum(F.when(F.col("value") < 100, 1).otherwise(0)).alias("low"),
+    )
+
+
+SQL_STATUS_PIVOT = """SELECT event_type,
+CAST(SUM(CASE WHEN value >= 100 THEN 1 ELSE 0 END) AS BIGINT) AS high,
+CAST(SUM(CASE WHEN value < 100 THEN 1 ELSE 0 END) AS BIGINT) AS low
+FROM events GROUP BY event_type"""
+_register(q_status_pivot, SQL_STATUS_PIVOT)
+
+
+def q_distinct_users(spark, sf_dir):
+    """Exact distinct counting per group (the dedup-cardinality metric)."""
+    events = load_table(spark, sf_dir, "events")
+    return events.groupBy("event_type").agg(
+        F.countDistinct("user_id").alias("n_users")
+    )
+
+
+SQL_DISTINCT_USERS = """SELECT event_type,
+CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users
+FROM events GROUP BY event_type"""
+_register(q_distinct_users, SQL_DISTINCT_USERS)
+
+
+def q_url_filename(spark, sf_dir):
+    """Scalar-function coverage: basename extraction (year_extractor.py:93)."""
+    urls = _urls_df(spark, sf_dir)
+    return (
+        urls.select(urlkit.url_filename(F.col("url")).alias("filename"))
+        .groupBy("filename")
+        .agg(F.count("*").alias("cnt"))
+    )
+
+
+SQL_URL_FILENAME = f"""{ORACLE_URLS_CTE}
+SELECT string_split(path, '/')[-1] AS filename, CAST(COUNT(*) AS BIGINT) AS cnt
+FROM parsed GROUP BY 1"""
+_register(q_url_filename, SQL_URL_FILENAME)
+
+
+POST_CATEGORIES = {
+    "query_engine": ["query", "filter", "join", "scan"],
+    "streaming": ["stream", "window", "batch", "value"],
+    "storage": ["table", "row", "data", "key"],
 }
 
-_QUERIES = {
-    "url_categorize_counts": q_url_categorize_counts,
-    "url_year_counts": q_url_year_counts,
-    "url_document_flags": q_url_document_flags,
-    "url_ignore_filter": q_url_ignore_filter,
-    "url_host_counts": q_url_host_counts,
-    "url_path_prefix_counts": q_url_path_prefix_counts,
-    "frontier_dedup": q_frontier_dedup,
-    "politeness_rank": q_politeness_rank,
-    "priority_schedule": q_priority_schedule,
-    "backoff_budgets": q_backoff_budgets,
-    "robots_gate": q_robots_gate,
-    "robots_parse": q_robots_parse,
-    "crawl_delay_budgets": q_crawl_delay_budgets,
-    "sitemap_extract": q_sitemap_extract,
-    "robots_sitemaps": q_robots_sitemaps,
-    "topk_recent_orders": q_topk_recent_orders,
-    "pagination_orders": q_pagination_orders,
-    "status_rollup": q_status_rollup,
-    "semi_join_customers": q_semi_join_customers,
-    "anti_join_customers": q_anti_join_customers,
-    "region_revenue": q_region_revenue,
-    "pricing_summary": q_pricing_summary,
-    "events_window": q_events_window,
-    "events_tumbling": q_events_tumbling,
-    "events_json": q_events_json,
-    "sessionize_events": q_sessionize_events,
-    "status_pivot": q_status_pivot,
-    "distinct_users": q_distinct_users,
-    "url_filename": q_url_filename,
-    "post_categorize": q_post_categorize,
-    "download_manifest": q_download_manifest,
-    "union_distinct": q_union_distinct,
-    "dedup_exact": q_dedup_exact,
-    "token_counts": q_token_counts,
-    "quality_scores": q_quality_scores,
-    "lang_detect": q_lang_detect,
-    "repetition_stats": q_repetition_stats,
-    "tfidf_top_terms": q_tfidf_top_terms,
-    "ngram_jaccard": q_ngram_jaccard,
-    "winnow_neardup": q_winnow_neardup,
-    "dedup_components": q_dedup_components,
-    "dedup_survivors": q_dedup_survivors,
-    "ann_cosine_topk": q_ann_cosine_topk,
-    "embed_neardup": q_embed_neardup,
-    "fb_keyword_counts": q_fb_keyword_counts,
-    "filename_sanitize": q_filename_sanitize,
-    "page_metadata": q_page_metadata,
-    "events_recent": q_events_recent,
-    "downloads_by_year": q_downloads_by_year,
-    "attachment_stats": q_attachment_stats,
-    "minhash_pairs": q_minhash_pairs,
-    "simhash_groups": q_simhash_groups,
-    "extract_text": q_extract_text,
-    "media_features": q_media_features,
-    "redirect_404_filter": q_redirect_404_filter,
-    # formerly rows-only: the greedy merge order / full stateful crawl loop
-    # remain non-SQL-expressible per-row, but both queries now emit their
-    # SQL-checkable invariants (partition sums; per-iteration schedule) so
-    # the driver's oracle gate covers them too
-    "cluster_greedy": q_cluster_greedy,
-    "crawl_frontier": q_crawl_frontier,
-    "pii_redact": q_pii_redact,
-    "line_dedup": q_line_dedup,
-    "hash_split": q_hash_split,
-    "corpus_clean": q_corpus_clean,
-    "pagerank": q_pagerank,
-    "domain_quota": q_domain_quota,
-    "c4_line_filter": q_c4_line_filter,
-    "dup_span_stats": q_dup_span_stats,
-    "pack_sequences": q_pack_sequences,
-    "url_blocklist": q_url_blocklist,
-    "quality_tiers": q_quality_tiers,
-    "decontaminate": q_decontaminate,
-    "corpus_prepare": q_corpus_prepare,
-    "dup_span_removal": q_dup_span_removal,
-    "gopher_quality": q_gopher_quality,
-    "warc_roundtrip": q_warc_roundtrip,
-    "pagerank_schedule": q_pagerank_schedule,
-    "surt_keys": q_surt_keys,
+
+def q_post_categorize(spark, sf_dir):
+    """F14: keyword-argmax post categorizer (ties → first category, zero →
+    'other', empty → 'uncategorized') over documents.text."""
+    docs = load_table(spark, sf_dir, "documents")
+    return (
+        docs.select(
+            textstats.categorize_post(F.col("text"), POST_CATEGORIES).alias(
+                "post_category"
+            )
+        )
+        .groupBy("post_category")
+        .agg(F.count("*").alias("cnt"))
+    )
+
+
+def _sql_rx(kw):
+    """Regex-quote a keyword and escape SQL single quotes for embedding in a
+    DuckDB regexp literal (mirrors textstats._kw_rx on the Spark side)."""
+    import re
+
+    return re.escape(kw).replace("'", "''")
+
+
+def _cat_score_sql(keywords):
+    return " + ".join(
+        f"CASE WHEN regexp_matches(text, '\\b{_sql_rx(kw)}\\b', 'i') THEN 1 ELSE 0 END"
+        for kw in keywords
+    )
+
+
+SQL_POST_CATEGORIZE = f"""SELECT post_category, CAST(COUNT(*) AS BIGINT) AS cnt FROM (
+SELECT CASE
+  WHEN text IS NULL OR trim(text) = '' THEN 'uncategorized'
+  WHEN greatest(qe, st, sto) = 0 THEN 'other'
+  WHEN qe = greatest(qe, st, sto) THEN 'query_engine'
+  WHEN st = greatest(qe, st, sto) THEN 'streaming'
+  ELSE 'storage' END AS post_category
+FROM (
+  SELECT {_cat_score_sql(POST_CATEGORIES['query_engine'])} AS qe,
+         {_cat_score_sql(POST_CATEGORIES['streaming'])} AS st,
+         {_cat_score_sql(POST_CATEGORIES['storage'])} AS sto,
+         text
+  FROM documents)) GROUP BY post_category"""
+_register(q_post_categorize, SQL_POST_CATEGORIZE)
+
+
+# content-type → extension map (reference downloader.py:260-277 shape)
+_EXT_CONTENT_TYPES = {
+    "pdf": "application/pdf",
+    "xlsx": "application/vnd.openxmlformats-officedocument.spreadsheetml.sheet",
+    "docx": "application/vnd.openxmlformats-officedocument.wordprocessingml.document",
+    "csv": "text/csv",
+    "txt": "text/plain",
 }
 
 
-# The driver's correctness artifact samples 50 of the 75 registry entries
-# per round; these 25 were outside its r5 sample (the curation/WARC tier has
-# never appeared in any CORRECTNESS_r*.json).  Listing them FIRST makes a
-# prefix-shaped sample cover the least-recently-verified queries (VERDICT r5
-# "next round" #1).  Pure ordering — every entry and its oracle are unchanged.
-_LEAST_RECENTLY_SAMPLED = [
-    "minhash_pairs", "simhash_groups", "extract_text", "media_features",
-    "redirect_404_filter", "cluster_greedy", "crawl_frontier", "pii_redact",
-    "line_dedup", "hash_split", "corpus_clean", "pagerank", "domain_quota",
-    "c4_line_filter", "dup_span_stats", "pack_sequences", "url_blocklist",
-    "quality_tiers", "decontaminate", "corpus_prepare", "dup_span_removal",
-    "gopher_quality", "warc_roundtrip", "pagerank_schedule", "surt_keys",
-]
+def q_download_manifest(spark, sf_dir):
+    """S9: download-manifest projection — document urls not yet downloaded,
+    with extension and content-type (literal map lookup), skip-if-exists as
+    an anti-join (downloader.py:223-233)."""
+    urls = _urls_df(spark, sf_dir).dropDuplicates(["url"])
+    docs = urls.filter(urlkit.is_document_url(F.col("url")))
+    ext = F.element_at(
+        F.split(F.lower(urlkit.url_path(F.col("url"))), r"\."), -1
+    )
+    ct_map = F.create_map(
+        *[F.lit(x) for pair in _EXT_CONTENT_TYPES.items() for x in pair]
+    )
+    already = urls.filter(F.col("doc_id") % 5 == 0).select("url")
+    return (
+        docs.join(already, "url", "left_anti")
+        .select(
+            "url",
+            ext.alias("ext"),
+            F.coalesce(ct_map[ext], F.lit("application/octet-stream")).alias(
+                "content_type"
+            ),
+        )
+    )
 
 
-def queries() -> dict:
-    out = {name: _QUERIES[name] for name in _LEAST_RECENTLY_SAMPLED}
-    out.update({n: f for n, f in _QUERIES.items() if n not in out})
-    return out
+SQL_DOWNLOAD_MANIFEST = f"""{ORACLE_URLS_CTE}
+SELECT url, ext,
+  CASE ext
+    WHEN 'pdf' THEN 'application/pdf'
+    WHEN 'xlsx' THEN 'application/vnd.openxmlformats-officedocument.spreadsheetml.sheet'
+    WHEN 'docx' THEN 'application/vnd.openxmlformats-officedocument.wordprocessingml.document'
+    WHEN 'csv' THEN 'text/csv'
+    WHEN 'txt' THEN 'text/plain'
+    ELSE 'application/octet-stream' END AS content_type
+FROM (
+  SELECT DISTINCT url, string_split(lower(path), '.')[-1] AS ext
+  FROM parsed p
+  WHERE regexp_matches(lower(path), '\\.(pdf|doc|docx|xls|xlsx|ppt|pptx|txt|rtf|csv)$')
+    AND NOT EXISTS (SELECT 1 FROM parsed d WHERE d.doc_id % 5 = 0 AND d.url = p.url)
+)"""
+_register(q_download_manifest, SQL_DOWNLOAD_MANIFEST)
 
 
-def oracle_sql() -> dict:
-    out = dict(_ORACLES)
-    # computed lazily (runs the single-process simulator once, cached): the
-    # expected schedule comes from the independent oracle, not a pinned run
-    out["crawl_frontier"] = _sql_crawl_frontier()
-    return out
+# --------------------------------------------------------------------------
+# Training-data pipeline operators (documents / embeddings)
+# --------------------------------------------------------------------------
+
+
+def q_union_distinct(spark, sf_dir):
+    """U1/U2: union + distinct across heterogeneous sources."""
+    events = load_table(spark, sf_dir, "events")
+    orders = load_table(spark, sf_dir, "orders")
+    a = events.select(F.col("event_type").alias("tag"))
+    b = orders.select(F.col("o_orderpriority").alias("tag"))
+    return a.unionByName(b).distinct()
+
+
+SQL_UNION_DISTINCT = """SELECT event_type AS tag FROM events
+UNION SELECT o_orderpriority AS tag FROM orders"""
+_register(q_union_distinct, SQL_UNION_DISTINCT)
+
+
+def q_dedup_exact(spark, sf_dir):
+    """Exact dedup via normalized-text fingerprint, planted duplicates."""
+    docs = load_table(spark, sf_dir, "documents")
+    dupes = docs.filter(F.col("doc_id") < 50).withColumn(
+        "doc_id", F.col("doc_id") + 1_000_000
+    )
+    both = docs.unionByName(dupes)
+    groups = dedup.duplicate_groups(both)
+    return groups.select(
+        F.element_at("doc_ids", 1).alias("min_id"),
+        F.col("n_dups"),
+    )
+
+
+SQL_DEDUP_EXACT = """WITH combined AS (
+  SELECT doc_id, text FROM documents
+  UNION ALL
+  SELECT doc_id + 1000000 AS doc_id, text FROM documents WHERE doc_id < 50
+), keyed AS (
+  SELECT doc_id, lower(regexp_replace(trim(text), '\\s+', ' ', 'g')) AS norm
+  FROM combined
+)
+SELECT CAST(MIN(doc_id) AS BIGINT) AS min_id, CAST(COUNT(*) AS BIGINT) AS n_dups
+FROM keyed GROUP BY norm HAVING COUNT(*) > 1"""
+_register(q_dedup_exact, SQL_DEDUP_EXACT)
+
+
+def q_token_counts(spark, sf_dir):
+    """Whitespace token counting per document (length histogram)."""
+    docs = load_table(spark, sf_dir, "documents")
+    return (
+        docs.select(textstats.token_count(F.col("text")).alias("n_tokens"))
+        .groupBy("n_tokens")
+        .agg(F.count("*").alias("cnt"))
+    )
+
+
+SQL_TOKEN_COUNTS = """SELECT n_tokens, CAST(COUNT(*) AS BIGINT) AS cnt FROM (
+SELECT CAST(length(list_filter(string_split_regex(text, '\\s+'), x -> x <> '')) AS INT) AS n_tokens
+FROM documents) GROUP BY n_tokens"""
+_register(q_token_counts, SQL_TOKEN_COUNTS)
+
+
+def q_quality_scores(spark, sf_dir):
+    """Quality-band scoring: length / punctuation / word-length heuristics."""
+    docs = load_table(spark, sf_dir, "documents", rebalance=True)
+    return (
+        docs.select(
+            "doc_id", F.round(textstats.quality_score(F.col("text")), 4).alias("quality")
+        )
+    )
+
+
+SQL_QUALITY = """SELECT doc_id, ROUND((
+  CASE WHEN n_tokens BETWEEN 10 AND 100000 THEN 1.0 ELSE 0.0 END
++ CASE WHEN (CASE WHEN n > 0 THEN punct / n ELSE 0.0 END) <= 0.2 THEN 1.0 ELSE 0.0 END
++ CASE WHEN (CASE WHEN n_tokens > 0 THEN chars / n_tokens ELSE 0.0 END) BETWEEN 2.0 AND 12.0 THEN 1.0 ELSE 0.0 END
+) / 3.0, 4) AS quality FROM (
+  SELECT doc_id,
+    CAST(length(text) AS DOUBLE) AS n,
+    CAST(length(text) - length(regexp_replace(text, '[^\\w\\s]', '', 'g')) AS DOUBLE) AS punct,
+    CAST(length(list_filter(string_split_regex(text, '\\s+'), x -> x <> '')) AS DOUBLE) AS n_tokens,
+    CAST(list_sum(list_transform(list_filter(string_split_regex(text, '\\s+'), x -> x <> ''), x -> length(x))) AS DOUBLE) AS chars
+  FROM documents)"""
+_register(q_quality_scores, SQL_QUALITY)
+
+
+def q_lang_detect(spark, sf_dir):
+    """Stopword-heuristic language ID → counts per detected language."""
+    docs = load_table(spark, sf_dir, "documents", rebalance=True)
+    return (
+        docs.select(textstats.detect_lang(F.col("text")).alias("detected"))
+        .groupBy("detected")
+        .agg(F.count("*").alias("cnt"))
+    )
+
+
+def _lang_hits_sql(lang_words):
+    return " + ".join(
+        f"CASE WHEN regexp_matches(lower(text), '\\b{_sql_rx(w)}\\b') THEN 1 ELSE 0 END"
+        for w in lang_words
+    )
+
+
+SQL_LANG_DETECT = f"""SELECT detected, CAST(COUNT(*) AS BIGINT) AS cnt FROM (
+SELECT CASE WHEN best = 0 THEN 'und'
+            WHEN en = best THEN 'en'
+            WHEN de = best THEN 'de'
+            ELSE 'es' END AS detected FROM (
+  SELECT en, de, es, greatest(en, de, es) AS best FROM (
+    SELECT {_lang_hits_sql(['the','and','of','to','a','in','is','it','that','for'])} AS en,
+           {_lang_hits_sql(['der','die','das','und','ist','ein','nicht','mit','sich','auf'])} AS de,
+           {_lang_hits_sql(['el','la','de','que','y','en','un','es','se','no'])} AS es
+    FROM documents))) GROUP BY detected"""
+_register(q_lang_detect, SQL_LANG_DETECT)
+
+
+def q_repetition_stats(spark, sf_dir):
+    """Gopher-style repetition filters (Rae et al. 2021, public): per doc the
+    character fraction of the MOST FREQUENT word 2-gram (argmax by count,
+    ties to the lexicographically smallest gram) and the character mass of
+    duplicated word 3-grams (occurrences beyond the first), both over total
+    word characters; plus the keep flag at the published-style thresholds
+    (top-2-gram <= 0.20, dup-3-gram <= 0.30, applied to the rounded values
+    so the oracle comparison is exact).
+
+    Plan shape: ZERO shuffles — every statistic is per-doc, so the whole
+    query is one scan plus one ArrowEvalPython projection
+    (``udfs.repetition_stats_udf``, the Counter kernel; semantics pinned
+    to the Catalyst folds ``top_run``/``dup_run_chars`` by property test).
+    The Arrow kernel is the only production path — the interpreted
+    higher-order-function folds were the cleaning stack's slowest stage
+    (~4× slower end-to-end at 400k docs) and both pure-Catalyst rewrites
+    lost; see ``_with_repetition_stats`` and BENCH/ROUND5.md.  Scales: no
+    exchange at all (the earlier explode+double-groupBy shape shuffled
+    ~2 string rows per word, twice); the worst skew is one pathological
+    doc, which costs its own O(W) Counter pass in its own task."""
+    docs = load_table(spark, sf_dir, "documents", rebalance=True)
+    return _with_repetition_stats(docs.select("doc_id", "text")).drop("text")
+
+
+def _repetition_raw_cols() -> list:
+    """The three per-doc scalars the repetition fracs derive from, as
+    Catalyst folds over a ``text`` column — the reference
+    ``udfs.repetition_stats_udf`` is property-tested against
+    (tests/test_textstats.py); production uses the kernel."""
+    return [
+        textstats.word_char_count(F.col("text")).alias("wchars"),
+        textstats.top_run(
+            F.array_sort(textstats.word_ngrams(F.col("text"), 2))
+        ).alias("top"),
+        textstats.dup_run_chars(
+            F.array_sort(textstats.word_ngrams(F.col("text"), 3)), 3
+        ).alias("dupchars"),
+    ]
+
+
+def _with_repetition_stats(docs: "DataFrame") -> "DataFrame":
+    """Append ``top_bigram_frac`` / ``dup_trigram_frac`` / ``keep`` to a
+    frame carrying ``text`` — two stacked projections (raw scalars, then
+    fracs) so each raw scalar is evaluated once, zero shuffles (one
+    ArrowEvalPython node, no exchange).
+
+    The raw scalars come from ``udfs.repetition_stats_udf``, the Counter
+    kernel: 400k 60-word docs on 32 cores, noop-materialized, interleaved
+    runs — Catalyst folds [5.48..8.44] s vs Arrow [1.38..1.82] s (~4×
+    end-to-end; the folds were the cleaning stack's slowest stage and both
+    pure-Catalyst rewrites lost, BENCH/ROUND5.md).  The folds stay as
+    ``_repetition_raw_cols``, the reference the kernel is property-tested
+    against (tests/test_textstats.py)."""
+    from ..functions.udfs import repetition_stats_udf
+
+    staged = docs.select(
+        "*", repetition_stats_udf(F.col("text")).alias("_rep")
+    ).select(
+        "*",
+        F.col("_rep.wchars").alias("wchars"),
+        F.struct(
+            F.col("_rep.top_cnt").alias("cnt"),
+            F.col("_rep.top_g").alias("g"),
+        ).alias("top"),
+        F.col("_rep.dupchars").alias("dupchars"),
+    ).drop("_rep")
+    top_frac, dup_frac, keep = textstats.repetition_verdict(
+        F.col("wchars"), F.col("top.cnt"), F.col("top.g"), F.col("dupchars")
+    )
+    return staged.select(
+        *[c for c in docs.columns],
+        top_frac.alias("top_bigram_frac"),
+        dup_frac.alias("dup_trigram_frac"),
+        keep.alias("keep"),
+    )
+
+
+SQL_REPETITION_STATS = """WITH base AS (
+  SELECT doc_id,
+    COALESCE(list_sum(list_transform(w, x -> length(x))), 0) AS wchars,
+    CASE WHEN len(w) >= 2
+         THEN list_transform(range(1, len(w)), i -> w[i] || ' ' || w[i+1])
+         ELSE [] END AS bi,
+    CASE WHEN len(w) >= 3
+         THEN list_transform(range(1, len(w)-1), i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])
+         ELSE [] END AS tri
+  FROM (SELECT doc_id, list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS w
+        FROM documents)
+), counts AS (
+  SELECT doc_id, n, g, COUNT(*) AS cnt FROM (
+    SELECT doc_id, 2 AS n, unnest(bi) AS g FROM base
+    UNION ALL
+    SELECT doc_id, 3 AS n, unnest(tri) AS g FROM base
+  ) GROUP BY doc_id, n, g
+), top AS (
+  SELECT doc_id, cnt, g FROM (
+    SELECT doc_id, cnt, g,
+           ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY cnt DESC, g ASC) AS r
+    FROM counts WHERE n = 2) WHERE r = 1
+), dup AS (
+  SELECT doc_id, SUM((cnt - 1) * (length(g) - 2)) AS dupchars
+  FROM counts WHERE n = 3 AND cnt > 1 GROUP BY doc_id
+)
+SELECT b.doc_id,
+  ROUND(COALESCE(t.cnt * (length(t.g) - 1) / (NULLIF(b.wchars, 0) * 1.0), 0.0), 4) AS top_bigram_frac,
+  ROUND(COALESCE(d.dupchars / (NULLIF(b.wchars, 0) * 1.0), 0.0), 4) AS dup_trigram_frac,
+  (ROUND(COALESCE(t.cnt * (length(t.g) - 1) / (NULLIF(b.wchars, 0) * 1.0), 0.0), 4) <= 0.20
+   AND ROUND(COALESCE(d.dupchars / (NULLIF(b.wchars, 0) * 1.0), 0.0), 4) <= 0.30) AS keep
+FROM base b LEFT JOIN top t USING (doc_id) LEFT JOIN dup d USING (doc_id)"""
+_register(q_repetition_stats, SQL_REPETITION_STATS)
+
+
+def q_tfidf_top_terms(spark, sf_dir):
+    """TF-IDF top-5 terms per language: corpus-wide document frequency,
+    per-language term frequency, score = tf * ln((N+1)/(df+1)), ranked by
+    the ROUNDED score (then term asc) so the ordering is identical across
+    engines regardless of last-ULP ln() differences.
+
+    Plan shape: one explode, two partial-aggregable shuffles (term tf by
+    (lang, term); df by term after a distinct on (doc_id, term)), a
+    broadcast of the 1-row corpus count, and a per-lang window over at most
+    |vocab| rows — the heavy lifting is all map-side-combinable counts."""
+    docs = load_table(spark, sf_dir, "documents", rebalance=True)
+    words = docs.select(
+        "doc_id", "lang", F.explode(textstats.tokens(F.col("text"))).alias("term")
+    )
+    tf = words.groupBy("lang", "term").agg(F.count("*").alias("tf"))
+    dfreq = (
+        words.select("doc_id", "term")
+        .distinct()
+        .groupBy("term")
+        .agg(F.count("*").alias("df"))
+    )
+    total = docs.agg(F.count("*").alias("n_docs"))
+    scored = (
+        tf.join(dfreq, "term")
+        .crossJoin(F.broadcast(total))
+        .select(
+            "lang",
+            "term",
+            "tf",
+            "df",
+            F.round(
+                F.col("tf")
+                * F.log((F.col("n_docs") + F.lit(1.0)) / (F.col("df") + F.lit(1.0))),
+                4,
+            ).alias("score"),
+        )
+    )
+    win = Window.partitionBy("lang").orderBy(F.col("score").desc(), F.col("term").asc())
+    return (
+        scored.withColumn("rk", F.row_number().over(win))
+        .filter(F.col("rk") <= 5)
+        .select("lang", "term", "tf", "df", "score", "rk")
+    )
+
+
+SQL_TFIDF_TOP_TERMS = """WITH words AS (
+  SELECT doc_id, lang,
+         unnest(list_filter(string_split_regex(text, '\\s+'), x -> x <> '')) AS term
+  FROM documents
+), tf AS (
+  SELECT lang, term, COUNT(*) AS tf FROM words GROUP BY lang, term
+), dfreq AS (
+  SELECT term, COUNT(*) AS df
+  FROM (SELECT DISTINCT doc_id, term FROM words) GROUP BY term
+), total AS (SELECT COUNT(*) AS n_docs FROM documents)
+SELECT lang, term, tf, df, score, rk FROM (
+  SELECT lang, term, tf, df, score,
+         CAST(ROW_NUMBER() OVER (PARTITION BY lang ORDER BY score DESC, term ASC) AS INT) AS rk
+  FROM (SELECT lang, term, tf, df,
+               ROUND(tf * ln((n_docs + 1.0) / (df + 1.0)), 4) AS score
+        FROM tf JOIN dfreq USING (term) CROSS JOIN total)
+) WHERE rk <= 5"""
+_register(q_tfidf_top_terms, SQL_TFIDF_TOP_TERMS)
+
+
+def q_ngram_jaccard(spark, sf_dir):
+    """Token-set Jaccard near-dup pairs on planted perturbed copies."""
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 40)
+    near = docs.select(
+        (F.col("doc_id") + 1_000_000).alias("doc_id"),
+        F.concat(F.col("text"), F.lit(" extra trailing words")).alias("text"),
+    )
+    both = docs.select("doc_id", "text").unionByName(near)
+    pairs = dedup.ngram_jaccard_pairs(both, shingle_n=1, threshold=0.6)
+    return pairs.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
+
+
+SQL_NGRAM_JACCARD = """WITH combined AS (
+  SELECT doc_id, text FROM documents WHERE doc_id < 40
+  UNION ALL
+  SELECT doc_id + 1000000, text || ' extra trailing words' FROM documents WHERE doc_id < 40
+), toks AS (
+  SELECT doc_id AS id,
+         list_distinct(list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '')) AS sh
+  FROM combined
+)
+SELECT a.id AS id_a, b.id AS id_b,
+ROUND(CAST(length(list_intersect(a.sh, b.sh)) AS DOUBLE)
+  / (length(a.sh) + length(b.sh) - length(list_intersect(a.sh, b.sh))), 6) AS jaccard
+FROM toks a JOIN toks b ON a.id < b.id
+WHERE CAST(length(list_intersect(a.sh, b.sh)) AS DOUBLE)
+  / (length(a.sh) + length(b.sh) - length(list_intersect(a.sh, b.sh))) >= 0.6"""
+_register(q_ngram_jaccard, SQL_NGRAM_JACCARD)
+
+
+def q_winnow_neardup(spark, sf_dir):
+    """Near-dup pairs by shared MOSS-winnowed rolling-hash fingerprints
+    (k=20 chars, window=4) — documents sharing ≥40 selected fingerprints.
+    The posting explode → 64-bit-key self-join is the same one-shuffle
+    inverted-index shape as ``ngram_jaccard``; the fingerprint itself is a
+    true O(n) rolling recurrence in an Arrow-batched UDF.
+
+    k is the noise floor: a fingerprint only fires on a shared run of
+    ≥ k + window - 1 chars, and k=8 made every common 8-char substring a
+    hot posting key (avg posting list 143, max 3826 at sf0.1 — the
+    within-key self-join fanned out to 257M rows for 5000 docs). k=20
+    (~4 words) keeps only genuine shared runs: avg posting 1.24, the same
+    join emits 1.0M rows — 250× less — and that ratio is what survives a
+    100 TB corpus, where boilerplate-hot keys are the known failure mode
+    of posting-list self-joins."""
+    docs = load_table(spark, sf_dir, "documents", rebalance=True)
+    pairs = dedup.winnow_pairs(docs, k=20, window=4, min_shared=40)
+    return pairs.select(
+        F.col("id_a").cast("long").alias("id_a"),
+        F.col("id_b").cast("long").alias("id_b"),
+        F.col("n_shared").cast("long").alias("n_shared"),
+    )
+
+
+def _winnow_sql(k: int = 20, window: int = 4, min_shared: int = 40) -> str:
+    """DuckDB oracle for winnowing: O(n·k) per-position polynomial hashes
+    reproduce the UDF's hash values exactly, then a ROWS-window min
+    + distinct selects the same fingerprint set.  Coefficients are
+    mod-reduced at build time (``pow(base, e, mod)``) and every product is
+    reduced per-term: a raw ``base^19`` coefficient would overflow even
+    HUGEINT, while per-term reduction bounds each product by
+    codepoint·mod < 2^82 and the k-term sum by k·mod < 2^66.  Base and
+    modulus come from the operator's own constants so the two engines
+    cannot drift."""
+    mod = dedup._WINNOW_MOD
+    base = dedup._WINNOW_BASE
+    terms = " + ".join(
+        f"(unicode(substr(t, i+{j}, 1))::HUGEINT"
+        f" * {pow(base, k - 1 - j, mod)}::HUGEINT) % {mod}::HUGEINT"
+        for j in range(k)
+    )
+    return f"""WITH norm AS (
+  SELECT doc_id, lower(regexp_replace(trim(text), '\\s+', ' ', 'g')) AS t FROM documents
+), pos AS (
+  SELECT doc_id, t, unnest(range(1, length(t) - {k} + 2)) AS i
+  FROM norm WHERE length(t) >= {k}
+), hashes AS (
+  SELECT doc_id, i, (({terms}) % {mod}::HUGEINT)::BIGINT AS h FROM pos
+), wins AS (
+  SELECT doc_id, i,
+         min(h) OVER (PARTITION BY doc_id ORDER BY i
+                      ROWS BETWEEN CURRENT ROW AND {window - 1} FOLLOWING) AS fp,
+         count(*) OVER (PARTITION BY doc_id) AS n_hashes
+  FROM hashes
+), fps AS (
+  SELECT DISTINCT doc_id, fp FROM wins WHERE i <= n_hashes - {window} + 1
+)
+SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_shared
+FROM fps a JOIN fps b ON a.fp = b.fp AND a.doc_id < b.doc_id
+GROUP BY 1, 2 HAVING count(*) >= {min_shared}"""
+
+
+SQL_WINNOW_NEARDUP = _winnow_sql()
+_register(q_winnow_neardup, SQL_WINNOW_NEARDUP)
+
+
+def q_dedup_components(spark, sf_dir):
+    """Transitive closure of the winnowing near-dup pairs: each document in
+    any pair gets its connected-component label (min doc_id in the
+    component) — the pairs→clusters step a dedup pipeline runs before
+    choosing survivors. Iterative hash-min label propagation with per-round
+    lineage truncation (operators/components.py)."""
+    from ..operators.components import connected_components
+
+    docs = load_table(spark, sf_dir, "documents")
+    pairs = dedup.winnow_pairs(docs, k=20, window=4, min_shared=40)
+    comp = connected_components(pairs)
+    return comp.select(
+        F.col("id").cast("long").alias("doc_id"),
+        F.col("component").cast("long").alias("component"),
+    )
+
+
+SQL_DEDUP_COMPONENTS = f"""WITH RECURSIVE pairs AS (
+{SQL_WINNOW_NEARDUP}
+), edges AS (
+  SELECT id_a AS u, id_b AS v FROM pairs
+  UNION
+  SELECT id_b AS u, id_a AS v FROM pairs
+), nodes AS (
+  SELECT DISTINCT u FROM edges
+), walk(a, b) AS (
+  -- reachability closure: b reachable from a (recursive UNION dedups states)
+  SELECT u, u FROM nodes
+  UNION
+  SELECT w.a, e.v FROM walk w JOIN edges e ON e.u = w.b
+)
+SELECT a AS doc_id, min(b) AS component FROM walk GROUP BY a"""
+_register(q_dedup_components, SQL_DEDUP_COMPONENTS)
+
+
+def q_dedup_survivors(spark, sf_dir):
+    """The step a dedup pipeline actually ENDS with: from near-dup pairs to
+    the surviving corpus. Winnowing pairs → connected components → keep
+    exactly one document per component (the min-id label, i.e. the doc
+    whose id IS its component) plus every unpaired document; ``had_dups``
+    marks survivors that represent a dropped cluster.
+
+    Scale shape: the component table only holds docs that appeared in a
+    pair — a sliver of the corpus — so the left join back to the full scan
+    is AQE-broadcastable; everything upstream is the capped posting-join +
+    hash-min propagation the standalone gate queries verify."""
+    from ..operators.components import connected_components
+
+    docs = load_table(spark, sf_dir, "documents")
+    pairs = dedup.winnow_pairs(docs, k=20, window=4, min_shared=40)
+    comp = connected_components(pairs).select(
+        F.col("id").alias("doc_id"), "component"
+    )
+    return (
+        docs.select("doc_id")
+        .join(comp, "doc_id", "left")
+        .filter(F.col("component").isNull() | (F.col("component") == F.col("doc_id")))
+        .select(
+            F.col("doc_id").cast("long").alias("doc_id"),
+            F.col("component").isNotNull().alias("had_dups"),
+        )
+    )
+
+
+SQL_DEDUP_SURVIVORS = f"""WITH comp AS (
+{SQL_DEDUP_COMPONENTS}
+)
+SELECT d.doc_id, (c.component IS NOT NULL) AS had_dups
+FROM documents d LEFT JOIN comp c ON c.doc_id = d.doc_id
+WHERE c.component IS NULL OR c.component = d.doc_id"""
+_register(q_dedup_survivors, SQL_DEDUP_SURVIVORS)
+
+
+def q_ann_cosine_topk(spark, sf_dir):
+    """Brute-force cosine top-3 neighbors for the first 5 vectors."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    queries = emb.filter(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
+    )
+    corpus = emb.filter(F.col("vec_id") >= 5)
+    topk = similarity.cosine_topk(queries, corpus, k=3)
+    return topk.select("q_id", "vec_id", "rnk")
+
+
+SQL_ANN_COSINE = """SELECT q_id, vec_id, rnk FROM (
+  SELECT q.vec_id AS q_id, c.vec_id AS vec_id,
+  CAST(ROW_NUMBER() OVER (PARTITION BY q.vec_id
+       ORDER BY list_cosine_similarity(q.embedding, c.embedding) DESC, c.vec_id) AS INT) AS rnk
+  FROM embeddings q JOIN embeddings c ON q.vec_id < 5 AND c.vec_id >= 5
+) WHERE rnk <= 3"""
+_register(q_ann_cosine_topk, SQL_ANN_COSINE)
+
+
+def q_embed_neardup(spark, sf_dir):
+    """Embedding-cosine near-dup pairs (the dense-vector dedup flavor).
+
+    The raw embeddings have no natural near-dups (max pairwise cosine 0.51
+    at sf0.01), so the query plants them the same way ``ngram_jaccard``
+    does: each vector vec_id < 60 gets a shifted copy (x*1.1 + 0.05, id +
+    1_000_000) whose cosine to its source is >= 0.93 while every cross pair
+    stays <= 0.48 — a wide margin around threshold 0.8, so float-vs-double
+    drift between engines can't flip membership.
+
+    The score column is intentionally NOT emitted: Spark and DuckDB agree on
+    which pairs clear the threshold (wide margin) but not bit-for-bit on the
+    cosine value.
+    """
+    emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 60)
+    near = emb.select(
+        (F.col("vec_id") + 1_000_000).alias("vec_id"),
+        F.transform("embedding", lambda x: x * F.lit(1.1) + F.lit(0.05)).alias(
+            "embedding"
+        ),
+    )
+    both = emb.select("vec_id", "embedding").unionByName(near)
+    pairs = similarity.neardup_pairs(both, threshold=0.8)
+    return pairs.select("id_a", "id_b")
+
+
+SQL_EMBED_NEARDUP = """WITH sub AS (
+  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS embedding
+  FROM embeddings WHERE vec_id < 60
+), combined AS (
+  SELECT vec_id, embedding FROM sub
+  UNION ALL
+  SELECT vec_id + 1000000, list_transform(embedding, x -> x * 1.1 + 0.05)
+  FROM sub
+)
+SELECT a.vec_id AS id_a, b.vec_id AS id_b
+FROM combined a JOIN combined b ON a.vec_id < b.vec_id
+WHERE list_cosine_similarity(a.embedding, b.embedding) >= 0.8"""
+_register(q_embed_neardup, SQL_EMBED_NEARDUP)
+
+
+# --------------------------------------------------------------------------
+# Scraper and report operators (reference downloader / fb-scrape services)
+# --------------------------------------------------------------------------
+
+
+# FB keyword report (F12/F13/A11): keywords are data; the list below mixes
+# corpus words with a regex-metachar keyword ('a.b') to pin the re.escape
+# semantics (fb_scrape_service.py:186) in the correctness gate.
+FB_KEYWORDS = ["query", "spark", "batch", "win", "a.b"]
+
+
+def q_fb_keyword_counts(spark, sf_dir):
+    """A11: per-keyword loose (substring) / strict (word-boundary) match
+    counts over documents.text — the reference's headline FB-scrape output
+    (fb_scrape_service.py:155-189, 333-340)."""
+    docs = load_table(spark, sf_dir, "documents")
+    return textstats.keyword_match_counts(docs, F.col("text"), FB_KEYWORDS)
+
+
+def _kw_counts_sql(kw):
+    rx = _sql_rx(kw.lower())
+    lit = kw.lower().replace("'", "''")
+    name = kw.replace("'", "''")
+    return f"""SELECT '{name}' AS keyword,
+  CAST(SUM(CASE WHEN contains(lower(text), '{lit}') THEN 1 ELSE 0 END) AS BIGINT) AS loose_matches,
+  CAST(SUM(CASE WHEN contains(lower(text), '{lit}')
+                 AND regexp_matches(lower(text), '\\b{rx}\\b') THEN 1 ELSE 0 END) AS BIGINT) AS strict_matches
+FROM documents"""
+
+
+SQL_FB_KEYWORD_COUNTS = "\nUNION ALL\n".join(_kw_counts_sql(k) for k in FB_KEYWORDS)
+_register(q_fb_keyword_counts, SQL_FB_KEYWORD_COUNTS)
+
+
+def q_filename_sanitize(spark, sf_dir):
+    """F16: filename sanitizer — one translate() replacing the 9 invalid
+    filename characters with '_' (fb_scrape_service.py:149-153). Applied to
+    full urls (which carry '/', ':', '?') as the downloader does when naming
+    files after their source url."""
+    urls = _urls_df(spark, sf_dir).dropDuplicates(["url"])
+    return urls.select(
+        "url", urlkit.sanitize_filename(F.col("url")).alias("safe_name")
+    )
+
+
+SQL_FILENAME_SANITIZE = f"""{ORACLE_URLS_CTE}
+SELECT DISTINCT url,
+  translate(url, '<>:"/\\|?*', '_________') AS safe_name
+FROM parsed"""
+_register(q_filename_sanitize, SQL_FILENAME_SANITIZE)
+
+
+def q_page_metadata(spark, sf_dir):
+    """S8: metadata sidecar columns — document_id = sha2(content, 256) plus a
+    sanitized display name (scraper.py:303-330's document_id/name fields)."""
+    docs = load_table(spark, sf_dir, "documents")
+    name = F.substring(F.trim(F.col("text")), 1, 32)
+    return docs.select(
+        "doc_id",
+        F.sha2(F.col("text"), 256).alias("content_sha"),
+        urlkit.sanitize_filename(name).alias("doc_name"),
+        F.length("text").alias("n_bytes"),
+    )
+
+
+SQL_PAGE_METADATA = """SELECT doc_id,
+  sha256(text) AS content_sha,
+  translate(substr(trim(text), 1, 32), '<>:"/\\|?*', '_________') AS doc_name,
+  CAST(length(text) AS INT) AS n_bytes
+FROM documents"""
+_register(q_page_metadata, SQL_PAGE_METADATA)
+
+
+def q_events_recent(spark, sf_dir):
+    """S11: ts-BETWEEN windowed source scan (the FB since/until fetch,
+    fb_scrape_service.py:221-304) — the range predicate reaches the parquet
+    scan as PushedFilters; tests/test_plans.py additionally asserts partition
+    pruning on a date-partitioned layout of the same table."""
+    events = load_table(spark, sf_dir, "events")
+    return (
+        events.filter(
+            (F.col("ts") >= F.lit("2024-01-08 00:00:00").cast("timestamp"))
+            & (F.col("ts") < F.lit("2024-01-15 00:00:00").cast("timestamp"))
+        )
+        .groupBy(F.to_date("ts").alias("day"), "event_type")
+        .agg(
+            F.count("*").alias("cnt"),
+            F.round(F.sum("value"), 2).alias("total_value"),
+        )
+    )
+
+
+SQL_EVENTS_RECENT = """SELECT CAST(ts AS DATE) AS day, event_type,
+CAST(COUNT(*) AS BIGINT) AS cnt, ROUND(SUM(value), 2) AS total_value
+FROM events
+WHERE ts >= TIMESTAMP '2024-01-08 00:00:00' AND ts < TIMESTAMP '2024-01-15 00:00:00'
+GROUP BY 1, 2"""
+_register(q_events_recent, SQL_EVENTS_RECENT)
+
+
+def q_downloads_by_year(spark, sf_dir):
+    """A13 on the real manifest: download results tallied per extracted year
+    (downloader.py:381-410) — manifest (S9) × year extractor (F11) × a
+    deterministic success flag, pivoted to success/fail counts."""
+    manifest = q_download_manifest(spark, sf_dir)
+    # deterministic download outcome both dialects can compute: first hex
+    # digit of md5(url) < '8' (≈50/50) — stands in for the HTTP result
+    with_year = manifest.select(
+        "url",
+        urlkit.extract_year(F.col("url")).alias("year"),
+        (F.substring(F.md5(F.col("url")), 1, 1) < F.lit("8")).alias("ok"),
+    )
+    return with_year.groupBy("year").agg(
+        F.sum(F.when(F.col("ok"), 1).otherwise(0)).alias("succeeded"),
+        F.sum(F.when(~F.col("ok"), 1).otherwise(0)).alias("failed"),
+    )
+
+
+SQL_DOWNLOADS_BY_YEAR = f"""{ORACLE_URLS_CTE}
+, manifest AS (
+  SELECT DISTINCT url, path, query FROM parsed p
+  WHERE regexp_matches(lower(path), '\\.(pdf|doc|docx|xls|xlsx|ppt|pptx|txt|rtf|csv)$')
+    AND NOT EXISTS (SELECT 1 FROM parsed d WHERE d.doc_id % 5 = 0 AND d.url = p.url)
+), yeared AS (
+  SELECT COALESCE(
+    NULLIF(regexp_extract(string_split(path, '/')[-1], '(19|20)[0-9][0-9]', 0), ''),
+    NULLIF(regexp_extract(query, '(19|20)[0-9][0-9]', 0), ''),
+    NULLIF(regexp_extract(path, '(19|20)[0-9][0-9]', 0), ''),
+    'No Year') AS year,
+    substr(md5(url), 1, 1) < '8' AS ok
+  FROM manifest
+)
+SELECT year,
+CAST(SUM(CASE WHEN ok THEN 1 ELSE 0 END) AS BIGINT) AS succeeded,
+CAST(SUM(CASE WHEN ok THEN 0 ELSE 1 END) AS BIGINT) AS failed
+FROM yeared GROUP BY year"""
+_register(q_downloads_by_year, SQL_DOWNLOADS_BY_YEAR)
+
+
+def q_attachment_stats(spark, sf_dir):
+    """F17/S12: nested array<struct> projection — posts carry
+    ``attachments: array<struct<type,url,width,height>>``
+    (fb_scrape_service.py:400-428, deal_scrape_service.py:244-331); project
+    with ``transform(attachments, a -> a.url)``, flatten with explode, and
+    roll up per attachment type. The attachments are synthesized
+    deterministically from documents (every doc gets an image; every third a
+    video), parsed from a shared JSON fragment so the Spark side exercises
+    real ArrayType(StructType) columns."""
+    docs = load_table(spark, sf_dir, "documents")
+    att_schema = "array<struct<type:string,url:string,width:int,height:int>>"
+    json_col = F.concat(
+        F.lit('[{"type":"image","url":"https://cdn.example.com/img/'),
+        F.col("doc_id").cast("string"),
+        F.lit('.png","width":'),
+        (F.col("doc_id") % 800 + 100).cast("string"),
+        F.lit(',"height":'),
+        (F.col("doc_id") % 600 + 100).cast("string"),
+        F.lit("}"),
+        F.when(
+            F.col("doc_id") % 3 == 0,
+            F.concat(
+                F.lit(',{"type":"video","url":"https://cdn.example.com/vid/'),
+                F.col("doc_id").cast("string"),
+                F.lit('.mp4","width":640,"height":480}'),
+            ),
+        ).otherwise(F.lit("")),
+        F.lit("]"),
+    )
+    posts = docs.select(
+        "doc_id", F.from_json(json_col, att_schema).alias("attachments")
+    )
+    urls = posts.select(
+        F.explode(F.transform("attachments", lambda a: a["url"])).alias("att_url")
+    )
+    att = posts.select(F.explode("attachments").alias("att"))
+    by_type = att.groupBy(F.col("att.type").alias("att_type")).agg(
+        F.count("*").alias("cnt"),
+        F.round(F.avg("att.width"), 4).alias("avg_width"),
+    )
+    n_urls = urls.agg(F.count("*").alias("n")).select("n")
+    # single result: per-type rollup joined with the projected-url count
+    return by_type.crossJoin(F.broadcast(n_urls).withColumnRenamed("n", "total_urls"))
+
+
+SQL_ATTACHMENT_STATS = """WITH att AS (
+  SELECT 'image' AS att_type,
+         CAST(doc_id % 800 + 100 AS INT) AS width
+  FROM documents
+  UNION ALL
+  SELECT 'video', 640 FROM documents WHERE doc_id % 3 = 0
+)
+SELECT att_type, CAST(COUNT(*) AS BIGINT) AS cnt,
+ROUND(AVG(width), 4) AS avg_width,
+(SELECT CAST(COUNT(*) AS BIGINT) FROM att) AS total_urls
+FROM att GROUP BY att_type"""
+_register(q_attachment_stats, SQL_ATTACHMENT_STATS)

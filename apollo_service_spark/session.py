@@ -35,6 +35,21 @@ from . import worker_daemon
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+def _master_cores(master: str, cpus: int) -> int:
+    """Total cores of a local master, the default shuffle partition count:
+    ``local`` → 1, ``local[N]`` → N, ``local[*]`` → ``cpus``,
+    ``local-cluster[E,C,M]`` → E executors × C cores each. Any other master
+    gets 32; on a real cluster pass 2-3× its total cores instead."""
+    if "[" not in master:
+        return 1 if master == "local" else 32
+    fields = master[master.find("[") + 1 : master.find("]")].split(",")
+    if fields[0] == "*":
+        return cpus
+    if master.startswith("local-cluster"):
+        return int(fields[0]) * int(fields[1])
+    return int(fields[0])
+
+
 def build_session(
     app_name: str = "apollo-service-spark",
     master: str | None = None,
@@ -44,9 +59,7 @@ def build_session(
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
-        # local[N] → N; on a real cluster this is 2-3× total cores
-        n = master[master.find("[") + 1 : master.find("]")] if "[" in master else "32"
-        shuffle_partitions = cpus if n == "*" else int(n)
+        shuffle_partitions = _master_cores(master, cpus)
 
     # Input split sizing (guide §6): this engine's scans feed compute-dense
     # text projections (regex tiers, Catalyst folds, Arrow kernels), so

@@ -39,6 +39,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as em  # noqa: E402
+from apollo_service_spark.plans.queries import release_all  # noqa: E402
 from apollo_service_spark.session import build_session  # noqa: E402
 from perfbench.status import StatusReader  # noqa: E402
 
@@ -116,6 +117,7 @@ def main(argv: list) -> int:
         )
         print(json.dumps({"key": key, "cores": cores, **counts}))
     finally:
+        release_all()
         spark.stop()
     return 0
 

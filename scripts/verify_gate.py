@@ -16,6 +16,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 
 import __spark_entry__ as em
+from apollo_service_spark.plans.queries import release_all
 from apollo_service_spark.session import build_session
 
 USAGE = "usage: python scripts/verify_gate.py [--json OUT.json] [query ...]"
@@ -127,6 +128,8 @@ def main():
                 "err": f"{type(e).__name__}: {e}",
             }
             print(f"{name}: ERR {type(e).__name__}: {e}")
+        finally:
+            release_all()
     if json_out:
         with open(json_out, "w") as fh:
             json.dump(results, fh, indent=2)

@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""spark-submit entrypoint for the frontier crawl.
+r"""spark-submit entrypoint for the frontier crawl.
 
 Cluster usage (north-rule deployment shape)::
 

@@ -9,12 +9,15 @@ on any name that no code outside ``tests/`` references: a name, an
 attribute or an import of it. A mention in a docstring, comment or string
 is not a caller. "Outside" is the package itself, ``scripts/``,
 ``bench*.py``, ``perfbench/``, ``submit_crawl.py`` and
-``__spark_entry__.py``.
+``__spark_entry__.py``. Every file is parsed with warnings turned into
+errors, so a file whose parse only warns (an invalid escape sequence in a
+string) fails here too.
 """
 
 import ast
 import glob
 import os
+import warnings
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PACKAGE = "apollo_service_spark"
@@ -40,6 +43,12 @@ ALLOWED = {
 }
 
 
+def _parse(path: str) -> ast.Module:
+    with open(path, encoding="utf-8") as fh, warnings.catch_warnings():
+        warnings.simplefilter("error")
+        return ast.parse(fh.read(), filename=path)
+
+
 def _outside_files() -> list:
     patterns = [
         f"{PACKAGE}/**/*.py",
@@ -62,8 +71,7 @@ def _package_names() -> list:
     """(module, name) of every top-level function and class."""
     out = []
     for path in sorted(glob.glob(os.path.join(ROOT, PACKAGE, "**", "*.py"), recursive=True)):
-        with open(path, encoding="utf-8") as fh:
-            tree = ast.parse(fh.read(), filename=path)
+        tree = _parse(path)
         mod = os.path.relpath(path, ROOT)
         for node in tree.body:
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
@@ -75,8 +83,7 @@ def _referenced_names() -> set:
     """Every name, attribute and imported name in the code outside tests."""
     names = set()
     for path in _outside_files():
-        with open(path, encoding="utf-8") as fh:
-            tree = ast.parse(fh.read(), filename=path)
+        tree = _parse(path)
         for node in ast.walk(tree):
             if isinstance(node, ast.Name):
                 names.add(node.id)

@@ -14,6 +14,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from apollo_service_spark import worker_daemon
+from apollo_service_spark.session import _master_cores
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -108,3 +109,14 @@ def test_daemon_starts_outside_the_repository(tmp_path):
     )
     assert out.returncode == 0, out.stderr[-2000:]
     assert out.stdout.strip().splitlines()[-1] == "6"
+
+
+def test_default_shuffle_partitions_are_the_masters_cores():
+    # local-cluster[executors, cores per executor, MiB per executor]
+    assert _master_cores("local-cluster[2,1,1024]", cpus=8) == 2
+    assert _master_cores("local-cluster[3,2,1024]", cpus=8) == 6
+    assert _master_cores("local", cpus=8) == 1
+    assert _master_cores("local[4]", cpus=8) == 4
+    assert _master_cores("local[4,2]", cpus=8) == 4
+    assert _master_cores("local[*]", cpus=8) == 8
+    assert _master_cores("spark://host:7077", cpus=8) == 32
