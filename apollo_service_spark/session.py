@@ -1,4 +1,5 @@
-"""SparkSession factory with the engine's tuned defaults.
+"""SparkSession factory with the engine's tuned defaults, the one session
+builder of every entry point: plain Python and spark-submit alike.
 
 Local-mode settings mirror what a 1000-executor cluster deployment would set
 via spark-submit conf: AQE on (runtime coalescing + skew-join splitting),
@@ -7,6 +8,13 @@ engine's pandas-UDF kernels (the five in ``functions/udfs.py``) and its
 ``applyInArrow``/``applyInPandas``/``mapInPandas`` passes, and broadcast
 threshold left at default so the small robots/politeness dimension tables
 broadcast automatically.
+
+Under spark-submit the launcher starts the JVM, with its master and any
+``--conf`` flags, before ``build_session`` runs (``PYSPARK_GATEWAY_PORT`` is
+set then, and only then). ``build_session`` sets only the keys the launcher
+left unset: it keeps the launcher's master, and ``--conf`` stays the
+deployment's override, e.g. ``spark.sql.shuffle.partitions`` on a non-local
+master, which otherwise gets 32.
 
 Python workers run under ``apollo_service_spark.worker_daemon``, a fixed conf
 and not an option. PySpark's worker calls ``importlib.invalidate_caches()``
@@ -18,21 +26,32 @@ The daemon's importers re-read an archive only when its stat changed: a
 4-task pandas-UDF stage over empty partitions went from 0.89-1.11 to
 0.09-0.22 CPU-s of worker CPU (local[4], Python 3.11.7, Spark 4.1.2).
 The daemon is started with ``python -m``, so ``build_session`` puts the
-package's parent directory on the workers' ``PYTHONPATH``: without it the
-daemon would import only from a JVM started in the repository root, and a
-daemon that fails to import takes every Python task of the session with it.
+package's parent directory on the workers' ``PYTHONPATH``, or, when the
+package is imported from a zip shipped with ``--py-files``, that zip's
+basename, the path executors fetch it to. Without it the daemon would import
+only from a JVM started in the repository root, and a daemon that fails to
+import takes every Python task of the session with it.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
 
 from . import worker_daemon
 
-# the directory that holds this package, for ``python -m`` in the workers
+# the directory that holds this package, for ``python -m`` in the workers;
+# the zip's own path when the package is imported from a zip
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# AQEPropagateEmptyRelation can collapse a subtree holding a CollectMetrics
+# node (df.observe) before it runs, resolving its Observation to an empty row
+# (seen on the final crawl supersteps, where the new links are empty)
+AQE_EMPTY_RELATION_RULE = (
+    "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation"
+)
 
 
 def _master_cores(master: str, cpus: int) -> int:
@@ -56,61 +75,71 @@ def build_session(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
+    # spark-submit starts the JVM, with its master and any --conf, before
+    # this runs; plain Python leaves PYSPARK_GATEWAY_PORT unset (its own
+    # launched JVM reports master local[*], so it must not be read there)
+    launched = {}
+    if "PYSPARK_GATEWAY_PORT" in os.environ:
+        SparkContext._ensure_initialized()
+        launched = dict(SparkConf().getAll())
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    master = master or f"local[{cpus}]"
+    master = launched.get("spark.master") or master or f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = _master_cores(master, cpus)
 
-    # Input split sizing (guide §6): this engine's scans feed compute-dense
-    # text projections (regex tiers, Catalyst folds, Arrow kernels), so
-    # smaller splits keep every core busy long before the 128 MB default
-    # would.  16 MB costs nothing in local mode (task dispatch is ~ms) and
-    # still yields ≤ 8 tasks/GB; a pure-I/O deployment at cluster scale
-    # should raise this back to 128m-1g through ``extra_conf``.  Row-group
-    # granularity still bounds real splits — sources/tables.py rebalances
-    # the genuinely unsplittable small files.
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.files.maxPartitionBytes", "16m")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+    conf = {
+        "spark.app.name": app_name,
+        "spark.master": master,
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        # Input split sizing (guide §6): this engine's scans feed
+        # compute-dense text projections (regex tiers, Catalyst folds, Arrow
+        # kernels), so smaller splits keep every core busy long before the
+        # 128 MB default would.  16 MB costs nothing in local mode (task
+        # dispatch is ~ms) and still yields ≤ 8 tasks/GB; a pure-I/O
+        # deployment at cluster scale should raise this back to 128m-1g
+        # through ``extra_conf`` or ``--conf``.  Row-group granularity still
+        # bounds real splits — sources/tables.py rebalances the genuinely
+        # unsplittable small files.
+        "spark.sql.files.maxPartitionBytes": "16m",
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
         # NOTE (r6, measured): lowering coalescePartitions.minPartitionSize
         # to 64k (parallelism-first coalescing for small shuffles) was A/B
         # tested across the suite — it bought ~1 s on cluster_greedy (whose
         # post-distinct projection AQE squeezes to 1-3 partitions) but cost
         # ~0.5-0.8 s EACH on the line/gram pipelines, net negative.  The
         # default stays; cluster_greedy fixes its own coalescing locally.
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "8g"),
+        "spark.ui.enabled": "false",
+        "spark.sql.autoBroadcastJoinThreshold": str(32 * 1024 * 1024),
         # Static conf, read when the JVM's codegen first runs. The
         # generated-class cache must hold the engine's working set or every
         # plan recompiles on each run (Janino, then HotSpot JIT of the fresh
         # class). At the default 100 entries a repeated 2-superstep crawl
         # recompiled 105-141 classes and a curate cycle 104-114 (local[4]);
         # at 1000 a repeat compiles none.
-        .config("spark.sql.codegen.cache.maxEntries", "1000")
-        # AQEPropagateEmptyRelation can collapse a subtree holding a
-        # CollectMetrics node (df.observe) before it runs, resolving the
-        # engine's per-superstep Observations to an empty row (seen on the
-        # final crawl iterations where new_links is empty). The engine's
-        # metrics ride the commit writes as observations, so keep the node
-        # alive; empty-relation pruning buys nothing on these explicit plans.
-        .config(
-            "spark.sql.adaptive.optimizer.excludedRules",
-            "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation",
-        )
-        .config("spark.python.daemon.module", worker_daemon.__name__)
-        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
-    )
-    for key, val in (extra_conf or {}).items():
-        builder = builder.config(key, val)
+        "spark.sql.codegen.cache.maxEntries": "1000",
+        # keeps the superstep's observed metrics alive (FrontierEngine checks
+        # it); empty-relation pruning buys nothing on these explicit plans
+        "spark.sql.adaptive.optimizer.excludedRules": AQE_EMPTY_RELATION_RULE,
+        "spark.python.daemon.module": worker_daemon.__name__,
+        # imported from a zip (spark-submit --py-files), the package
+        # reaches each executor as that zip in its working directory
+        "spark.executorEnv.PYTHONPATH": (
+            os.path.basename(_PACKAGE_PARENT)
+            if os.path.isfile(_PACKAGE_PARENT)
+            else _PACKAGE_PARENT
+        ),
+        **(extra_conf or {}),
+    }
+    builder = SparkSession.builder
+    for key, val in conf.items():
+        if key not in launched:
+            builder = builder.config(key, val)
     return builder.getOrCreate()
 
 

@@ -3,38 +3,29 @@ r"""spark-submit entrypoint for the frontier crawl.
 
 Cluster usage (north-rule deployment shape)::
 
-    zip -r apollo_service_spark.zip apollo_service_spark
-    spark-submit --py-files apollo_service_spark.zip \
-        --conf spark.sql.adaptive.enabled=true \
-        --conf spark.sql.codegen.cache.maxEntries=1000 \
-        --conf spark.sql.adaptive.optimizer.excludedRules=\
-org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation \
-        submit_crawl.py \
+    zip -r apollo.zip apollo_service_spark
+    spark-submit --master <cluster> --py-files apollo.zip submit_crawl.py \
         --pages s3://bucket/pages_table \      # or --warc-dir s3://bucket/segments/ \
         --seeds s3://bucket/seeds_table \
-        --store s3://bucket/crawl_state \
+        --store /shared/crawl_state \
         [--robots ...] [--robots-bodies ...] [--sitemap-bodies ...] \
         [--politeness ...] [--delay-budget-seconds S] \
         [--resume] [--max-iterations N] [--depth-limit N] \
         [--n-partitions 4096] [--default-budget 100]
 
-Under spark-submit the session comes from the ``--conf`` flags: pass the
-ones ``session.build_session`` sets that the engine relies on (the codegen
-cache size, and the AQEPropagateEmptyRelation exclusion that keeps the
-superstep's ``df.observe`` metrics alive). ``spark.python.daemon.module`` is
-not set on this path: the engine's worker daemon
-(``apollo_service_spark.worker_daemon``) is started with ``python -m`` before
-any task runs, so it needs the package on the executors' ``PYTHONPATH`` when
-the daemon starts, and ``--py-files`` only adds its zip to each task's path
-after that. Set it together with ``spark.executorEnv.PYTHONPATH`` where the
-package is installed on the executors.
+``--store`` is a shared POSIX path that every executor mounts: the seen
+store reads and writes it with ``os`` (``operators/seen.py``).
+
+The session comes from ``session.build_session`` on every path, as at every
+other entry point. Under spark-submit it keeps the master spark-submit chose,
+starts the Python workers under the engine's daemon from the shipped zip,
+and sets the engine's defaults. A ``--conf`` flag is only an override: it
+wins over the default of the same key, e.g. ``--conf
+spark.sql.shuffle.partitions=N`` on a cluster master, where the default is 32.
 
 Local smoke::
 
     python submit_crawl.py --demo /tmp/apollo_demo
-
-``--demo`` builds its session with ``session.build_session``, as every other
-local entry point does.
 
 The job is idempotent per iteration: every superstep commits an atomic
 snapshot, so re-running with ``--resume`` continues mid-frontier after any
@@ -46,9 +37,6 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import sys
-
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
 def main() -> None:
@@ -82,18 +70,11 @@ def main() -> None:
                         help="generate a synthetic corpus under DIR and crawl it")
     args = parser.parse_args()
 
-    from pyspark.sql import SparkSession
-
     from apollo_service_spark.operators.frontier import CrawlConfig, FrontierEngine
     from apollo_service_spark.session import build_session
     from apollo_service_spark.sources.storage import SnapshotStore
 
-    if args.demo:
-        spark = build_session(app_name="apollo-frontier-crawl")
-    else:
-        # under spark-submit the session comes preconfigured from --conf
-        # flags (module docstring); getOrCreate() attaches to it
-        spark = SparkSession.builder.appName("apollo-frontier-crawl").getOrCreate()
+    spark = build_session(app_name="apollo-frontier-crawl")
     spark.sparkContext.setLogLevel("WARN")
 
     if args.demo:

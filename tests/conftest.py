@@ -34,3 +34,12 @@ def small_corpus_spark(spark, small_corpus):
 
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+
+def cache_state(spark) -> tuple:
+    """Whether the session's cache manager holds no cached plan, and how many
+    RDDs are persisted: a test compares against its own starting state
+    rather than clearing the whole cache, so a frame another test leaked
+    shows up there instead of being dropped here."""
+    empty = spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    return empty, spark.sparkContext._jsc.sc().getPersistentRDDs().size()

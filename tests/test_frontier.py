@@ -17,6 +17,7 @@ from apollo_service_spark.operators.frontier import (
 from apollo_service_spark.oracle.simulator import SimConfig, simulate
 from apollo_service_spark.session import codegen_compiles
 from apollo_service_spark.sources.storage import SnapshotStore
+from tests.conftest import cache_state
 
 
 def _sim_inputs(small_corpus):
@@ -180,6 +181,31 @@ def test_max_links_limit(spark, small_corpus, small_corpus_spark, tmp_path):
     }
 
 
+def test_engine_requires_observations_to_survive_aqe(
+    spark, small_corpus_spark, tmp_path
+):
+    """An engine on a session whose AQE may prune the superstep's observed
+    nodes is refused when it is built; with AQE off it is built."""
+    aqe = "spark.sql.adaptive.enabled"
+    excluded = "spark.sql.adaptive.optimizer.excludedRules"
+    was = {key: spark.conf.get(key) for key in (aqe, excluded)}
+
+    def engine():
+        return FrontierEngine(
+            spark, small_corpus_spark["pages"], SnapshotStore(str(tmp_path))
+        )
+
+    try:
+        spark.conf.unset(excluded)
+        with pytest.raises(ValueError, match="AQEPropagateEmptyRelation"):
+            engine()
+        spark.conf.set(aqe, "false")
+        engine()
+    finally:
+        for key, value in was.items():
+            spark.conf.set(key, value)
+
+
 def test_superstep_exception_releases_caches(
     spark, small_corpus_spark, tmp_path
 ):
@@ -188,8 +214,7 @@ def test_superstep_exception_releases_caches(
     cached (pages layout, frontier, batch, fetch result, next frontier,
     ranking intermediate) has been released by the time the error
     reaches the caller."""
-    cache_manager = spark._jsparkSession.sharedState().cacheManager()
-    spark.catalog.clearCache()
+    before = cache_state(spark)
     store = SnapshotStore(str(tmp_path / "raises"))
     engine = FrontierEngine(
         spark,
@@ -200,7 +225,7 @@ def test_superstep_exception_releases_caches(
         robots=small_corpus_spark["robots"],
         politeness=small_corpus_spark["politeness"],
     )
-    assert cache_manager.isEmpty()
+    assert cache_state(spark) == before
 
     commit = store.commit
     calls = []
@@ -215,7 +240,7 @@ def test_superstep_exception_releases_caches(
     with pytest.raises(RuntimeError, match="commit failed"):
         engine.run(seeds=small_corpus_spark["seeds"])
     assert calls == [0, 1]
-    assert cache_manager.isEmpty()
+    assert cache_state(spark) == before
 
 
 @pytest.fixture(scope="module")

@@ -12,7 +12,7 @@ import pytest
 
 from apollo_service_spark.operators import curation
 from apollo_service_spark.plans.queries import oracle_sql, queries, release_all
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, cache_state
 
 # The correctness sample takes a prefix of this order: the 25 queries
 # outside the r5 sample come first.
@@ -78,19 +78,10 @@ def test_build_work_runs_under_the_query_job_tag(spark, monkeypatch):
     release_all()
 
 
-def _cache_state(spark) -> tuple:
-    """Whether the session's cache manager holds no cached plan, and how many
-    RDDs are persisted: a test compares against its own starting state
-    rather than clearing the whole cache, so a frame another test leaked
-    shows up there instead of being dropped here."""
-    empty = spark._jsparkSession.sharedState().cacheManager().isEmpty()
-    return empty, spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-
-
 def test_deferred_frames_released_when_the_build_raises(spark, monkeypatch):
     cache_manager = spark._jsparkSession.sharedState().cacheManager()
     release_all()
-    before = _cache_state(spark)
+    before = cache_state(spark)
     pack_sequences = curation.pack_sequences
 
     def failing_pack(*args, cleanup, **kwargs):
@@ -101,15 +92,15 @@ def test_deferred_frames_released_when_the_build_raises(spark, monkeypatch):
     monkeypatch.setattr(curation, "pack_sequences", failing_pack)
     with pytest.raises(RuntimeError, match="pack failed"):
         queries()["pack_sequences"](spark, SF_DIR)
-    assert _cache_state(spark) == before
+    assert cache_state(spark) == before
 
 
 def test_release_all_empties_the_cache(spark):
     release_all()
-    before = _cache_state(spark)
+    before = cache_state(spark)
     registry = queries()
     for key in DEFERRED:
         registry[key](spark, SF_DIR).count()
-    assert _cache_state(spark) != before
+    assert cache_state(spark) != before
     release_all()
-    assert _cache_state(spark) == before
+    assert cache_state(spark) == before
