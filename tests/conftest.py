@@ -37,9 +37,18 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
 def cache_state(spark) -> tuple:
-    """Whether the session's cache manager holds no cached plan, and how many
-    RDDs are persisted: a test compares against its own starting state
+    """Whether the session's cache manager holds no cached plan, and the ids
+    of the persisted RDDs: a test compares against its own starting state
     rather than clearing the whole cache, so a frame another test leaked
     shows up there instead of being dropped here."""
     empty = spark._jsparkSession.sharedState().cacheManager().isEmpty()
-    return empty, spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+    return empty, frozenset(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def cached_since(spark, before: tuple) -> set:
+    """What the session caches now that it did not at ``before`` (a
+    ``cache_state``). Only additions count: Spark's context cleaner may
+    unpersist an RDD another test left behind at any time."""
+    empty, rdds = cache_state(spark)
+    plan = {"a cached plan"} if before[0] and not empty else set()
+    return set(rdds - before[1]) | plan

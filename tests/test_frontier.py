@@ -17,7 +17,7 @@ from apollo_service_spark.operators.frontier import (
 from apollo_service_spark.oracle.simulator import SimConfig, simulate
 from apollo_service_spark.session import codegen_compiles
 from apollo_service_spark.sources.storage import SnapshotStore
-from tests.conftest import cache_state
+from tests.conftest import cache_state, cached_since
 
 
 def _sim_inputs(small_corpus):
@@ -225,7 +225,7 @@ def test_superstep_exception_releases_caches(
         robots=small_corpus_spark["robots"],
         politeness=small_corpus_spark["politeness"],
     )
-    assert cache_state(spark) == before
+    assert not cached_since(spark, before)
 
     commit = store.commit
     calls = []
@@ -240,7 +240,7 @@ def test_superstep_exception_releases_caches(
     with pytest.raises(RuntimeError, match="commit failed"):
         engine.run(seeds=small_corpus_spark["seeds"])
     assert calls == [0, 1]
-    assert cache_state(spark) == before
+    assert not cached_since(spark, before)
 
 
 @pytest.fixture(scope="module")

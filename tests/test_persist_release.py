@@ -12,7 +12,7 @@ from apollo_service_spark.operators import frontier
 from apollo_service_spark.operators.components import connected_components
 from apollo_service_spark.operators.pagerank import pagerank
 from apollo_service_spark.plans import queries
-from tests.conftest import cache_state
+from tests.conftest import cache_state, cached_since
 
 
 def test_eager_persists_released_when_a_later_step_raises(spark, monkeypatch):
@@ -29,11 +29,11 @@ def test_eager_persists_released_when_a_later_step_raises(spark, monkeypatch):
         # pagerank persists nodes and the degree-joined edges, then checkpoints
         with pytest.raises(RuntimeError, match="checkpoint failed"):
             pagerank(edges)
-        assert cache_state(spark) == before
+        assert not cached_since(spark, before)
         # connected_components persists the symmetrized edges, then checkpoints
         with pytest.raises(RuntimeError, match="checkpoint failed"):
             connected_components(pairs)
-        assert cache_state(spark) == before
+        assert not cached_since(spark, before)
 
     # crawl_frontier: the crawl log's rank derivation persists into the
     # query's cleanup list; the step after it raises
@@ -47,4 +47,4 @@ def test_eager_persists_released_when_a_later_step_raises(spark, monkeypatch):
     monkeypatch.setattr(frontier, "crawl_log_df", failing_log)
     with pytest.raises(RuntimeError, match="crawl log failed"):
         queries.q_crawl_frontier(spark, None)
-    assert cache_state(spark) == before
+    assert not cached_since(spark, before)

@@ -12,7 +12,7 @@ import pytest
 
 from apollo_service_spark.operators import curation
 from apollo_service_spark.plans.queries import oracle_sql, queries, release_all
-from tests.conftest import SF_DIR, cache_state
+from tests.conftest import SF_DIR, cache_state, cached_since
 
 # The correctness sample takes a prefix of this order: the 25 queries
 # outside the r5 sample come first.
@@ -92,7 +92,7 @@ def test_deferred_frames_released_when_the_build_raises(spark, monkeypatch):
     monkeypatch.setattr(curation, "pack_sequences", failing_pack)
     with pytest.raises(RuntimeError, match="pack failed"):
         queries()["pack_sequences"](spark, SF_DIR)
-    assert cache_state(spark) == before
+    assert not cached_since(spark, before)
 
 
 def test_release_all_empties_the_cache(spark):
@@ -101,6 +101,6 @@ def test_release_all_empties_the_cache(spark):
     registry = queries()
     for key in DEFERRED:
         registry[key](spark, SF_DIR).count()
-    assert cache_state(spark) != before
+    assert cached_since(spark, before)
     release_all()
-    assert cache_state(spark) == before
+    assert not cached_since(spark, before)
