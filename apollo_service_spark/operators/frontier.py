@@ -48,7 +48,7 @@ from pyspark.storagelevel import StorageLevel
 
 from ..functions import urlkit
 from ..functions.udfs import extract_links_udf
-from ..session import AQE_EMPTY_RELATION_RULE, codegen_compiles
+from ..session import AQE_EMPTY_RELATION_RULE, codegen_compiles, observations_survive
 from ..sources.storage import SnapshotStore
 from . import politeness as politeness_ops
 from . import robots as robots_ops
@@ -107,15 +107,10 @@ class FrontierEngine:
         sitemap_bodies: DataFrame | None = None,
     ):
         # the superstep's metrics are Observations (session.py's rule note)
-        aqe = spark.conf.get("spark.sql.adaptive.enabled")
-        excluded = spark.conf.get("spark.sql.adaptive.optimizer.excludedRules", "")
-        if aqe.strip().lower() == "true" and AQE_EMPTY_RELATION_RULE not in {
-            rule.strip() for rule in excluded.split(",")
-        }:
+        if not observations_survive(spark):
             raise ValueError(
-                "the crawl needs AQE off or spark.sql.adaptive.optimizer."
-                f"excludedRules to list {AQE_EMPTY_RELATION_RULE}; build the "
-                "session with session.build_session"
+                f"the crawl needs AQE off or {AQE_EMPTY_RELATION_RULE} in the AQE "
+                "optimizer's excludedRules, as session.build_session sets them"
             )
         self.spark = spark
         self.config = config or CrawlConfig()

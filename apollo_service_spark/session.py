@@ -9,12 +9,10 @@ engine's pandas-UDF kernels (the five in ``functions/udfs.py``) and its
 threshold left at default so the small robots/politeness dimension tables
 broadcast automatically.
 
-Under spark-submit the launcher starts the JVM, with its master and any
-``--conf`` flags, before ``build_session`` runs (``PYSPARK_GATEWAY_PORT`` is
-set then, and only then). ``build_session`` sets only the keys the launcher
-left unset: it keeps the launcher's master, and ``--conf`` stays the
-deployment's override, e.g. ``spark.sql.shuffle.partitions`` on a non-local
-master, which otherwise gets 32.
+Under spark-submit (``PYSPARK_GATEWAY_PORT`` set) the launcher has started
+the JVM with its master and ``--conf`` flags, and ``build_session`` sets only
+the keys it left unset: ``--conf`` stays the deployment's override, e.g.
+``spark.sql.shuffle.partitions`` on a non-local master, which gets 32.
 
 Python workers run under ``apollo_service_spark.worker_daemon``, a fixed conf
 and not an option. PySpark's worker calls ``importlib.invalidate_caches()``
@@ -36,6 +34,7 @@ import takes every Python task of the session with it.
 from __future__ import annotations
 
 import os
+import sys
 
 from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
@@ -43,8 +42,11 @@ from pyspark.sql import SparkSession
 from . import worker_daemon
 
 # the directory that holds this package, for ``python -m`` in the workers;
-# the zip's own path when the package is imported from a zip
+# imported from a zip (spark-submit --py-files), the zip's basename: each
+# executor fetches it to its working directory
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+if os.path.isfile(_PACKAGE_PARENT):
+    _PACKAGE_PARENT = os.path.basename(_PACKAGE_PARENT)
 
 # AQEPropagateEmptyRelation can collapse a subtree holding a CollectMetrics
 # node (df.observe) before it runs, resolving its Observation to an empty row
@@ -82,6 +84,9 @@ def build_session(
     if "PYSPARK_GATEWAY_PORT" in os.environ:
         SparkContext._ensure_initialized()
         launched = dict(SparkConf().getAll())
+        # spark-submit names the app after its script unless --name is given
+        if launched.get("spark.app.name") == os.path.basename(sys.argv[0]):
+            del launched["spark.app.name"]
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     master = launched.get("spark.master") or master or f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -127,13 +132,7 @@ def build_session(
         # it); empty-relation pruning buys nothing on these explicit plans
         "spark.sql.adaptive.optimizer.excludedRules": AQE_EMPTY_RELATION_RULE,
         "spark.python.daemon.module": worker_daemon.__name__,
-        # imported from a zip (spark-submit --py-files), the package
-        # reaches each executor as that zip in its working directory
-        "spark.executorEnv.PYTHONPATH": (
-            os.path.basename(_PACKAGE_PARENT)
-            if os.path.isfile(_PACKAGE_PARENT)
-            else _PACKAGE_PARENT
-        ),
+        "spark.executorEnv.PYTHONPATH": _PACKAGE_PARENT,
         **(extra_conf or {}),
     }
     builder = SparkSession.builder
@@ -141,6 +140,15 @@ def build_session(
         if key not in launched:
             builder = builder.config(key, val)
     return builder.getOrCreate()
+
+
+def observations_survive(spark: SparkSession) -> bool:
+    """Whether ``df.observe`` nodes live until they run: AQE off, or
+    ``AQE_EMPTY_RELATION_RULE`` excluded, as ``build_session`` sets it."""
+    if spark.conf.get("spark.sql.adaptive.enabled").strip().lower() != "true":
+        return True
+    excluded = spark.conf.get("spark.sql.adaptive.optimizer.excludedRules", "")
+    return AQE_EMPTY_RELATION_RULE in {r.strip() for r in excluded.split(",")}
 
 
 def codegen_compiles(spark: SparkSession) -> int:

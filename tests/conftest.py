@@ -2,6 +2,7 @@ import os
 import sys
 
 import pytest
+from pyspark import StorageLevel
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -52,3 +53,26 @@ def cached_since(spark, before: tuple) -> set:
     empty, rdds = cache_state(spark)
     plan = {"a cached plan"} if before[0] and not empty else set()
     return set(rdds - before[1]) | plan
+
+
+@pytest.fixture
+def persisted(spark, monkeypatch):
+    """Every frame persisted or cached while the test runs, in order: a
+    leak check on these frames does not depend on what other tests of the
+    session left cached."""
+    frames = []
+    frame_type = type(spark.range(0))
+    for name in ("persist", "cache"):
+
+        def record(self, *args, _method=getattr(frame_type, name), **kwargs):
+            frames.append(self)
+            return _method(self, *args, **kwargs)
+
+        monkeypatch.setattr(frame_type, name, record)
+    return frames
+
+
+def still_cached(frames) -> list:
+    """The frames whose plan the session still caches."""
+    none = StorageLevel(False, False, False, False, 1)
+    return [frame for frame in frames if frame.storageLevel != none]

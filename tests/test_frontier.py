@@ -17,7 +17,7 @@ from apollo_service_spark.operators.frontier import (
 from apollo_service_spark.oracle.simulator import SimConfig, simulate
 from apollo_service_spark.session import codegen_compiles
 from apollo_service_spark.sources.storage import SnapshotStore
-from tests.conftest import cache_state, cached_since
+from tests.conftest import cache_state, cached_since, still_cached
 
 
 def _sim_inputs(small_corpus):
@@ -207,7 +207,7 @@ def test_engine_requires_observations_to_survive_aqe(
 
 
 def test_superstep_exception_releases_caches(
-    spark, small_corpus_spark, tmp_path
+    spark, small_corpus_spark, tmp_path, persisted
 ):
     """A superstep that raises leaves nothing cached: building an engine
     caches nothing, and when the second commit fails every frame run()
@@ -225,7 +225,7 @@ def test_superstep_exception_releases_caches(
         robots=small_corpus_spark["robots"],
         politeness=small_corpus_spark["politeness"],
     )
-    assert not cached_since(spark, before)
+    assert not persisted and not cached_since(spark, before)
 
     commit = store.commit
     calls = []
@@ -240,6 +240,7 @@ def test_superstep_exception_releases_caches(
     with pytest.raises(RuntimeError, match="commit failed"):
         engine.run(seeds=small_corpus_spark["seeds"])
     assert calls == [0, 1]
+    assert persisted and not still_cached(persisted)
     assert not cached_since(spark, before)
 
 

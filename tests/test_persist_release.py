@@ -12,11 +12,12 @@ from apollo_service_spark.operators import frontier
 from apollo_service_spark.operators.components import connected_components
 from apollo_service_spark.operators.pagerank import pagerank
 from apollo_service_spark.plans import queries
-from tests.conftest import cache_state, cached_since
+from tests.conftest import cache_state, cached_since, still_cached
 
 
-def test_eager_persists_released_when_a_later_step_raises(spark, monkeypatch):
-    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+def test_eager_persists_released_when_a_later_step_raises(
+    spark, monkeypatch, persisted
+):
     before = cache_state(spark)
     pairs = spark.createDataFrame([(1, 2), (2, 3), (4, 5)], "id_a long, id_b long")
     edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
@@ -29,11 +30,15 @@ def test_eager_persists_released_when_a_later_step_raises(spark, monkeypatch):
         # pagerank persists nodes and the degree-joined edges, then checkpoints
         with pytest.raises(RuntimeError, match="checkpoint failed"):
             pagerank(edges)
+        assert persisted and not still_cached(persisted)
         assert not cached_since(spark, before)
+        del persisted[:]
         # connected_components persists the symmetrized edges, then checkpoints
         with pytest.raises(RuntimeError, match="checkpoint failed"):
             connected_components(pairs)
+        assert persisted and not still_cached(persisted)
         assert not cached_since(spark, before)
+        del persisted[:]
 
     # crawl_frontier: the crawl log's rank derivation persists into the
     # query's cleanup list; the step after it raises
@@ -41,10 +46,11 @@ def test_eager_persists_released_when_a_later_step_raises(spark, monkeypatch):
 
     def failing_log(spark, store, cleanup=None):
         crawl_log_df(spark, store, cleanup=cleanup)
-        assert cleanup and not cache_manager.isEmpty()
+        assert cleanup and still_cached(persisted)
         raise RuntimeError("crawl log failed")
 
     monkeypatch.setattr(frontier, "crawl_log_df", failing_log)
     with pytest.raises(RuntimeError, match="crawl log failed"):
         queries.q_crawl_frontier(spark, None)
+    assert not still_cached(persisted)
     assert not cached_since(spark, before)

@@ -12,7 +12,7 @@ import pytest
 
 from apollo_service_spark.operators import curation
 from apollo_service_spark.plans.queries import oracle_sql, queries, release_all
-from tests.conftest import SF_DIR, cache_state, cached_since
+from tests.conftest import SF_DIR, cache_state, cached_since, still_cached
 
 # The correctness sample takes a prefix of this order: the 25 queries
 # outside the r5 sample come first.
@@ -78,29 +78,32 @@ def test_build_work_runs_under_the_query_job_tag(spark, monkeypatch):
     release_all()
 
 
-def test_deferred_frames_released_when_the_build_raises(spark, monkeypatch):
-    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+def test_deferred_frames_released_when_the_build_raises(
+    spark, monkeypatch, persisted
+):
     release_all()
     before = cache_state(spark)
     pack_sequences = curation.pack_sequences
 
     def failing_pack(*args, cleanup, **kwargs):
         pack_sequences(*args, cleanup=cleanup, **kwargs)
-        assert cleanup and not cache_manager.isEmpty()
+        assert cleanup and still_cached(persisted)
         raise RuntimeError("pack failed")
 
     monkeypatch.setattr(curation, "pack_sequences", failing_pack)
     with pytest.raises(RuntimeError, match="pack failed"):
         queries()["pack_sequences"](spark, SF_DIR)
+    assert not still_cached(persisted)
     assert not cached_since(spark, before)
 
 
-def test_release_all_empties_the_cache(spark):
+def test_release_all_empties_the_cache(spark, persisted):
     release_all()
     before = cache_state(spark)
     registry = queries()
     for key in DEFERRED:
         registry[key](spark, SF_DIR).count()
-    assert cached_since(spark, before)
+    assert cached_since(spark, before) and still_cached(persisted)
     release_all()
+    assert not still_cached(persisted)
     assert not cached_since(spark, before)
