@@ -6,8 +6,14 @@ Catalyst column expression):
 * ``extract_text_udf``  — HTML→markdown extraction, semantics of the
   reference extractor (`scraper.py:211-292`), byte-identical per row with the
   in-repo oracle because both call ``functions.html.extract_text``.
-* ``extract_links_udf`` — a[href] link extraction + urljoin + fragment strip
-  (`apollo.py:359-371`), returning array<string> that callers ``explode``.
+* ``expand_links_udf`` — the crawl frontier's expand phase for each page:
+  a[href] link extraction + urljoin + fragment strip (`apollo.py:359-371`),
+  then canonicalization, the ignore patterns and the host/path split
+  (``urlkit.expand_link_py``), returning array<struct<url, host, path>> that
+  the frontier ``explode``s.
+* ``extract_links_udf`` — the extraction step alone, returning the raw
+  array<string> of links (perfbench's traced replay and ``bench_scaling.py``
+  time it separately from the Catalyst ``urlkit`` expressions).
 * ``repetition_stats_udf`` — the Gopher repetition scalars; SQL-expressible
   (the Catalyst folds exist and are the test reference) but measured 4×
   slower than this Counter kernel at corpus scale, so the Arrow form is the
@@ -33,6 +39,7 @@ that runs over many small partitions pays this once per partition.
 from __future__ import annotations
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType, IntegerType, LongType, StringType, StructField, StructType,
@@ -40,6 +47,7 @@ from pyspark.sql.types import (
 
 from .html import extract_links, extract_text_only
 from .textstats import doc_pass_py, repetition_stats_py
+from .urlkit import expand_link_py
 
 
 @F.pandas_udf(StringType())
@@ -54,6 +62,41 @@ def extract_links_udf(html: pd.Series, base_url: pd.Series) -> pd.Series:
         index=html.index,
         dtype=object,
     )
+
+
+_LINK_FIELDS = ["url", "host", "path"]
+_LINKS_TYPE = ArrayType(
+    StructType([StructField(name, StringType()) for name in _LINK_FIELDS])
+)
+
+
+def expand_links_udf(extra_ignore_patterns: list | None = None):
+    """The Arrow kernel of the frontier's expand phase: for each (html,
+    base url), the page's candidate links as (url, host, path) structs, in
+    ``extract_links`` order, with the ignored ones left out. Canonicalizing
+    here, once per link, keeps the ~50-node Catalyst ``canonicalize`` tree
+    out of the superstep's plan; the strings equal those of the Catalyst
+    composition (tests/test_urlkit_fuzz.py)."""
+    extra = list(extra_ignore_patterns or [])
+
+    @F.arrow_udf(_LINKS_TYPE)
+    def expand_links(html: pa.Array, base_url: pa.Array) -> pa.Array:
+        offsets = [0]
+        columns = ([], [], [])
+        for page, base in zip(html.to_pylist(), base_url.to_pylist()):
+            for link in extract_links(page, base):
+                row = expand_link_py(link, extra)
+                if row is not None:
+                    for column, value in zip(columns, row):
+                        column.append(value)
+            offsets.append(len(columns[0]))
+        structs = pa.StructArray.from_arrays(
+            [pa.array(column, pa.string()) for column in columns],
+            names=_LINK_FIELDS,
+        )
+        return pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), structs)
+
+    return expand_links
 
 
 _REPETITION_SCHEMA = StructType(

@@ -251,9 +251,11 @@ def canonicalize(url: Column) -> Column:
     after = F.substr(
         no_frag, F.length(scheme) + F.lit(4), F.length(no_frag)
     )
-    # authority = up to first '/' or '?'
-    auth = F.lower(F.substring_index(F.substring_index(after, "/", 1), "?", 1))
-    rest = F.substr(after, F.length(auth) + F.lit(1), F.length(no_frag))
+    # authority = up to first '/' or '?'; the rest starts after its
+    # un-lowered length (lowercasing 'İ' adds a character)
+    raw_auth = F.substring_index(F.substring_index(after, "/", 1), "?", 1)
+    auth = F.lower(raw_auth)
+    rest = F.substr(after, F.length(raw_auth) + F.lit(1), F.length(no_frag))
     auth_noport = (
         F.when(auth.endswith(":80"), F.substr(auth, F.lit(1), F.length(auth) - F.lit(3)))
         .when(auth.endswith(":443"), F.substr(auth, F.lit(1), F.length(auth) - F.lit(4)))
@@ -475,7 +477,9 @@ def extract_year(url: Column) -> Column:
 # Python-side mirrors (oracle simulator + property tests)
 # --------------------------------------------------------------------------
 
-_IGNORE_COMPILED = [re.compile(p, re.IGNORECASE) for p in IGNORE_PATTERNS]
+_IGNORE_COMPILED = re.compile(
+    "|".join(f"(?:{p})" for p in IGNORE_PATTERNS), re.IGNORECASE
+)
 _FILE_COMPILED = re.compile(_FILE_RE, re.IGNORECASE)
 _SOCIAL_COMPILED = re.compile(_SOCIAL_RE, re.IGNORECASE)
 _BANK_COMPILED = re.compile(_BANK_RE, re.IGNORECASE)
@@ -483,10 +487,9 @@ _YEAR_COMPILED = re.compile(YEAR_PATTERN)
 
 
 def is_ignored_py(url: str, extra_patterns: list | None = None) -> bool:
-    pats = _IGNORE_COMPILED + [
-        re.compile(p, re.IGNORECASE) for p in (extra_patterns or [])
-    ]
-    return any(p.search(url) for p in pats)
+    return _IGNORE_COMPILED.search(url) is not None or any(
+        re.search(p, url, re.IGNORECASE) for p in extra_patterns or ()
+    )
 
 
 def is_document_url_py(url: str) -> bool:
@@ -524,16 +527,68 @@ def extract_year_py(url: str) -> str:
     return "No Year"
 
 
+_CANON_RE = re.compile(r"^([A-Za-z][A-Za-z0-9+.-]*)://([^/?]*)(.*)$", re.DOTALL)
+
+
 def canonicalize_py(url: str) -> str:
-    url = url.strip().split("#", 1)[0]
-    m = re.match(r"^([A-Za-z][A-Za-z0-9+.-]*)://([^/?]*)(.*)$", url, re.DOTALL)
+    # strip(" ") and endswith: Spark's trim removes spaces only, and `$`
+    # would also match before a final newline
+    url = url.strip(" ").split("#", 1)[0]
+    m = _CANON_RE.match(url)
     if not m:
         return url
     scheme, host, rest = m.group(1).lower(), m.group(2).lower(), m.group(3)
     if scheme not in ("http", "https") or not host:
         return url
-    host = re.sub(r":(80|443)$", "", host)
+    for port in (":80", ":443"):
+        if host.endswith(port):
+            host = host[: -len(port)]
+            break
     return f"{scheme}://{host}{rest}"
+
+
+# The string rules of `url_host` / `url_path` above, in Python. Not urlparse:
+# urlparse also splits ';params' off the path. The scheme test is the Java
+# regex of `_after_scheme`, whose `$` also matches before one final line
+# terminator.
+_SCHEME_JAVA_RE = re.compile(
+    r"[A-Za-z][A-Za-z0-9+.\-]*(?:\r\n|[\n\r\x85\u2028\u2029])?\Z"
+)
+
+
+def _after_scheme_py(url: str) -> str:
+    s = url.split("#", 1)[0]
+    colon = s.find(":")
+    if colon > 0 and _SCHEME_JAVA_RE.match(s[:colon]):
+        return s[colon + 1 :]
+    return s
+
+
+def url_host_py(url: str) -> str:
+    """Python twin of :func:`url_host`."""
+    rest = _after_scheme_py(url)
+    if not rest.startswith("//"):
+        return ""
+    return rest[2:].split("/", 1)[0].split("?", 1)[0]
+
+
+def url_path_py(url: str) -> str:
+    """Python twin of :func:`url_path`."""
+    rest = _after_scheme_py(url)
+    if rest.startswith("//"):
+        netloc = rest[2:].split("/", 1)[0].split("?", 1)[0]
+        rest = rest[len(netloc) + 2 :]
+    return rest.split("?", 1)[0]
+
+
+def expand_link_py(link: str, extra_patterns: list | None = None):
+    """One extracted link as the frontier's candidate (url, host, path): the
+    canonical url and its host and path, or None when an ignore pattern
+    matches the canonical url."""
+    url = canonicalize_py(link)
+    if is_ignored_py(url, extra_patterns):
+        return None
+    return url, url_host_py(url), url_path_py(url)
 
 
 def path_prefix_py(path: str, depth: int = 2) -> str:

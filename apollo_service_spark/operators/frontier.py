@@ -12,9 +12,12 @@ one job per query stage: a two-superstep perfbench crawl traced with
 2. **fetch** — ``batch LEFT JOIN pages ON url`` (the table-driven analog of
    the HTTP GET at `apollo.py:493`); a missing row is a fetch error, a row
    with NULL html is non-HTML content (no link expansion, `apollo.py:549-555`).
-3. **expand** — ``extract_links_udf`` (Arrow) → ``explode`` → canonicalize →
-   ignore-pattern / domain / document filters (urlkit, Catalyst-native) →
-   robots broadcast gate (robots.py).
+3. **expand** — one Arrow kernel per page (``udfs.expand_links_udf``):
+   link extraction, canonicalization, the ignore patterns and the host/path
+   split, whose (url, host, path) structs are ``explode``d → domain filter
+   → robots broadcast gate (robots.py). A superstep whose whole frontier
+   sits at ``depth_limit`` expands nothing and builds neither this phase
+   nor dedup: its next frontier is the carryover.
 4. **dedup** — exact ``LEFT ANTI JOIN`` against the carryover frontier and
    the in-flight batch (reference double-check under lock,
    `apollo.py:592-604`), then the partitioned bloom seen store (seen.py): a
@@ -47,7 +50,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..functions import urlkit
-from ..functions.udfs import extract_links_udf
+from ..functions.udfs import expand_links_udf
 from ..session import AQE_EMPTY_RELATION_RULE, codegen_compiles, observations_survive
 from ..sources.storage import SnapshotStore
 from . import politeness as politeness_ops
@@ -62,6 +65,9 @@ class CrawlConfig:
     max_pages: int | None = None
     max_links: int | None = None
     default_budget: int = 4
+    # searched case-insensitively in each canonical link by Python's `re`
+    # inside the expand kernel, as the oracle simulator runs them (not by a
+    # Java regex)
     extra_ignore_patterns: list = field(default_factory=list)
     respect_robots: bool = True
     n_partitions: int = 32
@@ -153,6 +159,7 @@ class FrontierEngine:
             )
         self.politeness = politeness
         self.sitemap_bodies = sitemap_bodies
+        self.expand_links = expand_links_udf(self.config.extra_ignore_patterns)
         self.seen_store = PartitionedBloomSeenStore(
             store.root,
             n_partitions=self.config.n_partitions,
@@ -207,33 +214,20 @@ class FrontierEngine:
         if cfg.depth_limit is not None:
             expandable = expandable.filter(F.col("depth") < F.lit(cfg.depth_limit))
 
-        # canonicalize stays a JVM column expression (fast path), but the
-        # ignore filter MUST be the single-reference fused regex here:
-        # predicate pushdown substitutes the canonicalize tree into every
-        # filter term, and the ~30-term contains/endswith decomposition blew
-        # past janino's compile limits, silently dropping this stage to
-        # interpreted execution (round-4 probe; guarded by the
-        # codegen.fallback=false test in tests/test_plans.py)
-        links = (
-            expandable.select(
-                F.col("depth"),
-                F.explode(
-                    extract_links_udf(F.col("html"), F.col("url"))
-                ).alias("raw_link"),
-            )
-            .select(
-                urlkit.canonicalize(F.col("raw_link")).alias("url"),
-                (F.col("depth") + 1).alias("depth"),
-            )
-            .withColumn("host", urlkit.url_host(F.col("url")))
-        )
-
-        links = links.filter(
-            ~urlkit.is_ignored_fused(F.col("url"), cfg.extra_ignore_patterns)
-        )
+        # one Arrow kernel per page turns its html into candidate (url, host,
+        # path) structs: extraction, canonicalization and the ignore
+        # patterns run in Python once per link. Applied as Catalyst columns
+        # instead, CollapseProject inlined canonicalize's ~50-node tree into
+        # every expression that read the url, and each superstep paid for
+        # planning and compiling that tree.
+        links = expandable.select(
+            (F.col("depth") + 1).alias("depth"),
+            F.explode(
+                self.expand_links(F.col("html"), F.col("url"))
+            ).alias("link"),
+        ).select("link.url", "link.host", "link.path", "depth")
         if cfg.base_host is not None:
             links = links.filter(F.col("host") == F.lit(cfg.base_host))
-        links = links.withColumn("path", urlkit.url_path(F.col("url")))
         return robots_ops.robots_allow(links, self.robots_agg).drop("path")
 
     def _dedup(self, links: DataFrame, exclude: DataFrame) -> DataFrame:
@@ -285,10 +279,11 @@ class FrontierEngine:
             frontier = self._init_frontier(seeds)
             pages_fetched = 0
             links_processed = 0
-        # one count per RUN (not per iteration): the first superstep counts
-        # its input frontier, every later frontier size is observed for free
-        # during the previous commit's write
-        frontier_size = None
+        # one aggregate per RUN (not per iteration): the first superstep
+        # counts its input frontier and takes its minimum depth, every later
+        # frontier's size and minimum depth are observed for free during the
+        # previous commit's write
+        frontier_size = min_depth = None
 
         reason = "frontier_exhausted"
         iteration = start_iter - 1
@@ -303,7 +298,9 @@ class FrontierEngine:
                 cleanup = [frontier]
                 try:
                     if frontier_size is None:
-                        frontier_size = frontier.count()
+                        frontier_size, min_depth = frontier.agg(
+                            F.count(F.lit(1)), F.min("depth")
+                        ).first()
                     # stop checks on driver-side counters only — the frontier
                     # size of iteration k is observed during iteration k-1's
                     # commit write, so past the first superstep's count the
@@ -320,8 +317,13 @@ class FrontierEngine:
                         reason = "max_links"
                         iteration -= 1
                         break
-                    m, frontier_size = self._superstep(
-                        iteration, frontier, frontier_size, pages_fetched, cleanup
+                    m, frontier_size, min_depth = self._superstep(
+                        iteration,
+                        frontier,
+                        frontier_size,
+                        min_depth,
+                        pages_fetched,
+                        cleanup,
                     )
                 finally:
                     for cached in cleanup:
@@ -347,19 +349,23 @@ class FrontierEngine:
         iteration: int,
         frontier: DataFrame,
         frontier_size: int,
+        min_depth: int,
         pages_fetched: int,
         cleanup: list,
     ) -> tuple:
         """One superstep: select, fetch, expand, dedup and commit.
 
-        Returns the committed metrics and the next frontier's size. Every
-        frame it caches is appended to ``cleanup``, which the caller
-        releases in ``finally``.
+        Returns the committed metrics and the next frontier's size and
+        minimum depth. Every frame it caches is appended to ``cleanup``,
+        which the caller releases in ``finally``. A frontier whose minimum
+        depth is at the depth limit has no page to expand, so its superstep
+        builds no expand or dedup plan: the next frontier is the carryover.
         """
         cfg = self.config
         spark = self.spark
         t0 = time.monotonic()
         compiles0 = codegen_compiles(spark)
+        expands = cfg.depth_limit is None or min_depth < cfg.depth_limit
 
         selected, carryover = politeness_ops.select_batch(
             frontier, self.politeness, cfg.default_budget
@@ -431,29 +437,36 @@ class FrontierEngine:
                     F.when(F.col("status") != "error", 1).otherwise(0)
                 ).alias("n_ok"),
             )
-            .persist()
         )
-        cleanup.append(fetched)
 
-        obs_links = Observation()
-        links = self._candidate_links(fetched).observe(
-            obs_links, F.count(F.lit(1)).alias("links_found")
-        )
-        exclude = carryover.select("url").unionByName(ranked.select("url"))
-        new_links = self._dedup(links, exclude)
+        next_frontier = carryover
+        obs_links = None
+        if expands:
+            # the fetch result feeds both the expansion and the crawl log
+            fetched = fetched.persist()
+            cleanup.append(fetched)
+            obs_links = Observation()
+            links = self._candidate_links(fetched).observe(
+                obs_links, F.count(F.lit(1)).alias("links_found")
+            )
+            exclude = carryover.select("url").unionByName(ranked.select("url"))
+            # plain union, no merge aggregate: the two sides are provably
+            # disjoint and internally unique — carryover ⊂ frontier (unique
+            # by url; the page-limit overflow moved into carryover BEFORE
+            # exclude was built), and the dedup output was grouped by url
+            # then anti-joined against exclude = carryover ∪ ranked. A
+            # groupBy(url).min(depth) here was a full shuffle of the next
+            # frontier that could never change a row.
+            next_frontier = carryover.unionByName(self._dedup(links, exclude))
 
         obs_next = Observation()
-        # plain union, no merge aggregate: the two sides are provably
-        # disjoint and internally unique — carryover ⊂ frontier (unique
-        # by url; the page-limit overflow moved into carryover BEFORE
-        # exclude was built), and new_links was grouped by url then
-        # anti-joined against exclude = carryover ∪ ranked. A
-        # groupBy(url).min(depth) here was a full shuffle of the next
-        # frontier that could never change a row.
-        next_frontier = carryover.unionByName(new_links)
         next_frontier = (
             self._repartition_state(next_frontier)
-            .observe(obs_next, F.count(F.lit(1)).alias("next_size"))
+            .observe(
+                obs_next,
+                F.count(F.lit(1)).alias("next_size"),
+                F.min("depth").alias("next_min_depth"),
+            )
             .persist()
         )
         cleanup.append(next_frontier)
@@ -487,7 +500,9 @@ class FrontierEngine:
             return {
                 "scheduled": int(batch["n_selected"] or 0),
                 "pages_fetched": int(batch["n_ok"] or 0),
-                "links_found": int(obs_links.get["links_found"] or 0),
+                "links_found": (
+                    int(obs_links.get["links_found"] or 0) if obs_links else 0
+                ),
                 "frontier_size": frontier_size,
                 "wall_s": round(time.monotonic() - t0, 4),
                 # fixed-cost breakdown (VERDICT r3 task #2): the store
@@ -508,8 +523,8 @@ class FrontierEngine:
             },
             metrics=_metrics,
         )
-        next_size = int(obs_next.get["next_size"] or 0)
-        return m, next_size
+        nxt = obs_next.get
+        return m, int(nxt["next_size"] or 0), nxt["next_min_depth"]
 
 
 def crawl_log_df(

@@ -4,8 +4,8 @@ builder of every entry point: plain Python and spark-submit alike.
 Local-mode settings mirror what a 1000-executor cluster deployment would set
 via spark-submit conf: AQE on (runtime coalescing + skew-join splitting),
 shuffle partitions sized to the parallelism level, Arrow enabled for the
-engine's pandas-UDF kernels (the five in ``functions/udfs.py``) and its
-``applyInArrow``/``applyInPandas``/``mapInPandas`` passes, and broadcast
+engine's kernels (the pandas and Arrow UDFs of ``functions/udfs.py``) and
+its ``applyInArrow``/``applyInPandas``/``mapInPandas`` passes, and broadcast
 threshold left at default so the small robots/politeness dimension tables
 broadcast automatically.
 

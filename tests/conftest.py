@@ -56,6 +56,63 @@ def cached_since(spark, before: tuple) -> set:
 
 
 @pytest.fixture
+def cleanup():
+    """A list for an operator's ``cleanup=`` argument: the frames the
+    operator persisted are released when the test ends."""
+    frames = []
+    yield frames
+    for frame in frames:
+        frame.unpersist()
+
+
+@pytest.fixture
+def checkpoints(spark, monkeypatch):
+    """Every frame ``DataFrame.localCheckpoint`` returns while the test runs;
+    their RDDs are released when the test ends. A local checkpoint is
+    persisted outside the session's cache manager and stays until the JVM
+    collects its frame, so ``unpersist`` on the frame cannot release it."""
+    frames = []
+    frame_type = type(spark.range(0))
+    local_checkpoint = frame_type.localCheckpoint
+
+    def record(self, *args, **kwargs):
+        frames.append(local_checkpoint(self, *args, **kwargs))
+        return frames[-1]
+
+    monkeypatch.setattr(frame_type, "localCheckpoint", record)
+    yield frames
+    for frame in frames:
+        frame._jdf.logicalPlan().rdd().unpersist(True)
+
+
+@pytest.fixture
+def release_queries():
+    """Releases the registry queries' deferred caches, which otherwise live
+    until the query's next call, when the test ends."""
+    yield
+    from apollo_service_spark.plans.queries import release_all
+
+    release_all()
+
+
+def crawl_log_tuples(spark, store) -> set:
+    """``(url, iteration, rank)`` of every row of a crawl's log, with the
+    rank derivation's cached frame released."""
+    from apollo_service_spark.operators.frontier import crawl_log_df
+
+    frames = []
+    try:
+        log = crawl_log_df(spark, store, cleanup=frames)
+        return {
+            (r["url"], r["iteration"], r["rank"])
+            for r in log.select("url", "iteration", "rank").collect()
+        }
+    finally:
+        for frame in frames:
+            frame.unpersist()
+
+
+@pytest.fixture
 def persisted(spark, monkeypatch):
     """Every frame persisted or cached while the test runs, in order: a
     leak check on these frames does not depend on what other tests of the

@@ -41,12 +41,12 @@ def test_greedy_merge_leftover_pass():
     assert dict(got2) == {"/aa/x": ["u1", "u2"], "/zz/y": ["u3", "u4"]}
 
 
-def test_cluster_urls_distributed_matches_local(spark, small_corpus):
+def test_cluster_urls_distributed_matches_local(spark, small_corpus, cleanup):
     urls_pd = small_corpus["pages"][["url"]]
     urls = spark.createDataFrame(urls_pd, "url string")
     got = {
         (r["domain"], r["cluster_id"]): (r["path_pattern"], list(r["urls"]))
-        for r in cluster_urls(urls, path_depth=2).collect()
+        for r in cluster_urls(urls, path_depth=2, cleanup=cleanup).collect()
     }
 
     # local oracle: same shared greedy fn, per-domain, pinned ordering
@@ -70,9 +70,9 @@ def test_cluster_urls_distributed_matches_local(spark, small_corpus):
     assert len(got) > 0
 
 
-def test_cluster_summary(spark, small_corpus):
+def test_cluster_summary(spark, small_corpus, cleanup):
     urls = spark.createDataFrame(small_corpus["pages"][["url"]], "url string")
-    clusters = cluster_urls(urls)
+    clusters = cluster_urls(urls, cleanup=cleanup)
     row = cluster_summary(clusters).collect()[0]
     assert row["total_domains"] >= 1
     assert row["total_clusters"] >= row["total_domains"]
@@ -93,7 +93,7 @@ def test_year_clusters_order_and_content(spark):
     assert rows[-1]["url_count"] == 1
 
 
-def test_domain_id_join_not_broadcast(spark, small_corpus):
+def test_domain_id_join_not_broadcast(spark, small_corpus, cleanup):
     """The domain-id dim is unbounded (millions of domains on a real
     corpus): the id join must not hint a broadcast — AQE may still convert
     at runtime when stats prove the dim small, which is the desired
@@ -105,7 +105,7 @@ def test_domain_id_join_not_broadcast(spark, small_corpus):
     urls = spark.createDataFrame(
         [(u,) for u in small_corpus["pages"]["url"]], "url string"
     )
-    clusters = cluster_urls(urls)
+    clusters = cluster_urls(urls, cleanup=cleanup)
     plan = clusters._sc._jvm.PythonSQLUtils.explainString(
         clusters._jdf.queryExecution(), "formatted"
     )
@@ -128,14 +128,19 @@ def test_cluster_greedy_query_cached_frames_bounded(spark, tmp_path):
 
     from tests.conftest import SF_DIR
 
-    from apollo_service_spark.plans.queries import queries
+    from apollo_service_spark.plans.queries import queries, release_all
 
     shutil.copy(os.path.join(SF_DIR, "documents.parquet"), tmp_path)
     jsc = spark.sparkContext._jsc.sc()
     registry = queries()
-    for key in ("cluster_greedy", "pack_sequences", "quality_tiers", "corpus_prepare"):
-        registry[key](spark, SF_DIR).count()
-        baseline = jsc.getPersistentRDDs().size()  # other tests may hold caches
-        for sf_dir in (str(tmp_path), SF_DIR, str(tmp_path)):
-            registry[key](spark, sf_dir).count()
-            assert jsc.getPersistentRDDs().size() <= baseline, key
+    try:
+        for key in (
+            "cluster_greedy", "pack_sequences", "quality_tiers", "corpus_prepare"
+        ):
+            registry[key](spark, SF_DIR).count()
+            baseline = jsc.getPersistentRDDs().size()  # other tests may hold caches
+            for sf_dir in (str(tmp_path), SF_DIR, str(tmp_path)):
+                registry[key](spark, sf_dir).count()
+                assert jsc.getPersistentRDDs().size() <= baseline, key
+    finally:
+        release_all()

@@ -7,6 +7,9 @@ import pytest
 
 from apollo_service_spark.operators.components import connected_components
 
+# the operator's per-round local checkpoints are released after each test
+pytestmark = pytest.mark.usefixtures("checkpoints")
+
 
 def _pairs_df(spark, edges):
     return spark.createDataFrame(edges, "id_a long, id_b long")

@@ -141,13 +141,13 @@ def test_dup_span_stats_brute_force(spark):
 # ---------------------------------------------------------------- packing
 
 
-def test_global_running_sum_matches_naive_window(spark):
+def test_global_running_sum_matches_naive_window(spark, cleanup):
     rows = [(i, (i * 37) % 11) for i in range(200)]
     df = spark.createDataFrame(rows, "id long, v long")
     got = {
         r.id: r.s
         for r in global_running_sum(
-            df, ["id"], "v", sum_col="s", n_partitions=7
+            df, ["id"], "v", sum_col="s", n_partitions=7, cleanup=cleanup
         ).collect()
     }
     acc, expect = 0, {}
@@ -159,13 +159,19 @@ def test_global_running_sum_matches_naive_window(spark):
     got_inc = {
         r.id: r.s
         for r in global_running_sum(
-            df, ["id"], "v", sum_col="s", n_partitions=7, inclusive=True
+            df,
+            ["id"],
+            "v",
+            sum_col="s",
+            n_partitions=7,
+            inclusive=True,
+            cleanup=cleanup,
         ).collect()
     }
     assert got_inc == {i: expect[i] + v for i, v in rows}
 
 
-def test_pack_sequences_spans_and_empty_doc(spark):
+def test_pack_sequences_spans_and_empty_doc(spark, cleanup):
     docs = spark.createDataFrame(
         [
             (1, " ".join(["w"] * 10)),   # tokens 0..9   → chunk 0
@@ -176,7 +182,8 @@ def test_pack_sequences_spans_and_empty_doc(spark):
         "doc_id long, text string",
     )
     out = {
-        r.id: r for r in curation.pack_sequences(docs, seq_len=12).collect()
+        r.id: r
+        for r in curation.pack_sequences(docs, seq_len=12, cleanup=cleanup).collect()
     }
     assert (out[1].tok_start, out[1].chunk_first, out[1].chunk_last) == (0, 0, 0)
     assert out[2].n_tokens == 0
@@ -185,7 +192,7 @@ def test_pack_sequences_spans_and_empty_doc(spark):
     assert (out[4].tok_start, out[4].chunk_first, out[4].chunk_last) == (15, 1, 3)
 
 
-def test_pack_sequences_tokens_col_matches_text_path(spark):
+def test_pack_sequences_tokens_col_matches_text_path(spark, cleanup):
     """The ``tokens_col`` fast path (q_corpus_prepare's persisted narrow
     fork, r6) must produce the identical packing assignment as the
     text-tokenizing default — same tape, same chunk bounds, including the
@@ -206,19 +213,20 @@ def test_pack_sequences_tokens_col_matches_text_path(spark):
         textstats.token_count(F.col("text")).cast("bigint").alias("nt"),
     )
     via_text = {
-        tuple(r) for r in curation.pack_sequences(docs, seq_len=12).collect()
+        tuple(r)
+        for r in curation.pack_sequences(docs, seq_len=12, cleanup=cleanup).collect()
     }
     via_col = {
         tuple(r)
         for r in curation.pack_sequences(
-            pre, seq_len=12, tokens_col="nt"
+            pre, seq_len=12, tokens_col="nt", cleanup=cleanup
         ).collect()
     }
     assert via_text == via_col
 
 
 @pytest.mark.parametrize("ansi", ["true", "false"])
-def test_pack_sequences_null_text_and_null_count_agree(spark, ansi):
+def test_pack_sequences_null_text_and_null_count_agree(spark, ansi, cleanup):
     """NULL text and a NULL precomputed count pack identically: NULL
     n_tokens, no tape, NULL chunk bounds, in either ANSI mode (without it
     ``size(NULL)`` is -1, which would shift every later doc)."""
@@ -233,12 +241,15 @@ def test_pack_sequences_null_text_and_null_count_agree(spark, ansi):
     spark.conf.set("spark.sql.ansi.enabled", ansi)
     try:
         via_text = sorted(
-            tuple(r) for r in curation.pack_sequences(docs, seq_len=2).collect()
+            tuple(r)
+            for r in curation.pack_sequences(
+                docs, seq_len=2, cleanup=cleanup
+            ).collect()
         )
         via_col = sorted(
             tuple(r)
             for r in curation.pack_sequences(
-                counts, seq_len=2, tokens_col="nt"
+                counts, seq_len=2, tokens_col="nt", cleanup=cleanup
             ).collect()
         )
     finally:
@@ -284,12 +295,12 @@ def test_host_blocklist_dot_boundary_and_soft_cap(spark):
 # ------------------------------------------------------------ quality tiers
 
 
-def test_quality_tiers_exact_thirds_and_remainder_convention(spark):
+def test_quality_tiers_exact_thirds_and_remainder_convention(spark, cleanup):
     # 8 rows → tier sizes 3/3/2 (leading tiers take the extra)
     rows = [(i, float(10 - i)) for i in range(8)]
     df = spark.createDataFrame(rows, "id long, quality double")
     out = sorted(
-        curation.quality_tiers(df, n_partitions=3).collect(),
+        curation.quality_tiers(df, n_partitions=3, cleanup=cleanup).collect(),
         key=lambda r: r.rank,
     )
     assert [r.id for r in out] == list(range(8))  # desc score = asc id here
@@ -301,7 +312,9 @@ def test_quality_tiers_exact_thirds_and_remainder_convention(spark):
     tied = spark.createDataFrame(
         [(i, 1.0) for i in range(6)], "id long, quality double"
     )
-    got = sorted(curation.quality_tiers(tied).collect(), key=lambda r: r.id)
+    got = sorted(
+        curation.quality_tiers(tied, cleanup=cleanup).collect(), key=lambda r: r.id
+    )
     assert [r.rank for r in got] == [1, 2, 3, 4, 5, 6]
 
 

@@ -9,15 +9,16 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from apollo_service_spark.operators.frontier import (
-    CrawlConfig,
-    FrontierEngine,
-    crawl_log_df,
-)
+from apollo_service_spark.operators.frontier import CrawlConfig, FrontierEngine
 from apollo_service_spark.oracle.simulator import SimConfig, simulate
 from apollo_service_spark.session import codegen_compiles
 from apollo_service_spark.sources.storage import SnapshotStore
-from tests.conftest import cache_state, cached_since, still_cached
+from tests.conftest import (
+    cache_state,
+    cached_since,
+    crawl_log_tuples,
+    still_cached,
+)
 
 
 def _sim_inputs(small_corpus):
@@ -49,14 +50,6 @@ def _run_engine(spark, small_corpus_spark, store_path, config, resume=False):
     return state, store
 
 
-def _log_tuples(spark, store):
-    log = crawl_log_df(spark, store)
-    return {
-        (r["url"], r["iteration"], r["rank"])
-        for r in log.select("url", "iteration", "rank").collect()
-    }
-
-
 @pytest.mark.parametrize(
     "kwargs",
     [
@@ -83,7 +76,7 @@ def test_crawl_matches_simulator(
     )
 
     expected = {(r["url"], r["iteration"], r["rank"]) for r in sim.crawl_log}
-    got = _log_tuples(spark, store)
+    got = crawl_log_tuples(spark, store)
     assert got == expected
 
     seen_df = store.read_accumulated(spark, "seen_delta")
@@ -137,7 +130,9 @@ def test_resume_mid_frontier(spark, small_corpus, small_corpus_spark, tmp_path):
         resume=True,
     )
 
-    assert _log_tuples(spark, store_resumed) == _log_tuples(spark, store_full)
+    assert crawl_log_tuples(spark, store_resumed) == crawl_log_tuples(
+        spark, store_full
+    )
     seen_a = {
         r["url"]
         for r in store_resumed.read_accumulated(spark, "seen_delta").collect()
@@ -176,9 +171,82 @@ def test_max_links_limit(spark, small_corpus, small_corpus_spark, tmp_path):
     )
     assert state.stopped_reason == sim.stopped_reason == "max_links"
     assert state.links_processed == sim.links_processed
-    assert _log_tuples(spark, store) == {
+    assert crawl_log_tuples(spark, store) == {
         (r["url"], r["iteration"], r["rank"]) for r in sim.crawl_log
     }
+
+
+def test_depth_limit_supersteps_build_no_expansion(
+    spark, small_corpus, small_corpus_spark, tmp_path, monkeypatch
+):
+    """A superstep whose whole frontier sits at depth_limit has no page to
+    expand, so it builds no expand or dedup plan. Resumed at the first such
+    superstep with _candidate_links raising, the crawl still commits every
+    remaining superstep, matches the simulator and equals an uninterrupted
+    crawl row for row."""
+    pages, seeds, robots, politeness = _sim_inputs(small_corpus)
+    sim = simulate(
+        pages, seeds, SimConfig(depth_limit=2), robots=robots, politeness=politeness
+    )
+    # every url is scheduled once, so from here on the frontier holds depth 2
+    at_limit = 1 + max(r["iteration"] for r in sim.crawl_log if r["depth"] < 2)
+    assert 0 < at_limit < sim.iterations - 1
+
+    expanded = []
+    candidate_links = FrontierEngine._candidate_links
+
+    def counted(self, fetched):
+        expanded.append(fetched)
+        return candidate_links(self, fetched)
+
+    monkeypatch.setattr(FrontierEngine, "_candidate_links", counted)
+    _, full = _run_engine(
+        spark, small_corpus_spark, str(tmp_path / "full"), CrawlConfig(depth_limit=2)
+    )
+    assert len(expanded) == at_limit
+
+    _run_engine(
+        spark,
+        small_corpus_spark,
+        str(tmp_path / "part"),
+        CrawlConfig(depth_limit=2, max_iterations=at_limit),
+    )
+
+    def raising(self, fetched):
+        raise AssertionError("a superstep at the depth limit built its expansion")
+
+    monkeypatch.setattr(FrontierEngine, "_candidate_links", raising)
+    state, resumed = _run_engine(
+        spark,
+        small_corpus_spark,
+        str(tmp_path / "part"),
+        CrawlConfig(depth_limit=2),
+        resume=True,
+    )
+    assert state.iterations == sim.iterations - at_limit
+    assert state.stopped_reason == sim.stopped_reason
+    assert state.pages_fetched == sim.pages_fetched
+    assert state.links_processed == sim.links_processed
+    assert crawl_log_tuples(spark, resumed) == {
+        (r["url"], r["iteration"], r["rank"]) for r in sim.crawl_log
+    }
+
+    def counts(store):
+        keys = ("scheduled", "pages_fetched", "links_found", "frontier_size")
+        return [[m[k] for k in keys] for m in store.iteration_metrics()]
+
+    assert counts(resumed) == counts(full)
+    links_found = [m["links_found"] for m in resumed.iteration_metrics()]
+    assert sum(links_found[:at_limit]) > 0
+    assert links_found[at_limit:] == [0] * (sim.iterations - at_limit)
+    for table in ("crawl_log", "seen_delta", "lineage"):
+        assert sorted(resumed.read_accumulated(spark, table).collect()) == sorted(
+            full.read_accumulated(spark, table).collect()
+        ), table
+    for it in range(sim.iterations):
+        assert sorted(resumed.read(spark, "frontier", it).collect()) == sorted(
+            full.read(spark, "frontier", it).collect()
+        ), it
 
 
 def test_engine_requires_observations_to_survive_aqe(

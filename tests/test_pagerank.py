@@ -5,6 +5,9 @@ from pyspark.sql import functions as F
 
 from apollo_service_spark.operators.pagerank import pagerank
 
+# the operator's per-round local checkpoints are released after each test
+pytestmark = pytest.mark.usefixtures("checkpoints")
+
 
 def _edges(spark, rows):
     return spark.createDataFrame(rows, "src long, dst long")

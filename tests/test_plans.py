@@ -153,13 +153,15 @@ def _frontier_df(documents):
     )
 
 
-def test_iteration_rank_no_single_partition(spark, documents):
+def test_iteration_rank_no_single_partition(spark, documents, cleanup):
     """The canonical fetch rank must not plan an Exchange SinglePartition —
     a global Window.orderBy would funnel every selected URL of an iteration
     through one task (VERDICT r1 'What's wrong' #1)."""
     from apollo_service_spark.operators.politeness import rank_within_iteration
 
-    ranked = rank_within_iteration(_frontier_df(documents), n_partitions=8)
+    ranked = rank_within_iteration(
+        _frontier_df(documents), n_partitions=8, cleanup=cleanup
+    )
     plan = _plan(ranked)
     assert "Exchange SinglePartition" not in plan, plan
     # value check: contiguous 1..n in (depth, url) order
@@ -170,17 +172,17 @@ def test_iteration_rank_no_single_partition(spark, documents):
     assert [rk for rk, _, _ in got] == list(range(1, len(rows) + 1))
 
 
-def test_cluster_domain_ids_no_single_partition(spark, documents):
+def test_cluster_domain_ids_no_single_partition(spark, documents, cleanup):
     """Domain-id assignment in clustering must be distributed (VERDICT r1
     'What's wrong' #2)."""
     from apollo_service_spark.operators.clustering import cluster_urls
 
     urls = _frontier_df(documents).select("url")
-    plan = _plan(cluster_urls(urls, path_depth=2))
+    plan = _plan(cluster_urls(urls, path_depth=2, cleanup=cleanup))
     assert "Exchange SinglePartition" not in plan, plan
 
 
-def test_cluster_domain_id_join_not_static_broadcast(spark, documents):
+def test_cluster_domain_id_join_not_static_broadcast(spark, documents, cleanup):
     """The domain-id lookup join must not FORCE a broadcast of the domain
     dim in the static plan — a real web corpus has millions of domains
     (many-MB dim); AQE may still convert to broadcast at runtime on actual
@@ -200,7 +202,7 @@ def test_cluster_domain_id_join_not_static_broadcast(spark, documents):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         clustered = cluster_urls(
-            _frontier_df(documents).select("url"), path_depth=2
+            _frontier_df(documents).select("url"), path_depth=2, cleanup=cleanup
         )
         # simple-mode plan keeps join keys on the node line
         plan = clustered._sc._jvm.PythonSQLUtils.explainString(
@@ -245,16 +247,21 @@ def test_events_recent_pushdown_and_partition_pruning(spark, tmp_path):
 
 
 def test_candidate_link_pipeline_compiles(spark, tmp_path):
-    """The frontier's expand pipeline must stay inside compiled codegen.
+    """The frontier's expand pipeline is one Arrow kernel plus compiled
+    codegen.
 
     Round-4 probe: applying `urlkit.canonicalize` as a column expression on
     the exploded links let predicate pushdown substitute its ~50-node tree
     into every ignore-filter term — a >16k-line janino unit that FAILED to
     compile and silently dropped the superstep's biggest stage to
     interpreted execution. Canonicalization now happens inside the Arrow
-    kernel. With `spark.sql.codegen.fallback=false` a compile failure
-    becomes an exception instead of a silent fallback, so this test fails
-    if the blowup ever comes back."""
+    kernel (`udfs.expand_links_udf`): the optimized plan holds exactly one
+    Python evaluation and none of canonicalize's string primitives. With
+    `spark.sql.codegen.fallback=false` a compile failure becomes an
+    exception instead of a silent fallback, so this test also fails if a
+    blowup comes back in what stays Catalyst."""
+    import re
+
     from apollo_service_spark.operators.frontier import CrawlConfig, FrontierEngine
     from apollo_service_spark.sources.storage import SnapshotStore
 
@@ -286,6 +293,15 @@ def test_candidate_link_pipeline_compiles(spark, tmp_path):
         CrawlConfig(),
         robots=robots,
     )
+    for candidates in (engine._candidate_links(pages), gated._candidate_links(pages)):
+        optimized = candidates._jdf.queryExecution().optimizedPlan().toString()
+        python_evals = [
+            line for line in optimized.splitlines()
+            if re.search(r"\b(ArrowEvalPython|BatchEvalPython)\b", line)
+        ]
+        assert len(python_evals) == 1, optimized
+        assert "split_part" not in optimized, optimized
+        assert "substring_index" not in optimized, optimized
     prev = spark.conf.get("spark.sql.codegen.fallback")
     spark.conf.set("spark.sql.codegen.fallback", "false")
     try:
@@ -433,17 +449,17 @@ def test_domain_quota_partial_topk(spark, documents):
     assert len(limits) == 2, plan  # partial (pre-exchange) + final
 
 
-def test_pack_sequences_no_single_partition(spark, documents):
+def test_pack_sequences_no_single_partition(spark, documents, cleanup):
     """The packing prefix sum must stay distributed: a naive
     SUM() OVER (ORDER BY id) plans Exchange SinglePartition and funnels
     the corpus token ledger through one task."""
     from apollo_service_spark.operators.curation import pack_sequences
 
-    plan = _plan(pack_sequences(documents, seq_len=128))
+    plan = _plan(pack_sequences(documents, seq_len=128, cleanup=cleanup))
     assert "Exchange SinglePartition" not in plan, plan
 
 
-def test_quality_tiers_no_single_partition(spark, documents):
+def test_quality_tiers_no_single_partition(spark, documents, cleanup):
     """CCNet tier assignment ranks the whole corpus — the rank must come
     from the range-partitioned global_row_number, not a global window."""
     from apollo_service_spark.operators.curation import quality_tiers
@@ -452,7 +468,7 @@ def test_quality_tiers_no_single_partition(spark, documents):
         F.col("doc_id").alias("id"),
         (F.col("n_chars") % 97).cast("double").alias("quality"),
     )
-    plan = _plan(quality_tiers(scored))
+    plan = _plan(quality_tiers(scored, cleanup=cleanup))
     assert "Exchange SinglePartition" not in plan, plan
 
 
@@ -586,7 +602,7 @@ def test_rebalance_sees_a_table_rewritten_in_place(spark, tmp_path):
     assert "RoundRobinPartitioning" not in plan, plan
 
 
-def test_corpus_prepare_reads_each_document_once(spark):
+def test_corpus_prepare_reads_each_document_once(spark, release_queries):
     """corpus_prepare reads the text's words in ONE Arrow kernel and ONE
     explode (curation.doc_pass_flags), scans documents at most twice (the
     flags and the lang/quality projection), and sizes its prefix-sum range
@@ -606,7 +622,7 @@ def test_corpus_prepare_reads_each_document_once(spark):
     assert counts == {spark.sparkContext.defaultParallelism}, plan
 
 
-def test_corpus_prepare_no_single_partition(spark):
+def test_corpus_prepare_no_single_partition(spark, release_queries):
     """The end-to-end manifest composes every curation stage and must stay
     fully distributed: the packing prefix sum and quota window ride the
     range-partition/WindowGroupLimit machinery, never a single-partition
@@ -618,7 +634,7 @@ def test_corpus_prepare_no_single_partition(spark):
     assert "Exchange SinglePartition" not in plan, plan
 
 
-def test_pagerank_schedule_keeps_partial_topk(spark):
+def test_pagerank_schedule_keeps_partial_topk(spark, release_queries, checkpoints):
     """The rank-ordered composition (pagerank ⋈ frontier → budget window)
     must not lose the WindowGroupLimit partial top-k: the rank join adds
     one exchange but each map task still ships at most budget rows per

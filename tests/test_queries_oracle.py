@@ -12,6 +12,10 @@ import pytest
 import __spark_entry__ as entrymod
 from tests.conftest import SF_DIR
 
+# a query's deferred caches and the pagerank rounds' local checkpoints are
+# released after each test
+pytestmark = pytest.mark.usefixtures("release_queries", "checkpoints")
+
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",

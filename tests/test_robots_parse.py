@@ -91,12 +91,9 @@ def test_parse_crawl_delays_and_budgets(spark):
 def test_engine_robots_bodies_equivalent(spark, small_corpus_spark, tmp_path):
     """FrontierEngine(robots_bodies=raw text) crawls identically to
     FrontierEngine(robots=pre-parsed rules): the parse IS the rules."""
-    from apollo_service_spark.operators.frontier import (
-        CrawlConfig,
-        FrontierEngine,
-        crawl_log_df,
-    )
+    from apollo_service_spark.operators.frontier import CrawlConfig, FrontierEngine
     from apollo_service_spark.sources.storage import SnapshotStore
+    from tests.conftest import crawl_log_tuples
 
     rules = small_corpus_spark["robots"]
     bodies = (
@@ -128,11 +125,7 @@ def test_engine_robots_bodies_equivalent(spark, small_corpus_spark, tmp_path):
             politeness=small_corpus_spark["politeness"],
         )
         eng.run(seeds=small_corpus_spark["seeds"])
-        log = crawl_log_df(spark, store)
-        return {
-            (r["url"], r["iteration"], r["rank"])
-            for r in log.select("url", "iteration", "rank").collect()
-        }
+        return crawl_log_tuples(spark, store)
 
     assert run(robots=rules, name="pre") == run(robots_bodies=bodies, name="raw")
 
@@ -172,12 +165,9 @@ def test_engine_delay_derived_budgets_equivalent(spark, small_corpus_spark, tmp_
     """CrawlConfig.delay_budget_seconds + robots_bodies carrying Crawl-delay
     crawls identically to the same budgets passed as an explicit politeness
     table (hosts without a delay fall back to default_budget)."""
-    from apollo_service_spark.operators.frontier import (
-        CrawlConfig,
-        FrontierEngine,
-        crawl_log_df,
-    )
+    from apollo_service_spark.operators.frontier import CrawlConfig, FrontierEngine
     from apollo_service_spark.sources.storage import SnapshotStore
+    from tests.conftest import crawl_log_tuples
 
     hosts = [r["host"] for r in small_corpus_spark["pages"].select("host").distinct().collect()] \
         if "host" in small_corpus_spark["pages"].columns else None
@@ -208,11 +198,7 @@ def test_engine_delay_derived_budgets_equivalent(spark, small_corpus_spark, tmp_
             spark, small_corpus_spark["pages"], store, cfg, **kw
         )
         eng.run(seeds=small_corpus_spark["seeds"])
-        log = crawl_log_df(spark, store)
-        return {
-            (r["url"], r["iteration"], r["rank"])
-            for r in log.select("url", "iteration", "rank").collect()
-        }
+        return crawl_log_tuples(spark, store)
 
     got = run("derived", cfg_derived, robots_bodies=bodies)
     want = run("explicit", cfg_explicit, politeness=explicit)

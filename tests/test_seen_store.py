@@ -54,7 +54,8 @@ def test_crawl_equivalence_partitioned_backend(
     spark, small_corpus, small_corpus_spark, tmp_path
 ):
     """Exact crawl parity must hold with the partitioned seen backend."""
-    from tests.test_frontier import _log_tuples, _run_engine, _sim_inputs
+    from tests.conftest import crawl_log_tuples
+    from tests.test_frontier import _run_engine, _sim_inputs
 
     from apollo_service_spark.operators.frontier import CrawlConfig
     from apollo_service_spark.oracle.simulator import SimConfig, simulate
@@ -67,7 +68,7 @@ def test_crawl_equivalence_partitioned_backend(
         str(tmp_path / "pb"),
         CrawlConfig(expected_urls=10_000),
     )
-    assert _log_tuples(spark, store) == {
+    assert crawl_log_tuples(spark, store) == {
         (r["url"], r["iteration"], r["rank"]) for r in sim.crawl_log
     }
 

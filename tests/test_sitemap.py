@@ -62,12 +62,9 @@ def test_engine_sitemap_seeding_equivalent(spark, small_corpus_spark, tmp_path):
     un-augmented seed list (the sitemap genuinely adds reach)."""
     from pyspark.sql import functions as F
 
-    from apollo_service_spark.operators.frontier import (
-        CrawlConfig,
-        FrontierEngine,
-        crawl_log_df,
-    )
+    from apollo_service_spark.operators.frontier import CrawlConfig, FrontierEngine
     from apollo_service_spark.sources.storage import SnapshotStore
+    from tests.conftest import crawl_log_tuples
 
     # pick a few real page urls NOT reachable in 2 iterations from the seeds
     # by just taking deep-ish urls from a different host than the seed's
@@ -90,11 +87,7 @@ def test_engine_sitemap_seeding_equivalent(spark, small_corpus_spark, tmp_path):
         store = SnapshotStore(str(tmp_path / name))
         eng = FrontierEngine(spark, small_corpus_spark["pages"], store, cfg, **kw)
         eng.run(seeds=seeds)
-        log = crawl_log_df(spark, store)
-        return {
-            (r["url"], r["iteration"], r["rank"])
-            for r in log.select("url", "iteration", "rank").collect()
-        }
+        return crawl_log_tuples(spark, store)
 
     explicit_seeds = small_corpus_spark["seeds"].select("url").unionByName(
         extra.select("url")

@@ -45,13 +45,21 @@ def _crawl(spark, paths, store_path, **kwargs):
 
 
 def _state(spark, store):
-    log = crawl_log_df(spark, store)
+    cleanup = []
+    log = crawl_log_df(spark, store, cleanup=cleanup)
     seen = store.read_accumulated(spark, "seen_delta")
-    return (
-        sorted(tuple(r) for r in log.select(sorted(log.columns)).collect()),
-        sorted(r.url for r in seen.collect()),
-        [{k: m[k] for k in ("iteration", *COUNTS)} for m in store.iteration_metrics()],
-    )
+    try:
+        return (
+            sorted(tuple(r) for r in log.select(sorted(log.columns)).collect()),
+            sorted(r.url for r in seen.collect()),
+            [
+                {k: m[k] for k in ("iteration", *COUNTS)}
+                for m in store.iteration_metrics()
+            ],
+        )
+    finally:
+        for frame in cleanup:
+            frame.unpersist()
 
 
 def _spark_home(tmp_path):

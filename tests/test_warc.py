@@ -97,13 +97,10 @@ def test_engine_crawls_warc_backed_pages(spark, tmp_path):
     the parquet-backed run exactly (url, iteration, rank).  This is the
     Common-Crawl deployment shape: the engine crawling directly over
     segment files, no intermediate table materialization."""
-    from apollo_service_spark.operators.frontier import (
-        CrawlConfig,
-        FrontierEngine,
-        crawl_log_df,
-    )
+    from apollo_service_spark.operators.frontier import CrawlConfig, FrontierEngine
     from apollo_service_spark.sources.corpus import corpus_to_spark, gen_corpus
     from apollo_service_spark.sources.storage import SnapshotStore
+    from tests.conftest import crawl_log_tuples
     from apollo_service_spark.sources.warc import pages_from_warc
 
     corpus = corpus_to_spark(spark, gen_corpus(n_hosts=3, n_pages=60, seed=7))
@@ -139,12 +136,7 @@ def test_engine_crawls_warc_backed_pages(spark, tmp_path):
             spark, pages, store, CrawlConfig(),
             robots=corpus["robots"], politeness=corpus["politeness"],
         ).run(seeds=corpus["seeds"])
-        return {
-            (r["url"], r["iteration"], r["rank"])
-            for r in crawl_log_df(spark, store)
-            .select("url", "iteration", "rank")
-            .collect()
-        }
+        return crawl_log_tuples(spark, store)
 
     assert run(pages_warc, tmp_path / "warc_run") == run(
         orig, tmp_path / "parquet_run"
