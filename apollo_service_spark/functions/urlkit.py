@@ -74,8 +74,10 @@ _FILE_RE = r"\.(" + "|".join(FILE_EXTENSIONS) + r")($|\?)"
 _SOCIAL_RE = "(" + "|".join(SOCIAL_MEDIA_KEYWORDS) + ")"
 _BANK_RE = "(" + "|".join(BANK_KEYWORDS) + ")"
 
-# Java regex with embedded case-insensitivity for rlike
-_CI = "(?i)"
+# Java regex with embedded case-insensitivity for rlike: `u` folds Unicode
+# case as Python's re.IGNORECASE does (`(?i)` alone folds ASCII only, so
+# `ſignin` or `logİn` would match in the Python mirrors and not here)
+_CI = "(?iu)"
 
 
 # --------------------------------------------------------------------------
@@ -388,10 +390,15 @@ def is_redirect_404(url: Column, final_url: Column) -> Column:
     )
 
 
-def is_document_url(url: Column) -> Column:
+def is_document_path(path: Column) -> Column:
     """Path (lowercased) ends with one of the 10 document extensions."""
     ext_re = "|".join(e.lstrip(".") for e in DOCUMENT_EXTENSIONS)
-    return F.lower(url_path(url)).rlike(r"\.(" + ext_re + r")$")
+    return F.lower(path).rlike(r"\.(" + ext_re + r")$")
+
+
+def is_document_url(url: Column) -> Column:
+    """The url's path ends with one of the 10 document extensions."""
+    return is_document_path(url_path(url))
 
 
 def categorize(
@@ -411,11 +418,12 @@ def categorize(
     They are injectable exactly as in the reference's constructor
     (link_processor.py:17-20) for customized deployments.
 
-    The reference's patterns are case-insensitive regex *searches*, so plain
-    keywords decompose into ``contains`` on the lowered url (byte scans, no
-    regex engine) — only the dotted keywords keep regex-dot semantics via one
-    small rlike. The file-extension regex is reached only for bank-keyword
-    urls (CaseWhen evaluates lazily per row).
+    The reference's patterns are case-insensitive regex *searches*, so each
+    keyword list is one rlike folding Unicode case, as ``categorize_py``'s
+    ``re.IGNORECASE`` does (``lower().contains`` would not: Java lowercases
+    ``İ`` to two characters and leaves ``ı`` and ``ſ`` alone). The
+    file-extension regex is reached only for bank-keyword urls (CaseWhen
+    evaluates lazily per row).
     """
     social_kws = social_media_keywords or SOCIAL_MEDIA_KEYWORDS
     bank_kws = bank_keywords or BANK_KEYWORDS
@@ -424,17 +432,8 @@ def categorize(
         if file_extensions is None
         else r"\.(" + "|".join(file_extensions) + r")($|\?)"
     )
-    lower = F.lower(url)
-    literal_social = [k for k in social_kws if "." not in k]
-    dotted_social = [k for k in social_kws if "." in k]
-    social = F.lit(False)
-    for kw in literal_social:
-        social = social | lower.contains(kw.lower())
-    if dotted_social:
-        social = social | url.rlike(_CI + "(" + "|".join(dotted_social) + ")")
-    bank = F.lit(False)
-    for kw in bank_kws:
-        bank = bank | lower.contains(kw.lower())
+    social = url.rlike(_CI + "(" + "|".join(social_kws) + ")")
+    bank = url.rlike(_CI + "(" + "|".join(bank_kws) + ")")
     return (
         F.when(social, F.lit("social_media"))
         .when(~bank, F.lit("misc"))

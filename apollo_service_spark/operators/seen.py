@@ -25,9 +25,7 @@ iteration:
   only exchange in the dedup path is the one groupBy-pid shuffle of the
   (small) candidate delta. Each task reads only its own pid's files
   (accumulated/P bytes), which is the same IO a bucketed-join scan would do,
-  minus the join machinery. Both reads go through one worker-local LRU
-  (``_FileCache``: ``_SEGMENTS`` for url-file segments, ``_BLOOMS`` for
-  bitmaps), so a worker re-reads only the files added since its last task.
+  minus the join machinery.
 
 Crash-safety invariant: blobs and url files are updated BEFORE the snapshot
 manifest commits, so the store is always a superset of the committed seen
@@ -47,9 +45,8 @@ Three rules make every interleaving safe:
   read/delete of a delta file tolerates the file vanishing under it (a
   concurrent compaction subsumed it);
 * **blobs are epoch-versioned, never overwritten in place**
-  (``pid=N-epoch=K-<uuid>.bin`` — the random suffix means a PATH is never
-  reused either, so worker-local bitmap caches stay valid across
-  ``reset()``, whose epoch numbering restarts at 0): readers take the
+  (``pid=N-epoch=K-<uuid>.bin`` — the random suffix keeps the names of
+  same-epoch siblings left by retried attempts apart): readers take the
   highest epoch, so a zombie
   writer from superstep *k* completing after superstep *k+1*'s write cannot
   regress the bitmap below the url files — it only re-creates an older-epoch
@@ -102,11 +99,8 @@ def _latest_blob(root: str, pid: int) -> str | None:
     older epochs); returns None when the pid has no blob yet.
 
     Equal epochs (two attempts of the same writer task, identical content by
-    construction) tie-break on the path string for determinism. Blob names
-    carry a per-write random suffix so a path is NEVER reused — epoch
-    numbering restarts at 0 after ``reset()``, and a reused path would let a
-    long-lived Python worker's ``_BLOOMS`` entry serve the PREVIOUS crawl's
-    bitmap (bloom false negatives ⇒ seen urls re-scheduled)."""
+    construction) tie-break on the path string for determinism; the
+    per-write random suffix in each name keeps those siblings distinct."""
     best, best_epoch = None, -1
     for path in glob.glob(_blob_prefix(root, pid) + "*.bin"):
         m = _BLOB_RE.search(path)
@@ -149,56 +143,6 @@ def _pair_key(h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
     return (h1.astype(np.uint64) * np.uint64(_MIX)) ^ h2.astype(np.uint64)
 
 
-class _FileCache:
-    """Worker-local LRU of values loaded from immutable, path-keyed files.
-
-    Delta url files are append-only and uniquely named (compaction writes a
-    NEW file and deletes the old ones), and blob paths are never reused, so
-    a worker that already loaded a path never re-reads it: a steady-state
-    superstep's filter cost tracks the files ADDED since the last one, not
-    the accumulated set. On a real cluster this is the executor-local
-    SSD/memory cache every S3-backed store layers in front of immutable
-    blobs.
-
-    ``load(path)`` returns ``(value, nbytes)``. Eviction is LRU by byte
-    budget and always keeps the newest entry: a reused worker that Spark
-    hands different pid groups each superstep would otherwise keep one
-    entry per file it ever touched (at the module's 10^10-url sizing, the
-    whole multi-GB store). ``keep_only`` drops entries for files that were
-    deleted or superseded; immutability makes them harmless, just wasteful.
-    """
-
-    def __init__(self, load, max_bytes: int = 512 * 1024 * 1024):
-        from collections import OrderedDict
-
-        self.load = load
-        self.max_bytes = max_bytes
-        self.entries = OrderedDict()  # path -> (value, nbytes)
-        self.total = 0
-
-    def get(self, path: str):
-        hit = self.entries.get(path)
-        if hit is not None:
-            self.entries.move_to_end(path)
-            return hit[0]
-        # may raise FileNotFoundError — the pid-dir reader re-globs
-        # (compaction race)
-        value, nbytes = self.load(path)
-        self.entries[path] = (value, nbytes)
-        self.total += nbytes
-        while self.total > self.max_bytes and len(self.entries) > 1:
-            _, (_value, freed) = self.entries.popitem(last=False)
-            self.total -= freed
-        return value
-
-    def keep_only(self, prefix: str, live_paths) -> None:
-        """Drop the entries under ``prefix`` whose path is not live."""
-        for p in [
-            p for p in self.entries if p.startswith(prefix) and p not in live_paths
-        ]:
-            self.total -= self.entries.pop(p)[1]
-
-
 def _load_segment(path: str):
     """Membership segment of one delta file: ``(key_unsorted, key_sorted,
     url_column)`` — the pair key aligned with the file's rows (for the exact
@@ -207,29 +151,17 @@ def _load_segment(path: str):
     hit materializes just the colliding rows)."""
     table = pq.read_table(path, columns=["h1", "h2", "url"])
     key = _pair_key(table.column("h1").to_numpy(), table.column("h2").to_numpy())
-    urls = table.column("url").combine_chunks()
-    return (key, np.sort(key), urls), key.nbytes * 2 + urls.nbytes
-
-
-def _load_bitmap(path: str):
-    bitmap = np.fromfile(path, dtype=np.uint8)
-    return bitmap, bitmap.nbytes
-
-
-_SEGMENTS = _FileCache(_load_segment)
-_BLOOMS = _FileCache(_load_bitmap)
+    return key, np.sort(key), table.column("url").combine_chunks()
 
 
 def _maybe_seen(root: str, pid: int, table: pa.Table, n_bits: int, k: int):
     """Bloom maybe-seen flags of a pid group's rows (``_h1``/``_h2``), read
-    from the pid's latest blob through ``_BLOOMS``; None when the pid has no
-    blob yet (every row is new). Loading an epoch drops the pid's older
-    epochs from the cache: readers never select them again."""
+    from the pid's latest blob; None when the pid has no blob yet (every row
+    is new)."""
     path = _latest_blob(root, pid)
     if path is None:
         return None
-    _BLOOMS.keep_only(_blob_prefix(root, pid), {path})
-    bloom = BloomFilter(_BLOOMS.get(path), n_bits, k)
+    bloom = BloomFilter(np.fromfile(path, dtype=np.uint8), n_bits, k)
     return bloom.might_contain(
         table.column("_h1").to_numpy(), table.column("_h2").to_numpy()
     )
@@ -348,9 +280,8 @@ class PartitionedBloomSeenStore:
                         os.remove(f)
             # epoch-versioned blob: never replace in place (see module
             # docstring — a zombie attempt overwriting a newer blob would
-            # regress the bloom below the url files)
-            # unique per-write suffix: paths are never reused (epoch numbers
-            # restart after reset(); worker-local caches key on the path)
+            # regress the bloom below the url files); the unique per-write
+            # suffix keeps same-epoch siblings of retried attempts apart
             path = os.path.join(
                 root, f"pid={pid:05d}-epoch={epoch:06d}-{uuid.uuid4().hex}.bin"
             )
@@ -435,12 +366,12 @@ class PartitionedBloomSeenStore:
 
         Membership is resolved on the persisted int64 hash PAIRS, fully
         vectorized: ``np.searchsorted`` of a combined (h1,h2) key against the
-        pid's cached sorted keys, with a url string comparison ONLY for rows
+        pid's sorted keys, with a url string comparison ONLY for rows
         whose combined key collides (≈ the true duplicates plus a ~2^-64
         accident rate). The whole task is Arrow-native: candidate columns
         arrive as an Arrow table (no pandas conversion), and the string
         confirm is ``pyarrow.compute.is_in`` of the url column against the
-        colliding rows of the cached segments — NO url ever materializes as
+        colliding rows of the pid's segments — NO url ever materializes as
         a Python string, in either the hot or the hit path.
         """
         n_bits, k = self.bits_per_partition, self.k
@@ -457,14 +388,7 @@ class PartitionedBloomSeenStore:
             if maybe is None or not maybe.any():
                 return out
             pid_dir = os.path.join(urls_root, f"pid={pid:05d}")
-            # membership segments come from the worker-local cache of
-            # immutable delta files: only files written SINCE this
-            # worker's last call hit the filesystem (steady-state cost
-            # tracks the delta, not the accumulated set); entries for
-            # files a compaction deleted are dropped first
-            prefix = pid_dir + os.sep
-            _SEGMENTS.keep_only(prefix, set(glob.glob(prefix + "*.parquet")))
-            segments = _read_pid_dir(pid_dir, _SEGMENTS.get)
+            segments = _read_pid_dir(pid_dir, _load_segment)
             cand_key = _pair_key(
                 table.column("_h1").to_numpy(), table.column("_h2").to_numpy()
             )

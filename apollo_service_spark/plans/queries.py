@@ -2328,12 +2328,19 @@ _EXT_CONTENT_TYPES = {
 def q_download_manifest(spark, sf_dir):
     """S9: download-manifest projection — document urls not yet downloaded,
     with extension and content-type (literal map lookup), skip-if-exists as
-    an anti-join (downloader.py:223-233)."""
-    urls = _urls_df(spark, sf_dir).dropDuplicates(["url"])
-    docs = urls.filter(urlkit.is_document_url(F.col("url")))
-    ext = F.element_at(
-        F.split(F.lower(urlkit.url_path(F.col("url"))), r"\."), -1
+    an anti-join (downloader.py:223-233).
+
+    The path is a projected column, filtered after the dedup: a filter on
+    ``is_document_url(url)`` is pushed below the dedup onto the synthesized
+    url's CASE, inlining it into every reference of the url parse, and that
+    filter outgrew the 64 KB method limit of whole-stage codegen."""
+    urls = (
+        _urls_df(spark, sf_dir)
+        .withColumn("path", urlkit.url_path(F.col("url")))
+        .dropDuplicates(["url"])
     )
+    docs = urls.filter(urlkit.is_document_path(F.col("path")))
+    ext = F.element_at(F.split(F.lower(F.col("path")), r"\."), -1)
     ct_map = F.create_map(
         *[F.lit(x) for pair in _EXT_CONTENT_TYPES.items() for x in pair]
     )

@@ -96,16 +96,6 @@ def build_session(
         "spark.app.name": app_name,
         "spark.master": master,
         "spark.sql.shuffle.partitions": str(shuffle_partitions),
-        # Input split sizing (guide §6): this engine's scans feed
-        # compute-dense text projections (regex tiers, Catalyst folds, Arrow
-        # kernels), so smaller splits keep every core busy long before the
-        # 128 MB default would.  16 MB costs nothing in local mode (task
-        # dispatch is ~ms) and still yields ≤ 8 tasks/GB; a pure-I/O
-        # deployment at cluster scale should raise this back to 128m-1g
-        # through ``extra_conf`` or ``--conf``.  Row-group granularity still
-        # bounds real splits — sources/tables.py rebalances the genuinely
-        # unsplittable small files.
-        "spark.sql.files.maxPartitionBytes": "16m",
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         # NOTE (r6, measured): lowering coalescePartitions.minPartitionSize

@@ -50,6 +50,16 @@ def _run_engine(spark, small_corpus_spark, store_path, config, resume=False):
     return state, store
 
 
+def _seen_set(spark, store) -> set:
+    return {r["url"] for r in store.read_accumulated(spark, "seen_delta").collect()}
+
+
+def _counts(store) -> list:
+    """The per-superstep counts a crawl's metrics record."""
+    keys = ("scheduled", "pages_fetched", "links_found", "frontier_size")
+    return [[m[k] for k in keys] for m in store.iteration_metrics()]
+
+
 @pytest.mark.parametrize(
     "kwargs",
     [
@@ -133,14 +143,53 @@ def test_resume_mid_frontier(spark, small_corpus, small_corpus_spark, tmp_path):
     assert crawl_log_tuples(spark, store_resumed) == crawl_log_tuples(
         spark, store_full
     )
-    seen_a = {
-        r["url"]
-        for r in store_resumed.read_accumulated(spark, "seen_delta").collect()
-    }
-    seen_b = {
-        r["url"] for r in store_full.read_accumulated(spark, "seen_delta").collect()
-    }
-    assert seen_a == seen_b
+    assert _seen_set(spark, store_resumed) == _seen_set(spark, store_full)
+
+
+def test_resume_after_commit_crash_with_seen_store_ahead(
+    spark, small_corpus_spark, tmp_path
+):
+    """The seen store is updated before the manifest commits, so a commit
+    that raises leaves the store holding the failed superstep's urls while
+    the manifest does not. Resumed with the real commit, the crawl re-runs
+    that superstep against the superset store, and its log, seen set and
+    per-superstep counts equal an uninterrupted crawl's."""
+    _, full = _run_engine(
+        spark, small_corpus_spark, str(tmp_path / "full"), CrawlConfig()
+    )
+
+    store = SnapshotStore(str(tmp_path / "crashed"))
+    engine = FrontierEngine(
+        spark,
+        small_corpus_spark["pages"],
+        store,
+        CrawlConfig(),
+        robots=small_corpus_spark["robots"],
+        politeness=small_corpus_spark["politeness"],
+    )
+    commit = store.commit
+
+    def failing_commit(iteration, *args, **kwargs):
+        if iteration == 1:
+            raise RuntimeError("commit failed")
+        return commit(iteration, *args, **kwargs)
+
+    store.commit = failing_commit
+    with pytest.raises(RuntimeError, match="commit failed"):
+        engine.run(seeds=small_corpus_spark["seeds"])
+    assert store.latest_iteration() == 0
+
+    stored = set()
+    for path in glob.glob(f"{store.root}/seen_urls/pid=*/*.parquet"):
+        stored.update(pq.read_table(path, columns=["url"]).column("url").to_pylist())
+    assert stored > _seen_set(spark, store), "the store should be ahead of the manifest"
+
+    _, resumed = _run_engine(
+        spark, small_corpus_spark, str(tmp_path / "crashed"), CrawlConfig(), resume=True
+    )
+    assert crawl_log_tuples(spark, resumed) == crawl_log_tuples(spark, full)
+    assert _seen_set(spark, resumed) == _seen_set(spark, full)
+    assert _counts(resumed) == _counts(full)
 
 
 def test_metrics_and_lineage_recorded(spark, small_corpus_spark, tmp_path):
@@ -231,11 +280,7 @@ def test_depth_limit_supersteps_build_no_expansion(
         (r["url"], r["iteration"], r["rank"]) for r in sim.crawl_log
     }
 
-    def counts(store):
-        keys = ("scheduled", "pages_fetched", "links_found", "frontier_size")
-        return [[m[k] for k in keys] for m in store.iteration_metrics()]
-
-    assert counts(resumed) == counts(full)
+    assert _counts(resumed) == _counts(full)
     links_found = [m["links_found"] for m in resumed.iteration_metrics()]
     assert sum(links_found[:at_limit]) > 0
     assert links_found[at_limit:] == [0] * (sim.iterations - at_limit)

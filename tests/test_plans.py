@@ -521,7 +521,8 @@ def test_rebalance_reads_byte_string_split_size(spark, tmp_path):
     parser, so a unit-suffixed value such as "1mb" counts as 1 MiB. The
     fixture has more row groups than cores and more MiB than cores: at
     1mb its natural splits cover the cores and the scan must stay as it is;
-    at the session's 16m it is one split and must be rebalanced."""
+    at Spark's default 128m, which the session keeps, it is one split and
+    must be rebalanced."""
     import random
 
     import pyarrow as pa
@@ -544,7 +545,7 @@ def test_rebalance_reads_byte_string_split_size(spark, tmp_path):
         spark.conf.set("spark.sql.files.maxPartitionBytes", "1mb")
         plan = _plan(load_table(spark, str(tmp_path), "wide", rebalance=True))
         assert "RoundRobinPartitioning" not in plan, plan
-        spark.conf.set("spark.sql.files.maxPartitionBytes", "16m")
+        spark.conf.set("spark.sql.files.maxPartitionBytes", "128m")
         plan = _plan(load_table(spark, str(tmp_path), "wide", rebalance=True))
         assert "RoundRobinPartitioning" in plan, plan
     finally:

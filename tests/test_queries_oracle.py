@@ -56,8 +56,7 @@ ORACLE_KEYS = sorted(entrymod.oracle_sql().keys())
 ROWS_ONLY_KEYS = sorted(set(entrymod.queries()) - set(entrymod.oracle_sql()))
 
 
-@pytest.mark.parametrize("name", ORACLE_KEYS)
-def test_query_matches_oracle(spark, duck, name):
+def _check_oracle(spark, duck, name):
     q = entrymod.queries()[name]
     sdf = q(spark, SF_DIR)
     spark_cols = sdf.columns
@@ -76,6 +75,25 @@ def test_query_matches_oracle(spark, duck, name):
     got = _rowset(spark_cols, spark_rows)
     want = _rowset(duck_cols, duck_rows)
     assert got == want, f"{name}: value mismatch\nspark={got[:5]}\nduck={want[:5]}"
+
+
+@pytest.mark.parametrize("name", ORACLE_KEYS)
+def test_query_matches_oracle(spark, duck, name):
+    _check_oracle(spark, duck, name)
+
+
+@pytest.mark.parametrize("name", ["download_manifest", "downloads_by_year"])
+def test_download_queries_compile(spark, duck, name):
+    """With ``spark.sql.codegen.fallback=false`` a whole-stage codegen
+    compile failure raises instead of silently running the stage
+    interpreted: both queries once filtered on the url parse below their
+    dedup and outgrew the 64 KB method limit."""
+    prev = spark.conf.get("spark.sql.codegen.fallback")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try:
+        _check_oracle(spark, duck, name)
+    finally:
+        spark.conf.set("spark.sql.codegen.fallback", prev)
 
 
 @pytest.mark.parametrize("name", ROWS_ONLY_KEYS)

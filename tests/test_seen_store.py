@@ -218,10 +218,10 @@ def test_select_batch_honors_per_host_budgets(spark):
     assert not sel & carry and sel | carry == set(rows)
 
 
-def test_segment_cache_never_stale_across_interleaved_supersteps(spark, tmp_path):
-    """The worker-local segment cache must never serve stale membership:
-    every superstep interleaves filter_new (warm cache) with update (new
-    delta files) and compaction (files deleted + rewritten). A url added in
+def test_membership_exact_across_interleaved_supersteps(spark, tmp_path):
+    """Membership stays exact while the store changes between reads: every
+    superstep interleaves filter_new with update (new delta files and a new
+    blob epoch) and compaction (files deleted + rewritten). A url added in
     step k must be flagged seen in every later step; a fresh url must always
     pass."""
     store = PartitionedBloomSeenStore(
@@ -238,37 +238,20 @@ def test_segment_cache_never_stale_across_interleaved_supersteps(spark, tmp_path
     assert store.filter_new(_urls_df(spark, seen_so_far)).count() == 0
 
 
-def test_blob_paths_never_reused_across_reset(spark, tmp_path):
-    """Fresh-crawl safety for long-lived Python workers: reset() restarts
-    epoch numbering at 0, so blob PATHS must never repeat — a reused path
-    would let a persistent worker's bitmap cache (keyed by path) serve the
-    previous crawl's bloom, producing false NEGATIVES that re-schedule
-    already-seen urls. The random per-write suffix makes every blob path
-    unique; membership stays correct across reset in the same session."""
-    import glob
-    import os
-
+def test_membership_exact_across_reset(spark, tmp_path):
+    """Fresh-crawl safety in one session: reset() drops the previous crawl's
+    blobs and url files and restarts epoch numbering at 0, so after it the
+    new crawl's urls are seen and the old crawl's urls are new again."""
     store = PartitionedBloomSeenStore(
         str(tmp_path), n_partitions=2, expected_urls=2000
     )
     crawl_a = [f"https://h{i % 2}.com/a{i}" for i in range(200)]
     store.update(_urls_df(spark, crawl_a))
-    paths_a = set(glob.glob(os.path.join(store.root, "pid=*.bin")))
-    assert paths_a
-
-    # warm the worker bitmap caches on crawl A's blobs
     assert store.filter_new(_urls_df(spark, crawl_a)).count() == 0
 
     store.reset()
     crawl_b = [f"https://h{i % 2}.com/b{i}" for i in range(200)]
     store.update(_urls_df(spark, crawl_b))
-    paths_b = set(glob.glob(os.path.join(store.root, "pid=*.bin")))
-    assert paths_b and not (paths_a & paths_b), (
-        "blob paths reused across reset()", paths_a & paths_b
-    )
-
-    # crawl B's urls must be flagged seen even by workers that cached A's
-    # bitmaps; crawl A's urls are genuinely new again after the reset
     assert store.filter_new(_urls_df(spark, crawl_b)).count() == 0
     assert store.filter_new(_urls_df(spark, crawl_a)).count() == len(crawl_a)
 
@@ -296,11 +279,7 @@ def test_concurrent_compaction_readers_never_lose_membership(tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from apollo_service_spark.operators.seen import (
-        _FileCache,
-        _load_segment,
-        _read_pid_dir,
-    )
+    from apollo_service_spark.operators.seen import _load_segment, _read_pid_dir
 
     def read_urls(path):
         return pq.read_table(path, columns=["url"])
@@ -349,8 +328,6 @@ def test_concurrent_compaction_readers_never_lose_membership(tmp_path):
             stop.set()
 
     def reader() -> None:
-        cache = _FileCache(_load_segment)
-        prefix = str(pid_dir) + os.sep
         while not stop.is_set() and not failures:
             with lock:
                 snapshot = set(committed)
@@ -365,12 +342,13 @@ def test_concurrent_compaction_readers_never_lose_membership(tmp_path):
             with lock:
                 snapshot = set(committed)
             via_segments = set()
-            cache.keep_only(prefix, set(_glob(prefix + "*.parquet")))
-            for _key, _sorted_key, url_col in _read_pid_dir(str(pid_dir), cache.get):
+            for _key, _sorted_key, url_col in _read_pid_dir(
+                str(pid_dir), _load_segment
+            ):
                 via_segments.update(url_col.to_pylist())
             missing = snapshot - via_segments
             if missing:
-                failures.append(("cached-segment read dropped", sorted(missing)[:5]))
+                failures.append(("segment read dropped", sorted(missing)[:5]))
                 return
 
     threads = [threading.Thread(target=writer)] + [
@@ -386,79 +364,3 @@ def test_concurrent_compaction_readers_never_lose_membership(tmp_path):
     for t in _read_pid_dir(str(pid_dir), read_urls):
         final.update(t.column("url").to_pylist())
     assert final == set(committed)
-
-
-def test_file_cache_eviction_rules(tmp_path):
-    """The worker-local file cache's four rules, driver-side: a hit never
-    re-reads its file; ``keep_only`` drops a segment a compaction deleted;
-    the byte budget evicts least-recently-used entries but always keeps the
-    newest; and probing a pid's epoch-1 blob leaves only epoch 1 of that pid
-    cached (epoch 0 is superseded, readers never select it again)."""
-    import os
-
-    import numpy as np
-    import pyarrow as pa
-
-    from apollo_service_spark.operators import seen
-
-    loads = []
-
-    def load(path):
-        loads.append(path)
-        return path, os.path.getsize(path)
-
-    def write(name, size):
-        path = str(tmp_path / name)
-        with open(path, "wb") as fh:
-            fh.write(b"x" * size)
-        return path
-
-    # a hit does not re-read the file
-    cache = seen._FileCache(load, max_bytes=250)
-    a = write("a", 100)
-    assert cache.get(a) == a and cache.get(a) == a
-    assert loads == [a]
-
-    # keep_only drops a compacted-away segment under the prefix only
-    pid_dir = tmp_path / "pid=00000"
-    pid_dir.mkdir()
-    delta = write("pid=00000/delta-1.parquet", 10)
-    compact = write("pid=00000/compact-1.parquet", 10)
-    cache.get(delta)
-    cache.get(compact)
-    os.remove(delta)
-    prefix = str(pid_dir) + os.sep
-    cache.keep_only(prefix, {compact})
-    assert list(cache.entries) == [a, compact] and cache.total == 110
-
-    # the budget evicts LRU entries but always keeps the newest
-    cache.get(a)  # a is now most recently used; compact is LRU
-    b = write("b", 100)
-    cache.get(b)  # 210 <= 250: nothing evicted
-    c = write("c", 100)
-    cache.get(c)  # 310 > 250: the LRU (compact), then a, go
-    assert list(cache.entries) == [b, c] and cache.total == 200
-    huge = write("huge", 1000)
-    cache.get(huge)  # over budget on its own: still cached, the rest goes
-    assert list(cache.entries) == [huge] and cache.total == 1000
-
-    # superseded epochs: only the newest blob of a pid stays in _BLOOMS
-    root = tmp_path / "bloom"
-    root.mkdir()
-    n_bits, k = 8192, 3
-    table = pa.table(
-        {"_h1": pa.array([1, 2], pa.int64()), "_h2": pa.array([3, 4], pa.int64())}
-    )
-    other = root / "pid=00001-epoch=000000-cc.bin"
-    np.zeros(n_bits // 8, dtype=np.uint8).tofile(other)
-    seen._maybe_seen(str(root), 1, table, n_bits, k)
-    epoch0 = root / "pid=00000-epoch=000000-aa.bin"
-    np.zeros(n_bits // 8, dtype=np.uint8).tofile(epoch0)
-    assert not seen._maybe_seen(str(root), 0, table, n_bits, k).any()
-    assert str(epoch0) in seen._BLOOMS.entries
-    epoch1 = root / "pid=00000-epoch=000001-bb.bin"
-    np.full(n_bits // 8, 0xFF, dtype=np.uint8).tofile(epoch1)
-    assert seen._maybe_seen(str(root), 0, table, n_bits, k).all()
-    cached = [p for p in seen._BLOOMS.entries if p.startswith(str(root))]
-    assert cached == [str(other), str(epoch1)]
-    assert seen._maybe_seen(str(root), 2, table, n_bits, k) is None

@@ -166,8 +166,8 @@ def test_is_redirect_404_scraper_rule(spark):
 def test_is_ignored_fused_equivalent(spark):
     """is_ignored_fused (one rlike over the fused alternation) must match
     the Python reference is_ignored_py exactly — including
-    case-insensitivity, the '.jpg' substring-vs-suffix overlap, and extra
-    user patterns."""
+    case-insensitivity (Unicode case too: `ſ` folds to `s`, `İ`/`ı` to `i`),
+    the '.jpg' substring-vs-suffix overlap, and extra user patterns."""
     cases = [
         "https://h.com/page",
         "https://h.com/LOGIN/next",
@@ -182,6 +182,11 @@ def test_is_ignored_fused_equivalent(spark):
         "https://h.com/file.mp4",
         "https://h.com/file.mp4?x=1",     # suffix no longer at end
         "https://h.com/admin/x",
+        "https://h.com/ſignin",
+        "https://h.com/logİn",
+        "https://h.com/logın",
+        "https://h.com/sıgnout",
+        "https://h.com/ﬀ/404",
         "",
     ]
     df = spark.createDataFrame([(u,) for u in cases], "url string")
@@ -194,6 +199,33 @@ def test_is_ignored_fused_equivalent(spark):
         }
         want = {u: urlkit.is_ignored_py(u, extra) for u in cases}
         assert got == want, (extra, got, want)
+
+
+def test_categorize_unicode_case_matches_python(spark):
+    """categorize folds Unicode case as categorize_py's re.IGNORECASE does:
+    dotless `ı`, dotted `İ`, the long `ſ` and the Kelvin sign `K` match their
+    ASCII keyword letters."""
+    cases = [
+        "https://ınstagram.com/p",
+        "https://İNSTAGRAM.com/p",
+        "https://tıktok.com/@x",
+        "https://youtube.com/ſhorts",
+        "https://unıted.com/statement",
+        "https://UNİTED.com/a.pdf",
+        "https://ubl.com/a.PDF",
+        "https://ubl.com/fıle.txt",
+        "https://faceboo\u212a.com/x",
+        "https://linkedın.com/in/x",
+        "https://h.com/page",
+    ]
+    df = spark.createDataFrame([(u,) for u in cases], "url string")
+    got = {
+        r["url"]: r["cat"]
+        for r in df.select(
+            "url", urlkit.categorize(F.col("url")).alias("cat")
+        ).collect()
+    }
+    assert got == {u: urlkit.categorize_py(u) for u in cases}
 
 
 def test_categorize_config_tier_divergences(spark):
