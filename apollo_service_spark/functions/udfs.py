@@ -12,8 +12,9 @@ Catalyst column expression):
   (``urlkit.expand_link_py``), returning array<struct<url, host, path>> that
   the frontier ``explode``s.
 * ``extract_links_udf`` — the extraction step alone, returning the raw
-  array<string> of links (perfbench's traced replay and ``bench_scaling.py``
-  time it separately from the Catalyst ``urlkit`` expressions).
+  array<string> of links. The engine no longer runs it; only perfbench's
+  traced replay does, timing it apart from the Catalyst ``urlkit``
+  expressions.
 * ``repetition_stats_udf`` — the Gopher repetition scalars; SQL-expressible
   (the Catalyst folds exist and are the test reference) but measured 4×
   slower than this Counter kernel at corpus scale, so the Arrow form is the

@@ -37,6 +37,7 @@ import os
 import sys
 
 from pyspark import SparkConf, SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 from . import worker_daemon
@@ -130,6 +131,21 @@ def build_session(
         if key not in launched:
             builder = builder.config(key, val)
     return builder.getOrCreate()
+
+
+def local_cluster_home(parent: str) -> str:
+    """A Spark home under ``parent``: symlinks to the installed one, plus a
+    real, empty ``work`` dir. ``local-cluster`` workers put each executor's
+    dir under ``$SPARK_HOME/work`` and ignore ``SPARK_WORKER_DIR``, so a
+    launcher started with ``SPARK_HOME`` set to this path leaves nothing in
+    the installation."""
+    home = os.path.join(parent, "spark_home")
+    os.makedirs(os.path.join(home, "work"))
+    real = _find_spark_home()
+    for name in os.listdir(real):
+        if name != "work":
+            os.symlink(os.path.join(real, name), os.path.join(home, name))
+    return home
 
 
 def observations_survive(spark: SparkSession) -> bool:

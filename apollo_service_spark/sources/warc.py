@@ -169,7 +169,10 @@ def parse_warc_segment(blob: bytes) -> list:
         head_end = blob.find(_CRLF + _CRLF, pos)
         if head_end < 0:
             raise ValueError(f"unterminated WARC header block at offset {pos}")
-        header = blob[pos:head_end].decode("utf-8", errors="strict")
+        try:
+            header = blob[pos:head_end].decode("utf-8", errors="strict")
+        except UnicodeDecodeError as exc:
+            raise ValueError(f"WARC header block not UTF-8 at offset {pos}: {exc}")
         lines = header.split("\r\n")
         if not lines[0].startswith("WARC/"):
             raise ValueError(f"missing WARC version line at offset {pos}")
@@ -177,9 +180,13 @@ def parse_warc_segment(blob: bytes) -> list:
         for line in lines[1:]:
             key, _, value = line.partition(":")
             fields[key.strip().lower()] = value.strip()
-        length = int(fields["content-length"])
+        length = fields.get("content-length", "")
+        if not (length.isascii() and length.isdigit()):
+            # a negative length would step back to an earlier record and
+            # loop forever
+            raise ValueError(f"bad or missing Content-Length {length!r} at offset {pos}")
         body_start = head_end + 4
-        body_end = body_start + length
+        body_end = body_start + int(length)
         if body_end + 4 > n:
             raise ValueError(f"truncated record body at offset {body_start}")
         if blob[body_end:body_end + 4] != _CRLF + _CRLF:
@@ -199,14 +206,17 @@ def parse_warc_segment(blob: bytes) -> list:
                 key, _, value = line.partition(":")
                 if key.strip().lower() == "content-type":
                     content_type = value.strip()
-            rec = {
-                "url": fields["warc-target-uri"],
-                "warc_ts": datetime.strptime(
-                    fields["warc-date"], _WARC_DATE_FMT
-                ),
-                "content_type": content_type,
-                "payload": body[http_end + 4:],
-            }
+            try:
+                rec = {
+                    "url": fields["warc-target-uri"],
+                    "warc_ts": datetime.strptime(fields["warc-date"], _WARC_DATE_FMT),
+                    "content_type": content_type,
+                    "payload": body[http_end + 4:],
+                }
+            except KeyError as exc:
+                raise ValueError(f"response record without {exc} at offset {pos}")
+            except ValueError as exc:
+                raise ValueError(f"bad WARC-Date at offset {pos}: {exc}")
             records.append(rec)
         pos = body_end + 4
     return records

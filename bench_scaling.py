@@ -1,477 +1,322 @@
 #!/usr/bin/env python
-"""Two-cluster-size scaling evidence (BASELINE.md criterion).
+"""Scaling efficiency from N to 4N executors: perfbench's ``crawl`` and
+``curate`` units on ``local-cluster[1,1,M]`` against ``local-cluster[4,1,M]``.
 
-The north rule requires throughput scaling efficiency ≥ 0.8 from N to 4N
-executors; no real cluster exists in this sandbox, so per the task brief we
-run the SAME frontier-superstep job on the SAME input at ``local[8]`` and
-``local[32]`` and report throughput at both plus the scaling efficiency.
+    python bench_scaling.py [--pairs 10]
 
-Measurement protocol (VERDICT r2 "what's wrong" #1 — the r2 median-of-3 was
-noise on an oversubscribed host; this protocol makes the number auditable):
+Run from the repository root. Each run is one workload at one size in its
+own driver process and process group: a fresh session, perfbench's
+generate, warm-up and references, then ``UNITS`` units of work, each one
+``measure(0)`` call with its output checks. Both sizes time the same units,
+with the crawl's ``n_partitions`` and the shuffle partitions at ``CORES``,
+so only the executor count differs. A pair is one run at each size, the
+order alternating between pairs. Per pair:
 
-* **≥ 7 interleaved rounds** (up to 10 until ≥ 4 are accepted). Each round:
-  kernel probe → engine local[8] → kernel probe → engine local[32] → kernel
-  probe — every engine level is BRACKETED by same-moment ceiling probes.
-* **Round acceptance**: the three kernel speedups must agree within 20 %
-  (max/min ≤ 1.2). A round where the attainable ceiling moved mid-round is
-  measurement noise by construction and is discarded — reported, not used.
-* **Paired efficiency** per accepted round = (engine32/engine8) / median of
-  the round's three kernel speedups. The criterion gates on the MEDIAN of
-  accepted rounds; min/median/max dispersion is printed alongside.
-* **Both normalizations reported** (ADVICE r2): the workload-matched kernel
-  ceiling (the fair denominator on a box whose memory bandwidth does not
-  quadruple 8→32) AND the cache-resident sha256 machine ceiling AND the
-  absolute /4 efficiency, so the criterion's denominator choice is auditable.
-* **Affinity-matched probes**: kernel probes pin to the SAME core sets the
-  engine levels are tasksetted to (0-7 / 0-31), so probe and engine see the
-  same host contention.
-* ``loadavg`` recorded before/after every round.
+* by wall: (work/wall at 4N) / (4 × work/wall at N);
+* by CPU: (work per CPU-second at 4N) / (work per CPU-second at N), with
+  the CPU of the whole process tree (the executor JVMs and their Python
+  workers are descendants of the driver).
 
-Per-level mechanics (unchanged from r1/r2): each level runs in its own JVM,
-CPU-pinned with ``taskset``, heap scaled per-core (a 4N-executor cluster has
-4× total memory); the measured job is the real engine superstep — politeness
-window ranking → fetch join → Arrow link-extraction UDF → explode →
-canonicalize + ignore filters → seen-set anti-join; identical partition
-counts at both levels (strong scaling varies only the executor count).
-
-Writes BENCH/BASELINE.md and prints one JSON line.
+A pair with a failed check or a failed run is left out and counted. Before
+and after each run, a kernel probe times the crawl's per-link work
+(``html.extract_links`` + ``urlkit.expand_link_py``) in 1 and 4 bare
+processes: the host's ceiling at each size. Writes ``BENCH/SCALING_r07.json``
+and ``.md``.
 """
 
 from __future__ import annotations
 
 import argparse
+import contextlib
 import json
+import multiprocessing
 import os
+import shutil
+import signal
 import statistics
 import subprocess
 import sys
+import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+from apollo_service_spark.functions.html import extract_links
+from apollo_service_spark.functions.urlkit import expand_link_py
 
-N_PAGES = int(os.environ.get("SCALING_BENCH_PAGES", "160000"))
-LINKS_PER_PAGE = 30
-WARMUPS = 2
-REPEATS = 3  # best-of-3: each level gets three chances to sample a clean
-             # host moment — with 2, one unlucky level skews a whole round
-MIN_ROUNDS = int(os.environ.get("SCALING_BENCH_ROUNDS", "7"))
-MAX_ROUNDS = MIN_ROUNDS + 3
-MIN_ACCEPTED = 4
-KERNEL_AGREE = 1.20  # max/min of a round's kernel speedups
-HEAP_PER_CORE_GB = 0.375
-
-
-def _burn(n):
-    import hashlib
-
-    h = b"x" * 64
-    for _ in range(n):
-        h = hashlib.sha256(h).digest()
-    return h[0]
+ROOT = os.path.dirname(os.path.abspath(__file__))
+OUT = os.path.join(ROOT, "BENCH", "SCALING_r07")
+WORKLOADS = ("crawl", "curate")
+SIZES = (1, 4)  # executor JVMs, one core each
+EXECUTOR_MB = 2048
+DRIVER_HEAP = "2g"
+CORES = 4
+UNITS = 2
+SEED = 1
+RUN_TIMEOUT_S = 1200
+TARGET = 0.8
 
 
-_KERNEL_HTML = None
+def _unit_cost(name: str, m) -> tuple:
+    """(work, wall s, tree CPU s) of the one unit a ``measure(0)`` ran."""
+    if name == "crawl":
+        urls = m.named["crawl_urls"][0]
+        return urls, m.unit_wall_s[0], urls / m.work_per_cpu_s[0]
+    from perfbench.workloads import CURATE_PAGES
+
+    # one extract (the median of the unit's four) and the corpus_prepare
+    extract_cpu = statistics.median(CURATE_PAGES / w for w in m.work_per_cpu_s)
+    return CURATE_PAGES, m.unit_wall_s[0], extract_cpu + m.step_cpu_s[0]
 
 
-def _kernel_init():
-    """Build the same page HTML the superstep parses (once per worker)."""
-    global _KERNEL_HTML
-    links = "".join(
-        f'<li><a href="https://host{(j * 131) % 500}.example.com'
-        f'/sec{(j * 131) % 13}/p{j * 131}">link</a></li>'
-        for j in range(LINKS_PER_PAGE)
+def one_run(name: str, executors: int, work: str) -> dict:
+    """One workload at one size, in this process, everything it writes
+    under the empty dir ``work``; returns its figures."""
+    from apollo_service_spark.session import build_session, local_cluster_home
+    from perfbench.procs import peak_rss_mb
+    from perfbench.run import stop_session
+    from perfbench.status import StatusReader
+    from perfbench.workloads import WORKLOADS as BENCH
+
+    for sub in ("tmp", "local"):
+        os.makedirs(os.path.join(work, sub))
+    # the launcher, the executors and their Python workers inherit these
+    os.environ.update(
+        SPARK_HOME=local_cluster_home(work),
+        TMPDIR=os.path.join(work, "tmp"),
+        SPARK_LOCAL_DIRS=os.path.join(work, "local"),
     )
-    _KERNEL_HTML = (
-        "<html><head><title>P</title></head><body>"
-        "<div class='main-content'><p>" + "word " * 200 + "</p><ul>"
-        + links + "</ul></div></body></html>"
-    )
-
-
-def _kernel(n):
-    """The superstep's dominant per-page work, outside Spark: link
-    extraction + canonicalization + ignore screening."""
-    from apollo_service_spark.functions.html import extract_links
-    from apollo_service_spark.functions.urlkit import canonicalize_py
-
-    kept = 0
-    for _ in range(n):
-        for link in extract_links(_KERNEL_HTML, "https://base.example.com/"):
-            u = canonicalize_py(link)
-            if "/404" not in u:
-                kept += 1
-    return kept
-
-
-def _mp_scaling(fn, work, initializer=None, repeats=2) -> dict:
-    """8- vs 32-process throughput of ``fn``, each level pinned to the same
-    core set the engine levels run on (taskset 0-7 / 0-31) so probe and
-    engine experience identical host contention."""
-    import multiprocessing as mp
-
-    tput = {}
-    for procs in (8, 32):
-        prev_affinity = None
-        if hasattr(os, "sched_setaffinity"):
-            try:
-                prev_affinity = os.sched_getaffinity(0)
-                os.sched_setaffinity(0, set(range(procs)))
-            except OSError:
-                prev_affinity = None
-        try:
-            best = None
-            with mp.Pool(procs, initializer=initializer) as pool:
-                pool.map(fn, [1] * procs)  # warm the pool (spawn + imports)
-                for _ in range(repeats):
-                    t0 = time.monotonic()
-                    pool.map(fn, [work] * procs * 4)
-                    wall = time.monotonic() - t0
-                    best = wall if best is None else min(best, wall)
-            tput[procs] = procs * 4 * work / best
-        finally:
-            if prev_affinity is not None:
-                os.sched_setaffinity(0, prev_affinity)
-    return tput
-
-
-def kernel_probe() -> dict:
-    """One bracketing probe: the superstep's own per-page kernel in bare
-    multiprocessing — the attainable 8→32 scaling of the engine's dominant
-    work at this moment, with zero framework overhead."""
-    t = _mp_scaling(_kernel, 160, initializer=_kernel_init, repeats=2)
-    return {
-        "k8_pages_per_sec": round(t[8]),
-        "k32_pages_per_sec": round(t[32]),
-        "speedup": round(t[32] / t[8], 3),
-    }
-
-
-def sha_probe() -> dict:
-    """Cache-resident pure-compute ceiling (no memory-bandwidth component) —
-    the alternative normalization denominator, reported for auditability."""
-    t = _mp_scaling(_burn, 400_000, repeats=2)
-    return {
-        "h8_per_sec": round(t[8]),
-        "h32_per_sec": round(t[32]),
-        "speedup": round(t[32] / t[8], 3),
-    }
-
-
-def _superstep_inputs(spark, n_pages: int):
-    """Spark-generated pages table with a known link graph (no driver loops)."""
-    from pyspark.sql import functions as F
-
-    from apollo_service_spark.functions import urlkit
-
-    def page_url(idcol):
-        host = F.concat(
-            F.lit("host"), (idcol % 500).cast("string"), F.lit(".example.com")
-        )
-        return F.concat(
-            F.lit("https://"), host, F.lit("/sec"), (idcol % 13).cast("string"),
-            F.lit("/p"), idcol.cast("string"),
-        )
-
-    links_frag = F.array_join(
-        F.transform(
-            F.sequence(F.lit(1), F.lit(LINKS_PER_PAGE)),
-            lambda i: F.concat(
-                F.lit('<li><a href="'),
-                page_url(F.col("id") * F.lit(7) + i.cast("bigint") * F.lit(131)),
-                F.lit('">link</a></li>'),
-            ),
-        ),
-        "",
-    )
-    html = F.concat(
-        F.lit(
-            "<html><head><title>Page</title></head><body>"
-            "<nav class='top-bar'>nav</nav><div class='main-content'><h1>T</h1><p>"
-        ),
-        F.repeat(F.lit("word "), 200),
-        F.lit("</p><ul>"),
-        links_frag,
-        F.lit("</ul></div></body></html>"),
-    )
-    # fixed partition count at every level (see worker()): the dataset's
-    # layout doesn't change when the cluster grows
-    n_part = 96
-    pages = spark.range(n_pages).repartition(n_part).select(
-        page_url(F.col("id")).alias("url"), html.alias("html")
-    ).persist()
-    pages.count()
-    frontier = pages.select(
-        "url", urlkit.url_host(F.col("url")).alias("host"), F.lit(0).alias("depth")
-    ).persist()
-    frontier.count()
-    seen = spark.range(n_pages * 4).select(
-        page_url(F.col("id") * F.lit(7) + F.lit(131)).alias("url")
-    ).persist()
-    seen.count()
-    return pages, frontier, seen
-
-
-def _superstep(spark, pages, frontier, seen):
-    from pyspark.sql import functions as F
-
-    from apollo_service_spark.functions import urlkit
-    from apollo_service_spark.functions.udfs import extract_links_udf
-    from apollo_service_spark.operators import politeness as pol
-
-    # rank is derived on read in the engine (crawl_log_df), not computed per
-    # superstep — the measured dataflow matches FrontierEngine's common path
-    selected, _carry = pol.select_batch(frontier, None, default_budget=10_000_000)
-    fetched = selected.join(pages, "url")
-    links = fetched.select(
-        F.explode(extract_links_udf(F.col("html"), F.col("url"))).alias("raw")
-    ).select(urlkit.canonicalize(F.col("raw")).alias("url"))
-    # fused single-reference ignore filter — the engine's actual path: the
-    # contains-chain variant substituted the canonicalize tree into every
-    # term, failed janino compilation, and silently measured INTERPRETED
-    # row processing (allocation-bound, scales ~2.1x at 8->32 vs ~2.9x
-    # compiled — it was the round-3/round-4a scaling-number depressor)
-    links = links.filter(~urlkit.is_ignored_fused(F.col("url")))
-    new = links.groupBy("url").count().join(seen, "url", "left_anti")
-    return new.count()
-
-
-def worker(cpus: int, n_pages: int) -> None:
-    from apollo_service_spark.session import build_session
-
-    heap = max(3, int(cpus * HEAP_PER_CORE_GB))
-    # IDENTICAL partitioning at both levels (sized for the wide level, 3
-    # tasks/core there) — strong scaling varies ONLY the executor count;
-    # letting partition counts follow cores would compare two different
-    # jobs with different per-task Arrow/scheduling overheads.
-    #
-    # Heap scales per-core but stays SMALL and is fully PRE-TOUCHED
-    # (-Xms=-Xmx -XX:+AlwaysPreTouch): this sandbox commits anonymous
-    # memory at ~0.1-0.5 GB/s (hypervisor memory pressure), so a lazily
-    # grown multi-GB heap turns the first minutes of measurement into a
-    # kernel page-zeroing storm (observed: 80-95% sys time, 10x superstep
-    # walls at local[32] until the heap finished growing). Pre-touching
-    # moves that cost into JVM startup, outside the timed region.
     spark = build_session(
-        app_name=f"scaling-{cpus}",
-        master=f"local[{cpus}]",
-        shuffle_partitions=64,
+        app_name=f"scaling-{name}-{executors}",
+        master=f"local-cluster[{executors},1,{EXECUTOR_MB}]",
+        shuffle_partitions=CORES,
         extra_conf={
-            "spark.local.dir": "/dev/shm/spark-tmp",
-            "spark.driver.memory": f"{heap}g",
-            "spark.driver.extraJavaOptions": f"-Xms{heap}g -XX:+AlwaysPreTouch",
-            # size post-shuffle partitions to the benchmark's data volume:
-            # the default 64MB advisory target coalesces this job's ~300MB
-            # shuffle to fewer partitions than the wide level has cores,
-            # serializing the agg/anti-join stages at local[32]
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes": "8m",
+            "spark.driver.memory": DRIVER_HEAP,
+            "spark.executor.memory": f"{EXECUTOR_MB}m",
+            "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
+            "spark.ui.showConsoleProgress": "false",
         },
     )
     spark.sparkContext.setLogLevel("ERROR")
-    pages, frontier, seen = _superstep_inputs(spark, n_pages)
-
-    candidates = n_pages * LINKS_PER_PAGE
-    best = None
-    for i in range(WARMUPS + REPEATS):
-        t0 = time.monotonic()
-        n_new = _superstep(spark, pages, frontier, seen)
-        wall = time.monotonic() - t0
-        if i < WARMUPS:
-            continue
-        if best is None or wall < best["wall_s"]:
-            best = {
-                "cpus": cpus,
-                "n_pages": n_pages,
-                "candidates": candidates,
-                "new_urls": n_new,
-                "wall_s": round(wall, 3),
-                "urls_per_sec": round(candidates / wall),
-            }
-    print(json.dumps(best))
-    spark.stop()
-
-
-def _run_level(cpus: int, n_pages: int) -> dict:
-    cmd = [sys.executable, os.path.abspath(__file__), "--worker", str(cpus),
-           "--n-pages", str(n_pages)]
-    if os.path.exists("/usr/bin/taskset"):
-        cmd = ["taskset", "-c", f"0-{cpus - 1}"] + cmd
-    out = subprocess.run(
-        cmd, capture_output=True, text=True, check=True,
-        cwd=os.path.dirname(os.path.abspath(__file__)),
-    )
-    return json.loads(out.stdout.strip().splitlines()[-1])
-
-
-def main() -> None:
-    parser = argparse.ArgumentParser()
-    parser.add_argument("--worker", type=int, default=None)
-    parser.add_argument("--n-pages", type=int, default=N_PAGES)
-    args = parser.parse_args()
-
-    if args.worker is not None:
-        worker(args.worker, args.n_pages)
-        return
-
-    sha_start = sha_probe()
-    best = {8: None, 32: None}
-    rounds = []
-    n_accepted = 0
-    for _round in range(MAX_ROUNDS):
-        load0 = os.getloadavg()
-        k_pre = kernel_probe()
-        e8 = _run_level(8, args.n_pages)
-        k_mid = kernel_probe()
-        e32 = _run_level(32, args.n_pages)
-        k_post = kernel_probe()
-        load1 = os.getloadavg()
-
-        ks = [k_pre["speedup"], k_mid["speedup"], k_post["speedup"]]
-        agree = max(ks) / min(ks)
-        accepted = agree <= KERNEL_AGREE
-        engine_speedup = e32["urls_per_sec"] / e8["urls_per_sec"]
-        kernel_speedup = statistics.median(ks)
-        rec = {
-            "round": _round + 1,
-            "engine8": e8["urls_per_sec"],
-            "engine32": e32["urls_per_sec"],
-            "engine_speedup": round(engine_speedup, 3),
-            "kernel_speedups": ks,
-            "kernel_agreement": round(agree, 3),
-            "accepted": accepted,
-            "kernel_speedup_median": round(kernel_speedup, 3),
-            "paired_efficiency": round(engine_speedup / kernel_speedup, 3),
-            "loadavg_before": [round(x, 2) for x in load0],
-            "loadavg_after": [round(x, 2) for x in load1],
+    try:
+        bench = BENCH[name](spark, os.path.join(work, "bench"), CORES)
+        bench.generate(SEED)
+        bench.warm_up()
+        bench.set_reference(bench.reference())
+        label = f"scaling:{name}:{executors}"
+        spark.sparkContext.setJobDescription(label)
+        t = time.perf_counter()
+        units = [bench.measure(0) for _ in range(UNITS)]
+        labelled_wall = time.perf_counter() - t
+        spark.sparkContext.setJobDescription(None)
+        costs = [_unit_cost(name, m) for m in units]
+        return {
+            "workload": name, "executors": executors,
+            "work": sum(c[0] for c in costs),
+            "wall_s": sum(c[1] for c in costs),
+            "cpu_s": sum(c[2] for c in costs),
+            "attempted": sum(m.attempted for m in units),
+            "failed": sum(m.failed for m in units),
+            "problems": [p for m in units for p in m.problems][:5],
+            "status": StatusReader(spark).summary(label, labelled_wall, executors),
+            "peak_rss_mb": peak_rss_mb(),
         }
-        rounds.append(rec)
-        print(f"# round {rec['round']}: {json.dumps(rec)}", file=sys.stderr)
-        if accepted:
-            n_accepted += 1
-            for cpus, res in ((8, e8), (32, e32)):
-                if best[cpus] is None or res["urls_per_sec"] > best[cpus]["urls_per_sec"]:
-                    best[cpus] = res
-        if _round + 1 >= MIN_ROUNDS and n_accepted >= MIN_ACCEPTED:
-            break
-    sha_end = sha_probe()
-
-    acc = [r for r in rounds if r["accepted"]]
-    used = acc if acc else rounds  # degenerate host: report, flag below
-    if best[8] is None:  # no accepted rounds — fall back to best overall
-        for r in rounds:
-            for cpus, key in ((8, "engine8"), (32, "engine32")):
-                cur = {"urls_per_sec": r[key], "n_pages": args.n_pages,
-                       "candidates": args.n_pages * LINKS_PER_PAGE,
-                       "new_urls": -1, "wall_s": -1.0}
-                if best[cpus] is None or cur["urls_per_sec"] > best[cpus]["urls_per_sec"]:
-                    best[cpus] = cur
-
-    paired = sorted(r["paired_efficiency"] for r in used)
-    median_paired = statistics.median(paired)
-    engine_speedups = [r["engine_speedup"] for r in used]
-    median_engine = statistics.median(engine_speedups)
-    sha_speedups = [sha_start["speedup"], sha_end["speedup"]]
-    t8 = best[8]["urls_per_sec"]
-    t32 = best[32]["urls_per_sec"]
-    summary = {
-        "metric": "frontier_superstep_scaling",
-        "n_pages": args.n_pages,
-        "candidates": best[8]["candidates"],
-        "local8_urls_per_sec": t8,
-        "local32_urls_per_sec": t32,
-        "rounds_run": len(rounds),
-        "rounds_accepted": len(acc),
-        "accepted_is_degenerate_fallback": not acc,
-        "engine_speedup_median": round(median_engine, 3),
-        "engine_speedup_min_max": [min(engine_speedups), max(engine_speedups)],
-        # normalization 1 (criterion): workload-matched kernel ceiling,
-        # probes bracketing each level, median over accepted rounds
-        "paired_efficiency_vs_kernel_ceiling": round(median_paired, 3),
-        "paired_efficiency_min_max": [paired[0], paired[-1]],
-        # normalization 2 (audit): cache-resident sha256 machine ceiling
-        "machine_ceiling_speedups": sha_speedups,
-        "scaling_efficiency_vs_machine_ceiling": round(
-            median_engine / statistics.median(sha_speedups), 3
-        ),
-        # normalization 3 (audit): absolute vs an ideal 4x
-        "scaling_efficiency_vs_4x": round(median_engine / 4.0, 3),
-        "rounds": rounds,
-        "criterion": ">= 0.8",
-        "pass": bool(acc) and median_paired >= 0.8,
-    }
-    print(json.dumps(summary))
-
-    os.makedirs("BENCH", exist_ok=True)
-    with open("BENCH/BASELINE.md", "w", encoding="utf-8") as f:
-        f.write(_report(summary, best))
+    finally:
+        stop_session(spark)
 
 
-def _report(s: dict, best: dict) -> str:
-    rows = "".join(
-        f"| {r['round']} | {r['engine8']:,} | {r['engine32']:,} | "
-        f"{r['engine_speedup']} | {'/'.join(str(k) for k in r['kernel_speedups'])} | "
-        f"{r['kernel_agreement']} | {'yes' if r['accepted'] else 'NO'} | "
-        f"{r['paired_efficiency']} | {r['loadavg_before'][0]}→{r['loadavg_after'][0]} |\n"
-        for r in s["rounds"]
+def spawn(name: str, executors: int) -> dict:
+    """``one_run`` in a child process group, killed whole when it ends."""
+    work = tempfile.mkdtemp(prefix=f"scaling-{name}-{executors}-")
+    code = f"import json, bench_scaling as b; print(json.dumps(b.one_run({name!r}, {executors}, {work!r})))"
+    proc = subprocess.Popen(
+        [sys.executable, "-c", code], cwd=ROOT, text=True, start_new_session=True,
+        stdout=subprocess.PIPE, stderr=subprocess.PIPE,
     )
-    verdict = "PASS" if s["pass"] else "FAIL"
-    return f"""# BENCH/BASELINE — measured engine numbers
+    try:
+        out, err = proc.communicate(timeout=RUN_TIMEOUT_S)
+    except subprocess.TimeoutExpired:
+        out, err = "", f"timed out after {RUN_TIMEOUT_S} s"
+    finally:
+        with contextlib.suppress(ProcessLookupError):
+            os.killpg(proc.pid, signal.SIGKILL)
+        proc.wait()
+        shutil.rmtree(work, ignore_errors=True)
+    if proc.returncode != 0 or not out.strip():
+        return {"workload": name, "executors": executors, "error": err[-2000:]}
+    return json.loads(out.strip().splitlines()[-1])
 
-## Scaling criterion (north rule): N → 4N parallelism
 
-Same frontier-superstep job (politeness window ranking → fetch join → Arrow
-link-extraction UDF → canonicalize + ignore filters → seen-set anti-join),
-same input, two CPU-pinned parallelism levels in separate JVMs — the sandbox
-stand-in for N vs 4N executors per the task brief. Heap scales with cores (a
-4N cluster has 4× total memory); partition counts are identical at both
-levels (strong scaling varies only the executor count).
+def _kernel(pages: list) -> int:
+    return sum(expand_link_py(x) is not None for u, html in pages for x in extract_links(html, u))
 
-**Protocol** (r3, replacing the r2 median-of-3 that VERDICT judged noise):
-{s['rounds_run']} interleaved rounds; each engine level bracketed by
-affinity-pinned kernel probes (the superstep's own per-page work — HTML link
-extraction + canonicalize + ignore screen — in bare multiprocessing on the
-same core sets); a round is accepted only when its three kernel speedups
-agree within 20 % (max/min ≤ 1.2); the criterion gates on the MEDIAN paired
-efficiency over the {s['rounds_accepted']} accepted rounds.
 
-| parallelism | pages | candidate urls | best urls/sec |
-|---|---|---|---|
-| local[8], pinned 8 cores | {best[8]['n_pages']} | {best[8]['candidates']} | {s['local8_urls_per_sec']:,} |
-| local[32], pinned 32 cores | {best[32]['n_pages']} | {best[32]['candidates']} | {s['local32_urls_per_sec']:,} |
+def kernel_probe(pages: list) -> dict:
+    """Pages per second of the crawl's link kernel on ``pages`` (url, html)
+    in 1 and 4 processes."""
+    rates = {}
+    for procs in SIZES:
+        with multiprocessing.get_context("spawn").Pool(procs) as pool:
+            pool.map(_kernel, [[]] * procs, chunksize=1)  # workers started and imported
+            t = time.perf_counter()
+            pool.map(_kernel, [pages] * procs, chunksize=1)
+            rates[procs] = procs * len(pages) / (time.perf_counter() - t)
+    return rates
 
-### Per-round paired measurements
 
-| round | engine 8 (urls/s) | engine 32 (urls/s) | engine× | kernel× (pre/mid/post) | agree | accepted | paired eff | load 1m |
-|---|---|---|---|---|---|---|---|---|
-{rows}
-**Median paired efficiency vs the workload ceiling (accepted rounds):
-{s['paired_efficiency_vs_kernel_ceiling']}
-(min {s['paired_efficiency_min_max'][0]} / max {s['paired_efficiency_min_max'][1]})
-— {verdict} vs ≥ 0.8.**
+def median_iqr(values: list) -> dict:
+    if not values:
+        return dict.fromkeys(("median", "q1", "q3"), float("nan")) | {"n": 0}
+    q1, _, q3 = statistics.quantiles(values if len(values) > 1 else values * 2, n=4, method="inclusive")
+    return {"median": statistics.median(values), "q1": q1, "q3": q3, "n": len(values)}
 
-### All three normalizations (auditability)
 
-| normalization | denominator | value |
-|---|---|---|
-| paired kernel ceiling (criterion) | same-moment workload-matched probes | {s['paired_efficiency_vs_kernel_ceiling']} |
-| machine ceiling (sha256, cache-resident) | {'/'.join(str(x) for x in s['machine_ceiling_speedups'])} | {s['scaling_efficiency_vs_machine_ceiling']} |
-| absolute ideal | 4.0 | {s['scaling_efficiency_vs_4x']} |
+def ok(run: dict) -> bool:
+    return "error" not in run and run["failed"] == 0
 
-The kernel probe runs the engine's dominant per-page work with zero
-framework overhead on the same pinned core sets — it bounds what ANY
-orchestration of this work can achieve on this box at this moment. This
-sandbox VM advertises 32 cores on an oversubscribed hypervisor whose memory
-bandwidth does not quadruple from 8 to 32 processes the way a real N→4N
-executor cluster's does; on real hardware the ceiling-relative number is the
-one that transfers, and the sha256/absolute numbers are printed so the
-denominator choice is auditable rather than load-bearing.
 
-## Reference comparison
+def efficiencies(n: dict, n4: dict) -> tuple:
+    """(by wall, by CPU) of one pair of runs, N first."""
+    scale = SIZES[1] // SIZES[0]
+    by_wall = (n4["work"] / n4["wall_s"]) / (scale * n["work"] / n["wall_s"])
+    by_cpu = (n4["work"] / n4["cpu_s"]) / (n["work"] / n["cpu_s"])
+    return by_wall, by_cpu
 
-The reference crawler's implied ceiling is ≤ 40 pages/s (20 threads ÷ 0.5 s
-politeness sleep — BASELINE.md). The Spark engine schedules, extracts and
-dedups {s['local32_urls_per_sec']:,} candidate URLs/sec at local[32].
-"""
+
+def attribute(size: dict, by_wall: float, by_cpu: float) -> dict:
+    """Where an efficiency below TARGET goes, from the StatusReader medians
+    of each size. By wall, efficiency = (busy share of the executors at 4N /
+    at N) × (executor task time at N / at 4N): the smaller factor is named.
+    By CPU, the part of the tree CPU that grew more is named."""
+    n, n4 = size[SIZES[0]], size[SIZES[1]]
+    out = {}
+    if by_wall < TARGET:
+        busy = n4["spark.core_busy_frac"] / n["spark.core_busy_frac"]
+        run = n["spark.executor_run_s"] / n4["spark.executor_run_s"]
+        out["wall"] = (
+            f"outside executor tasks (driver, scheduling): busy share "
+            f"{n4['spark.core_busy_frac']:.2f} at 4N against {n['spark.core_busy_frac']:.2f} "
+            f"at N (factor {busy:.2f}; task time factor {run:.2f})"
+            if busy < run else
+            f"executor tasks: task time {n4['spark.executor_run_s']:.1f} s at 4N against "
+            f"{n['spark.executor_run_s']:.1f} s at N (factor {run:.2f}; busy factor {busy:.2f})"
+        ) if min(busy, run) < 0.95 else "unknown"
+    if by_cpu < TARGET:
+        grew = {
+            "executor task threads (spark.executor_cpu_s)":
+                n4["spark.executor_cpu_s"] - n["spark.executor_cpu_s"],
+            "outside task threads (driver, Python workers, JIT and GC threads)":
+                (n4["cpu_s"] - n4["spark.executor_cpu_s"]) - (n["cpu_s"] - n["spark.executor_cpu_s"]),
+        }
+        part = max(grew, key=grew.get)
+        out["cpu"] = f"{part}: +{grew[part]:.1f} CPU-s per run at 4N" if grew[part] > 0 else "unknown"
+    return out
+
+
+def summarize(name: str, pairs: list) -> dict:
+    """Paired efficiencies, per-size medians and attribution of one workload."""
+    used = [p for p in pairs if ok(p["runs"][0]) and ok(p["runs"][1])]
+    effs = [efficiencies(*p["runs"]) for p in used]
+    size = {}
+    for i, executors in enumerate(SIZES):
+        runs = [p["runs"][i] for p in used]
+        keys = ["wall_s", "cpu_s", "peak_rss_mb"] + sorted(runs[0]["status"]) if runs else []
+        size[executors] = {
+            k: statistics.median(r.get(k, r["status"].get(k)) for r in runs) for k in keys
+        }
+    by_wall = median_iqr([e[0] for e in effs])
+    by_cpu = median_iqr([e[1] for e in effs])
+    return {
+        "workload": name, "pairs_used": len(used), "pairs_excluded": len(pairs) - len(used),
+        "wall_efficiency": by_wall, "cpu_efficiency": by_cpu, "sizes": size,
+        "below_target": attribute(size, by_wall["median"], by_cpu["median"]) if used else {},
+    }
+
+
+def _fmt(s: dict) -> str:
+    return f"{s['median']:.3f} [{s['q1']:.3f}, {s['q3']:.3f}]"
+
+
+def report(result: dict) -> str:
+    lines = [
+        "# Scaling from N to 4N executors (`bench_scaling.py`)", "",
+        f"`local-cluster[1,1,{EXECUTOR_MB}]` against `local-cluster[4,1,{EXECUTOR_MB}]`, "
+        f"driver heap {DRIVER_HEAP}, {UNITS} perfbench units per run, "
+        f"`n_partitions` and shuffle partitions {CORES} at both sizes; "
+        f"{os.cpu_count()} cores, {os.sysconf('SC_PHYS_PAGES') * os.sysconf('SC_PAGE_SIZE') >> 20:,} "
+        "MiB of RAM. Efficiencies are median [IQR] over pairs.", "",
+        "| workload | pairs used / excluded | by wall | by CPU | below 0.8: where |",
+        "|---|---|---|---|---|",
+    ]
+    for s in result["summary"].values():
+        where = "; ".join(f"{k}: {v}" for k, v in s["below_target"].items()) or "-"
+        lines.append(
+            f"| {s['workload']} | {s['pairs_used']} / {s['pairs_excluded']} | "
+            f"{_fmt(s['wall_efficiency'])} | {_fmt(s['cpu_efficiency'])} | {where} |"
+        )
+    k = result["kernel"]
+    lines += ["", "Kernel ceiling (pages/s of the crawl's link kernel, median [IQR] of "
+              f"{k['1']['n']} probes): 1 process {_fmt(k['1'])}, 4 processes "
+              f"{_fmt(k['4'])}, speedup {_fmt(k['speedup'])}.", "",
+              "## Per size (medians over the pairs used)", "",
+              "| workload | executors | wall s | tree CPU s | executor CPU s | GC s | "
+              "shuffle write B | core_busy_frac | peak RSS MiB |", "|---|---|---|---|---|---|---|---|---|"]
+    for s in result["summary"].values():
+        for ex, v in s["sizes"].items():
+            lines.append(
+                f"| {s['workload']} | {ex} | {v['wall_s']:.2f} | {v['cpu_s']:.2f} | "
+                f"{v['spark.executor_cpu_s']:.2f} | {v['spark.gc_s']:.2f} | "
+                f"{v['spark.shuffle_write_bytes']:,.0f} | {v['spark.core_busy_frac']:.3f} | "
+                f"{v['peak_rss_mb']:,.0f} |"
+            )
+    lines += ["", "## Every run", "",
+              "| pair | workload | first | N wall s | 4N wall s | N CPU s | 4N CPU s | "
+              "by wall | by CPU | checks |", "|---|---|---|---|---|---|---|---|---|---|"]
+    for p in result["pairs"]:
+        n, n4 = p["runs"]
+        if ok(n) and ok(n4):
+            w, c = efficiencies(n, n4)
+            cells = f"{n['wall_s']:.2f} | {n4['wall_s']:.2f} | {n['cpu_s']:.2f} | " \
+                    f"{n4['cpu_s']:.2f} | {w:.3f} | {c:.3f} | ok"
+        else:
+            bad = [r for r in (n, n4) if not ok(r)]
+            why = "; ".join(r.get("error", "")[-80:] or f"{r['failed']} failed" for r in bad)
+            cells = f"- | - | - | - | - | - | excluded: {why}"
+        lines.append(f"| {p['pair']} | {p['workload']} | {p['first']} | {cells} |")
+    return "\n".join(lines) + "\n"
+
+
+def main(argv=None) -> int:
+    parser = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    parser.add_argument("--pairs", type=int, default=10)
+    args = parser.parse_args(argv)
+    from perfbench import gen
+    from perfbench.workloads import CRAWL_SHAPE
+
+    corpus = gen.crawl_corpus(SEED, **CRAWL_SHAPE)
+    pages = [(u, h) for u, h in corpus["pages"].items() if h is not None]
+    probes, pairs = [kernel_probe(pages)], []
+    for i in range(args.pairs):
+        order = SIZES if i % 2 == 0 else SIZES[::-1]
+        for name in WORKLOADS:
+            runs = {}
+            for executors in order:
+                runs[executors] = spawn(name, executors)
+                probes.append(kernel_probe(pages))
+                print(json.dumps({"pair": i, **runs[executors]}), file=sys.stderr)
+            pairs.append({"pair": i, "workload": name, "first": order[0],
+                          "runs": [runs[s] for s in SIZES]})
+    result = {
+        "executor_mb": EXECUTOR_MB, "driver_heap": DRIVER_HEAP, "units": UNITS,
+        "cores": CORES, "pairs": pairs, "probes": probes,
+        "kernel": {"1": median_iqr([p[1] for p in probes]), "4": median_iqr([p[4] for p in probes]),
+                   "speedup": median_iqr([p[4] / p[1] for p in probes])},
+        "summary": {n: summarize(n, [p for p in pairs if p["workload"] == n]) for n in WORKLOADS},
+    }
+    with open(OUT + ".json", "w", encoding="utf-8") as f:
+        json.dump(result, f, indent=1)
+    with open(OUT + ".md", "w", encoding="utf-8") as f:
+        f.write(report(result))
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

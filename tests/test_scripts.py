@@ -1,5 +1,5 @@
 """The scripts and entry points outside the package: command-line handling,
-and names that resolve."""
+names that resolve, and the scaling script's statistics."""
 
 import builtins
 import glob
@@ -12,9 +12,9 @@ import pytest
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _load(name):
+def _load(name, folder="scripts"):
     spec = importlib.util.spec_from_file_location(
-        name, os.path.join(ROOT, "scripts", f"{name}.py")
+        name, os.path.join(ROOT, folder, f"{name}.py")
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
@@ -81,5 +81,45 @@ def test_entry_points_use_no_undefined_global():
             names = _undefined_globals(fh.read(), path)
         if names:
             found[os.path.relpath(path, ROOT)] = names
-    assert len(paths) >= 11
+    assert len(paths) >= 9
     assert found == {}
+
+
+def _run(executors, wall_s, cpu_s, failed=0, busy=0.5, run_s=10.0, task_cpu=5.0):
+    return {
+        "workload": "crawl", "executors": executors, "work": 100, "wall_s": wall_s,
+        "cpu_s": cpu_s, "attempted": 4, "failed": failed, "peak_rss_mb": 1000.0,
+        "status": {"spark.core_busy_frac": busy, "spark.executor_run_s": run_s,
+                   "spark.executor_cpu_s": task_cpu},
+    }
+
+
+def test_scaling_efficiencies_and_exclusions():
+    """The scaling script's statistics on canned runs: paired efficiencies
+    by wall and by CPU, their median and IQR, and pairs with a failed check
+    or a failed run left out and counted."""
+    scaling = _load("bench_scaling", folder="")
+    # 4N does the same 100 units in half the wall, with 25% more CPU
+    assert scaling.efficiencies(_run(1, 10.0, 40.0), _run(4, 5.0, 50.0)) == (0.5, 0.8)
+    assert scaling.median_iqr([5.0, 1.0, 4.0, 2.0, 3.0]) == {
+        "median": 3.0, "q1": 2.0, "q3": 4.0, "n": 5
+    }
+    pairs = [
+        {"runs": [_run(1, 10.0, 40.0), _run(4, wall, 40.0)]} for wall in (2.5, 5.0, 10.0)
+    ] + [
+        {"runs": [_run(1, 10.0, 40.0), _run(4, 2.5, 40.0, failed=1)]},
+        {"runs": [{"workload": "crawl", "executors": 1, "error": "timed out"},
+                  _run(4, 2.5, 40.0)]},
+    ]
+    out = scaling.summarize("crawl", pairs)
+    assert (out["pairs_used"], out["pairs_excluded"]) == (3, 2)
+    assert out["wall_efficiency"] == {"median": 0.5, "q1": 0.375, "q3": 0.75, "n": 3}
+    assert out["cpu_efficiency"]["median"] == 1.0
+    assert out["sizes"][4]["wall_s"] == 5.0
+    # same task time and busy share at both sizes: the wall loss has no
+    # named place; CPU is not below the target
+    assert out["below_target"] == {"wall": "unknown"}
+    slow_tasks = [{"runs": [_run(1, 10.0, 40.0), _run(4, 5.0, 40.0, run_s=20.0)]}]
+    assert scaling.summarize("crawl", slow_tasks)["below_target"]["wall"].startswith(
+        "executor tasks"
+    )

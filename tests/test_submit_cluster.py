@@ -15,14 +15,13 @@ import subprocess
 import sys
 import zipfile
 
-from pyspark.find_spark_home import _find_spark_home
-
 from apollo_service_spark import worker_daemon
 from apollo_service_spark.operators.frontier import (
     CrawlConfig,
     FrontierEngine,
     crawl_log_df,
 )
+from apollo_service_spark.session import local_cluster_home
 from apollo_service_spark.sources.corpus import gen_corpus, write_corpus
 from apollo_service_spark.sources.storage import SnapshotStore
 
@@ -62,19 +61,6 @@ def _state(spark, store):
             frame.unpersist()
 
 
-def _spark_home(tmp_path):
-    """A Spark home of symlinks with a real ``work`` dir: local-cluster
-    workers put each executor's dir under ``$SPARK_HOME/work`` and ignore
-    ``SPARK_WORKER_DIR``, so this keeps them under the test's temp dir."""
-    home = tmp_path / "spark_home"
-    (home / "work").mkdir(parents=True)
-    real = _find_spark_home()
-    for name in os.listdir(real):
-        if name != "work":
-            os.symlink(os.path.join(real, name), home / name)
-    return home
-
-
 def _zip_package(path):
     with zipfile.ZipFile(path, "w") as zf:
         for src in glob.glob(
@@ -96,15 +82,15 @@ def test_submit_resumes_a_crawl_on_two_executors(spark, tmp_path):
     # its own dir, not the repository, first on sys.path
     _zip_package(tmp_path / "apollo.zip")
     shutil.copy(os.path.join(ROOT, "submit_crawl.py"), tmp_path)
-    home = _spark_home(tmp_path)
+    home = local_cluster_home(str(tmp_path))
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     env.update(
-        SPARK_HOME=str(home),
+        SPARK_HOME=home,
         PYSPARK_PYTHON=sys.executable,
         PYSPARK_DRIVER_PYTHON=sys.executable,
     )
     cmd = [
-        str(home / "bin" / "spark-submit"),
+        os.path.join(home, "bin", "spark-submit"),
         "--master", "local-cluster[2,1,1024]",
         "--py-files", str(tmp_path / "apollo.zip"),
         str(tmp_path / "submit_crawl.py"),
@@ -131,7 +117,7 @@ def test_submit_resumes_a_crawl_on_two_executors(spark, tmp_path):
     assert '"stopped_reason": "frontier_exhausted"' in out
 
     assert _state(spark, SnapshotStore(resumed)) == expected
-    logs = glob.glob(str(home / "work" / "app-*" / "*" / "stderr"))
+    logs = glob.glob(os.path.join(home, "work", "app-*", "*", "stderr"))
     assert len(logs) == 2
     line = (
         "Python daemon module in PySpark is set to "

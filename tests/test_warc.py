@@ -1,6 +1,7 @@
 """WARC serializer/parser semantics and the distributed read path."""
 
 import os
+import signal
 from datetime import datetime
 
 import pytest
@@ -61,6 +62,53 @@ def test_truncated_segment_raises():
         parse_warc_segment(blob[:-6])
     with pytest.raises(ValueError, match="unterminated"):
         parse_warc_segment(b"WARC/1.0\r\nWARC-Type: response")
+
+
+def _record(fields: list, body: bytes = b"HTTP/1.1 200 OK\r\n\r\nx") -> bytes:
+    """A record after the warcinfo preamble, from raw header lines."""
+    head = "\r\n".join(["WARC/1.0", *fields]).encode()
+    return head + b"\r\n\r\n" + body + b"\r\n\r\n"
+
+
+_RESPONSE = ["WARC-Type: response", "WARC-Target-URI: https://m.test/",
+             "WARC-Date: 2020-01-01T00:00:00Z"]
+
+
+@pytest.mark.parametrize(
+    "record, message",
+    [
+        # a negative length steps back onto the warcinfo terminator
+        (_record(["WARC-Type: metadata", "Content-Length: -58"]), "Content-Length"),
+        (_record(["WARC-Type: metadata"]), "Content-Length"),
+        (_record(["WARC-Type: metadata", "Content-Length: 12x"]), "Content-Length"),
+        (_record(["WARC-Type: metadata", "Content-Length: ²"]), "Content-Length"),
+        (_record(_RESPONSE[:1] + _RESPONSE[2:] + ["Content-Length: 20"]),
+         "warc-target-uri"),
+        (_record(_RESPONSE[:2] + ["Content-Length: 20"]), "warc-date"),
+        (_record(_RESPONSE[:2] + ["WARC-Date: 2020-13-01", "Content-Length: 20"]),
+         "WARC-Date"),
+        (b"WARC/1.0\r\nWARC-Type: \xff\r\nContent-Length: 0\r\n\r\n\r\n\r\n", "UTF-8"),
+    ],
+    ids=["negative-length", "no-length", "non-numeric-length", "non-ascii-digit",
+         "no-target-uri", "no-date", "bad-date", "non-utf8-header"],
+)
+def test_malformed_record_raises_with_offset(record, message):
+    """Every structural error is a ValueError that names the record's byte
+    offset; the alarm turns a parser that loops into a failure."""
+    preamble = build_warcinfo("seg")
+
+    def hang(signum, frame):
+        raise TimeoutError("parse_warc_segment did not return")
+
+    old = signal.signal(signal.SIGALRM, hang)
+    signal.alarm(5)
+    try:
+        with pytest.raises(ValueError, match=message) as exc:
+            parse_warc_segment(preamble + record)
+    finally:
+        signal.alarm(0)
+        signal.signal(signal.SIGALRM, old)
+    assert f"offset {len(preamble)}" in str(exc.value)
 
 
 def test_distributed_parse_and_disk_read(spark, tmp_path):
